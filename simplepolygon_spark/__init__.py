@@ -1,9 +1,8 @@
 """simplepolygon_spark — a PySpark-native spatial-join + tiling engine.
 
 The polygon layer reimplements the ring decomposition of
-mclaeysb/simplepolygon (reference at /root/reference, v2.0.4) from scratch
-as numpy kernels dispatched through Arrow-vectorized pandas UDFs; the join
-layer adds quadkey cell-cover tiling, point-in-polygon / kNN joins,
+mclaeysb/simplepolygon (v2.0.4) from scratch as numpy kernels
+dispatched through Arrow-vectorized pandas UDFs; the join layer adds quadkey cell-cover tiling, point-in-polygon / kNN joins,
 raster<->vector crosswalk, dedup / similarity / text operators, lineage
 checkpointing, and a deterministic image payload codec.
 
@@ -15,8 +14,6 @@ Layout:
   sources/       deterministic synthetic sources (images, footprints, fixtures)
   functions/     column-expression helpers (JVM-side, codegen-friendly)
   plans/         end-to-end pipelines + lineage/resume
-  streaming/     Structured Streaming twins (dedup stores, admission,
-                 shard writer, lineage sink)
   session.py     SparkSession factory + register_tables (spark.sql surface)
 """
 

@@ -247,9 +247,8 @@ def minhash_doc_sigs(
 
 def _band_hash_array(bands: int, rows_per_band: int):
     """Column expression: array of ``bands`` xxhash64 band keys over a
-    ``sig`` array<long> column — the ONE banding definition, shared by
-    the batch melt and the streaming store (which persists the computed
-    array so later micro-batches never re-hash the store)."""
+    ``sig`` array<long> column — the ONE banding definition used by
+    every melt."""
     return F.transform(
         F.sequence(F.lit(0), F.lit(bands - 1)),
         lambda b: F.xxhash64(
@@ -531,7 +530,7 @@ def simhash_token_sql(tok: str) -> str:
 
 def simhash_of_texts(texts: list) -> np.ndarray:
     """uint64 SimHash per text — the shared vectorized kernel behind
-    both the batch operator and the streaming near-dup suppressor."""
+    the SimHash operators."""
     shifts = np.arange(64, dtype=np.uint64)
     n = len(texts)
     toks_per_doc = [t.lower().split() for t in texts]
@@ -553,9 +552,8 @@ def simhash_of_texts(texts: list) -> np.ndarray:
 
 # The one place the SimHash banding geometry is defined: 4 bands of 16
 # bits pigeonhole guaranteed recall for hamming <= 3 (= n_bands - 1).
-# Batch operators AND the streaming path (streaming/feed.py) both build
-# on these — change them together or bucket keys diverge between the
-# stream and the landed-table batch job.
+# Every SimHash operator builds on these — change them together or
+# bucket keys diverge between operators.
 SIMHASH_N_BANDS = 4
 SIMHASH_BAND_BITS = 16
 SIMHASH_BAND_COLS = [f"band{b}" for b in range(SIMHASH_N_BANDS)]
@@ -844,8 +842,8 @@ def embedding_dup_pairs(
 
 def _srp_plane_matrix(d: int, num_planes: int, seed: int) -> np.ndarray:
     """The (d × planes) N(0,1) hyperplane matrix, regenerated from the
-    seed wherever needed (executors, stream batches) — one definition
-    so batch and stream signatures can never diverge."""
+    seed wherever needed (driver, executors) — one definition so
+    signatures can never diverge."""
     return np.random.default_rng(seed).standard_normal((d, num_planes))
 
 
@@ -1008,9 +1006,8 @@ def srp_bands_for_threshold(num_planes: int, threshold: float) -> int:
 def srp_band_key_array(sig_col: str, num_planes: int, bands: int):
     """array<long> Column of an SRP signature's band keys — bands
     contiguous ``num_planes/bands``-bit slices of the 64-bit word.
-    ONE definition shared by the batch bucket join
-    (``embedding_dup_pairs_lsh``) and the streaming store
-    (``streaming.feed.srp_dedup_batch``) so their keys can never
+    ONE definition for the bucket join (``embedding_dup_pairs_lsh``)
+    and any caller that persists band keys, so keys can never
     diverge."""
     r = num_planes // bands
     if r >= 64:

@@ -2,14 +2,11 @@
 lakehouse without a table format.
 
 Every long-lived pipeline table here (landed corpus stages, chunk
-tables, shard exports, streaming sinks) accretes small files: each
-micro-batch, each AQE-sized task, each incremental append writes its
-own parquet part.  At scale, scan cost is dominated by file-open
+tables, shard exports) accretes small files: each AQE-sized task,
+each incremental append writes its own parquet part.  At scale, scan cost is dominated by file-open
 overhead once parts drop below ~tens of MB — the classic small-file
 problem.  ``compact_table`` rewrites a table's parts toward a target
-file size with a staged, verified, two-rename publish (the same
-discipline as the streaming keeper/store compactors in
-``streaming.feed``).
+file size with a staged, verified, two-rename publish.
 """
 
 from __future__ import annotations

@@ -53,6 +53,11 @@ def derive_bucket_level(cov_a: DataFrame, cov_b: DataFrame) -> int:
             cov_b.select((F.col("hi") - F.col("lo") + F.lit(1)).alias("span"))
         )
         .agg(
+            # exact percentile keeps one counter per DISTINCT span.  A
+            # single cover cell spans a power of 4, but cover_ring merges
+            # adjacent same-flag cells, so a span is any multiple of the
+            # finest cell's 4**(MAX_LEVEL - cover_level): at most
+            # 4**cover_level distinct values, independent of row count
             F.expr("percentile(span, 0.5)").alias("med"),
             F.max("span").alias("mx"),
         )
@@ -118,15 +123,6 @@ def overlap_join(
     histogram pass doesn't recompute the cover kernel."""
     cov_a = covers_df(rings_a, cover_level, MAX_LEVEL)
     cov_b = covers_df(rings_b, cover_level, MAX_LEVEL)
-    cached = []
-    if bucket_level is None:
-        # the histogram aggregate and the melt both consume the covers;
-        # persist so the cover kernel runs once per side
-        cov_a, cov_b = cov_a.persist(), cov_b.persist()
-        cached = [cov_a, cov_b]
-        bucket_level = derive_bucket_level(cov_a, cov_b)
-    ca = _melt_buckets(cov_a, "a", bucket_level)
-    cb = _melt_buckets(cov_b, "b", bucket_level)
     ids = ["a_polygon_id", "a_ring_index", "b_polygon_id", "b_ring_index"]
     a_contains = (F.col("a_lo") <= F.col("b_lo")) & (
         F.col("a_hi") >= F.col("b_hi")
@@ -134,29 +130,40 @@ def overlap_join(
     b_contains = (F.col("b_lo") <= F.col("a_lo")) & (
         F.col("b_hi") >= F.col("a_hi")
     )
-    cand = (
-        ca.join(cb, "bucket")
-        .where(
-            (F.col("a_lo") <= F.col("b_hi")) & (F.col("b_lo") <= F.col("a_hi"))
+    cached = []
+    try:
+        if bucket_level is None:
+            # the histogram aggregate and the melt both consume the
+            # covers; persist so the cover kernel runs once per side
+            cov_a, cov_b = cov_a.persist(), cov_b.persist()
+            cached = [cov_a, cov_b]
+            bucket_level = derive_bucket_level(cov_a, cov_b)
+        ca = _melt_buckets(cov_a, "a", bucket_level)
+        cb = _melt_buckets(cov_b, "b", bucket_level)
+        cand = (
+            ca.join(cb, "bucket")
+            .where(
+                (F.col("a_lo") <= F.col("b_hi"))
+                & (F.col("b_lo") <= F.col("a_hi"))
+            )
+            .select(
+                *ids,
+                (
+                    (a_contains & (F.col("a_full") == 1))
+                    | (b_contains & (F.col("b_full") == 1))
+                ).alias("accept"),
+            )
+            .groupBy(*ids)
+            .agg(F.max("accept").alias("accept"))
+            # one row per candidate PAIR (tiny vs covers) — materialize
+            # so the accepted branch and the refine branch don't each
+            # re-run the two cover passes and the bucket join
+            .localCheckpoint(eager=True)
         )
-        .select(
-            *ids,
-            (
-                (a_contains & (F.col("a_full") == 1))
-                | (b_contains & (F.col("b_full") == 1))
-            ).alias("accept"),
-        )
-        .groupBy(*ids)
-        .agg(F.max("accept").alias("accept"))
-        # one row per candidate PAIR (tiny vs covers) — materialize so
-        # the accepted branch and the refine branch don't each re-run
-        # the two cover passes and the bucket join (same eager-candidate
-        # pattern as embedding_dup_pairs_lsh); no cached frame outlives
-        # the call
-        .localCheckpoint(eager=True)
-    )
-    for c in cached:
-        c.unpersist()
+    finally:
+        # no persisted cover outlives the call, on any exit path
+        for c in cached:
+            c.unpersist()
     accepted = cand.where("accept").select(*ids)
 
     need = cand.where(~F.col("accept")).select(*ids)

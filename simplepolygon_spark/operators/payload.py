@@ -390,7 +390,7 @@ def image_embeddings(
     and small perturbations land at cosine ≈ 1, unrelated images near
     0.  The output is the ``embeddings`` table shape, so the WHOLE
     embedding suite composes: ``embedding_dup_pairs(_lsh)``,
-    ``ivf_topk``, ``covariance``/PCA/whitening, SRP streaming dedup.
+    ``ivf_topk``, ``covariance``/PCA/whitening.
 
     Scale: one scan, one decode per image, zero shuffle; the
     projection matrix is regenerated per executor from the seed

@@ -310,8 +310,8 @@ def norm_word_ngrams(text_col: str = "text", n: int = 13):
     that normalization guarantees.  A text with fewer than ``n``
     normalized tokens yields an EMPTY array (never a descending
     ``sequence``); NULL text yields NULL.  One definition shared by
-    the batch and streaming decontamination modes so their match sets
-    can never diverge."""
+    every decontamination mode so their match sets can never
+    diverge."""
     norm = F.trim(
         F.regexp_replace(
             F.regexp_replace(F.lower(text_col), "[^a-z0-9 ]", ""), " +", " "

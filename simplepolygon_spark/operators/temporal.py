@@ -20,10 +20,6 @@ in the shapes that survive 100 TB:
                    probe.  (A naive ts-inequality join explodes to
                    |left|x|right| per key before filtering; this shape
                    is linear in |left|+|right|.)
-
-Streaming twins live in ``streaming.feed``: ``sessionize_feed`` is the
-same gap semantics via Structured Streaming's ``session_window`` (the
-batch/stream equivalence is pinned by a test).
 """
 
 from __future__ import annotations
@@ -43,8 +39,8 @@ def _epoch_us(col):
 
 def gap_micros(gap: str) -> int:
     """Parse a Spark interval-ish string ("30 minutes", "12 hours") to
-    microseconds — driver-side, so the batch and streaming paths agree
-    on one gap value without a SQL round-trip."""
+    microseconds — driver-side, so every caller agrees on one gap value
+    without a SQL round-trip."""
     import pandas as pd
 
     us = int(pd.Timedelta(gap).value // 1000)
@@ -66,9 +62,7 @@ def sessionize(
     The >= boundary (not >) is chosen to MATCH Structured Streaming's
     ``session_window``, which half-opens each event's window at
     ``[ts, ts + gap)``: a follow-up event exactly ``gap`` later does
-    not overlap and opens a new session.  With that convention the
-    batch operator and ``streaming.feed.sessionize_feed`` produce the
-    same sessions on the same landed table (tested).
+    not overlap and opens a new session.
 
     Shape: ONE shuffle (hash on ``user_col``) feeding two window
     functions — ``lag`` for the inter-event delta and a running ``sum``

@@ -94,7 +94,6 @@ def write_with_lineage(
     run_id: str,
     all_part_ids,
     audit_readback: bool = False,
-    check_duplicate_run: bool = True,
 ) -> None:
     """Write result data partitioned by part_id + append lineage rows.
 
@@ -145,28 +144,22 @@ def write_with_lineage(
     # only orphan data files carry is undetectable without listing the
     # data dir; callers resuming a crashed run must use a fresh id, as
     # run_pipeline's uuid default does.)
-    # the guard costs a lineage-log read (O(committed runs) file
-    # listing) — a caller that GUARANTEES fresh run_ids (the streaming
-    # sink: per-attempt uuid suffixes + its own committed-batch set)
-    # passes check_duplicate_run=False so a long-lived stream's
-    # per-batch cost stays O(1) instead of O(batches) per commit
-    if check_duplicate_run:
-        from pyspark.errors import AnalysisException
+    from pyspark.errors import AnalysisException
 
-        try:
-            dup = (
-                spark.read.parquet(lin_path)
-                .where(F.col("run_id") == run_id)
-                .limit(1)
-                .count()
-            )
-        except AnalysisException:
-            dup = 0  # no lineage log yet; other errors propagate
-        if dup:
-            raise ValueError(
-                f"run_id {run_id!r} already committed under {lin_path}; "
-                "lineage requires a fresh run_id per invocation"
-            )
+    try:
+        dup = (
+            spark.read.parquet(lin_path)
+            .where(F.col("run_id") == run_id)
+            .limit(1)
+            .count()
+        )
+    except AnalysisException:
+        dup = 0  # no lineage log yet; other errors propagate
+    if dup:
+        raise ValueError(
+            f"run_id {run_id!r} already committed under {lin_path}; "
+            "lineage requires a fresh run_id per invocation"
+        )
 
     cols = [c for c in result.columns if c != "part_id"]
     row_hash, byte_len = _metric_exprs(cols)

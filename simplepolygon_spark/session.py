@@ -74,9 +74,8 @@ def register_tables(spark: SparkSession, sf_dir: str, tables=None) -> list:
     ``functions.cells_sql.cell_sql_expr``).  Missing files are skipped
     (a deployment may ship a subset); returns the view names
     registered — check it if you expect a specific set.  Presence is
-    probed with ``os.path.exists``, i.e. DRIVER-LOCAL filesystem only
-    (same assumption as the streaming store/compactor helpers): on an
-    s3://...-style ``sf_dir`` every table is skipped and the function
+    probed with ``os.path.exists``, i.e. DRIVER-LOCAL filesystem only:
+    on an s3://...-style ``sf_dir`` every table is skipped and the function
     returns ``[]`` rather than failing.  Temp views are metadata only — no data is read until a
     query runs, so registration is free and pruning/pushdown work
     exactly as with ``spark.read``."""

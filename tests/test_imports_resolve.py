@@ -1,0 +1,100 @@
+"""Every ``simplepolygon_spark`` import in the repo's code resolves.
+
+Walks the package, ``perfbench/``, ``scripts/``, ``__spark_entry__.py``
+and ``bench*.py`` with ``ast`` — module-level AND function-local
+imports, relative imports resolved against the importing module — and
+checks that each imported module exists and carries each imported name.
+Function-local imports only fail when their function runs, so a
+dangling one (an import of a deleted module) otherwise hides until a
+rarely taken code path hits it.  No Spark session is started.
+"""
+
+from __future__ import annotations
+
+import ast
+import importlib
+import importlib.util
+from pathlib import Path
+
+import pytest
+
+REPO = Path(__file__).resolve().parent.parent
+PKG = "simplepolygon_spark"
+
+
+def _sources() -> list[Path]:
+    files = []
+    for d in (PKG, "perfbench", "scripts"):
+        files.extend(sorted((REPO / d).rglob("*.py")))
+    files.append(REPO / "__spark_entry__.py")
+    files.extend(sorted(REPO.glob("bench*.py")))
+    return files
+
+
+def _module_name(path: Path) -> str:
+    parts = list(path.relative_to(REPO).with_suffix("").parts)
+    if parts[-1] == "__init__":
+        parts.pop()
+    return ".".join(parts)
+
+
+def _package_imports(path: Path):
+    """(lineno, module, names) for every import that targets the
+    package; ``names`` is empty for a plain ``import a.b.c``."""
+    tree = ast.parse(path.read_text(), filename=str(path))
+    this = _module_name(path)
+    package = this if path.name == "__init__.py" else this.rpartition(".")[0]
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            for alias in node.names:
+                if alias.name.split(".")[0] == PKG:
+                    yield node.lineno, alias.name, []
+        elif isinstance(node, ast.ImportFrom):
+            if node.level:
+                base = package.split(".")
+                base = base[: len(base) - (node.level - 1)]
+                module = ".".join(base + ([node.module] if node.module else []))
+            else:
+                module = node.module or ""
+            if module.split(".")[0] == PKG:
+                yield node.lineno, module, [a.name for a in node.names]
+
+
+def _is_function_local(path: Path, lineno: int) -> bool:
+    tree = ast.parse(path.read_text())
+    return any(
+        isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+        and n.lineno <= lineno <= n.end_lineno
+        for n in ast.walk(tree)
+    )
+
+
+@pytest.mark.parametrize(
+    "path", _sources(), ids=lambda p: str(p.relative_to(REPO))
+)
+def test_package_imports_resolve(path):
+    problems = []
+    for lineno, module, names in _package_imports(path):
+        if importlib.util.find_spec(module) is None:
+            problems.append(f"line {lineno}: no module {module}")
+            continue
+        mod = importlib.import_module(module)
+        for name in names:
+            if name == "*" or hasattr(mod, name):
+                continue
+            if importlib.util.find_spec(f"{module}.{name}") is None:
+                problems.append(f"line {lineno}: {module} has no {name}")
+    assert not problems, "\n".join(problems)
+
+
+def test_walker_sees_function_local_imports():
+    """The walk reaches imports inside function bodies, where the
+    deferred spatial imports of the package live."""
+    local = [
+        (path, lineno)
+        for path in _sources()
+        for lineno, _m, _n in _package_imports(path)
+        if _is_function_local(path, lineno)
+    ]
+    assert any(p.name == "tiling.py" for p, _ in local)
+    assert any(p.name == "__spark_entry__.py" for p, _ in local)

@@ -283,3 +283,23 @@ def test_bucket_level_derivation_bounds_candidate_blowup(spark):
     }
     assert auto == pinned
     assert len(auto) == (2 * n - 1) ** 2
+
+
+def test_overlap_join_releases_covers_when_bucket_derivation_fails(
+    spark, monkeypatch
+):
+    """The persisted covers are released on the exception path too: a
+    failure between persist and the candidate checkpoint must not leave
+    cached frames registered for the rest of the session."""
+    from simplepolygon_spark.operators import overlap
+
+    def boom(cov_a, cov_b):
+        raise RuntimeError("bucket derivation failed")
+
+    monkeypatch.setattr(overlap, "derive_bucket_level", boom)
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    assert cache.isEmpty()
+    with pytest.raises(RuntimeError, match="bucket derivation failed"):
+        overlap_join(_rings_df(spark, LAYER_A), _rings_df(spark, LAYER_B))
+    assert cache.isEmpty()

@@ -227,31 +227,6 @@ def test_decontaminate_ngrams_output_columns_intact(spark):
     assert out.columns == docs.columns  # no helper columns leak
 
 
-def test_decontaminate_feed_ngrams_stream_equals_batch(spark, tmp_path):
-    """Stream-static arrays_overlap anti-join ≡ batch explode/semi/anti
-    on the landed table, including the planted mid-document case."""
-    from simplepolygon_spark.operators.sampling import decontaminate_ngrams
-    from simplepolygon_spark.streaming.feed import decontaminate_feed_ngrams
-
-    docs, bench = _decon_corpus(spark)
-    feed_dir = str(tmp_path / "ngfeed")
-    docs.write.parquet(feed_dir)
-    st = spark.readStream.schema("doc_id long, text string").parquet(feed_dir)
-    q = (
-        decontaminate_feed_ngrams(st, bench, n=13)
-        .writeStream.format("memory")
-        .queryName("ngdecon_stream")
-        .option("checkpointLocation", str(tmp_path / "ngck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = sorted(r.doc_id for r in spark.sql("SELECT * FROM ngdecon_stream").collect())
-    expect = sorted(r.doc_id for r in decontaminate_ngrams(docs, bench, n=13).collect())
-    assert got == expect
-    assert 50 not in got and 60 in got
-
-
 # ---------------------------------------------------------------------------
 # whitened embedding dedup composition (VERDICT r4 #4)
 # ---------------------------------------------------------------------------

@@ -1,4 +1,4 @@
-"""applyInPandasWithState custom operator + bucketed co-located joins."""
+"""Bucketed co-located joins."""
 
 from __future__ import annotations
 
@@ -6,57 +6,6 @@ from pyspark.sql import functions as F
 
 from simplepolygon_spark.plans.bucketing import colocated_join, write_bucketed
 from simplepolygon_spark.sources.images import images_df
-from simplepolygon_spark.streaming.feed import read_image_feed
-from simplepolygon_spark.streaming.stateful import running_cell_stats
-
-
-def test_running_cell_stats_accumulates_across_batches(spark, tmp_path):
-    feed_dir = str(tmp_path / "feed")
-    # two file drops → two micro-batches with maxFilesPerTrigger=1
-    images_df(spark, 200, partitions=1).write.mode("overwrite").parquet(feed_dir)
-    images_df(spark, 400, partitions=1).write.mode("append").parquet(feed_dir)
-
-    st = (
-        spark.readStream.schema(
-            spark.read.parquet(feed_dir).schema
-        )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed_dir)
-    )
-    q = (
-        running_cell_stats(st, level=4)
-        .writeStream.format("memory")
-        .queryName("cellstats")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-
-    # last update per cell must equal the batch totals
-    final = (
-        spark.sql(
-            """SELECT cell, max_by(n_images, n_batches) AS n
-               FROM cellstats GROUP BY cell"""
-        )
-        .collect()
-    )
-    got = {r.cell: r.n for r in final}
-    batch = spark.read.parquet(feed_dir)
-    from simplepolygon_spark.functions.cells_sql import cell_sql_expr
-
-    expect = {
-        r.cell: r.n
-        for r in batch.selectExpr(f"{cell_sql_expr('lon','lat',4)} AS cell")
-        .groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    assert got == expect
-    # statefulness: at least one cell must have seen 2 micro-batches
-    two = spark.sql("SELECT max(n_batches) m FROM cellstats").first().m
-    assert two == 2
 
 
 def test_bucketed_join_has_no_exchange(spark, tmp_path):

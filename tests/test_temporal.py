@@ -1,6 +1,5 @@
-"""Temporal operators: sessionization (batch + streaming twin) and the
-as-of join — boundary conventions, tie-breaks, NULL guards, and the
-stream ≡ batch equivalence."""
+"""Temporal operators: sessionization and the as-of join — boundary
+conventions, tie-breaks, NULL guards, and plan shape."""
 
 from __future__ import annotations
 
@@ -154,69 +153,6 @@ def test_asof_null_ts_raises(spark):
     right = _ev(spark, [(1, 1, 10, 0.0)])
     with pytest.raises(Exception, match="NULL ts"):
         asof_join(left, right, right_cols=("event_id",)).collect()
-
-
-# ---------------------------------------------------------------------------
-# streaming twin
-# ---------------------------------------------------------------------------
-
-
-def test_sessionize_stream_equals_batch(spark, tmp_path):
-    """session_window stream over a 3-file in-order feed == batch
-    session_stats on the landed table (stream end = batch end + gap).
-    A far-future sentinel event pushes the final watermark past every
-    real session so append mode emits them all."""
-    from simplepolygon_spark.streaming.feed import sessionize_feed
-
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet").select(
-        "event_id", "user_id", "ts", "value"
-    )
-    feed_dir = str(tmp_path / "evfeed")
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
-    cut = ev.agg(F.percentile_approx(us, 0.5)).first()[0]
-    first = ev.where(us <= cut)
-    second = ev.where(us > cut)
-    first.coalesce(1).write.parquet(feed_dir)
-    second.coalesce(1).write.mode("append").parquet(feed_dir)
-    sentinel = ev.limit(1).select(
-        F.lit(10**9).alias("event_id"),
-        F.lit(10**6).alias("user_id"),
-        (F.col("ts").cast("timestamp") + F.expr("INTERVAL 365 DAYS")).alias("ts"),
-        F.lit(0.0).alias("value"),
-    )
-    sentinel.coalesce(1).write.mode("append").parquet(feed_dir)
-
-    st = (
-        spark.readStream.schema("event_id long, user_id long, ts timestamp, value double")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed_dir)
-    )
-    q = (
-        sessionize_feed(st, gap="12 hours", watermark="0 seconds")
-        .writeStream.format("memory")
-        .queryName("sessions_stream")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_sess"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = {
-        (r.user_id, r.session_start_us): (r.session_end_us, r.n_events, r.sum_value_u)
-        for r in spark.sql(
-            "SELECT * FROM sessions_stream WHERE user_id < 1000000"
-        ).collect()
-    }
-    gap_us = 12 * 3600 * 1_000_000
-    want = {
-        (r.user_id, r.session_start_us): (
-            r.session_end_us + gap_us,
-            r.n_events,
-            r.sum_value_u,
-        )
-        for r in session_stats(ev, gap="12 hours").collect()
-    }
-    assert got == want
 
 
 # ---------------------------------------------------------------------------
