@@ -291,106 +291,6 @@ def _q_knn_sql():
     """
 
 
-def q_window_lead(spark, sf_dir):
-    """W1: successor linking as lead() over (user, time) — the relational
-    form of nxtIsectAlongEdgeIn."""
-    from pyspark.sql import Window
-
-    ev = _read(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return ev.select(
-        "event_id",
-        "user_id",
-        F.lead("event_id").over(w).alias("next_event_id"),
-    ).orderBy("event_id")
-
-
-def _q_window_lead_sql():
-    return """
-        SELECT event_id, user_id,
-               lead(event_id) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS next_event_id
-        FROM events
-    """
-
-
-def q_minby_leftmost(spark, sf_dir):
-    """A2: arg-min per group (leftmost-vertex pattern) via window."""
-    from pyspark.sql import Window
-
-    c = _read(spark, sf_dir, "customer")
-    w = Window.partitionBy("c_nationkey").orderBy("c_acctbal", "c_custkey")
-    return (
-        c.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("c_nationkey", "c_custkey", "c_acctbal")
-        .orderBy("c_nationkey")
-    )
-
-
-def _q_minby_sql():
-    return """
-        SELECT c_nationkey, c_custkey, c_acctbal FROM (
-          SELECT c_nationkey, c_custkey, c_acctbal,
-                 row_number() OVER (PARTITION BY c_nationkey ORDER BY c_acctbal, c_custkey) AS rn
-          FROM customer) WHERE rn = 1
-    """
-
-
-def q_interval_join(spark, sf_dir):
-    """J7 pattern: key + date-range interval join, aggregated."""
-    l = _read(spark, sf_dir, "lineitem")
-    o = _read(spark, sf_dir, "orders")
-    j = l.join(
-        o,
-        (l.l_orderkey == o.o_orderkey)
-        & (l.l_shipdate >= o.o_orderdate)
-        & (l.l_shipdate <= F.date_add(o.o_orderdate, 90)),
-    )
-    return (
-        j.groupBy("o_orderpriority")
-        .agg(
-            F.count(F.lit(1)).alias("n_items"),
-            F.sum(F.col("l_quantity").cast("double")).alias("sum_qty"),
-        )
-        .orderBy("o_orderpriority")
-    )
-
-
-def _q_interval_join_sql():
-    return """
-        SELECT o_orderpriority, count(*) AS n_items,
-               sum(CAST(l_quantity AS DOUBLE)) AS sum_qty
-        FROM lineitem JOIN orders
-          ON l_orderkey = o_orderkey
-         AND l_shipdate >= o_orderdate
-         AND l_shipdate <= o_orderdate + INTERVAL 90 DAY
-        GROUP BY o_orderpriority
-    """
-
-
-def q_salted_agg(spark, sf_dir):
-    """Skew-safe two-phase salted aggregation == plain GROUP BY."""
-    l = _read(spark, sf_dir, "lineitem")
-    salted = l.withColumn("salt", F.pmod(F.xxhash64("l_orderkey"), F.lit(16)))
-    partial = salted.groupBy("l_returnflag", "salt").agg(
-        F.count(F.lit(1)).alias("c"),
-        F.sum(F.col("l_quantity").cast("double")).alias("s"),
-    )
-    return (
-        partial.groupBy("l_returnflag")
-        .agg(F.sum("c").alias("n_rows"), F.sum("s").alias("sum_qty"))
-        .orderBy("l_returnflag")
-    )
-
-
-def _q_salted_agg_sql():
-    return """
-        SELECT l_returnflag, count(*) AS n_rows,
-               sum(CAST(l_quantity AS DOUBLE)) AS sum_qty
-        FROM lineitem GROUP BY l_returnflag
-    """
-
-
 def q_exact_dedup(spark, sf_dir):
     from simplepolygon_spark.operators.dedup import exact_dup_groups
 
@@ -1861,7 +1761,7 @@ def _q_ivf_sql():
 
 def q_fused_validate_assign(spark, sf_dir):
     """Fused single-pass validate+assign over 500 deterministic images.
-    The oracle recomputes the geometric assignment (golden-ratio lon/lat
+    The oracle recomputes the geometric assignment (Kronecker lon/lat
     of the row index, unrolled ray-cast against the decomposed fixture
     rings, LEFT JOIN for the not-contained NULL rows) natively in SQL;
     caption_ok/psnr_ok are verified honestly Spark-side (decode + PSNR
@@ -1906,7 +1806,7 @@ def _q_fused_sql():
                     FROM imgs WHERE {_pip_sql(ring, 'lon', 'lat')}"""
             )
     asg = " UNION ALL ".join(branches)
-    phi, psi = "0.6180339887498949", "0.3819660112501051"
+    phi, psi = "0.6180339887498949", "0.5698402909980532"
     return f"""
         WITH imgs AS (
           SELECT 'img' || lpad(CAST(i AS VARCHAR), 9, '0') AS image_id,
@@ -1917,154 +1817,6 @@ def _q_fused_sql():
         SELECT i.image_id, a.polygon_id, a.ring_index,
                TRUE AS caption_ok, TRUE AS psnr_ok
         FROM imgs i LEFT JOIN asg a USING (image_id)
-    """
-
-
-def q_sessionize(spark, sf_dir):
-    """Gap-based sessionization of the events table (12 h gap): one
-    window shuffle on user_id computes per-event session sequence
-    numbers, then the session aggregate reuses that hash(user)
-    partitioning — no second exchange (operators/temporal.py).  All
-    output columns are exact integers (epoch micros, counts, value
-    micros), so the cross-engine hash compare is bit-exact by
-    construction."""
-    from simplepolygon_spark.operators.temporal import session_stats
-
-    ev = _read(spark, sf_dir, "events")
-    # session_seq cast double: the frozen oracle's windowed sum() is
-    # HUGEINT → pandas float64; align the engine's representation so
-    # the driver hash matches (values are identical small integers,
-    # exact in a double)
-    return session_stats(ev, gap="12 hours").withColumn(
-        "session_seq", F.col("session_seq").cast("double")
-    )
-
-
-def _q_sessionize_sql():
-    gus = 12 * 3600 * 1_000_000
-    return f"""
-        WITH o AS (
-          SELECT user_id, event_id, ts, value,
-                 lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                   AS prev_ts
-          FROM events),
-        f AS (
-          SELECT user_id, ts, value,
-                 sum(CASE WHEN prev_ts IS NULL
-                          OR epoch_us(ts) - epoch_us(prev_ts) >= {gus}
-                     THEN 1 ELSE 0 END)
-                   OVER (PARTITION BY user_id ORDER BY ts, event_id
-                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                   AS session_seq
-          FROM o)
-        SELECT user_id, session_seq,
-               epoch_us(min(ts)) AS session_start_us,
-               epoch_us(max(ts)) AS session_end_us,
-               count(*) AS n_events,
-               CAST(sum(CAST(round(value * 1e6) AS BIGINT)) AS BIGINT)
-                 AS sum_value_u
-        FROM f GROUP BY user_id, session_seq
-    """
-
-
-def q_asof_join(spark, sf_dir):
-    """As-of attribution: each purchase event joined to the latest
-    click at-or-before it by the same user.  The engine has no native
-    as-of join (Spark doesn't either); operators/temporal.asof_join
-    composes it as union + running-last-ignorenulls over one window —
-    one shuffle on the key, linear in |events|, no per-key cross
-    product.  The oracle is DuckDB's NATIVE ``ASOF LEFT JOIN`` — two
-    entirely different executions of the same semantics."""
-    from simplepolygon_spark.operators.temporal import asof_join
-
-    ev = _read(spark, sf_dir, "events")
-    pur = ev.where(F.col("event_type") == "purchase")
-    clk = ev.where(F.col("event_type") == "click")
-    out = asof_join(pur, clk, right_cols=("event_id", "ts"))
-    return out.select(
-        F.col("event_id").alias("purchase_id"),
-        "user_id",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-        F.col("asof_event_id").alias("click_id"),
-        F.unix_micros(F.col("asof_ts").cast("timestamp")).alias("click_ts_us"),
-    )
-
-
-def _q_asof_join_sql():
-    return """
-        SELECT l.event_id AS purchase_id, l.user_id,
-               epoch_us(l.ts) AS ts_us,
-               r.event_id AS click_id,
-               epoch_us(r.ts) AS click_ts_us
-        FROM (SELECT * FROM events WHERE event_type = 'purchase') l
-        ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') r
-          ON l.user_id = r.user_id AND l.ts >= r.ts
-    """
-
-
-def q_tfidf_topk(spark, sf_dir):
-    """Sparse cosine top-k over tf-idf postings via the inverted-index
-    self-join (operators/tfidf.py): documents meet only on SHARED
-    terms — each term contributes df² candidate rows — instead of as
-    dense |V|-dim vectors.  Cosine is rounded before ranking and ties
-    break on doc_b, so the emitted top-3 set is deterministic across
-    engines.  max_df_frac=0.5 — the documented scale shape: this
-    synthetic corpus is 30 boilerplate terms in ~77% of docs plus rare
-    content terms, and the unpruned postings join is 448M candidate
-    rows (~106 s at sf0.1) versus 62k pruned.  The oracle applies the
-    identical df cutoff (weights and norms renormalize over the pruned
-    vocabulary in both engines)."""
-    from simplepolygon_spark.operators.tfidf import tfidf_topk_similar
-
-    docs = _read(spark, sf_dir, "documents")
-    # rank cast long: DuckDB row_number() is BIGINT (pandas int64) vs
-    # Spark's int — align the representation for the driver hash
-    return tfidf_topk_similar(docs, k=3, max_df_frac=0.5).withColumn(
-        "rank", F.col("rank").cast("long")
-    )
-
-
-def _q_tfidf_topk_sql():
-    return r"""
-        WITH toks AS (
-          SELECT doc_id, t.term
-          FROM documents,
-               unnest(string_split_regex(trim(lower(text)), '\s+')) AS t(term)
-          WHERE text IS NOT NULL AND t.term <> ''
-        ),
-        n AS (SELECT count(*)::DOUBLE AS n FROM documents),
-        tf AS (SELECT doc_id, term, count(*)::DOUBLE AS tf
-               FROM toks GROUP BY 1, 2),
-        dft AS (SELECT term, count(DISTINCT doc_id)::DOUBLE AS df
-                FROM toks GROUP BY 1
-                HAVING count(DISTINCT doc_id)::DOUBLE
-                       <= 0.5 * (SELECT count(*) FROM documents)),
-        w AS (
-          SELECT tf.doc_id, tf.term,
-                 tf.tf * (ln((1 + (SELECT n FROM n)) / (1 + dft.df)) + 1) AS w
-          FROM tf JOIN dft USING (term)
-        ),
-        wn AS (
-          SELECT doc_id, term,
-                 w / sqrt(sum(w * w) OVER (PARTITION BY doc_id)) AS w
-          FROM w
-        ),
-        pairs AS (
-          SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                 round(sum(a.w * b.w), 6) AS cosine
-          FROM wn a JOIN wn b ON a.term = b.term AND a.doc_id < b.doc_id
-          GROUP BY 1, 2
-        ),
-        bi AS (
-          SELECT doc_a, doc_b, cosine FROM pairs
-          UNION ALL
-          SELECT doc_b AS doc_a, doc_a AS doc_b, cosine FROM pairs
-        )
-        SELECT doc_a, doc_b, cosine,
-               row_number() OVER (PARTITION BY doc_a
-                                  ORDER BY cosine DESC, doc_b) AS rank
-        FROM bi
-        QUALIFY rank <= 3
     """
 
 
@@ -2280,10 +2032,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pip_join_relational": q_pip_join_relational,
         "overlap_join": q_overlap_join,
         "knn": q_knn,
-        "window_lead": q_window_lead,
-        "minby_leftmost": q_minby_leftmost,
-        "interval_join": q_interval_join,
-        "salted_agg": q_salted_agg,
         "exact_dedup": q_exact_dedup,
         "fingerprints": q_fingerprints,
         "token_counts": q_token_counts,
@@ -2323,9 +2071,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "knn_arrow": q_knn_arrow,
         "ivf_topk": q_ivf_topk,
         "fused_validate_assign": q_fused_validate_assign,
-        "sessionize": q_sessionize,
-        "asof_join": q_asof_join,
-        "tfidf_topk": q_tfidf_topk,
         "token_budget": q_token_budget,
         "pipeline_select": q_pipeline_select,
         "pipeline_full": q_pipeline_full,
@@ -2339,10 +2084,6 @@ def oracle_sql() -> dict[str, str]:
         "pip_join_relational": _q_pip_join_sql(),
         "overlap_join": _q_overlap_join_sql(),
         "knn": _q_knn_sql(),
-        "window_lead": _q_window_lead_sql(),
-        "minby_leftmost": _q_minby_sql(),
-        "interval_join": _q_interval_join_sql(),
-        "salted_agg": _q_salted_agg_sql(),
         "exact_dedup": _q_exact_dedup_sql(),
         "fingerprints": _q_fingerprints_sql(),
         "token_counts": _q_token_counts_sql(),
@@ -2383,9 +2124,6 @@ def oracle_sql() -> dict[str, str]:
         "knn_arrow": _q_knn_sql(),
         "ivf_topk": _q_ivf_sql(),
         "fused_validate_assign": _q_fused_sql(),
-        "sessionize": _q_sessionize_sql(),
-        "asof_join": _q_asof_join_sql(),
-        "tfidf_topk": _q_tfidf_topk_sql(),
         "token_budget": _q_token_budget_sql(),
         "pipeline_select": _q_pipeline_select_sql(),
         "pipeline_full": _q_pipeline_full_sql(),

@@ -147,9 +147,7 @@ def main() -> None:
     )
     timed(
         "overlap_join",
-        lambda: overlap_join(
-            rings_a, rings_b, cover_level=8, bucket_level=7
-        ).count(),
+        lambda: overlap_join(rings_a, rings_b, cover_level=8).count(),
     )
     rings_a.unpersist()
 
@@ -163,8 +161,6 @@ def main() -> None:
     # --- operator families over the driver testdata --------------------
     Q = entrymod.queries()
     for name in (
-        "interval_join",
-        "salted_agg",
         "minhash_pairs",
         "cosine_topk",
         "token_counts",
@@ -177,9 +173,6 @@ def main() -> None:
         "ngram_jaccard_lsh",
         "canonical",
         "covariance",
-        "sessionize",
-        "asof_join",
-        "tfidf_topk",
         "pipeline_select",
         "patch_grid",
         "quantize",

@@ -10,7 +10,7 @@ Layout:
   geom.py        pure-numpy geometry kernels (no Spark imports)
   decompose.py   per-polygon ring decomposition (reference-parity semantics)
   operators/     Spark DataFrame operators (decompose, cells, joins, dedup,
-                 sampling/corpus pipelines, maintenance, ...)
+                 sampling/corpus pipelines, ...)
   sources/       deterministic synthetic sources (images, footprints, fixtures)
   functions/     column-expression helpers (JVM-side, codegen-friendly)
   plans/         end-to-end pipelines + lineage/resume

@@ -263,8 +263,8 @@ def snapshot_diff(
 
     Scale: each side is scanned once projected to (id, 16-byte hash) —
     text never moves; the full-outer hash join shuffles ~24 B/row per
-    side.  Snapshots landed id-clustered (``maintenance.cluster_table``)
-    or bucketed by id keep the join co-located; AQE handles the rest.
+    side.  Snapshots landed bucketed by id keep the join co-located;
+    AQE handles the rest.
     The summary a dashboard wants is ``groupBy("status").count()`` on
     this output — map-side combined, four rows."""
     o = old.select(

@@ -151,7 +151,8 @@ def bucketed_cover_spans(
     the fact side maps each cell to exactly ONE bucket, an interval
     expands to its contiguous bucket range — every qualifying pair
     meets in exactly one bucket, so the classic grid-join duplication
-    cannot occur."""
+    cannot occur.  ``overlap.overlap_join`` melts both ring layers
+    with it."""
     from pyspark.sql import functions as F
 
     shift_b = 2 * (max_level - bucket_level)

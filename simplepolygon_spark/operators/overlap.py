@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from ..cells import MAX_LEVEL
 from ..geom import rings_overlap
-from .crosswalk import covers_df
+from .crosswalk import bucketed_cover_spans, covers_df
 
 
 def derive_bucket_level(cov_a: DataFrame, cov_b: DataFrame) -> int:
@@ -75,27 +75,10 @@ def derive_bucket_level(cov_a: DataFrame, cov_b: DataFrame) -> int:
     return max(2, min(l_fine, l_explode_cap, MAX_LEVEL))
 
 
-def _melt_buckets(cov: DataFrame, side: str, bucket_level: int) -> DataFrame:
-    shift = 2 * (MAX_LEVEL - bucket_level)
-    return cov.select(
-        F.col("polygon_id").alias(f"{side}_polygon_id"),
-        F.col("ring_index").alias(f"{side}_ring_index"),
-        F.col("lo").alias(f"{side}_lo"),
-        F.col("hi").alias(f"{side}_hi"),
-        F.col("full").alias(f"{side}_full"),
-        F.explode(
-            F.sequence(
-                F.shiftright("lo", shift), F.shiftright("hi", shift)
-            )
-        ).alias("bucket"),
-    )
-
-
 def overlap_join(
     rings_a: DataFrame,
     rings_b: DataFrame,
     cover_level: int = 10,
-    bucket_level: int | None = None,
 ) -> DataFrame:
     """(a_polygon_id, a_ring_index, b_polygon_id, b_ring_index): every
     pair whose ring INTERIORS intersect (``geom.rings_overlap``
@@ -115,14 +98,13 @@ def overlap_join(
     else refines with the exact kernel, coordinates pulled for those
     pairs only.
 
-    ``bucket_level=None`` (default) derives the melt level from the
-    cover-range span histogram (``derive_bucket_level``) so the bucket
-    granularity tracks the layer's actual cell mix instead of a
-    constant tuned to one dataset; pass an int to pin it.  The covers
-    are persisted for the duration of the candidate job so the
-    histogram pass doesn't recompute the cover kernel."""
-    cov_a = covers_df(rings_a, cover_level, MAX_LEVEL)
-    cov_b = covers_df(rings_b, cover_level, MAX_LEVEL)
+    The bucket melt level comes from the cover-range span histogram
+    (``derive_bucket_level``), so the bucket granularity tracks the
+    layer's actual cell mix instead of a constant tuned to one dataset.
+    The covers are persisted for the duration of the candidate job so
+    the histogram pass doesn't recompute the cover kernel."""
+    cov_a = covers_df(rings_a, cover_level, MAX_LEVEL).persist()
+    cov_b = covers_df(rings_b, cover_level, MAX_LEVEL).persist()
     ids = ["a_polygon_id", "a_ring_index", "b_polygon_id", "b_ring_index"]
     a_contains = (F.col("a_lo") <= F.col("b_lo")) & (
         F.col("a_hi") >= F.col("b_hi")
@@ -130,16 +112,18 @@ def overlap_join(
     b_contains = (F.col("b_lo") <= F.col("a_lo")) & (
         F.col("b_hi") >= F.col("a_hi")
     )
-    cached = []
     try:
-        if bucket_level is None:
-            # the histogram aggregate and the melt both consume the
-            # covers; persist so the cover kernel runs once per side
-            cov_a, cov_b = cov_a.persist(), cov_b.persist()
-            cached = [cov_a, cov_b]
-            bucket_level = derive_bucket_level(cov_a, cov_b)
-        ca = _melt_buckets(cov_a, "a", bucket_level)
-        cb = _melt_buckets(cov_b, "b", bucket_level)
+        bucket_level = derive_bucket_level(cov_a, cov_b)
+        ca, cb = (
+            bucketed_cover_spans(cov, bucket_level, MAX_LEVEL).select(
+                "bucket",
+                *(
+                    F.col(c).alias(f"{side}_{c}")
+                    for c in ("polygon_id", "ring_index", "lo", "hi", "full")
+                ),
+            )
+            for cov, side in ((cov_a, "a"), (cov_b, "b"))
+        )
         cand = (
             ca.join(cb, "bucket")
             .where(
@@ -162,8 +146,8 @@ def overlap_join(
         )
     finally:
         # no persisted cover outlives the call, on any exit path
-        for c in cached:
-            c.unpersist()
+        cov_a.unpersist()
+        cov_b.unpersist()
     accepted = cand.where("accept").select(*ids)
 
     need = cand.where(~F.col("accept")).select(*ids)

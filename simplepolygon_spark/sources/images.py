@@ -44,8 +44,10 @@ MAGIC = b"SPIM"
 _WIDTHS = (16, 32, 64)
 _HEIGHTS = (16, 24, 48)
 _FMTS = ("raw", "rle", "qnt")
+# lat steps by 1/g**2 (g the plastic number), not 1 - _PHI: that gives
+# frac(i*_PSI) = 1 - frac(i*_PHI), which puts every point on one line
 _PHI = 0.6180339887498949
-_PSI = 0.3819660112501051
+_PSI = 0.5698402909980532
 
 IMAGES_SCHEMA = StructType(
     [
@@ -179,7 +181,7 @@ def images_df(
 
     ``skew=False`` disables the hot-cell relocation (whose trigger is a
     blake2b-derived phash, not SQL-expressible) so lon/lat become pure
-    golden-ratio arithmetic of the row index — the form the DuckDB
+    Kronecker-sequence arithmetic of the row index — the form the DuckDB
     correctness oracle recomputes.  Benchmarks and skew tests keep the
     default."""
     if partitions is None:

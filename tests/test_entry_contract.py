@@ -13,10 +13,7 @@ import pytest
 import __spark_entry__ as entrymod
 
 SF_DIR = "/root/testdata/sf0.01"
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+TABLES = ["events", "documents", "embeddings"]
 
 
 @pytest.fixture(scope="module")

@@ -217,7 +217,7 @@ def test_overlap_self_dedupes_and_drops_identity(spark):
     assert all(a != b for a, b in got)
 
 
-def test_bucket_level_derivation_bounds_candidate_blowup(spark):
+def test_bucket_level_derivation_bounds_candidate_blowup(spark, monkeypatch):
     """VERDICT r5 #6: the fixed bucket_level default was reactive to
     one dataset (commit 96199b0: level 6 on a dense grid layer put
     ~180 ranges/bucket and blew the candidate join past 100M rows).
@@ -228,10 +228,10 @@ def test_bucket_level_derivation_bounds_candidate_blowup(spark):
     by construction (any overlapping range pair shares its common
     cell's bucket at every level)."""
     from simplepolygon_spark.cells import MAX_LEVEL
-    from simplepolygon_spark.operators.crosswalk import covers_df
-    from simplepolygon_spark.operators.overlap import (
-        _melt_buckets,
-        derive_bucket_level,
+    from simplepolygon_spark.operators import overlap
+    from simplepolygon_spark.operators.crosswalk import (
+        bucketed_cover_spans,
+        covers_df,
     )
 
     # the 96199b0 shape at test scale: a dense unit grid vs a
@@ -251,13 +251,13 @@ def test_bucket_level_derivation_bounds_candidate_blowup(spark):
     cov_a = covers_df(dfa, 10, MAX_LEVEL).persist()
     cov_b = covers_df(dfb, 10, MAX_LEVEL).persist()
     try:
-        derived = derive_bucket_level(cov_a, cov_b)
+        derived = overlap.derive_bucket_level(cov_a, cov_b)
         assert 6 < derived <= MAX_LEVEL
 
         def intermediate(level):
             return (
-                _melt_buckets(cov_a, "a", level)
-                .join(_melt_buckets(cov_b, "b", level), "bucket")
+                bucketed_cover_spans(cov_a, level, MAX_LEVEL)
+                .join(bucketed_cover_spans(cov_b, level, MAX_LEVEL), "bucket")
                 .count()
             )
 
@@ -272,14 +272,15 @@ def test_bucket_level_derivation_bounds_candidate_blowup(spark):
         cov_a.unpersist()
         cov_b.unpersist()
 
-    # level-invariance of the RESULT: auto vs the old constants
+    # level-invariance of the RESULT: auto vs the old blowup constant
     auto = {
         (r.a_polygon_id, r.b_polygon_id)
         for r in overlap_join(dfa, dfb).collect()
     }
+    monkeypatch.setattr(overlap, "derive_bucket_level", lambda a, b: 6)
     pinned = {
         (r.a_polygon_id, r.b_polygon_id)
-        for r in overlap_join(dfa, dfb, bucket_level=6).collect()
+        for r in overlap_join(dfa, dfb).collect()
     }
     assert auto == pinned
     assert len(auto) == (2 * n - 1) ** 2

@@ -82,6 +82,15 @@ def test_skew_knob_relocates_hot_rows():
     assert 100 < len(hot) < 400
 
 
+def test_unskewed_lon_lat_are_uncorrelated():
+    # lon and lat come from independent sequences: the points fill the
+    # box instead of lying on one line
+    metas = [meta_of(i, skew=False) for i in range(1, 2001)]
+    lon = np.array([m["lon"] for m in metas])
+    lat = np.array([m["lat"] for m in metas])
+    assert abs(np.corrcoef(lon, lat)[0, 1]) < 0.1
+
+
 def test_images_df_and_validate_payload(spark):
     df = images_df(spark, 300, partitions=4)
     res = validate_payload(df).collect()
