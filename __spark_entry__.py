@@ -525,60 +525,6 @@ def _q_overlap_join_sql():
     """
 
 
-def q_patch_grid(spark, sf_dir):
-    """ViT patchification grid (patch=8, stride=6): the image twin of
-    q:chunks.  The images table's bytes aren't DuckDB-visible, so the
-    gate synthesizes (w, h) metadata deterministically from doc_id in
-    BOTH engines and runs the REAL ``payload.patch_grid`` rule over it
-    — window counts, offsets, and edge-clamped sizes integer-exact
-    cross-engine.  The h=5 class exercises the e <= patch single-window
-    branch; pixel-side agreement (extract_patches ≡ patch_grid, decoded
-    checksums, exact tiling) is pytest-gated in test_patches.py."""
-    from simplepolygon_spark.operators.payload import patch_grid
-
-    dims = (
-        _read(spark, sf_dir, "documents")
-        .where(F.col("doc_id") < 1500)
-        .select(
-            "doc_id",
-            F.expr(
-                "CAST(CASE doc_id % 3 WHEN 0 THEN 16 WHEN 1 THEN 32 "
-                "ELSE 64 END AS BIGINT)"
-            ).alias("w"),
-            F.expr(
-                "CAST(CASE doc_id % 5 WHEN 0 THEN 16 WHEN 1 THEN 24 "
-                "WHEN 2 THEN 48 WHEN 3 THEN 5 ELSE 100 END AS BIGINT)"
-            ).alias("h"),
-        )
-    )
-    return patch_grid(dims, patch=8, stride=6, id_col="doc_id").orderBy(
-        "doc_id", "patch_index"
-    )
-
-
-def _q_patch_grid_sql():
-    return """
-        WITH dims AS (
-          SELECT doc_id,
-                 CAST(CASE doc_id % 3 WHEN 0 THEN 16 WHEN 1 THEN 32
-                      ELSE 64 END AS BIGINT) AS w,
-                 CAST(CASE doc_id % 5 WHEN 0 THEN 16 WHEN 1 THEN 24
-                      WHEN 2 THEN 48 WHEN 3 THEN 5 ELSE 100 END AS BIGINT) AS h
-          FROM documents WHERE doc_id < 1500
-        ), grids AS (
-          SELECT doc_id, w, h,
-                 CASE WHEN w <= 8 THEN 1 ELSE (w - 8 + 5) // 6 + 1 END AS nx,
-                 CASE WHEN h <= 8 THEN 1 ELSE (h - 8 + 5) // 6 + 1 END AS ny
-          FROM dims
-        )
-        SELECT doc_id, k AS patch_index,
-               (k % nx) * 6 AS px, (k // nx) * 6 AS py,
-               least(8, w - (k % nx) * 6) AS pw,
-               least(8, h - (k // nx) * 6) AS ph
-        FROM grids, UNNEST(range(0, nx*ny)) AS t(k)
-    """
-
-
 # identical planted-PII expression for both engines: `||` is
 # NULL-propagating in Spark AND DuckDB (concat() is not — DuckDB's
 # skips NULL args), CAST AS STRING and lpad agree in both
@@ -2041,7 +1987,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "adaptive_filter": q_adaptive_filter,
         "mix_report": q_mix_report,
         "profile": q_profile,
-        "patch_grid": q_patch_grid,
         "snapshot_diff": q_snapshot_diff,
         "quantize": q_quantize,
         "length_percentiles": q_length_percentiles,
@@ -2093,7 +2038,6 @@ def oracle_sql() -> dict[str, str]:
         "adaptive_filter": _q_adaptive_filter_sql(),
         "mix_report": _q_mix_report_sql(),
         "profile": _q_profile_sql(),
-        "patch_grid": _q_patch_grid_sql(),
         "snapshot_diff": _q_snapshot_diff_sql(),
         "quantize": _q_quantize_sql(),
         "length_percentiles": _q_length_percentiles_sql(),

@@ -151,10 +151,6 @@ def main() -> None:
     )
     rings_a.unpersist()
 
-    from simplepolygon_spark.operators.payload import image_embeddings
-
-    # decode → resize → project → normalize over 20k real-byte images
-    timed("image_embed", lambda: image_embeddings(imgs_bytes).count())
     imgs_bytes.unpersist()
     imgs.unpersist()
 
@@ -174,7 +170,6 @@ def main() -> None:
         "canonical",
         "covariance",
         "pipeline_select",
-        "patch_grid",
         "quantize",
         "profile",
     ):

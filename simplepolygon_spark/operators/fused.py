@@ -43,22 +43,9 @@ def validate_and_assign(images: DataFrame, index_bc) -> DataFrame:
 
             ps, cap_ok = validate_rows(ids, bts, fmts, caps)
 
-            # same invalid-coordinate guard as pip_join: the cell
-            # computation CLIPS onto boundary cells, so NaN/out-of-window
-            # points would land in an edge cell and be FULL-cell-accepted
-            # with no geometry check.  Invalid points are simply never
-            # assigned — they surface as the NULL-ring validity row.
-            ok = (
-                np.isfinite(lon) & np.isfinite(lat)
-                & (lon >= -180.0) & (lon <= 180.0)
-                & (lat >= -90.0) & (lat <= 90.0)
-            )
-            ok_rows = np.nonzero(ok)[0]
-            pt_idx, ring_id, full = idx.lookup(lon[ok_rows], lat[ok_rows])
-            pt_idx, ring_id = idx.refine(
-                lon[ok_rows], lat[ok_rows], pt_idx, ring_id, full
-            )
-            pt_idx = ok_rows[pt_idx]  # back to batch-row indices
+            # invalid points are never assigned (IntervalIndex.assign);
+            # they surface as the NULL-ring validity row
+            pt_idx, ring_id = idx.assign(lon, lat)
 
             assigned = np.zeros(n, dtype=bool)
             assigned[pt_idx] = True

@@ -125,6 +125,29 @@ class IntervalIndex:
             keep[part] = ok
         return pt_idx[keep], ring_id[keep]
 
+    def assign(self, lon: np.ndarray, lat: np.ndarray):
+        """Guarded point→ring assignment: lookup + refine over the valid
+        points only. Returns (pt_idx, ring_id) with pt_idx indexing the
+        caller's unfiltered arrays, in lookup order.
+
+        Invalid coordinates (NaN/inf or outside the lon/lat world
+        window) never match: the cell computation CLIPS onto boundary
+        cells, so a lon=190 point would otherwise land in the
+        easternmost column and be FULL-cell-accepted with no geometry
+        check, while the same point in a PARTIAL cell is rejected — an
+        accept/reject inconsistency on bad data."""
+        ok = (
+            np.isfinite(lon) & np.isfinite(lat)
+            & (lon >= -180.0) & (lon <= 180.0)
+            & (lat >= -90.0) & (lat <= 90.0)
+        )
+        if not ok.all():
+            rows = np.flatnonzero(ok)
+            pt_idx, ring_id = self.assign(lon[rows], lat[rows])
+            return rows[pt_idx], ring_id
+        pt_idx, ring_id, full = self.lookup(lon, lat)
+        return self.refine(lon, lat, pt_idx, ring_id, full)
+
 
 def build_interval_index(
     rings_out: DataFrame | list,
@@ -288,21 +311,7 @@ def pip_join(
             ids = tbl.column(id_col).to_numpy(zero_copy_only=False)
             lon = tbl.column(lon_col).to_numpy(zero_copy_only=False).astype(np.float64)
             lat = tbl.column(lat_col).to_numpy(zero_copy_only=False).astype(np.float64)
-            # invalid coordinates (NaN/inf or outside the lon/lat world
-            # window) must never match: the cell computation CLIPS onto
-            # boundary cells, so a lon=190 point would otherwise land in
-            # the easternmost column and be FULL-cell-accepted with no
-            # geometry check, while the same point in a PARTIAL cell is
-            # rejected — an accept/reject inconsistency on bad data
-            ok = (
-                np.isfinite(lon) & np.isfinite(lat)
-                & (lon >= -180.0) & (lon <= 180.0)
-                & (lat >= -90.0) & (lat <= 90.0)
-            )
-            if not ok.all():
-                ids, lon, lat = ids[ok], lon[ok], lat[ok]
-            pt_idx, ring_id, full = idx.lookup(lon, lat)
-            pt_idx, ring_id = idx.refine(lon, lat, pt_idx, ring_id, full)
+            pt_idx, ring_id = idx.assign(lon, lat)
             if len(pt_idx) == 0:
                 continue
             pids = idx.ring_pid[ring_id]

@@ -6,7 +6,9 @@ imports, relative imports resolved against the importing module — and
 checks that each imported module exists and carries each imported name.
 Function-local imports only fail when their function runs, so a
 dangling one (an import of a deleted module) otherwise hides until a
-rarely taken code path hits it.  No Spark session is started.
+rarely taken code path hits it.  The same walk guards the layering:
+the spatial engine's import closure stays inside the spatial modules.
+No Spark session is started.
 """
 
 from __future__ import annotations
@@ -98,3 +100,69 @@ def test_walker_sees_function_local_imports():
     ]
     assert any(p.name == "tiling.py" for p, _ in local)
     assert any(p.name == "__spark_entry__.py" for p, _ in local)
+
+
+# The paper's engine and the benchmark that drives it.  Their package
+# import closure (module-level and function-local, with the parent
+# packages each import runs) must stay inside SPATIAL: the off-paper
+# families (dedup, similarity, sampling, text, corpus, stats,
+# plans/bucketing) may import the engine, never the reverse.
+SPATIAL_ROOTS = [
+    *sorted((REPO / "perfbench").glob("*.py")),
+    *(
+        REPO / PKG / "operators" / f"{m}.py"
+        for m in (
+            "decompose", "tiling", "crosswalk", "knn",
+            "overlap", "fused", "payload", "geojson",
+        )
+    ),
+    *(REPO / PKG / "plans" / f"{m}.py" for m in ("pipeline", "lineage", "trace")),
+    *(REPO / PKG / "sources" / f"{m}.py" for m in ("images", "footprints", "fixtures")),
+    REPO / PKG / "__init__.py",
+]
+SPATIAL = {
+    PKG,
+    *(f"{PKG}.{m}" for m in ("cells", "decompose", "deploy", "geom", "session")),
+    f"{PKG}.functions",
+    f"{PKG}.functions.cells_sql",
+    f"{PKG}.operators",
+    *(
+        f"{PKG}.operators.{m}"
+        for m in (
+            "crosswalk", "decompose", "fused", "geojson",
+            "knn", "overlap", "payload", "tiling",
+        )
+    ),
+    f"{PKG}.plans",
+    *(f"{PKG}.plans.{m}" for m in ("lineage", "pipeline", "trace")),
+    f"{PKG}.sources",
+    *(f"{PKG}.sources.{m}" for m in ("fixtures", "footprints", "images")),
+}
+
+
+def _module_path(module: str) -> Path | None:
+    p = REPO.joinpath(*module.split("."))
+    for cand in (p.with_suffix(".py"), p / "__init__.py"):
+        if cand.is_file():
+            return cand
+    return None
+
+
+def test_spatial_import_closure_stays_spatial():
+    reached = {}  # module -> the file that first imported it
+    todo = list(SPATIAL_ROOTS)
+    while todo:
+        path = todo.pop()
+        for lineno, module, names in _package_imports(path):
+            # ``from pkg.sub import mod`` names submodules too
+            for target in (module, *(f"{module}.{n}" for n in names)):
+                parts = target.split(".")
+                for k in range(1, len(parts) + 1):
+                    mod = ".".join(parts[:k])
+                    found = _module_path(mod)
+                    if found is None or mod in reached:
+                        continue
+                    reached[mod] = f"{path.relative_to(REPO)}:{lineno}"
+                    todo.append(found)
+    leaks = sorted(f"{m} (via {reached[m]})" for m in set(reached) - SPATIAL)
+    assert not leaks, "spatial code reaches off-paper modules:\n" + "\n".join(leaks)

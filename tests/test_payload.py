@@ -5,11 +5,7 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from simplepolygon_spark.operators.payload import (
-    decode_features,
-    resize_images,
-    validate_payload,
-)
+from simplepolygon_spark.operators.payload import validate_payload
 from simplepolygon_spark.sources.images import (
     decode_image,
     encode_image,
@@ -97,21 +93,6 @@ def test_images_df_and_validate_payload(spark):
     assert len(res) == 300
     assert all(r.psnr_db >= 40.0 for r in res)  # lossless → 1e9 sentinel
     assert all(r.caption_ok for r in res)
-
-
-def test_decode_features_and_resize(spark):
-    df = images_df(spark, 30, partitions=2)
-    feats = {r.image_id: r for r in decode_features(df).collect()}
-    assert len(feats) == 30
-    f0 = feats["img000000001"]
-    px = pixels_of(1, f0.w, f0.h)
-    assert abs(f0.mean_r - px[:, :, 0].mean()) < 1e-9
-
-    rs = resize_images(df, 8, 8).collect()
-    assert len(rs) == 30
-    for r in rs:
-        px = decode_image(bytes(r.bytes), r.fmt)
-        assert px.shape == (8, 8, 3)
 
 
 def test_validate_reports_corrupt_rows_instead_of_failing(spark):

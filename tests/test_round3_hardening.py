@@ -807,34 +807,12 @@ def test_signature_kernels_skip_null_text(spark):
     assert {(p.doc_a, p.doc_b) for p in pairs} == {(1, 3)}
 
 
-def test_media_operators_skip_null_bytes(spark):
-    from simplepolygon_spark.operators.audio_ops import audio_features
+def test_srp_signatures_reject_null_embedding(spark):
+    """SRP signatures: NULL vectors are rejected loudly (shared guard)."""
     from simplepolygon_spark.operators.dedup import srp_signatures
-    from simplepolygon_spark.operators.frames import sample_frames
-    from simplepolygon_spark.sources.audio import encode_audio
-    from simplepolygon_spark.sources.videos import encode_video
-
-    vids = spark.createDataFrame(
-        [("v0", encode_video(0, w=16, h=12, n_frames=4), "svid", "c0"),
-         ("v1", None, "svid", "c1")],
-        "video_id string, bytes binary, fmt string, caption string",
-    )
-    frames = sample_frames(vids, n_samples=2).collect()
-    assert {r.video_id for r in frames} == {"v0"} and len(frames) == 2
-
-    clips = spark.createDataFrame(
-        [("a0", encode_audio(0, sample_rate=8000, n_samples=1600), "saud"),
-         ("a1", None, "saud")],
-        "clip_id string, bytes binary, fmt string",
-    )
-    feats = audio_features(clips).collect()
-    assert {r.clip_id for r in feats} == {"a0"}
-
-    # SRP signatures: NULL vectors are rejected loudly (shared guard)
-    import pytest as _pytest
 
     emb = spark.createDataFrame(
         [(1, [0.1, 0.2]), (2, None)], "vec_id long, v array<double>"
     )
-    with _pytest.raises(Exception, match="NULL embedding"):
+    with pytest.raises(Exception, match="NULL embedding"):
         srp_signatures(emb).collect()

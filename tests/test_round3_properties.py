@@ -1,7 +1,6 @@
 """Property-based invariants for the round-3 kernels (hypothesis):
 batch minhash == per-doc reference on arbitrary unicode, banding
-helpers' knee guarantees, frame/segment index properties, and the
-audio/video byte-surgery round-trips."""
+helpers' knee guarantees."""
 
 from __future__ import annotations
 
@@ -16,7 +15,6 @@ from simplepolygon_spark.operators.dedup import (
     bands_for_threshold,
     srp_bands_for_threshold,
 )
-from simplepolygon_spark.operators.frames import sample_indices
 
 _rng = np.random.default_rng(7)
 A16 = _rng.integers(1, _MERSENNE, 16, dtype=np.uint64)
@@ -60,56 +58,3 @@ def test_bands_for_threshold_invariants(num_hashes, threshold):
 def test_srp_bands_threshold_total(c):
     b = srp_bands_for_threshold(64, c)
     assert 64 % b == 0  # always a valid banding, for any cosine input
-
-
-@settings(max_examples=100, deadline=None)
-@given(st.integers(min_value=1, max_value=500), st.integers(min_value=1, max_value=64))
-def test_sample_indices_properties(n_frames, n_samples):
-    idx = sample_indices(n_frames, n_samples)
-    assert idx[0] == 0                      # first frame always kept
-    assert idx == sorted(set(idx))          # strictly increasing, unique
-    assert len(idx) == min(n_samples, n_frames)
-    assert all(0 <= i < n_frames for i in idx)
-
-
-@settings(max_examples=40, deadline=None)
-@given(
-    st.integers(min_value=0, max_value=10_000),
-    st.integers(min_value=0, max_value=3999),
-    st.integers(min_value=1, max_value=4000),
-)
-def test_audio_slice_round_trip(clip, start, n):
-    from simplepolygon_spark.sources.audio import (
-        clip_samples,
-        decode_audio,
-        encode_audio,
-        slice_segment,
-    )
-
-    n = min(n, 4000 - start)
-    data = encode_audio(clip, sample_rate=8000, n_samples=4000)
-    pcm, sr = decode_audio(slice_segment(data, start, n))
-    assert sr == 8000
-    assert (pcm == clip_samples(clip, 4000, 8000)[start : start + n]).all()
-
-
-@settings(max_examples=20, deadline=None)
-@given(
-    st.integers(min_value=0, max_value=10_000),
-    st.integers(min_value=1, max_value=9),
-)
-def test_video_frame_round_trip(vid, n_frames):
-    from simplepolygon_spark.sources.images import decode_image
-    from simplepolygon_spark.sources.videos import (
-        encode_video,
-        frame_pixels,
-        frame_to_spim,
-        video_header,
-    )
-
-    data = encode_video(vid, w=16, h=12, n_frames=n_frames)
-    w, h, n, table, off = video_header(data)
-    assert (w, h, n) == (16, 12, n_frames)
-    for f in range(n_frames):
-        px = decode_image(frame_to_spim(data, f, w, h), "rle")
-        assert (px == frame_pixels(vid, f, 16, 12)).all()

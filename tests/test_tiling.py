@@ -156,6 +156,41 @@ def test_invalid_coordinates_never_match(spark):
     assert valid_hits >= 1  # the rejection is not just dropping everything
 
 
+def test_interval_index_assign_equals_guard_lookup_refine():
+    """IntervalIndex.assign == the guard + lookup + refine sequence,
+    with point indices into the caller's unfiltered arrays.  The east
+    ring overhangs lon=180, so lon=190 clips into one of its FULL cells
+    and only the guard keeps it out."""
+    east = [[150.0, -30.0], [200.0, -30.0], [200.0, 30.0], [150.0, 30.0], [150.0, -30.0]]
+    west = [[-10.0, -10.0], [10.0, -10.0], [10.0, 10.0], [-10.0, 10.0], [-10.0, -10.0]]
+    idx = build_interval_index(
+        [
+            {"polygon_id": "east", "ring_index": 0, "coords": east},
+            {"polygon_id": "west", "ring_index": 0, "coords": west},
+        ],
+        cover_level=8,
+    )
+    lon = np.array([165.0, 190.0, np.nan, 0.0, -190.0, 150.01, 179.9, 165.0, 9.99])
+    lat = np.array([0.0, 0.0, 0.0, 0.0, 0.0, 29.99, 0.0, 95.0, np.inf])
+
+    ok = (
+        np.isfinite(lon) & np.isfinite(lat)
+        & (lon >= -180.0) & (lon <= 180.0)
+        & (lat >= -90.0) & (lat <= 90.0)
+    )
+    rows = np.flatnonzero(ok)
+    pt, rid, full = idx.lookup(lon[rows], lat[rows])
+    pt, rid = idx.refine(lon[rows], lat[rows], pt, rid, full)
+
+    got_pt, got_rid = idx.assign(lon, lat)
+    assert got_pt.tolist() == rows[pt].tolist()
+    assert got_rid.tolist() == rid.tolist()
+    assert got_pt.tolist() == [0, 3, 5, 6]
+    assert idx.ring_pid[got_rid].tolist() == ["east", "west", "east", "east"]
+    # the interior point and the clipped lon=190 point both hit FULL cells
+    assert idx.lookup(lon[:2], lat[:2])[2].all()
+
+
 def test_pip_join_relational_output_names_with_custom_cols(spark):
     """Custom lon_col/lat_col input names must not leak into the output:
     both paths emit lon/lat (drop-in replacements for each other)."""
