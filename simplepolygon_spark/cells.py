@@ -69,22 +69,29 @@ def cell_range_at_max(cell: np.ndarray, level: int, max_level: int = MAX_LEVEL):
     return c << shift, ((c + 1) << shift) - 1
 
 
-def cell_bounds(cell: int, level: int):
-    """(lon_min, lat_min, lon_max, lat_max) of a cell."""
-    c = np.uint64(cell)
-    ix = _compact_bits(c)
-    iy = _compact_bits(c >> np.uint64(1))
+def cell_bounds(cell, level: int):
+    """(lon_min, lat_min, lon_max, lat_max) of a cell as floats, or of an
+    array of cells as four float64 arrays."""
+    c = np.asarray(cell, dtype=np.uint64)
+    b = _grid_bounds(_compact_bits(c), _compact_bits(c >> np.uint64(1)), level)
+    return tuple(float(v) for v in b) if c.ndim == 0 else b
+
+
+def _grid_bounds(ix, iy, level: int):
+    """Cell bounds from the cells' integer grid indices at ``level``."""
+    ix, iy = np.asarray(ix, np.float64), np.asarray(iy, np.float64)
     n = float(1 << level)
     return (
-        float(ix) / n * 360.0 - 180.0,
-        float(iy) / n * 180.0 - 90.0,
-        float(ix + 1) / n * 360.0 - 180.0,
-        float(iy + 1) / n * 180.0 - 90.0,
+        ix / n * 360.0 - 180.0,
+        iy / n * 180.0 - 90.0,
+        (ix + 1) / n * 360.0 - 180.0,
+        (iy + 1) / n * 180.0 - 90.0,
     )
 
 
-def _compact_bits(v: np.uint64) -> np.uint64:
-    v = np.uint64(v) & np.uint64(_MASKS[4])
+def _compact_bits(v):
+    """Inverse of ``spread_bits``: the even bits of v, packed (vectorized)."""
+    v = np.asarray(v, dtype=np.uint64) & np.uint64(_MASKS[4])
     v = (v | (v >> np.uint64(1))) & np.uint64(_MASKS[3])
     v = (v | (v >> np.uint64(2))) & np.uint64(_MASKS[2])
     v = (v | (v >> np.uint64(4))) & np.uint64(_MASKS[1])
@@ -94,104 +101,163 @@ def _compact_bits(v: np.uint64) -> np.uint64:
 
 
 # ---------------------------------------------------------------------------
-# cell cover of a ring: recursive FULL/PARTIAL descent
+# cell cover of a ring: level-synchronous FULL/PARTIAL frontier
+#
+# Each level classifies its whole frontier of cells in array passes: cells
+# disjoint from the ring's bbox drop; a cell that some edge crosses or
+# touches is PARTIAL (kept at ``max_level``, else split into its four
+# children); an untouched cell is FULL when its centre is inside the ring
+# (``geom.point_in_ring_batch``) and drops otherwise.  The frontier
+# carries each cell's grid indices next to its Morton code, so its bounds
+# are ``cell_bounds``' arithmetic without unpacking the code.  The edge
+# test runs over (cell, edge) pairs: a child only tests the edges whose
+# bbox met its parent, which are all the edges whose bbox can meet the
+# child, so the result equals testing every edge.  Every pass over
+# (cell, edge) or (centre, edge) pairs works in chunks of at most
+# ``_PAIR_BUDGET`` pairs, so a ring with many vertices runs in bounded
+# memory.  A ring with fewer than 4 positions or a non-finite coordinate
+# gets a ``ValueError`` naming the fault.
 # ---------------------------------------------------------------------------
 
 FULL = 1
 PARTIAL = 0
 
+_PAIR_BUDGET = 1 << 17  # pairs per numpy pass: its temporaries are 1 MB arrays
 
-def _segments_intersect_box(ring: np.ndarray, lon0, lat0, lon1, lat1) -> bool:
-    """Does any ring edge intersect / touch the box? Conservative bbox +
-    separating-axis check per edge, vectorized."""
-    x1, y1 = ring[:-1, 0], ring[:-1, 1]
-    x2, y2 = ring[1:, 0], ring[1:, 1]
-    # quick reject on edge bboxes
-    m = (
-        (np.minimum(x1, x2) <= lon1)
-        & (np.maximum(x1, x2) >= lon0)
-        & (np.minimum(y1, y2) <= lat1)
-        & (np.maximum(y1, y2) >= lat0)
-    )
-    if not m.any():
-        return False
-    x1, y1, x2, y2 = x1[m], y1[m], x2[m], y2[m]
-    # exact segment-box test: the segment's line must leave all four box
-    # corners strictly on one side, else it crosses/touches the box.  A
-    # corner exactly ON the line (cross product 0) makes both all>0 and
-    # all<0 false, so the touch case needs no separate accumulator.
-    dx, dy = x2 - x1, y2 - y1
-    sides = np.stack(
-        [
-            dx * (cy - y1) - dy * (cx - x1)
-            for cx, cy in ((lon0, lat0), (lon0, lat1), (lon1, lat0), (lon1, lat1))
-        ]
-    )
-    crosses = ~(np.all(sides > 0, axis=0) | np.all(sides < 0, axis=0))
-    return bool(np.any(crosses))
+
+def _checked_ring(ring) -> np.ndarray:
+    r = np.asarray(ring, dtype=np.float64)
+    if r.ndim == 0 or len(r) < 4:
+        raise ValueError(f"ring has fewer than 4 positions (got {len(r) if r.ndim else 0})")
+    if r.ndim != 2 or r.shape[1] < 2:
+        raise ValueError(f"ring positions must be [lon, lat] pairs, got shape {r.shape}")
+    if not np.isfinite(r[:, :2]).all():
+        k = int(np.flatnonzero(~np.isfinite(r[:, :2]).all(axis=1))[0])
+        raise ValueError(f"ring has a non-finite coordinate at position {k}: {r[k, :2].tolist()}")
+    return r
 
 
 def cover_ring(
     ring, max_level: int = 12, start_level: int = 4, abs_max: int = MAX_LEVEL
 ):
-    """FULL/PARTIAL cell cover of one simple ring by recursive descent.
+    """FULL/PARTIAL cell cover of one simple ring, one level at a time.
 
     Returns an int64 array of [lo, hi, full] rows: Morton ranges at
-    ``abs_max`` level, ``full``=1 when the cell lies entirely inside the
-    ring (PIP refine can be skipped — the Raster-Intervals shortcut).
+    ``abs_max`` level, sorted by ``lo``, with adjacent ranges of the same
+    flag merged.  ``full``=1 when the cell lies entirely inside the ring
+    (PIP refine can be skipped — the Raster-Intervals shortcut).
 
-    Descent: classify each candidate cell against the ring — OUT (center
-    outside and no edge crosses), FULL (center inside and no edge
-    crosses), else PARTIAL → subdivide until ``max_level``.
+    The descent starts from the ``start_level`` cells overlapping the
+    ring's bbox and classifies each level's frontier at once: a cell no
+    edge crosses or touches (a box corner exactly on an edge's line
+    counts as touching) is FULL when its centre is strictly inside the
+    ring and OUT otherwise; a touched cell is PARTIAL at ``max_level``
+    and subdivides below it.  Pair passes are chunked to
+    ``_PAIR_BUDGET`` pairs.
+
+    Raises ``ValueError`` for a ring with fewer than 4 positions or a
+    non-finite coordinate.
     """
-    ring = np.asarray(ring, dtype=np.float64)
-    from .geom import point_in_ring
+    from .geom import point_in_ring_batch
 
-    lon_min, lat_min = ring[:, 0].min(), ring[:, 1].min()
-    lon_max, lat_max = ring[:, 0].max(), ring[:, 1].max()
+    ring = _checked_ring(ring)
+    x, y = ring[:, 0], ring[:, 1]
+    lon_min, lat_min, lon_max, lat_max = x.min(), y.min(), x.max(), y.max()
+    # edges i -> i+1 with their bboxes
+    x1, y1, dx, dy = x[:-1], y[:-1], x[1:] - x[:-1], y[1:] - y[:-1]
+    ex0, ex1 = np.minimum(x[:-1], x[1:]), np.maximum(x[:-1], x[1:])
+    ey0, ey1 = np.minimum(y[:-1], y[1:]), np.maximum(y[:-1], y[1:])
+    n_edges = len(x1)
 
-    # seed: cells at start_level overlapping the bbox
+    def seed_pairs(n_cells):
+        """Every (seed cell, edge) pair."""
+        rows = max(1, _PAIR_BUDGET // n_edges)
+        for s in range(0, n_cells, rows):
+            c = np.arange(s, min(s + rows, n_cells))
+            yield np.repeat(c, n_edges), np.tile(np.arange(n_edges), len(c))
+
+    def child_pairs(parent, edge):
+        """Each (parent, edge) pair as its four (child, edge) pairs."""
+        step = max(1, _PAIR_BUDGET // 4)
+        for s in range(0, len(parent), step):
+            yield (4 * parent[s : s + step, None] + np.arange(4)).ravel(), np.repeat(edge[s : s + step], 4)
+
+    def edge_pairs(pairs, b0, b1, b2, b3):
+        """The (cell, edge) pairs whose edge bbox meets the cell, and
+        whether the edge crosses or touches the cell: it does not when
+        all four box corners lie strictly on one side of its line."""
+        keep_c, keep_e, touch = [], [], []
+        for pc, pe in pairs:
+            m = (ex0[pe] <= b2[pc]) & (ex1[pe] >= b0[pc]) & (ey0[pe] <= b3[pc]) & (ey1[pe] >= b1[pc])
+            pc, pe = pc[m], pe[m]
+            ddx, ddy, px, py = dx[pe], dy[pe], x1[pe], y1[pe]
+            qx0, qy0, qx1, qy1 = b0[pc], b1[pc], b2[pc], b3[pc]
+            sides = [ddx * (qy - py) - ddy * (qx - px) for qx, qy in ((qx0, qy0), (qx0, qy1), (qx1, qy0), (qx1, qy1))]
+            pos = (sides[0] > 0) & (sides[1] > 0) & (sides[2] > 0) & (sides[3] > 0)
+            neg = (sides[0] < 0) & (sides[1] < 0) & (sides[2] < 0) & (sides[3] < 0)
+            keep_c.append(pc)
+            keep_e.append(pe)
+            touch.append(~(pos | neg))
+        return np.concatenate(keep_c), np.concatenate(keep_e), np.concatenate(touch)
+
+    def inside(px, py):
+        """Strict ray-cast of cell centres, chunked by (centre, edge) pairs."""
+        rows = max(1, _PAIR_BUDGET // len(ring))
+        return np.concatenate(
+            [point_in_ring_batch(px[s : s + rows], py[s : s + rows], ring) for s in range(0, len(px), rows)]
+        )
+
+    # seed: the start-level cells overlapping the bbox
     n0 = 1 << start_level
-    ix0 = int(np.clip(np.floor((lon_min + 180.0) / 360.0 * n0), 0, n0 - 1))
-    ix1 = int(np.clip(np.floor((lon_max + 180.0) / 360.0 * n0), 0, n0 - 1))
-    iy0 = int(np.clip(np.floor((lat_min + 90.0) / 180.0 * n0), 0, n0 - 1))
-    iy1 = int(np.clip(np.floor((lat_max + 90.0) / 180.0 * n0), 0, n0 - 1))
-    stack = [
-        (start_level, int(spread_bits(np.array([ix]))[0] | (spread_bits(np.array([iy]))[0] << np.uint64(1))))
-        for ix in range(ix0, ix1 + 1)
-        for iy in range(iy0, iy1 + 1)
-    ]
+    ix0, ix1 = np.clip(np.floor((np.array([lon_min, lon_max]) + 180.0) / 360.0 * n0), 0, n0 - 1).astype(np.int64)
+    iy0, iy1 = np.clip(np.floor((np.array([lat_min, lat_max]) + 90.0) / 180.0 * n0), 0, n0 - 1).astype(np.int64)
+    gx = np.repeat(np.arange(ix0, ix1 + 1), iy1 - iy0 + 1)
+    gy = np.tile(np.arange(iy0, iy1 + 1), ix1 - ix0 + 1)
+    cells = (spread_bits(gx) | (spread_bits(gy) << np.uint64(1))).astype(np.int64)
+    pairs = seed_pairs(len(cells))
+    # child k of a cell: Morton digit k, x bit k & 1, y bit k >> 1
+    digit, xbit, ybit = np.arange(4), np.array([0, 1, 0, 1]), np.array([0, 0, 1, 1])
 
-    out = []
-    while stack:
-        level, cell = stack.pop()
-        b = cell_bounds(cell, level)
-        # disjoint from ring bbox?
-        if b[2] < lon_min or b[0] > lon_max or b[3] < lat_min or b[1] > lat_max:
-            continue
-        crossed = _segments_intersect_box(ring, *b)
-        if not crossed:
-            cx, cy = (b[0] + b[2]) / 2.0, (b[1] + b[3]) / 2.0
-            if point_in_ring((cx, cy), ring, True):
-                lo, hi = cell_range_at_max(cell, level, abs_max)
-                out.append((int(lo), int(hi), FULL))
-            # else fully outside: drop
-            continue
+    out_lo, out_hi, out_fl = [], [], []
+
+    def emit(sel, level, flag):
+        lo, hi = cell_range_at_max(sel, level, abs_max)
+        out_lo.append(lo)
+        out_hi.append(hi)
+        out_fl.append(np.full(len(sel), flag, np.int64))
+
+    level = start_level
+    while len(cells):
+        b0, b1, b2, b3 = _grid_bounds(gx, gy, level)
+        pc, pe, touch = edge_pairs(pairs, b0, b1, b2, b3)
+        crossed = np.zeros(len(cells), bool)
+        crossed[pc[touch]] = True
+        free = np.flatnonzero(
+            ~crossed & (b2 >= lon_min) & (b0 <= lon_max) & (b3 >= lat_min) & (b1 <= lat_max)
+        )
+        if len(free):
+            full = inside((b0[free] + b2[free]) / 2.0, (b1[free] + b3[free]) / 2.0)
+            emit(cells[free[full]], level, FULL)
         if level >= max_level:
-            lo, hi = cell_range_at_max(cell, level, abs_max)
-            out.append((int(lo), int(hi), PARTIAL))
-            continue
-        base = cell << 2
-        stack.extend((level + 1, base + k) for k in range(4))
+            emit(cells[crossed], level, PARTIAL)
+            break
+        # the crossed cells' four children inherit their parent's
+        # bbox-passing edges
+        keep = crossed[pc]
+        pairs = child_pairs((np.cumsum(crossed) - 1)[pc[keep]], pe[keep])
+        cells = (4 * cells[crossed, None] + digit).ravel()
+        gx = (2 * gx[crossed, None] + xbit).ravel()
+        gy = (2 * gy[crossed, None] + ybit).ravel()
+        level += 1
 
-    if not out:
+    if not out_lo:
         return np.zeros((0, 3), dtype=np.int64)
-    arr = np.array(sorted(out), dtype=np.int64)
-    # merge adjacent ranges with the same full-flag
-    merged = [arr[0].tolist()]
-    for lo, hi, fl in arr[1:]:
-        if lo == merged[-1][1] + 1 and fl == merged[-1][2]:
-            merged[-1][1] = hi
-        else:
-            merged.append([lo, hi, fl])
-    return np.array(merged, dtype=np.int64)
+    lo, hi, fl = np.concatenate(out_lo), np.concatenate(out_hi), np.concatenate(out_fl)
+    order = np.argsort(lo)
+    lo, hi, fl = lo[order], hi[order], fl[order]
+    # merge each run of adjacent ranges with the same flag
+    first = np.ones(len(lo), bool)
+    first[1:] = (lo[1:] != hi[:-1] + 1) | (fl[1:] != fl[:-1])
+    starts = np.flatnonzero(first)
+    ends = np.append(starts[1:], len(lo)) - 1
+    return np.column_stack([lo[starts], hi[ends], fl[starts]]).astype(np.int64)

@@ -239,10 +239,11 @@ def point_in_ring_batch(px: np.ndarray, py: np.ndarray, ring: np.ndarray) -> np.
     r = np.asarray(ring, dtype=np.float64)
     if r[0, 0] == r[-1, 0] and r[0, 1] == r[-1, 1]:
         r = r[:-1]
+    rj = np.concatenate([r[-1:], r[:-1]])  # vertex j = i - 1 (cyclic)
     xi = r[:, 0][None, :]
     yi = r[:, 1][None, :]
-    xj = np.roll(r[:, 0], 1)[None, :]
-    yj = np.roll(r[:, 1], 1)[None, :]
+    xj = rj[:, 0][None, :]
+    yj = rj[:, 1][None, :]
     x = np.asarray(px, dtype=np.float64)[:, None]
     y = np.asarray(py, dtype=np.float64)[:, None]
     on_b = (

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame
 
@@ -167,37 +168,69 @@ def bucketed_cover_spans(
     )
 
 
+def ring_mats(col):
+    """One float64 (Σn_i, 2) matrix + per-row offsets from a
+    list<list<double>> Arrow column — the list buffers are re-sliced
+    (flatten honors offsets), never round-tripped through Python
+    objects.  NULLs are rejected loudly: flatten silently drops them and
+    would misalign every later row."""
+    if col.null_count or col.flatten().null_count:
+        raise ValueError("NULL coords in ring batch")
+    nlens = np.asarray(pc.list_value_length(col), dtype=np.int64)
+    flat = col.flatten().flatten().to_numpy(zero_copy_only=False)
+    if flat.size != 2 * int(nlens.sum()):
+        raise ValueError("non-2D coordinate rows in ring batch")
+    pts = flat.astype(np.float64, copy=False).reshape(-1, 2)
+    starts = np.zeros(len(nlens) + 1, dtype=np.int64)
+    np.cumsum(nlens, out=starts[1:])
+    return pts, starts
+
+
+def cover_keyed(coords, polygon_id, ring_index, cover_level: int, max_level: int):
+    """``cover_ring`` of one ring whose ValueError names the ring."""
+    from ..cells import cover_ring
+
+    try:
+        return cover_ring(coords, max_level=cover_level, abs_max=max_level)
+    except ValueError as e:
+        raise ValueError(f"(polygon_id, ring_index) = ({polygon_id!r}, {ring_index}): {e}") from e
+
+
 def covers_df(rings_out: DataFrame, cover_level: int = 8, max_level: int = 16) -> DataFrame:
     """(polygon_id, ring_index, lo, hi, full) — the ring cover as a
     DataFrame, computed on the executors and NEVER collected.  The
     relational crosswalk path consumes this when the ring layer is too
-    large to broadcast as an IntervalIndex."""
-    import pandas as pd
+    large to broadcast as an IntervalIndex.
 
-    from ..cells import cover_ring
+    One ``mapInArrow`` pass: each batch's coordinates are sliced out of
+    the Arrow list buffers, every ring's cover is an int64 array, and
+    the id columns are gathered with one ``take`` — no per-interval
+    Python objects.  A degenerate ring fails the job with the cover
+    kernel's ValueError, prefixed with its (polygon_id, ring_index)."""
+    from pyspark.sql import functions as F
 
     def run(batches):
-        for pdf in batches:
-            out = {"polygon_id": [], "ring_index": [], "lo": [], "hi": [], "full": []}
-            for pid, ridx, coords in zip(
-                pdf["polygon_id"], pdf["ring_index"], pdf["coords"]
-            ):
-                arr = np.asarray([list(c) for c in coords], dtype=np.float64)
-                for lo, hi, fl in cover_ring(arr, max_level=cover_level, abs_max=max_level):
-                    out["polygon_id"].append(pid)
-                    out["ring_index"].append(int(ridx))
-                    out["lo"].append(int(lo))
-                    out["hi"].append(int(hi))
-                    out["full"].append(int(fl))
-            if not out["polygon_id"]:
+        for batch in batches:
+            pts, off = ring_mats(batch.column("coords"))
+            pids, ridx = batch.column("polygon_id"), batch.column("ring_index")
+            covs = [
+                cover_keyed(pts[off[i] : off[i + 1]], pids[i].as_py(), ridx[i].as_py(), cover_level, max_level)
+                for i in range(batch.num_rows)
+            ]
+            counts = np.array([len(c) for c in covs], dtype=np.int64)
+            if not counts.sum():
                 continue
-            pdf_out = pd.DataFrame(out)
-            pdf_out["ring_index"] = pdf_out["ring_index"].astype("int32")
-            pdf_out["full"] = pdf_out["full"].astype("int32")
-            yield pdf_out
+            cov = np.concatenate(covs)
+            row = pa.array(np.repeat(np.arange(batch.num_rows), counts))
+            yield pa.RecordBatch.from_arrays(
+                [pids.take(row), ridx.take(row), pa.array(cov[:, 0]), pa.array(cov[:, 1]), pa.array(cov[:, 2].astype(np.int32))],
+                names=["polygon_id", "ring_index", "lo", "hi", "full"],
+            )
 
     schema = "polygon_id string, ring_index int, lo long, hi long, full int"
-    return rings_out.select("polygon_id", "ring_index", "coords").mapInPandas(run, schema)
+    return rings_out.select(
+        "polygon_id", F.col("ring_index").cast("int").alias("ring_index"), "coords"
+    ).mapInArrow(run, schema)
 
 
 def tile_cells_df(

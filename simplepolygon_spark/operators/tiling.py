@@ -29,10 +29,11 @@ from dataclasses import dataclass, field
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..cells import MAX_LEVEL, cell_of_point, cover_ring
+from ..cells import MAX_LEVEL, cell_of_point
 from ..geom import point_in_ring_batch
 
 
@@ -162,7 +163,8 @@ def build_interval_index(
     semantics of "the cleaned polygon interior": callers filter upstream
     if they want a different layer (we index whatever is passed in).
     """
-    cover_rows = None
+    from .crosswalk import cover_keyed, ring_mats
+
     if isinstance(rings_out, DataFrame):
         # TWO actions read the ring layer (the distributed cover pass
         # and the coordinate collect) — persist for their duration so an
@@ -175,40 +177,40 @@ def build_interval_index(
         try:
             # compute covers on the executors (one Arrow pass over the
             # ring layer) — the driver only collects compressed intervals
-            cover_rows = _covers_distributed(rings_out, cover_level, max_level)
-            rows = rings_out.select("polygon_id", "ring_index", "coords").collect()
+            cov = _covers_distributed(rings_out, cover_level, max_level)
+            tbl = rings_out.select("polygon_id", "ring_index", "coords").toArrow()
         finally:
             if not caller_cached:
                 rings_out.unpersist()
+        pts, off = ring_mats(tbl.column("coords").combine_chunks())
+        rings = [pts[off[i] : off[i + 1]] for i in range(tbl.num_rows)]
+        ring_pid = tbl.column("polygon_id").combine_chunks()
+        ring_ridx = tbl.column("ring_index").to_numpy()
+        ring_keys = list(zip(ring_pid.to_pylist(), ring_ridx.tolist()))
+        iv_ring = _ring_ids(
+            ring_pid, ring_ridx, cov.column("polygon_id").combine_chunks(), cov.column("ring_index").to_numpy()
+        )
+        lo, hi = cov.column("lo").to_numpy(), cov.column("hi").to_numpy()
+        full = cov.column("full").to_numpy().astype(bool)
     else:
-        rows = rings_out
-
-    ring_keys, rings = [], []
-    ivs = []  # (lo, hi, ring_id, full)
-    rid_of = {}
-    for row in rows:
-        pid = row["polygon_id"]
-        ridx = int(row["ring_index"])
-        coords = np.asarray([list(c) for c in row["coords"]], dtype=np.float64)
-        rid_of[(pid, ridx)] = len(rings)
-        ring_keys.append((pid, ridx))
-        rings.append(coords)
-    if cover_rows is None:
-        for (pid, ridx), coords in zip(ring_keys, rings):
-            cov = cover_ring(coords, max_level=cover_level, abs_max=max_level)
-            rid = rid_of[(pid, ridx)]
-            for lo, hi, fl in cov:
-                ivs.append((int(lo), int(hi), rid, int(fl)))
-    else:
-        for pid, ridx, lo, hi, fl in cover_rows:
-            ivs.append((int(lo), int(hi), rid_of[(pid, int(ridx))], int(fl)))
+        ring_keys, rings, covs = [], [], []
+        for row in rings_out:
+            pid, ridx = row["polygon_id"], int(row["ring_index"])
+            coords = np.asarray([list(c) for c in row["coords"]], dtype=np.float64)
+            covs.append(cover_keyed(coords, pid, ridx, cover_level, max_level))
+            ring_keys.append((pid, ridx))
+            rings.append(coords)
+        cov = np.concatenate(covs) if covs else np.zeros((0, 3), np.int64)
+        lo, hi, full = cov[:, 0], cov[:, 1], cov[:, 2].astype(bool)
+        iv_ring = np.repeat(np.arange(len(covs), dtype=np.int64), [len(c) for c in covs])
 
     centroids = (
         np.array([r[:-1].mean(axis=0) for r in rings])
         if rings
         else np.zeros((0, 2))
     )
-    if not ivs:
+    n_iv = len(lo)
+    if n_iv == 0:
         return IntervalIndex(
             ring_keys,
             rings,
@@ -221,12 +223,9 @@ def build_interval_index(
             centroids=centroids,
         )
 
-    iv = np.array(ivs, dtype=np.int64)
-    lo, hi = iv[:, 0], iv[:, 1]
     # elementary segments between all endpoints; sweep with +1/-1 events
     events = np.concatenate([lo, hi + 1])
     bp = np.unique(events)
-    n_iv = len(iv)
     # For each elementary segment [bp[k], bp[k+1]-1] find active intervals.
     # CSR built by bucketing each interval onto the segments it spans.
     seg_of_lo = np.searchsorted(bp, lo, side="right") - 1
@@ -248,13 +247,13 @@ def build_interval_index(
         bp,
         seg_ptr,
         ids_sorted,
-        iv[:, 2].copy(),
-        iv[:, 3].astype(bool),
+        iv_ring,
+        full,
         max_level,
         stats={
             "n_rings": len(rings),
             "n_intervals": n_iv,
-            "n_full": int(iv[:, 3].sum()),
+            "n_full": int(full.sum()),
             "n_segments": len(bp),
             "csr_entries": tot,
         },
@@ -263,17 +262,33 @@ def build_interval_index(
     return idx
 
 
-def _covers_distributed(rings_out: DataFrame, cover_level: int, max_level: int):
-    """Run cover_ring on the executors; returns collected
-    (polygon_id, ring_index, lo, hi, full) tuples.  Delegates to the
-    single cover kernel (crosswalk.covers_df) so the broadcast-index
-    build and the relational fallbacks can never drift apart."""
+def _covers_distributed(rings_out: DataFrame, cover_level: int, max_level: int) -> pa.Table:
+    """Run cover_ring on the executors and collect the intervals with
+    ``toArrow``: a (polygon_id, ring_index, lo, hi, full) Arrow table,
+    with no Row objects.  Delegates to the single cover kernel
+    (crosswalk.covers_df, a ``mapInArrow`` pass) so the broadcast-index
+    build and the relational fallbacks can never drift apart.  The
+    repartition spreads a layer read from few files over every core."""
     from .crosswalk import covers_df
 
     df = rings_out.repartition(
         max(rings_out.sparkSession.sparkContext.defaultParallelism, 8)
     )
-    return [tuple(r) for r in covers_df(df, cover_level, max_level).collect()]
+    return covers_df(df, cover_level, max_level).toArrow()
+
+
+def _ring_ids(ring_pid: pa.Array, ring_ridx: np.ndarray, pid: pa.Array, ridx: np.ndarray) -> np.ndarray:
+    """Row of each (pid, ridx) key among the ring keys (the last row if
+    a key repeats), by one sort and a searchsorted."""
+    code = pc.dictionary_encode(pa.concat_arrays([ring_pid, pid]), null_encoding="encode")
+    code = code.indices.to_numpy().astype(np.int64)
+    key = (code << 32) | (np.concatenate([ring_ridx, ridx]).astype(np.int64) & 0xFFFFFFFF)
+    ring_key, cover_key = key[: len(ring_ridx)], key[len(ring_ridx) :]
+    order = np.argsort(ring_key, kind="stable")
+    rid = order[np.maximum(np.searchsorted(ring_key[order], cover_key, side="right") - 1, 0)]
+    if len(rid) and not np.array_equal(ring_key[rid], cover_key):
+        raise KeyError("cover rows name rings that the ring layer does not hold")
+    return rid
 
 
 def broadcast_index(spark: SparkSession, index: IntervalIndex):
