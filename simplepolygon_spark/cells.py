@@ -107,14 +107,15 @@ def _compact_bits(v):
 # disjoint from the ring's bbox drop; a cell that some edge crosses or
 # touches is PARTIAL (kept at ``max_level``, else split into its four
 # children); an untouched cell is FULL when its centre is inside the ring
-# (``geom.point_in_ring_batch``) and drops otherwise.  The frontier
+# (``geom.points_in_rings``) and drops otherwise.  The frontier
 # carries each cell's grid indices next to its Morton code, so its bounds
 # are ``cell_bounds``' arithmetic without unpacking the code.  The edge
 # test runs over (cell, edge) pairs: a child only tests the edges whose
 # bbox met its parent, which are all the edges whose bbox can meet the
 # child, so the result equals testing every edge.  Every pass over
-# (cell, edge) or (centre, edge) pairs works in chunks of at most
-# ``_PAIR_BUDGET`` pairs, so a ring with many vertices runs in bounded
+# (cell, edge) pairs works in chunks of at most ``_PAIR_BUDGET`` pairs,
+# and the centre test (``geom.points_in_rings``) chunks its own
+# (centre, edge) rows, so a ring with many vertices runs in bounded
 # memory.  A ring with fewer than 4 positions or a non-finite coordinate
 # gets a ``ValueError`` naming the fault.
 # ---------------------------------------------------------------------------
@@ -158,7 +159,7 @@ def cover_ring(
     Raises ``ValueError`` for a ring with fewer than 4 positions or a
     non-finite coordinate.
     """
-    from .geom import point_in_ring_batch
+    from .geom import points_in_rings, ring_table
 
     ring = _checked_ring(ring)
     x, y = ring[:, 0], ring[:, 1]
@@ -168,6 +169,7 @@ def cover_ring(
     ex0, ex1 = np.minimum(x[:-1], x[1:]), np.maximum(x[:-1], x[1:])
     ey0, ey1 = np.minimum(y[:-1], y[1:]), np.maximum(y[:-1], y[1:])
     n_edges = len(x1)
+    table = ring_table([ring[:, :2]])  # the centre test's one-ring table
 
     def seed_pairs(n_cells):
         """Every (seed cell, edge) pair."""
@@ -200,13 +202,6 @@ def cover_ring(
             touch.append(~(pos | neg))
         return np.concatenate(keep_c), np.concatenate(keep_e), np.concatenate(touch)
 
-    def inside(px, py):
-        """Strict ray-cast of cell centres, chunked by (centre, edge) pairs."""
-        rows = max(1, _PAIR_BUDGET // len(ring))
-        return np.concatenate(
-            [point_in_ring_batch(px[s : s + rows], py[s : s + rows], ring) for s in range(0, len(px), rows)]
-        )
-
     # seed: the start-level cells overlapping the bbox
     n0 = 1 << start_level
     ix0, ix1 = np.clip(np.floor((np.array([lon_min, lon_max]) + 180.0) / 360.0 * n0), 0, n0 - 1).astype(np.int64)
@@ -236,7 +231,8 @@ def cover_ring(
             ~crossed & (b2 >= lon_min) & (b0 <= lon_max) & (b3 >= lat_min) & (b1 <= lat_max)
         )
         if len(free):
-            full = inside((b0[free] + b2[free]) / 2.0, (b1[free] + b3[free]) / 2.0)
+            cx, cy = (b0[free] + b2[free]) / 2.0, (b1[free] + b3[free]) / 2.0
+            full = points_in_rings(cx, cy, np.zeros(len(free), np.int64), *table)
             emit(cells[free[full]], level, FULL)
         if level >= max_level:
             emit(cells[crossed], level, PARTIAL)

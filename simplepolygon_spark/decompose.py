@@ -31,7 +31,8 @@ from .geom import (
     is_convex,
     js_number_string,
     pmod,
-    point_in_ring,
+    points_in_rings,
+    ring_table,
     segment_intersections,
     winding_of_ring,
 )
@@ -351,34 +352,37 @@ def decompose(rings: list) -> list[dict[str, Any]]:
 
 def _determine_parents(feats: list[dict[str, Any]]) -> None:
     """Root-parent fixup (src/index.ts:645-694) — Q2: last containing ring
-    in index order wins; the area comparison is dead code and skipped."""
-    roots = [i for i, f in enumerate(feats) if f["parent"] == -1]
+    in index order wins; the area comparison is dead code and skipped.
+    One ``points_in_rings`` call tests every (root first vertex, other
+    ring) pair."""
+    roots = np.array([i for i, f in enumerate(feats) if f["parent"] == -1], np.int64)
     if len(roots) <= 1:
         return
-    for i in roots:
-        parent = -1
-        first_vtx = feats[i]["coords"][0]
-        for j in range(len(feats)):
-            if i == j:
-                continue
-            if point_in_ring(first_vtx, np.asarray(feats[j]["coords"]), True):
-                parent = j
+    pts, off = ring_table([f["coords"] for f in feats])
+    n = len(feats)
+    first = pts[off[roots]]
+    root = np.repeat(np.arange(len(roots)), n)
+    ring = np.tile(np.arange(n), len(roots))
+    inside = points_in_rings(first[root, 0], first[root, 1], ring, pts, off)
+    inside &= ring != roots[root]
+    contained = inside.reshape(len(roots), n)
+    last = n - 1 - np.argmax(contained[:, ::-1], axis=1)
+    for i, parent in zip(roots.tolist(), np.where(contained.any(axis=1), last, -1).tolist()):
         feats[i]["parent"] = parent
 
 
 def _set_net_winding(feats: list[dict[str, Any]]) -> None:
-    """Net-winding propagation (src/index.ts:696-720)."""
-
-    def set_children(parent_idx: int, parent_net: int) -> None:
-        for i, f in enumerate(feats):
-            if f["parent"] == parent_idx:
-                f["net_winding"] = parent_net + f["winding"]
-                set_children(i, f["net_winding"])
-
+    """Net-winding propagation (src/index.ts:696-720): one pass from the
+    roots down a parent → children map, so any nesting depth works.  A
+    ring no root reaches keeps ``net_winding=None``."""
+    children: dict[int, list[int]] = {}
     for i, f in enumerate(feats):
-        if f["parent"] == -1:
-            f["net_winding"] = f["winding"]
-            set_children(i, f["net_winding"])
+        children.setdefault(f["parent"], []).append(i)
+    order = list(children.get(-1, []))
+    for i in order:  # grows as each ring's children are appended
+        p = feats[i]["parent"]
+        feats[i]["net_winding"] = feats[i]["winding"] + (0 if p == -1 else feats[p]["net_winding"])
+        order.extend(children.get(i, []))
 
 
 def simplepolygon(feature: dict) -> dict:

@@ -17,13 +17,22 @@ primitives the reference engine relies on:
 * ``point_in_ring`` — ray-casting point-in-polygon with the same boundary
   semantics as turf's booleanPointInPolygon({ignoreBoundary:true}) used at
   /root/reference/src/index.ts:666-675.
+* The *ring table*: closed-ring float64 vertices ``pts`` (Σn, 2) plus
+  int64 offsets ``off``, ring i being ``pts[off[i]:off[i + 1]]``
+  (``ring_mats`` from an Arrow column, ``ring_table`` from arrays; both
+  close an open ring).
+  ``points_in_rings`` is the one batched ray-cast over it, bit-identical
+  to the scalar ``point_in_ring`` (kept as the reference): the parent
+  pass, the cover's cell centres, both PIP refines and the overlap
+  probes all call it.
 * ``signed_area`` — planar shoelace area (used by the tiling layer; the
   reference's geodesic area call at src/index.ts:676 is dead code, see
   SURVEY.md §7.4 Q2, so no geodesic implementation is needed for parity).
 
 All kernels are vectorized over numpy arrays; the only Python-level loops
 are over *intersections/vertices of a single polygon* inside the
-decomposition walk (decompose.py), never over dataset rows.
+decomposition walk (decompose.py) and over fixed-size chunks of rows,
+never over dataset rows or rings.
 """
 
 from __future__ import annotations
@@ -37,6 +46,9 @@ __all__ = [
     "signed_area",
     "segment_intersections",
     "point_in_ring",
+    "points_in_rings",
+    "ring_mats",
+    "ring_table",
     "js_number_string",
 ]
 
@@ -230,32 +242,103 @@ def point_in_ring(pt, ring: np.ndarray, ignore_boundary: bool = True) -> bool:
 
 
 def point_in_ring_batch(px: np.ndarray, py: np.ndarray, ring: np.ndarray) -> np.ndarray:
-    """Vectorized strict ray-cast PIP of many points against one ring.
-
-    Boundary points are treated as *outside* (ignoreBoundary=True
-    semantics), consistent with ``point_in_ring``.  Used by the PIP-join
-    refine stage where each Arrow batch tests many points per ring.
-    """
+    """Strict ray-cast of many points against one ring: the one-ring
+    entry to ``points_in_rings``."""
     r = np.asarray(ring, dtype=np.float64)
-    if r[0, 0] == r[-1, 0] and r[0, 1] == r[-1, 1]:
-        r = r[:-1]
-    rj = np.concatenate([r[-1:], r[:-1]])  # vertex j = i - 1 (cyclic)
-    xi = r[:, 0][None, :]
-    yi = r[:, 1][None, :]
-    xj = rj[:, 0][None, :]
-    yj = rj[:, 1][None, :]
-    x = np.asarray(px, dtype=np.float64)[:, None]
-    y = np.asarray(py, dtype=np.float64)[:, None]
-    on_b = (
-        (y * (xi - xj) + yi * (xj - x) + yj * (x - xi) == 0)
-        & ((xi - x) * (xj - x) <= 0)
-        & ((yi - y) * (yj - y) <= 0)
-    )
+    return points_in_rings(px, py, np.zeros(len(px), np.int64), *_closed(r, np.array([0, len(r)])))
+
+
+_ROW_BUDGET = 1 << 17  # (pair, edge) rows per numpy pass: its temporaries are 1 MB arrays
+
+
+def points_in_rings(px, py, ring_id, pts: np.ndarray, off: np.ndarray) -> np.ndarray:
+    """Strict ray-cast of (point, ring) pairs against a ring table.
+
+    Pair k tests point (px[k], py[k]) against ring ``ring_id[k]``, the
+    closed ring ``pts[off[r]:off[r + 1]]`` (``ring_mats`` and
+    ``ring_table`` close every ring).  Each pair expands to its ring's
+    edges, vertex i against vertex i-1, and evaluates ``point_in_ring``'s
+    crossing and on-boundary expressions, so the result is
+    bit-identical to ``point_in_ring(pt, ring, True)``: boundary points
+    are outside.  A pass holds at most ``_ROW_BUDGET`` (pair, edge) rows,
+    so memory is bounded for any ring size.
+    """
+    px = np.asarray(px, dtype=np.float64)
+    py = np.asarray(py, dtype=np.float64)
+    ring_id = np.asarray(ring_id, dtype=np.int64)
+    X, Y = pts[:, 0], pts[:, 1]
+    n = np.maximum(off[1:] - off[:-1] - 1, 0)[ring_id]  # edges of each pair's ring
+    row_of = np.zeros(len(ring_id) + 1, np.int64)  # first (pair, edge) row of each pair
+    n.cumsum(out=row_of[1:])
+    vbase = off[:-1][ring_id] + 1 - row_of[:-1]  # row + vbase = vertex i of the row's edge
+    crossings = np.zeros(len(ring_id), np.int64)
+    on_boundary = np.zeros(len(ring_id), bool)
+    total = int(row_of[-1])
     with np.errstate(divide="ignore", invalid="ignore"):
-        crossing = ((yi > y) != (yj > y)) & (x < (xj - xi) * (y - yi) / (yj - yi) + xi)
-    inside = (np.sum(crossing, axis=1) % 2).astype(bool)
-    inside[np.any(on_b, axis=1)] = False
-    return inside
+        for s in range(0, total, _ROW_BUDGET):
+            e = min(s + _ROW_BUDGET, total)
+            p0 = int(row_of.searchsorted(s, "right")) - 1
+            p1 = int(row_of.searchsorted(e - 1, "right"))
+            cnt = np.minimum(row_of[p0 + 1 : p1 + 1], e) - np.maximum(row_of[p0:p1], s)
+            pair = np.arange(p0, p1).repeat(cnt)
+            vi = np.arange(s, e) + vbase[pair]
+            vj = vi - 1
+            y, yi, yj = py[pair], Y[vi], Y[vj]
+            straddles = (yi > y) != (yj > y)
+            spans = (yi - y) * (yj - y) <= 0
+            # the rest of either expression is evaluated only on rows where
+            # it can hold: a crossing needs ``straddles``, a boundary hit ``spans``
+            k = (straddles | spans).nonzero()[0]
+            pair, y, yi, yj = pair[k], y[k], yi[k], yj[k]
+            x, xi, xj = px[pair], X[vi[k]], X[vj[k]]
+            on_b = (y * (xi - xj) + yi * (xj - x) + yj * (x - xi) == 0) & ((xi - x) * (xj - x) <= 0) & spans[k]
+            crossing = straddles[k] & (x < (xj - xi) * (y - yi) / (yj - yi) + xi)
+            crossings[p0:p1] += np.bincount(pair[crossing] - p0, minlength=p1 - p0)
+            on_boundary[pair[on_b]] = True
+    return (crossings % 2 == 1) & ~on_boundary
+
+
+def _closed(pts: np.ndarray, off: np.ndarray):
+    """The ring table with a copy of its first position appended to
+    every non-empty ring whose last position differs from it."""
+    if not len(pts):
+        return pts, off
+    first = np.minimum(off[:-1], len(pts) - 1)
+    is_open = (off[1:] > off[:-1]) & ~(pts[first] == pts[off[1:] - 1]).all(axis=1)
+    if not is_open.any():
+        return pts, off
+    r = is_open.nonzero()[0]
+    pts = np.insert(pts, off[r + 1], pts[off[r]], axis=0)
+    return pts, off + np.concatenate([[0], np.cumsum(is_open)])
+
+
+def ring_table(rings) -> tuple[np.ndarray, np.ndarray]:
+    """The ring table (pts, off) of a list of [N, 2] rings, each closed."""
+    rings = [np.asarray(r, dtype=np.float64).reshape(len(r), 2) for r in rings]
+    off = np.zeros(len(rings) + 1, np.int64)
+    np.cumsum([len(r) for r in rings], out=off[1:])
+    return _closed(np.concatenate(rings) if rings else np.zeros((0, 2)), off)
+
+
+def ring_mats(col):
+    """The ring table of a list<list<double>> Arrow column: one float64
+    (Σn_i, 2) vertex matrix plus int64 offsets (ring i is
+    ``pts[off[i]:off[i + 1]]``), each ring closed.  The list buffers are
+    re-sliced (flatten honors offsets), never round-tripped through
+    Python objects.  NULLs are rejected loudly: flatten silently drops
+    them and would misalign every later row."""
+    import pyarrow.compute as pc
+
+    if col.null_count or col.flatten().null_count:
+        raise ValueError("NULL coords in ring batch")
+    nlens = np.asarray(pc.list_value_length(col), dtype=np.int64)
+    flat = col.flatten().flatten().to_numpy(zero_copy_only=False)
+    if flat.size != 2 * int(nlens.sum()):
+        raise ValueError("non-2D coordinate rows in ring batch")
+    pts = flat.astype(np.float64, copy=False).reshape(-1, 2)
+    off = np.zeros(len(nlens) + 1, dtype=np.int64)
+    np.cumsum(nlens, out=off[1:])
+    return _closed(pts, off)
 
 
 def js_number_string(v: float) -> str:
@@ -320,7 +403,7 @@ def rings_overlap(a: np.ndarray, b: np.ndarray) -> bool:
          to pairs that span both rings — the same discovery kernel the
          decomposition uses, /root/reference/src/index.ts:68-113).
       4. containment probes: any vertex OR edge midpoint of one ring
-         STRICTLY inside the other (``point_in_ring_batch``,
+         STRICTLY inside the other (one ``points_in_rings`` call,
          ignoreBoundary semantics) → True.
 
     Contract/limits: "interiors intersect".  Touch-only contacts
@@ -356,11 +439,8 @@ def rings_overlap(a: np.ndarray, b: np.ndarray) -> bool:
     ii, jj, *_ = segment_intersections(np.vstack([ea, eb]))
     if np.any((ii < na) & (jj >= na)):
         return True
-    for probe_src, other in ((a, b), (b, a)):
-        verts = probe_src[:-1]
-        mids = (probe_src[:-1] + probe_src[1:]) / 2.0
-        px = np.concatenate([verts[:, 0], mids[:, 0]])
-        py = np.concatenate([verts[:, 1], mids[:, 1]])
-        if point_in_ring_batch(px, py, other).any():
-            return True
-    return False
+    # probes: every vertex and edge midpoint of a against b (ring 0 of
+    # the table), and of b against a (ring 1)
+    probes = np.vstack([a[:-1], (a[:-1] + a[1:]) / 2.0, b[:-1], (b[:-1] + b[1:]) / 2.0])
+    ring_id = np.repeat([0, 1], [2 * (len(a) - 1), 2 * (len(b) - 1)])
+    return bool(points_in_rings(probes[:, 0], probes[:, 1], ring_id, *ring_table([b, a])).any())

@@ -15,11 +15,11 @@ from __future__ import annotations
 
 import numpy as np
 import pyarrow as pa
-import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame
 
 from ..cells import cell_range_at_max, spread_bits
+from ..geom import ring_mats
 
 
 def _bbox_cells(lon0, lat0, lon1, lat1, level: int):
@@ -168,24 +168,6 @@ def bucketed_cover_spans(
     )
 
 
-def ring_mats(col):
-    """One float64 (Σn_i, 2) matrix + per-row offsets from a
-    list<list<double>> Arrow column — the list buffers are re-sliced
-    (flatten honors offsets), never round-tripped through Python
-    objects.  NULLs are rejected loudly: flatten silently drops them and
-    would misalign every later row."""
-    if col.null_count or col.flatten().null_count:
-        raise ValueError("NULL coords in ring batch")
-    nlens = np.asarray(pc.list_value_length(col), dtype=np.int64)
-    flat = col.flatten().flatten().to_numpy(zero_copy_only=False)
-    if flat.size != 2 * int(nlens.sum()):
-        raise ValueError("non-2D coordinate rows in ring batch")
-    pts = flat.astype(np.float64, copy=False).reshape(-1, 2)
-    starts = np.zeros(len(nlens) + 1, dtype=np.int64)
-    np.cumsum(nlens, out=starts[1:])
-    return pts, starts
-
-
 def cover_keyed(coords, polygon_id, ring_index, cover_level: int, max_level: int):
     """``cover_ring`` of one ring whose ValueError names the ring."""
     from ..cells import cover_ring
@@ -196,41 +178,60 @@ def cover_keyed(coords, polygon_id, ring_index, cover_level: int, max_level: int
         raise ValueError(f"(polygon_id, ring_index) = ({polygon_id!r}, {ring_index}): {e}") from e
 
 
+def ring_covers(rings_out: DataFrame, cover_level: int = 8, max_level: int = 16) -> DataFrame:
+    """(polygon_id, ring_index, coords, lo, hi, full) — one row per ring,
+    its cover as three parallel list columns next to its coordinates.
+    The one cover pass of the package: ``covers_df`` explodes it and
+    ``tiling.build_interval_index`` collects it.
+
+    One ``mapInArrow`` pass: each batch's coordinates are sliced out of
+    the Arrow list buffers into a ring table (``geom.ring_mats``), every
+    ring's cover is an int64 array, and the list columns are built from
+    their offsets — no per-interval Python objects.  A degenerate ring
+    fails the job with the cover kernel's ValueError, prefixed with its
+    (polygon_id, ring_index)."""
+    from pyspark.sql import functions as F
+
+    def run(batches):
+        for batch in batches:
+            pts, off = ring_mats(batch.column("coords"))
+            pids, ridx = batch.column("polygon_id").to_pylist(), batch.column("ring_index").to_pylist()
+            covs = [
+                cover_keyed(pts[off[i] : off[i + 1]], pids[i], ridx[i], cover_level, max_level)
+                for i in range(batch.num_rows)
+            ]
+            cov = np.concatenate(covs) if covs else np.zeros((0, 3), np.int64)
+            cut = pa.array(np.cumsum([0] + [len(c) for c in covs]), pa.int32())
+            yield pa.RecordBatch.from_arrays(
+                [batch.column("polygon_id"), batch.column("ring_index"), batch.column("coords")]
+                + [pa.ListArray.from_arrays(cut, pa.array(cov[:, k])) for k in (0, 1)]
+                + [pa.ListArray.from_arrays(cut, pa.array(cov[:, 2].astype(np.int32)))],
+                names=["polygon_id", "ring_index", "coords", "lo", "hi", "full"],
+            )
+
+    schema = (
+        "polygon_id string, ring_index int, coords array<array<double>>, "
+        "lo array<bigint>, hi array<bigint>, full array<int>"
+    )
+    return rings_out.select(
+        "polygon_id", F.col("ring_index").cast("int").alias("ring_index"), "coords"
+    ).mapInArrow(run, schema)
+
+
 def covers_df(rings_out: DataFrame, cover_level: int = 8, max_level: int = 16) -> DataFrame:
     """(polygon_id, ring_index, lo, hi, full) — the ring cover as a
     DataFrame, computed on the executors and NEVER collected.  The
     relational crosswalk path consumes this when the ring layer is too
     large to broadcast as an IntervalIndex.
 
-    One ``mapInArrow`` pass: each batch's coordinates are sliced out of
-    the Arrow list buffers, every ring's cover is an int64 array, and
-    the id columns are gathered with one ``take`` — no per-interval
-    Python objects.  A degenerate ring fails the job with the cover
-    kernel's ValueError, prefixed with its (polygon_id, ring_index)."""
+    ``ring_covers``' per-ring lists exploded on the JVM side with
+    ``inline(arrays_zip(lo, hi, full))``: one row per interval, and a
+    degenerate ring fails the job with its (polygon_id, ring_index)."""
     from pyspark.sql import functions as F
 
-    def run(batches):
-        for batch in batches:
-            pts, off = ring_mats(batch.column("coords"))
-            pids, ridx = batch.column("polygon_id"), batch.column("ring_index")
-            covs = [
-                cover_keyed(pts[off[i] : off[i + 1]], pids[i].as_py(), ridx[i].as_py(), cover_level, max_level)
-                for i in range(batch.num_rows)
-            ]
-            counts = np.array([len(c) for c in covs], dtype=np.int64)
-            if not counts.sum():
-                continue
-            cov = np.concatenate(covs)
-            row = pa.array(np.repeat(np.arange(batch.num_rows), counts))
-            yield pa.RecordBatch.from_arrays(
-                [pids.take(row), ridx.take(row), pa.array(cov[:, 0]), pa.array(cov[:, 1]), pa.array(cov[:, 2].astype(np.int32))],
-                names=["polygon_id", "ring_index", "lo", "hi", "full"],
-            )
-
-    schema = "polygon_id string, ring_index int, lo long, hi long, full int"
-    return rings_out.select(
-        "polygon_id", F.col("ring_index").cast("int").alias("ring_index"), "coords"
-    ).mapInArrow(run, schema)
+    return ring_covers(rings_out, cover_level, max_level).select(
+        "polygon_id", "ring_index", F.inline(F.arrays_zip("lo", "hi", "full"))
+    )
 
 
 def tile_cells_df(

@@ -38,7 +38,6 @@ def knn_join(
     def run(batches):
         idx = index_bc.value
         cents = idx.centroids
-        keys = idx.ring_keys
         R = len(cents)
         kk = min(k, R)
         if R == 0:
@@ -48,12 +47,7 @@ def knn_join(
         # by (polygon_id, ring_index), then a STABLE argsort on distance
         # yields exactly that ordering — equal distances at the k
         # boundary can never be dropped arbitrarily
-        rank_order = np.lexsort(
-            (
-                np.array([kk2[1] for kk2 in keys], dtype=np.int64),
-                np.array([kk2[0] for kk2 in keys], dtype=object),
-            )
-        )
+        rank_order = np.lexsort((idx.ring_ridx, idx.ring_pid))
         cents_r = cents[rank_order]
         for batch in batches:
             ids = batch.column(id_col).to_numpy(zero_copy_only=False)

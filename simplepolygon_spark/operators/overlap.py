@@ -29,8 +29,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..cells import MAX_LEVEL
-from ..geom import rings_overlap
-from .crosswalk import bucketed_cover_spans, covers_df, ring_mats
+from ..geom import ring_mats, rings_overlap
+from .crosswalk import bucketed_cover_spans, covers_df
 
 
 def derive_bucket_level(cov_a: DataFrame, cov_b: DataFrame) -> int:

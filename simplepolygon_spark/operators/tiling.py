@@ -34,15 +34,21 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 
 from ..cells import MAX_LEVEL, cell_of_point
-from ..geom import point_in_ring_batch
+from ..geom import points_in_rings, ring_mats, ring_table
 
 
 @dataclass
 class IntervalIndex:
-    """Broadcastable compressed cell→ring interval index."""
+    """Broadcastable compressed cell→ring interval index.
 
-    ring_keys: list  # (polygon_id, ring_index)
-    rings: list  # list of float64 [N,2] coordinate arrays
+    Ring r is (``ring_pid[r]``, ``ring_ridx[r]``) with vertices
+    ``ring_pts[ring_off[r]:ring_off[r + 1]]`` — a ``geom`` ring table, so
+    the broadcast pickles one vertex buffer."""
+
+    ring_pid: np.ndarray  # ring id -> polygon_id (object)
+    ring_ridx: np.ndarray  # ring id -> ring_index (int32)
+    ring_pts: np.ndarray  # ring table: closed-ring vertices, float64 (Σn, 2)
+    ring_off: np.ndarray  # ring table: ring r is ring_pts[ring_off[r]:ring_off[r + 1]]
     bp: np.ndarray  # elementary-segment breakpoints (sorted int64)
     seg_ptr: np.ndarray  # CSR pointers into seg_ids per elementary segment
     seg_ids: np.ndarray  # interval ids active in each elementary segment
@@ -51,11 +57,25 @@ class IntervalIndex:
     max_level: int = MAX_LEVEL
     stats: dict = field(default_factory=dict)
     centroids: np.ndarray = field(default_factory=lambda: np.zeros((0, 2)))
+    _views: dict = field(default_factory=dict, init=False, repr=False, compare=False)
 
-    def __post_init__(self):
-        # vectorized ring-key lookups for the hot join path
-        self.ring_pid = np.array([k[0] for k in self.ring_keys], dtype=object)
-        self.ring_ridx = np.array([k[1] for k in self.ring_keys], dtype=np.int32)
+    def __getstate__(self):
+        return dict(self.__dict__, _views={})  # views are rebuilt where used, never shipped
+
+    def _view(self, name: str, make):
+        if name not in self._views:
+            self._views[name] = make()
+        return self._views[name]
+
+    @property
+    def rings(self) -> list:
+        """Per-ring float64 [N, 2] views of the ring table."""
+        return self._view("rings", lambda: _ring_views(self.ring_pts, self.ring_off))
+
+    @property
+    def ring_keys(self) -> list:
+        """(polygon_id, ring_index) per ring."""
+        return self._view("keys", lambda: list(zip(self.ring_pid.tolist(), self.ring_ridx.tolist())))
 
     def lookup(self, lon: np.ndarray, lat: np.ndarray):
         """Vectorized stabbing: points → candidate (point_idx, ring_id,
@@ -70,16 +90,8 @@ class IntervalIndex:
         start = self.seg_ptr[pos]
         stop = self.seg_ptr[pos + 1]
         cnt = np.where(valid, stop - start, 0)
-        pt_idx = np.repeat(np.arange(len(cells), dtype=np.int64), cnt)
-        # gather the CSR slices: offsets within each slice
-        total = int(cnt.sum())
-        if total == 0:
-            z = np.zeros(0, dtype=np.int64)
-            return z, z, np.zeros(0, dtype=bool)
-        offs = np.arange(total, dtype=np.int64) - np.repeat(
-            np.cumsum(cnt) - cnt, cnt
-        )
-        iv = self.seg_ids[np.repeat(start, cnt) + offs]
+        pt_idx, slot = _ragged(start, cnt)  # gather the CSR slices
+        iv = self.seg_ids[slot]
         return pt_idx, self.iv_ring[iv], self.iv_full[iv]
 
     def overlap_batch(self, qlo: np.ndarray, qhi: np.ndarray):
@@ -98,32 +110,22 @@ class IntervalIndex:
         a = self.seg_ptr[np.where(valid, k0, 0)]
         b = self.seg_ptr[np.where(valid, k1, -1) + 1]
         cnt = np.where(valid, np.maximum(b - a, 0), 0)
-        total = int(cnt.sum())
-        if total == 0:
-            z = np.zeros(0, dtype=np.int64)
-            return z, z
-        q_rep = np.repeat(np.arange(len(qlo), dtype=np.int64), cnt)
-        offs = np.arange(total, dtype=np.int64) - np.repeat(np.cumsum(cnt) - cnt, cnt)
-        iv = self.seg_ids[np.repeat(a, cnt) + offs]
-        rid = self.iv_ring[iv]
+        q_rep, slot = _ragged(a, cnt)
+        rid = self.iv_ring[self.seg_ids[slot]]
         # dedup (query, ring) — intervals spanning several segments and
         # several intervals of one ring both collapse here
-        key = q_rep * np.int64(len(self.rings)) + rid
+        n_rings = len(self.ring_pid)
+        key = q_rep * np.int64(n_rings) + rid
         uniq = np.unique(key)
-        return uniq // len(self.rings), uniq % len(self.rings)
+        return uniq // n_rings, uniq % n_rings
 
     def refine(self, lon, lat, pt_idx, ring_id, full):
         """Exact-PIP refine of PARTIAL candidates; FULL pass through.
         Returns filtered (pt_idx, ring_id)."""
         keep = np.array(full, dtype=bool, copy=True)
-        part = ~keep
-        if part.any():
-            pi, ri = pt_idx[part], ring_id[part]
-            ok = np.zeros(len(pi), dtype=bool)
-            for r in np.unique(ri):
-                m = ri == r
-                ok[m] = point_in_ring_batch(lon[pi[m]], lat[pi[m]], self.rings[r])
-            keep[part] = ok
+        part = np.flatnonzero(~keep)
+        pi = pt_idx[part]
+        keep[part] = points_in_rings(lon[pi], lat[pi], ring_id[part], self.ring_pts, self.ring_off)
         return pt_idx[keep], ring_id[keep]
 
     def assign(self, lon: np.ndarray, lat: np.ndarray):
@@ -162,66 +164,36 @@ def build_interval_index(
     Only rings with positive *net* winding participate by default
     semantics of "the cleaned polygon interior": callers filter upstream
     if they want a different layer (we index whatever is passed in).
+
+    A DataFrame is covered on the executors by ``crosswalk.ring_covers``
+    and collected once with ``toArrow``: each ring's coordinates come
+    back next to its cover, so the ring table and the intervals are one
+    job.  The repartition spreads a layer read from few files over every
+    core.
     """
-    from .crosswalk import cover_keyed, ring_mats
+    from .crosswalk import cover_keyed, ring_covers
 
     if isinstance(rings_out, DataFrame):
-        # TWO actions read the ring layer (the distributed cover pass
-        # and the coordinate collect) — persist for their duration so an
-        # expensive upstream (e.g. a full decompose_polygons) is not
-        # executed twice for callers who did not think to cache
-        sl = rings_out.storageLevel
-        caller_cached = sl.useMemory or sl.useDisk
-        if not caller_cached:
-            rings_out = rings_out.persist()
-        try:
-            # compute covers on the executors (one Arrow pass over the
-            # ring layer) — the driver only collects compressed intervals
-            cov = _covers_distributed(rings_out, cover_level, max_level)
-            tbl = rings_out.select("polygon_id", "ring_index", "coords").toArrow()
-        finally:
-            if not caller_cached:
-                rings_out.unpersist()
+        df = rings_out.repartition(max(rings_out.sparkSession.sparkContext.defaultParallelism, 8))
+        tbl = ring_covers(df, cover_level, max_level).toArrow()
+        ring_pid = np.array(tbl.column("polygon_id").to_pylist(), dtype=object)
+        ring_ridx = tbl.column("ring_index").to_numpy().astype(np.int32)
         pts, off = ring_mats(tbl.column("coords").combine_chunks())
-        rings = [pts[off[i] : off[i + 1]] for i in range(tbl.num_rows)]
-        ring_pid = tbl.column("polygon_id").combine_chunks()
-        ring_ridx = tbl.column("ring_index").to_numpy()
-        ring_keys = list(zip(ring_pid.to_pylist(), ring_ridx.tolist()))
-        iv_ring = _ring_ids(
-            ring_pid, ring_ridx, cov.column("polygon_id").combine_chunks(), cov.column("ring_index").to_numpy()
-        )
-        lo, hi = cov.column("lo").to_numpy(), cov.column("hi").to_numpy()
-        full = cov.column("full").to_numpy().astype(bool)
+        lo, hi, full = (tbl.column(c).combine_chunks().flatten().to_numpy() for c in ("lo", "hi", "full"))
+        counts = pc.list_value_length(tbl.column("lo")).to_numpy()
     else:
-        ring_keys, rings, covs = [], [], []
-        for row in rings_out:
-            pid, ridx = row["polygon_id"], int(row["ring_index"])
-            coords = np.asarray([list(c) for c in row["coords"]], dtype=np.float64)
-            covs.append(cover_keyed(coords, pid, ridx, cover_level, max_level))
-            ring_keys.append((pid, ridx))
-            rings.append(coords)
+        rows = list(rings_out)
+        ring_pid = np.array([row["polygon_id"] for row in rows], dtype=object)
+        ring_ridx = np.array([row["ring_index"] for row in rows], dtype=np.int32)
+        rings = [np.asarray(row["coords"], dtype=np.float64) for row in rows]
+        covs = [cover_keyed(r, p, i, cover_level, max_level) for r, p, i in zip(rings, ring_pid, ring_ridx.tolist())]
         cov = np.concatenate(covs) if covs else np.zeros((0, 3), np.int64)
-        lo, hi, full = cov[:, 0], cov[:, 1], cov[:, 2].astype(bool)
-        iv_ring = np.repeat(np.arange(len(covs), dtype=np.int64), [len(c) for c in covs])
-
-    centroids = (
-        np.array([r[:-1].mean(axis=0) for r in rings])
-        if rings
-        else np.zeros((0, 2))
-    )
-    n_iv = len(lo)
-    if n_iv == 0:
-        return IntervalIndex(
-            ring_keys,
-            rings,
-            np.zeros(0, np.int64),
-            np.zeros(1, np.int64),
-            np.zeros(0, np.int64),
-            np.zeros(0, np.int64),
-            np.zeros(0, bool),
-            max_level,
-            centroids=centroids,
-        )
+        lo, hi, full = cov[:, 0], cov[:, 1], cov[:, 2]
+        counts = np.array([len(c) for c in covs], dtype=np.int64)
+        pts, off = ring_table(rings)
+    full = full.astype(bool)
+    iv_ring = np.repeat(np.arange(len(counts), dtype=np.int64), counts)
+    centroids = np.array([r[:-1].mean(axis=0) for r in _ring_views(pts, off)]) if len(ring_pid) else np.zeros((0, 2))
 
     # elementary segments between all endpoints; sweep with +1/-1 events
     events = np.concatenate([lo, hi + 1])
@@ -231,9 +203,7 @@ def build_interval_index(
     seg_of_lo = np.searchsorted(bp, lo, side="right") - 1
     seg_of_hi = np.searchsorted(bp, hi, side="right") - 1
     span = seg_of_hi - seg_of_lo + 1
-    tot = int(span.sum())
-    iv_rep = np.repeat(np.arange(n_iv, dtype=np.int64), span)
-    seg_rep = np.arange(tot, dtype=np.int64) - np.repeat(np.cumsum(span) - span, span) + np.repeat(seg_of_lo, span)
+    iv_rep, seg_rep = _ragged(seg_of_lo, span)
     order = np.argsort(seg_rep, kind="stable")
     seg_sorted = seg_rep[order]
     ids_sorted = iv_rep[order]
@@ -242,8 +212,10 @@ def build_interval_index(
     np.cumsum(counts, out=seg_ptr[1:])
 
     idx = IntervalIndex(
-        ring_keys,
-        rings,
+        ring_pid,
+        ring_ridx,
+        pts,
+        off,
         bp,
         seg_ptr,
         ids_sorted,
@@ -251,44 +223,28 @@ def build_interval_index(
         full,
         max_level,
         stats={
-            "n_rings": len(rings),
-            "n_intervals": n_iv,
+            "n_rings": len(ring_pid),
+            "n_intervals": len(lo),
             "n_full": int(full.sum()),
             "n_segments": len(bp),
-            "csr_entries": tot,
+            "csr_entries": len(seg_rep),
         },
         centroids=centroids,
     )
     return idx
 
 
-def _covers_distributed(rings_out: DataFrame, cover_level: int, max_level: int) -> pa.Table:
-    """Run cover_ring on the executors and collect the intervals with
-    ``toArrow``: a (polygon_id, ring_index, lo, hi, full) Arrow table,
-    with no Row objects.  Delegates to the single cover kernel
-    (crosswalk.covers_df, a ``mapInArrow`` pass) so the broadcast-index
-    build and the relational fallbacks can never drift apart.  The
-    repartition spreads a layer read from few files over every core."""
-    from .crosswalk import covers_df
-
-    df = rings_out.repartition(
-        max(rings_out.sparkSession.sparkContext.defaultParallelism, 8)
-    )
-    return covers_df(df, cover_level, max_level).toArrow()
+def _ragged(start: np.ndarray, cnt: np.ndarray):
+    """(k, start[k] + j) for every j < cnt[k], in k order: the slots of
+    many ranges at once, with no Python loop over the ranges."""
+    owner = np.repeat(np.arange(len(cnt), dtype=np.int64), cnt)
+    return owner, np.arange(len(owner), dtype=np.int64) + np.repeat(start - (np.cumsum(cnt) - cnt), cnt)
 
 
-def _ring_ids(ring_pid: pa.Array, ring_ridx: np.ndarray, pid: pa.Array, ridx: np.ndarray) -> np.ndarray:
-    """Row of each (pid, ridx) key among the ring keys (the last row if
-    a key repeats), by one sort and a searchsorted."""
-    code = pc.dictionary_encode(pa.concat_arrays([ring_pid, pid]), null_encoding="encode")
-    code = code.indices.to_numpy().astype(np.int64)
-    key = (code << 32) | (np.concatenate([ring_ridx, ridx]).astype(np.int64) & 0xFFFFFFFF)
-    ring_key, cover_key = key[: len(ring_ridx)], key[len(ring_ridx) :]
-    order = np.argsort(ring_key, kind="stable")
-    rid = order[np.maximum(np.searchsorted(ring_key[order], cover_key, side="right") - 1, 0)]
-    if len(rid) and not np.array_equal(ring_key[rid], cover_key):
-        raise KeyError("cover rows name rings that the ring layer does not hold")
-    return rid
+def _ring_views(pts: np.ndarray, off: np.ndarray) -> list:
+    """Ring r of a ring table as the view ``pts[off[r]:off[r + 1]]``."""
+    o = off.tolist()
+    return [pts[a:b] for a, b in zip(o[:-1], o[1:])]
 
 
 def broadcast_index(spark: SparkSession, index: IntervalIndex):
@@ -309,57 +265,34 @@ def pip_join(
     (boundary points excluded), matching the reference's
     booleanPointInPolygon(ignoreBoundary=true) parent test.
     """
-    out_schema = pa.schema(
-        [
-            pa.field(id_col, pa.string()),
-            pa.field("lon", pa.float64()),
-            pa.field("lat", pa.float64()),
-            pa.field("polygon_id", pa.string()),
-            pa.field("ring_index", pa.int32()),
-        ]
-    )
-
     def run(batches):
         idx: IntervalIndex = index_bc.value
         for batch in batches:
-            tbl = batch
-            ids = tbl.column(id_col).to_numpy(zero_copy_only=False)
-            lon = tbl.column(lon_col).to_numpy(zero_copy_only=False).astype(np.float64)
-            lat = tbl.column(lat_col).to_numpy(zero_copy_only=False).astype(np.float64)
+            ids = batch.column(id_col).to_numpy(zero_copy_only=False)
+            lon = batch.column(lon_col).to_numpy(zero_copy_only=False).astype(np.float64)
+            lat = batch.column(lat_col).to_numpy(zero_copy_only=False).astype(np.float64)
             pt_idx, ring_id = idx.assign(lon, lat)
             if len(pt_idx) == 0:
                 continue
-            pids = idx.ring_pid[ring_id]
-            ridxs = idx.ring_ridx[ring_id]
             yield pa.RecordBatch.from_arrays(
                 [
                     pa.array(ids[pt_idx], pa.string()),
                     pa.array(lon[pt_idx]),
                     pa.array(lat[pt_idx]),
-                    pa.array(pids, pa.string()),
-                    pa.array(ridxs, pa.int32()),
+                    pa.array(idx.ring_pid[ring_id], pa.string()),
+                    pa.array(idx.ring_ridx[ring_id], pa.int32()),
                 ],
-                schema=out_schema,
+                names=[id_col, "lon", "lat", "polygon_id", "ring_index"],
             )  # all columns assembled by fancy indexing — no per-row Python
 
-    from pyspark.sql.types import (
-        DoubleType,
-        IntegerType,
-        StringType,
-        StructField,
-        StructType,
-    )
+    return points.select(id_col, lon_col, lat_col).mapInArrow(run, _pip_schema(id_col))
 
-    spark_schema = StructType(
-        [
-            StructField(id_col, StringType()),
-            StructField("lon", DoubleType()),
-            StructField("lat", DoubleType()),
-            StructField("polygon_id", StringType()),
-            StructField("ring_index", IntegerType()),
-        ]
-    )
-    return points.select(id_col, lon_col, lat_col).mapInArrow(run, spark_schema)
+
+def _pip_schema(id_col: str) -> str:
+    """Output of both PIP joins.  Its columns are ALWAYS named lon/lat:
+    the two paths are drop-in replacements for each other, so custom
+    lon_col/lat_col input names must not leak into the output."""
+    return f"{id_col} string, lon double, lat double, polygon_id string, ring_index int"
 
 
 # ---------------------------------------------------------------------------
@@ -391,12 +324,11 @@ def pip_join_relational(
       FULL intervals accept outright (Raster-Intervals shortcut);
       PARTIAL candidates join the ring geometry by (polygon_id,
           ring_index) — only candidate rows ever carry coordinates —
-          and refine with the vectorized strict ray-cast, grouped per
-          ring inside each Arrow batch.
+          and refine in a ``mapInArrow``: each batch's candidate rings
+          become one ring table and one ``points_in_rings`` call tests
+          every (point, ring) row.
 
     Output contract identical to ``pip_join``."""
-    import pandas as pd
-
     from pyspark.sql import functions as F
 
     from ..functions.cells_sql import cell_sql_expr
@@ -445,41 +377,21 @@ def pip_join_relational(
         "left",
     ).select(id_col, lon_col, lat_col, "full", "polygon_id", "ring_index", "coords")
 
-    # output columns are ALWAYS named lon/lat, matching pip_join's
-    # hardcoded output schema — the two paths are drop-in replacements
-    # for each other, so custom lon_col/lat_col input names must not
-    # leak into the output contract
-    out_schema = (
-        f"{id_col} string, lon double, lat double, "
-        "polygon_id string, ring_index int"
-    )
-
     def refine(batches):
-        cols = [id_col, lon_col, lat_col, "polygon_id", "ring_index"]
-        renames = {lon_col: "lon", lat_col: "lat"}
-        for pdf in batches:
-            keep_parts = []
-            fullm = pdf["full"] == 1
-            if fullm.any():
-                keep_parts.append(pdf.loc[fullm, cols])
-            part = pdf.loc[~fullm]
-            for (_pid, _ridx), grp in part.groupby(
-                ["polygon_id", "ring_index"], sort=False
-            ):
-                ring = np.asarray(
-                    [list(c) for c in grp["coords"].iloc[0]], dtype=np.float64
-                )
-                inside = point_in_ring_batch(
-                    grp[lon_col].to_numpy(np.float64),
-                    grp[lat_col].to_numpy(np.float64),
-                    ring,
-                )
-                if inside.any():
-                    keep_parts.append(grp.loc[inside, cols])
-            if keep_parts:
-                out = pd.concat(keep_parts, ignore_index=True)
-                out = out.rename(columns=renames)
-                out["ring_index"] = out["ring_index"].astype("int32")
-                yield out
+        for batch in batches:
+            keep = batch.column("full").to_numpy(zero_copy_only=False) == 1
+            part = np.flatnonzero(~keep)
+            if len(part):
+                # each PARTIAL row carries its own ring: row k tests ring k
+                rows = batch.take(pa.array(part))
+                pts, off = ring_mats(rows.column("coords"))
+                lon = rows.column(lon_col).to_numpy(zero_copy_only=False)
+                lat = rows.column(lat_col).to_numpy(zero_copy_only=False)
+                keep[part] = points_in_rings(lon, lat, np.arange(len(part)), pts, off)
+            if keep.any():
+                out = batch.filter(pa.array(keep))
+                lonlat = [out.column(c).cast(pa.float64()) for c in (lon_col, lat_col)]
+                cols = [out.column(id_col), *lonlat, out.column("polygon_id"), out.column("ring_index")]
+                yield pa.RecordBatch.from_arrays(cols, names=[id_col, "lon", "lat", "polygon_id", "ring_index"])
 
-    return withco.mapInPandas(refine, out_schema)
+    return withco.mapInArrow(refine, _pip_schema(id_col))

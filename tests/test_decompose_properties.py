@@ -7,15 +7,20 @@ Beyond fixture parity, any random polygon must satisfy:
      edges split at their crossing points (multiset equality)
   P4 net winding telescopes: net(ring) = winding(ring) + net(parent)
   P5 simple inputs pass through verbatim (fast path)
+and a sha256 pin of the output on fixed inputs covers what the
+properties cannot see (quirks Q1-Q3, parent choice).
 """
 
 from __future__ import annotations
+
+import hashlib
 
 import numpy as np
 from hypothesis import given, settings, strategies as st
 
 from simplepolygon_spark.decompose import decompose
 from simplepolygon_spark.geom import segment_intersections, signed_area
+from simplepolygon_spark.sources.fixtures import NORTH_STAR_FIXTURES
 
 
 def _coords(n, seed):
@@ -124,3 +129,52 @@ def test_js_number_string_roundtrips(v):
 
     s = js(v)
     assert float(s) == v or (v == 0 and s == "0")
+
+
+def _shuffled_polygon(seed, nv):
+    """A polygon whose vertices come in random order, so each edge
+    crosses many others (the crossing-heavy shape of perfbench's tail)."""
+    rng = np.random.default_rng(seed)
+    xs, ys = rng.uniform(0.0, 0.3, nv), rng.uniform(0.0, 0.3, nv)
+    ring = [[float(x), float(y)] for x, y in zip(xs, ys)]
+    return [ring + [ring[0]]]
+
+
+def _squares(n):
+    """n concentric CCW squares, outermost first (half-sizes n..1)."""
+    return [[[-s, -s], [s, -s], [s, s], [-s, s], [-s, -s]] for s in range(n, 0, -1)]
+
+
+def _output_digest(cases):
+    h = hashlib.sha256()
+    for name, rings in cases:
+        h.update(name.encode())
+        for f in decompose(rings):
+            h.update(np.asarray(f["coords"], np.float64).tobytes())
+            h.update(repr((f["parent"], f["winding"], f["net_winding"], f["index"])).encode())
+    return h.hexdigest()
+
+
+PINNED_DECOMPOSE_DIGEST = "cd1d434787f479dabf40683b81cb66de9b8ddf10362594336ffccc153661cfcb"
+
+
+def test_decompose_output_pinned():
+    """sha256 of every output ring (coords, parent, winding, net_winding,
+    index), recorded with the per-ring scalar parent pass.  The nested
+    squares are the only inputs here with several rings containing one
+    root, so they pin quirk Q2: listed inner-first, the last containing
+    ring in index order (the outermost) is the parent."""
+    cases = [(k, v) for k, v in NORTH_STAR_FIXTURES.items() if k != "unclosed"]
+    cases += [(f"shuffled{nv}", _shuffled_polygon(1000 + k, nv)) for k, nv in enumerate((16, 32, 48, 64, 80, 96))]
+    cases += [("squares_outer_first", _squares(6)), ("squares_inner_first", _squares(6)[::-1])]
+    assert [f["parent"] for f in decompose(_squares(6)[::-1])] == [5, 5, 5, 5, 5, -1]
+    assert _output_digest(cases) == PINNED_DECOMPOSE_DIGEST
+
+
+def test_deep_nesting_decomposes():
+    """1,001 concentric squares (the fast path): each ring's parent is
+    the next-outer square and net windings count the depth.  A
+    recursive net-winding pass would raise RecursionError here."""
+    feats = decompose(_squares(1001))
+    assert [f["parent"] for f in feats] == list(range(-1, 1000))
+    assert [f["net_winding"] for f in feats] == list(range(1, 1002))
