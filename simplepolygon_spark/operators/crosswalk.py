@@ -18,7 +18,7 @@ import pyarrow as pa
 
 from pyspark.sql import DataFrame
 
-from ..cells import cell_range_at_max, spread_bits
+from ..cells import RingError, cell_range_at_max, cover_rings, spread_bits
 from ..geom import ring_mats
 
 
@@ -168,14 +168,14 @@ def bucketed_cover_spans(
     )
 
 
-def cover_keyed(coords, polygon_id, ring_index, cover_level: int, max_level: int):
-    """``cover_ring`` of one ring whose ValueError names the ring."""
-    from ..cells import cover_ring
-
+def table_covers(pts, off, pids, ridx, cover_level: int, max_level: int):
+    """``cells.cover_rings`` of a ring table whose ring r is
+    (``pids[r]``, ``ridx[r]``): a degenerate ring's ValueError is
+    prefixed with its (polygon_id, ring_index)."""
     try:
-        return cover_ring(coords, max_level=cover_level, abs_max=max_level)
-    except ValueError as e:
-        raise ValueError(f"(polygon_id, ring_index) = ({polygon_id!r}, {ring_index}): {e}") from e
+        return cover_rings(pts, off, max_level=cover_level, abs_max=max_level)
+    except RingError as e:
+        raise ValueError(f"(polygon_id, ring_index) = ({pids[e.ring]!r}, {ridx[e.ring]}): {e}") from e
 
 
 def ring_covers(rings_out: DataFrame, cover_level: int = 8, max_level: int = 16) -> DataFrame:
@@ -184,28 +184,30 @@ def ring_covers(rings_out: DataFrame, cover_level: int = 8, max_level: int = 16)
     The one cover pass of the package: ``covers_df`` explodes it and
     ``tiling.build_interval_index`` collects it.
 
-    One ``mapInArrow`` pass: each batch's coordinates are sliced out of
-    the Arrow list buffers into a ring table (``geom.ring_mats``), every
-    ring's cover is an int64 array, and the list columns are built from
-    their offsets — no per-interval Python objects.  A degenerate ring
-    fails the job with the cover kernel's ValueError, prefixed with its
-    (polygon_id, ring_index)."""
+    One ``mapInArrow`` pass over the input's own partitions (no
+    repartition: repartition upstream when a layer arrives in few
+    splits).  Each batch's coordinates are sliced out of the Arrow list
+    buffers into a ring table (``geom.ring_mats``), one
+    ``cells.cover_rings`` call covers every ring of it, and the list
+    columns are built from the per-ring counts — no per-ring or
+    per-interval Python.  A degenerate ring fails the job with the cover
+    kernel's ValueError, prefixed with the (polygon_id, ring_index) of
+    the batch's first such ring."""
     from pyspark.sql import functions as F
 
     def run(batches):
         for batch in batches:
             pts, off = ring_mats(batch.column("coords"))
-            pids, ridx = batch.column("polygon_id").to_pylist(), batch.column("ring_index").to_pylist()
-            covs = [
-                cover_keyed(pts[off[i] : off[i + 1]], pids[i], ridx[i], cover_level, max_level)
-                for i in range(batch.num_rows)
-            ]
-            cov = np.concatenate(covs) if covs else np.zeros((0, 3), np.int64)
-            cut = pa.array(np.cumsum([0] + [len(c) for c in covs]), pa.int32())
+            pid, ridx = batch.column("polygon_id"), batch.column("ring_index")
+            lo, hi, full, counts = table_covers(
+                pts, off, pid.to_pylist(), ridx.to_pylist(), cover_level, max_level
+            )
+            cut = np.zeros(len(counts) + 1, np.int32)
+            np.cumsum(counts, out=cut[1:])
+            cut = pa.array(cut)
             yield pa.RecordBatch.from_arrays(
-                [batch.column("polygon_id"), batch.column("ring_index"), batch.column("coords")]
-                + [pa.ListArray.from_arrays(cut, pa.array(cov[:, k])) for k in (0, 1)]
-                + [pa.ListArray.from_arrays(cut, pa.array(cov[:, 2].astype(np.int32)))],
+                [pid, ridx, batch.column("coords")]
+                + [pa.ListArray.from_arrays(cut, pa.array(v)) for v in (lo, hi, full.astype(np.int32))],
                 names=["polygon_id", "ring_index", "coords", "lo", "hi", "full"],
             )
 

@@ -53,7 +53,7 @@ def derive_bucket_level(cov_a: DataFrame, cov_b: DataFrame) -> int:
         )
         .agg(
             # exact percentile keeps one counter per DISTINCT span.  A
-            # single cover cell spans a power of 4, but cover_ring merges
+            # single cover cell spans a power of 4, but cover_rings merges
             # adjacent same-flag cells, so a span is any multiple of the
             # finest cell's 4**(MAX_LEVEL - cover_level): at most
             # 4**cover_level distinct values, independent of row count

@@ -5,7 +5,7 @@ from PAPERS.md):
 
 1. ``build_interval_index`` — the *dimension* side.  Decomposed simple
    rings (rings_out) are covered with FULL/PARTIAL quadkey cells
-   (cells.cover_ring), compressed into sorted Morton [lo, hi] ranges,
+   (cells.cover_rings), compressed into sorted Morton [lo, hi] ranges,
    flattened into an elementary-segment stabbing structure (CSR), and
    **broadcast** to every executor.  Size: O(cells of all rings) — the
    polygon layer is small next to the 10^12-row image table by design.
@@ -168,14 +168,17 @@ def build_interval_index(
     A DataFrame is covered on the executors by ``crosswalk.ring_covers``
     and collected once with ``toArrow``: each ring's coordinates come
     back next to its cover, so the ring table and the intervals are one
-    job.  The repartition spreads a layer read from few files over every
-    core.
+    job.  The cover pass runs on the input's own partitions, with no
+    repartition (its shuffle costs more than the cover it would spread):
+    repartition upstream when a layer arrives in few splits.  A list is
+    made into one ring table and covered by one ``cells.cover_rings``
+    call.  Either way a degenerate ring fails the build with its
+    (polygon_id, ring_index).
     """
-    from .crosswalk import cover_keyed, ring_covers
+    from .crosswalk import ring_covers, table_covers
 
     if isinstance(rings_out, DataFrame):
-        df = rings_out.repartition(max(rings_out.sparkSession.sparkContext.defaultParallelism, 8))
-        tbl = ring_covers(df, cover_level, max_level).toArrow()
+        tbl = ring_covers(rings_out, cover_level, max_level).toArrow()
         ring_pid = np.array(tbl.column("polygon_id").to_pylist(), dtype=object)
         ring_ridx = tbl.column("ring_index").to_numpy().astype(np.int32)
         pts, off = ring_mats(tbl.column("coords").combine_chunks())
@@ -185,12 +188,8 @@ def build_interval_index(
         rows = list(rings_out)
         ring_pid = np.array([row["polygon_id"] for row in rows], dtype=object)
         ring_ridx = np.array([row["ring_index"] for row in rows], dtype=np.int32)
-        rings = [np.asarray(row["coords"], dtype=np.float64) for row in rows]
-        covs = [cover_keyed(r, p, i, cover_level, max_level) for r, p, i in zip(rings, ring_pid, ring_ridx.tolist())]
-        cov = np.concatenate(covs) if covs else np.zeros((0, 3), np.int64)
-        lo, hi, full = cov[:, 0], cov[:, 1], cov[:, 2]
-        counts = np.array([len(c) for c in covs], dtype=np.int64)
-        pts, off = ring_table(rings)
+        pts, off = ring_table([row["coords"] for row in rows])
+        lo, hi, full, counts = table_covers(pts, off, ring_pid, ring_ridx, cover_level, max_level)
     full = full.astype(bool)
     iv_ring = np.repeat(np.arange(len(counts), dtype=np.int64), counts)
     centroids = np.array([r[:-1].mean(axis=0) for r in _ring_views(pts, off)]) if len(ring_pid) else np.zeros((0, 2))

@@ -4,13 +4,17 @@ test-local per-cell oracle."""
 
 from __future__ import annotations
 
+import ast
+import functools
 import hashlib
+import pathlib
 
 import duckdb
 import numpy as np
 import pytest
 from hypothesis import given, settings, strategies as st
 
+import simplepolygon_spark
 import simplepolygon_spark.cells as cells_mod
 from simplepolygon_spark.cells import (
     MAX_LEVEL,
@@ -18,12 +22,13 @@ from simplepolygon_spark.cells import (
     cell_of_point,
     cell_range_at_max,
     cover_ring,
+    cover_rings,
     parent_cell,
     spread_bits,
 )
 from simplepolygon_spark.decompose import decompose
 from simplepolygon_spark.functions.cells_sql import cell_sql_expr
-from simplepolygon_spark.geom import point_in_ring
+from simplepolygon_spark.geom import point_in_ring, ring_table
 from simplepolygon_spark.sources.fixtures import NORTH_STAR_FIXTURES
 from simplepolygon_spark.sources.footprints import footprint_rows
 
@@ -237,6 +242,44 @@ def test_cover_ring_equals_scalar_descent_hypothesis(seed, n, radius, level):
     assert np.array_equal(cover_ring(ring, max_level=level), _scalar_cover(ring, level))
 
 
+_ORACLE_STRIDE = {8: 1, 9: 1, 10: 1, 11: 3, 12: 6}
+
+
+@functools.lru_cache(maxsize=None)
+def _oracle_table(level):
+    """One mixed ring table of every oracle kind, and the per-ring
+    ``_scalar_cover`` of each of its rings at ``level``."""
+    names, rings = [], []
+    for kind, kind_rings in _oracle_rings().items():
+        if kind in ("footprints", "stars"):
+            kind_rings = kind_rings[:: _ORACLE_STRIDE[level]]
+        names += [f"{kind}[{k}]" for k in range(len(kind_rings))]
+        rings += kind_rings
+    return names, rings, [_scalar_cover(r, level) for r in rings]
+
+
+def _split_covers(lo, hi, full, counts):
+    return np.split(np.column_stack([lo, hi, full]), np.cumsum(counts)[:-1])
+
+
+@pytest.mark.parametrize("level", [8, 9, 10, 11, 12])
+@pytest.mark.parametrize(
+    "patch",
+    [{}, {"_PAIR_BUDGET": 7}, {"_RING_GROUP": 1}, {"_RING_GROUP": 3}],
+    ids=["default", "pair_budget_7", "ring_group_1", "ring_group_3"],
+)
+def test_cover_rings_equals_scalar_descent(level, patch, monkeypatch):
+    # a pair budget of 7 starts and ends chunks inside rings and across
+    # ring boundaries; small ring groups split the table between frontiers
+    names, rings, want = _oracle_table(level)
+    for name, value in patch.items():
+        monkeypatch.setattr(cells_mod, name, value)
+    lo, hi, full, counts = cover_rings(*ring_table(rings), max_level=level)
+    assert len(counts) == len(rings)
+    for name, got, w in zip(names, _split_covers(lo, hi, full, counts), want):
+        assert np.array_equal(got, w), f"{name} at level {level}"
+
+
 def _aligned_cells(lo, hi, abs_max=MAX_LEVEL):
     """[lo, hi] at ``abs_max`` as maximal aligned Morton blocks: (cell, level)."""
     while lo <= hi:
@@ -285,6 +328,17 @@ def test_served_layer_cover_digest():
     allc = np.vstack(covers)
     assert (len(rings), len(allc), int(allc[:, 2].sum())) == (614, 55_897, 20_309)
     assert h.hexdigest() == SERVED_COVER_SHA256
+
+
+def test_served_layer_cover_digest_one_call():
+    """The served layer covered by one ``cover_rings`` call over its
+    whole ring table gives the pinned digest, split ring by ring."""
+    fixtures = {k: v for k, v in NORTH_STAR_FIXTURES.items() if k != "unclosed"}
+    rings = _decomposed(rings for _pid, rings in footprint_rows(16, fixtures))
+    lo, hi, full, counts = cover_rings(*ring_table(rings), 10, 4, 16)
+    h = hashlib.sha256(np.ascontiguousarray(np.column_stack([lo, hi, full]), dtype=np.int64).tobytes())
+    assert h.hexdigest() == SERVED_COVER_SHA256
+    assert counts.tolist() == [len(cover_ring(r, 10, 4, 16)) for r in rings]
 
 
 def _circle(n, cx, cy, rx, ry, wobble=0.0, k=7):
@@ -356,3 +410,99 @@ def test_covers_df_names_degenerate_ring(spark):
     assert ok and {r.polygon_id for r in ok} == {"ok"}
     want = cover_ring(np.array([[0, 0], [1, 0], [1, 1], [0, 1], [0, 0]], float), 8)
     assert sorted((r.lo, r.hi, r.full) for r in ok) == [tuple(map(int, c)) for c in want]
+
+
+def test_covers_df_names_first_degenerate_ring(spark):
+    """Two bad rings after good ones in one Arrow batch: the first in
+    table order is named."""
+    from simplepolygon_spark.operators.crosswalk import covers_df
+
+    good = [[0.0, 0.0], [1.0, 0.0], [1.0, 1.0], [0.0, 1.0], [0.0, 0.0]]
+    df = spark.createDataFrame(
+        [
+            ("ok", 0, good),
+            ("ok", 1, good),
+            ("bad", 3, [[0.0, 0.0], [1.0, 1.0], [0.0, 0.0]]),
+            ("worse", 4, [[0.0, 0.0], [float("nan"), 1.0], [1.0, 1.0], [0.0, 0.0]]),
+        ],
+        "polygon_id string, ring_index int, coords array<array<double>>",
+    ).coalesce(1)
+    with pytest.raises(Exception, match=r"\('bad', 3\): ring has fewer than 4 positions \(got 3\)"):
+        covers_df(df, 8).collect()
+
+
+@pytest.mark.parametrize(
+    "first, second, named",
+    [
+        ([[0, 0], [1, 1], [0, 0]], [[0, 0], [float("nan"), 1], [1, 1], [0, 0]], r"\('bad', 3\): ring has fewer than 4 positions \(got 3\)"),
+        ([[0, 0], [1, float("inf")], [1, 1], [0, 0]], [], r"\('bad', 3\): ring has a non-finite coordinate at position 1"),
+    ],
+    ids=["short_then_nan", "inf_then_empty"],
+)
+def test_build_interval_index_names_first_degenerate_ring(first, second, named):
+    """Two bad rings after good ones in one ring table: the first in
+    table order is named, whatever the kind of either fault."""
+    from simplepolygon_spark.operators.tiling import build_interval_index
+
+    good = [[0, 0], [1, 0], [1, 1], [0, 1], [0, 0]]
+    rows = [
+        {"polygon_id": "ok", "ring_index": 0, "coords": good},
+        {"polygon_id": "ok", "ring_index": 1, "coords": good},
+        {"polygon_id": "bad", "ring_index": 3, "coords": first},
+        {"polygon_id": "worse", "ring_index": 4, "coords": second},
+    ]
+    with pytest.raises(ValueError, match=named):
+        build_interval_index(rows, cover_level=8)
+
+
+def test_open_ring_is_covered_with_its_closing_edge():
+    """An open ring is covered as the closed ring: the list-built index
+    answers exactly as the ray-cast of the closed ring.  Without the
+    closing edge the cells along it were FULL or dropped, so points
+    beyond it were accepted and points before it rejected."""
+    from simplepolygon_spark.operators.tiling import build_interval_index
+
+    open_ring = [[0.0, 0.0], [10.0, 0.0], [10.0, 10.0], [5.0, 10.0]]
+    closed = np.array(open_ring + open_ring[:1])
+    assert np.array_equal(cover_ring(open_ring, 8), cover_ring(closed, 8))
+    idx = build_interval_index([{"polygon_id": "p", "ring_index": 0, "coords": open_ring}], cover_level=8)
+    rng = np.random.default_rng(8)
+    lon, lat = rng.uniform(-1.0, 11.0, 50_000), rng.uniform(-1.0, 11.0, 50_000)
+    got = np.zeros(len(lon), bool)
+    got[idx.assign(lon, lat)[0]] = True
+    want = np.array([point_in_ring((x, y), closed, True) for x, y in zip(lon, lat)])
+    assert np.array_equal(got, want)
+
+
+def _calls(tree, names):
+    """(enclosing function, callee) of every call to one of ``names``."""
+    hits = set()
+
+    def visit(node, where):
+        for child in ast.iter_child_nodes(node):
+            name = f"{where}.{child.name}" if isinstance(child, (ast.FunctionDef, ast.ClassDef)) else where
+            if isinstance(child, ast.Call):
+                f = child.func
+                callee = f.id if isinstance(f, ast.Name) else f.attr if isinstance(f, ast.Attribute) else None
+                if callee in names:
+                    hits.add((name, callee))
+            visit(child, name)
+
+    visit(tree, "")
+    return hits
+
+
+def test_one_cover_kernel_in_the_package():
+    """The frontier descent lives only in ``cells.cover_rings``: its cell
+    bounds (``_grid_bounds``) are computed nowhere else but in the
+    one-cell conversion ``cell_bounds``, and no package module covers
+    ring by ring through the one-ring entry ``cover_ring``."""
+    root = pathlib.Path(simplepolygon_spark.__file__).parent
+    found = set()
+    for path in sorted(root.rglob("*.py")):
+        mod = ".".join(path.relative_to(root.parent).with_suffix("").parts)
+        found |= {(f"{mod}{fn}", callee) for fn, callee in _calls(ast.parse(path.read_text()), {"_grid_bounds", "cover_ring"})}
+    assert found == {
+        ("simplepolygon_spark.cells.cover_rings", "_grid_bounds"),
+        ("simplepolygon_spark.cells.cell_bounds", "_grid_bounds"),
+    }

@@ -204,3 +204,47 @@ def test_pip_join_relational_output_names_with_custom_cols(spark):
     )
     out = pip_join_relational(pts, rings, cover_level=8, lon_col="x", lat_col="y")
     assert out.columns == ["image_id", "lon", "lat", "polygon_id", "ring_index"]
+
+
+def _covers_by_key(idx):
+    """(polygon_id, ring_index) -> (ring, sorted cover) of an index, its
+    intervals read back from the CSR: interval i spans the segments from
+    its first to its last, [bp[first], bp[last + 1] - 1]."""
+    seg = np.repeat(np.arange(len(idx.bp)), np.diff(idx.seg_ptr))
+    first = np.full(len(idx.iv_ring), len(idx.bp))
+    last = np.full(len(idx.iv_ring), -1)
+    np.minimum.at(first, idx.seg_ids, seg)
+    np.maximum.at(last, idx.seg_ids, seg)
+    cover = np.column_stack([idx.bp[first], idx.bp[last + 1] - 1, idx.iv_full])
+    return {
+        key: (idx.rings[r].tolist(), sorted(map(tuple, cover[idx.iv_ring == r].tolist())))
+        for r, key in enumerate(idx.ring_keys)
+    }
+
+
+def test_one_partition_build_equals_list_build(spark):
+    """The DataFrame build covers the input's own partitions, with no
+    repartition: a one-partition layer builds the list path's index up
+    to ring order, and ``ring_covers`` gives one row set on 1 and 8
+    partitions."""
+    from simplepolygon_spark.operators.crosswalk import ring_covers
+    from simplepolygon_spark.sources.footprints import footprints_df
+
+    rings = decompose_polygons(footprints_df(spark, grid=3)).cache()
+    one = rings.coalesce(1)
+    assert one.rdd.getNumPartitions() == 1
+    from_df = build_interval_index(one, cover_level=9)
+    from_list = build_interval_index(rings.collect(), cover_level=9)
+    assert from_df.stats == from_list.stats and from_df.stats["n_rings"] > 20
+    assert _covers_by_key(from_df) == _covers_by_key(from_list)
+
+    def rows(df):
+        return {
+            (r.polygon_id, r.ring_index, str(r.coords), tuple(r.lo), tuple(r.hi), tuple(r.full))
+            for r in ring_covers(df, 9).collect()
+        }
+
+    eight = rings.repartition(8)
+    assert eight.rdd.getNumPartitions() == 8
+    assert rows(one) == rows(eight)
+    rings.unpersist()
