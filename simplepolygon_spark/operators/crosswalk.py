@@ -181,8 +181,11 @@ def table_covers(pts, off, pids, ridx, cover_level: int, max_level: int):
 def ring_covers(rings_out: DataFrame, cover_level: int = 8, max_level: int = 16) -> DataFrame:
     """(polygon_id, ring_index, coords, lo, hi, full) — one row per ring,
     its cover as three parallel list columns next to its coordinates.
-    The one cover pass of the package: ``covers_df`` explodes it and
-    ``tiling.build_interval_index`` collects it.
+    The executor-side cover of the relational paths: ``covers_df``
+    explodes it and nothing collects it.  It no longer feeds
+    ``tiling.build_interval_index``, which collects the bare rings with
+    a JVM-only ``toArrow`` and covers them on the driver through
+    ``table_covers``.
 
     One ``mapInArrow`` pass over the input's own partitions (no
     repartition: repartition upstream when a layer arrives in few

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pytest
 
 from simplepolygon_spark.geom import point_in_ring
 from simplepolygon_spark.operators.decompose import decompose_polygons
@@ -248,3 +249,61 @@ def test_one_partition_build_equals_list_build(spark):
     assert eight.rdd.getNumPartitions() == 8
     assert rows(one) == rows(eight)
     rings.unpersist()
+
+
+def test_four_partition_build_equals_list_build_exactly(spark):
+    """The DataFrame build collects the rings in partition order and
+    runs the list build's driver code: on a 4-partition layer both give
+    the same ring order and byte-equal arrays."""
+    rings = decompose_polygons(footprints_df(spark, grid=3)).repartition(4).cache()
+    assert rings.rdd.getNumPartitions() == 4
+    from_df = build_interval_index(rings, cover_level=9)
+    from_list = build_interval_index(rings.collect(), cover_level=9)
+    rings.unpersist()
+    assert from_df.stats == from_list.stats and from_df.stats["n_rings"] > 20
+    assert from_df.ring_pid.tolist() == from_list.ring_pid.tolist()
+    assert from_df.max_level == from_list.max_level
+    for name in ("ring_ridx", "ring_pts", "ring_off", "bp", "seg_ptr", "seg_ids", "iv_ring", "iv_full", "centroids"):
+        a, b = getattr(from_df, name), getattr(from_list, name)
+        assert (a.dtype, a.shape) == (b.dtype, b.shape), name
+        assert a.tobytes() == b.tobytes(), name
+
+
+def test_dataframe_build_names_degenerate_ring_on_driver(spark):
+    """Two bad rings after good ones in a DataFrame layer: the build
+    fails on the driver with a plain ValueError naming the first."""
+    good = [[0.0, 0.0], [1.0, 0.0], [1.0, 1.0], [0.0, 1.0], [0.0, 0.0]]
+    df = spark.createDataFrame(
+        [
+            ("ok", 0, good),
+            ("ok", 1, good),
+            ("bad", 3, [[0.0, 0.0], [1.0, 1.0], [0.0, 0.0]]),
+            ("worse", 4, [[0.0, 0.0], [float("nan"), 1.0], [1.0, 1.0], [0.0, 0.0]]),
+        ],
+        "polygon_id string, ring_index int, coords array<array<double>>",
+    )
+    with pytest.raises(ValueError, match=r"\('bad', 3\): ring has fewer than 4 positions \(got 3\)") as exc:
+        build_interval_index(df, cover_level=8)
+    assert type(exc.value) is ValueError
+
+
+def test_build_centroids_equal_per_ring_mean_exactly():
+    """The build's vectorized centroids are bit-identical to each ring's
+    ``r[:-1].mean(axis=0)`` (the closing position left out), the form
+    perfbench's kNN oracle computes."""
+    rng = np.random.default_rng(5)
+    rings = []
+    for n in [4, 5, 9, 40, 400, 3000]:
+        ang = np.sort(rng.uniform(0.0, 2 * np.pi, n))
+        rad = rng.uniform(0.2, 1.0, n) * rng.uniform(0.01, 3.0)
+        cx, cy = rng.uniform(-140, 140), rng.uniform(-60, 60)
+        rings.append(np.column_stack([cx + rad * np.cos(ang), cy + 0.5 * rad * np.sin(ang)]))
+    rings[1] = np.vstack([rings[1], rings[1][:1]])  # one ring arrives closed, the rest open
+    idx = build_interval_index(
+        [{"polygon_id": f"p{i}", "ring_index": 0, "coords": r.tolist()} for i, r in enumerate(rings)],
+        cover_level=6,
+    )
+    assert idx.centroids.shape == (len(rings), 2)
+    for r, ring in enumerate(idx.rings):
+        want = ring[:-1].mean(axis=0)
+        assert idx.centroids[r].tobytes() == want.tobytes(), r
