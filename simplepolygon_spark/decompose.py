@@ -49,6 +49,12 @@ def _coord_key(c) -> tuple:
     return (c[0], c[1])
 
 
+_NON_FINITE = (
+    "Each position must contain 2 finite coordinates "
+    "(engine deviation: the reference does not validate this)"
+)
+
+
 def _js_coord_string(c) -> str:
     """JS ``String([x, y])`` == ``"x,y"`` — quirk Q1 sort key."""
     return js_number_string(c[0]) + "," + js_number_string(c[1])
@@ -99,6 +105,9 @@ def decompose(rings: list) -> list[dict[str, Any]]:
                     "Each position must contain at least 2 coordinates "
                     "(engine deviation: the reference does not validate this)"
                 )
+            if p[0] is None or p[1] is None:
+                # a NULL coordinate: typed error, not float()'s TypeError
+                raise DecomposeError(_NON_FINITE)
         r = [[float(p[0]), float(p[1])] for p in ring]
         if len(r) < 3:
             # DOCUMENTED DEVIATION from the reference: simplepolygon
@@ -140,6 +149,11 @@ def decompose(rings: list) -> list[dict[str, Any]]:
             edge_idx.append(j)
             flat_edges.append([r[j][0], r[j][1], r[j + 1][0], r[j + 1][1]])
     fe = np.asarray(flat_edges, dtype=np.float64)
+    if not np.isfinite(fe).all():
+        # after the dedup check, so repeated NaN vertices keep the
+        # reference's duplicate-vertex error; a lone NaN or inf would
+        # otherwise come out as a garbage (or NULL) coordinate
+        raise DecomposeError(_NON_FINITE)
     ei, ej, px, py, ti, tj = segment_intersections(fe)
 
     # selfIsectsData-equivalent mentions: each crossing twice, the first

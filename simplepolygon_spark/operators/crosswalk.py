@@ -178,21 +178,21 @@ def table_covers(pts, off, pids, ridx, cover_level: int, max_level: int):
         raise ValueError(f"(polygon_id, ring_index) = ({pids[e.ring]!r}, {ridx[e.ring]}): {e}") from e
 
 
-def ring_covers(rings_out: DataFrame, cover_level: int = 8, max_level: int = 16) -> DataFrame:
-    """(polygon_id, ring_index, coords, lo, hi, full) — one row per ring,
-    its cover as three parallel list columns next to its coordinates.
-    The executor-side cover of the relational paths: ``covers_df``
-    explodes it and nothing collects it.  It no longer feeds
-    ``tiling.build_interval_index``, which collects the bare rings with
-    a JVM-only ``toArrow`` and covers them on the driver through
+def covers_df(rings_out: DataFrame, cover_level: int = 8, max_level: int = 16) -> DataFrame:
+    """(polygon_id, ring_index, lo, hi, full) — the ring cover as a
+    DataFrame, one row per interval, computed on the executors and NEVER
+    collected.  The relational paths (``crosswalk_relational``,
+    ``tiling.pip_join_relational``) and ``overlap.overlap_join`` consume
+    it; ``tiling.build_interval_index`` instead collects the bare rings
+    with a JVM-only ``toArrow`` and covers them on the driver through
     ``table_covers``.
 
     One ``mapInArrow`` pass over the input's own partitions (no
     repartition: repartition upstream when a layer arrives in few
     splits).  Each batch's coordinates are sliced out of the Arrow list
     buffers into a ring table (``geom.ring_mats``), one
-    ``cells.cover_rings`` call covers every ring of it, and the list
-    columns are built from the per-ring counts — no per-ring or
+    ``cells.cover_rings`` call covers every ring of it, and each
+    interval's ids are taken from its ring's row — no per-ring or
     per-interval Python.  A degenerate ring fails the job with the cover
     kernel's ValueError, prefixed with the (polygon_id, ring_index) of
     the batch's first such ring."""
@@ -205,38 +205,16 @@ def ring_covers(rings_out: DataFrame, cover_level: int = 8, max_level: int = 16)
             lo, hi, full, counts = table_covers(
                 pts, off, pid.to_pylist(), ridx.to_pylist(), cover_level, max_level
             )
-            cut = np.zeros(len(counts) + 1, np.int32)
-            np.cumsum(counts, out=cut[1:])
-            cut = pa.array(cut)
+            ring = pa.array(np.repeat(np.arange(len(counts)), counts))
             yield pa.RecordBatch.from_arrays(
-                [pid, ridx, batch.column("coords")]
-                + [pa.ListArray.from_arrays(cut, pa.array(v)) for v in (lo, hi, full.astype(np.int32))],
-                names=["polygon_id", "ring_index", "coords", "lo", "hi", "full"],
+                [pid.take(ring), ridx.take(ring), pa.array(lo), pa.array(hi), pa.array(full.astype(np.int32))],
+                names=["polygon_id", "ring_index", "lo", "hi", "full"],
             )
 
-    schema = (
-        "polygon_id string, ring_index int, coords array<array<double>>, "
-        "lo array<bigint>, hi array<bigint>, full array<int>"
-    )
+    schema = "polygon_id string, ring_index int, lo bigint, hi bigint, full int"
     return rings_out.select(
         "polygon_id", F.col("ring_index").cast("int").alias("ring_index"), "coords"
     ).mapInArrow(run, schema)
-
-
-def covers_df(rings_out: DataFrame, cover_level: int = 8, max_level: int = 16) -> DataFrame:
-    """(polygon_id, ring_index, lo, hi, full) — the ring cover as a
-    DataFrame, computed on the executors and NEVER collected.  The
-    relational crosswalk path consumes this when the ring layer is too
-    large to broadcast as an IntervalIndex.
-
-    ``ring_covers``' per-ring lists exploded on the JVM side with
-    ``inline(arrays_zip(lo, hi, full))``: one row per interval, and a
-    degenerate ring fails the job with its (polygon_id, ring_index)."""
-    from pyspark.sql import functions as F
-
-    return ring_covers(rings_out, cover_level, max_level).select(
-        "polygon_id", "ring_index", F.inline(F.arrays_zip("lo", "hi", "full"))
-    )
 
 
 def tile_cells_df(

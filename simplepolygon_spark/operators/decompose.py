@@ -1,11 +1,19 @@
 """Distributed ring decomposition operator.
 
-Runs the per-polygon kernel (simplepolygon_spark.decompose — reference
-parity with /root/reference/src/index.ts:39-533) over a DataFrame of
-polygons via ``mapInPandas``: decomposition needs *no shuffle at all*
-because each row already holds a whole polygon — each Arrow batch is
-processed where it sits.  Parallelism = input partitions; use
-``repartition`` upstream only if the source produced few/skewed splits.
+Runs the per-polygon kernel (``simplepolygon_spark.decompose``, parity
+with the reference's src/index.ts:39-533) over a DataFrame of polygons
+with one ``mapInArrow`` pass.  Decomposition needs no shuffle because
+each row already holds a whole polygon, so each Arrow batch is processed
+where it sits.  Parallelism = input partitions; use ``repartition``
+upstream only if the source produced few or skewed splits.
+
+Each batch's ``polygon_id`` and ``rings`` columns are read with
+``to_pylist``: a NULL cell reaches the kernel as ``None`` (its typed
+"non-empty geometry" error), ``rings = []`` as an empty list, and a NULL
+ring, position or coordinate as ``None`` inside it, each rejected by the
+kernel's typed checks.  ``decompose_polygons`` and ``validate_polygons``
+share the per-row loop (``_decomposed_rows``); each input batch gives
+one output batch.
 
 Schemas
 -------
@@ -19,11 +27,10 @@ output: polygon_id string, ring_index int, parent int, winding int,
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
@@ -55,103 +62,47 @@ RINGS_OUT_SCHEMA = StructType(
     ]
 )
 
+VALIDATE_SCHEMA = StructType(
+    [
+        StructField("polygon_id", StringType()),
+        StructField("ok", BooleanType()),
+        StructField("error", StringType()),
+    ]
+)
 
-def _oversize_error(n_vertices: int, cap: int) -> "Exception":
-    from simplepolygon_spark.decompose import DecomposeError
-
-    return DecomposeError(
-        f"polygon exceeds max_vertices cap ({n_vertices} > {cap}): "
-        "routed to skip/report instead of occupying an executor"
-    )
+# the include_empty row of an empty FeatureCollection (ring_index -1)
+_EMPTY_SENTINEL = {"parent": -1, "winding": 0, "net_winding": 0, "index": None, "coords": []}
 
 
-def _decompose_batches(
-    batches: Iterator[pd.DataFrame], on_error: str, max_vertices: int | None = None
-) -> Iterator[pd.DataFrame]:
+def _decomposed_rows(batch: pa.RecordBatch, max_vertices: int | None):
+    """(polygon_id, features or the exception) for each row of a batch.
+
+    ``max_vertices`` (opt-in) caps per-polygon cost: a pathological
+    mega-polygon is one task, so without a cap it can occupy an executor
+    for hours.  The vertex count is the cheap static proxy (crossing
+    blow-up is already bounded by the sweep's pair cap inside the
+    kernel); NULL ring elements are not counted, so the kernel still
+    gives them its typed error.  An over-cap row never reaches the
+    kernel."""
     # imported lazily so the worker imports the kernel, not the operator
     from simplepolygon_spark.decompose import DecomposeError, decompose
 
-    for pdf in batches:
-        out: dict[str, list] = {
-            "polygon_id": [],
-            "ring_index": [],
-            "parent": [],
-            "winding": [],
-            "net_winding": [],
-            "is_indexed": [],
-            "coords": [],
-        }
-        was_null = (
-            pdf["__was_null"]
-            if "__was_null" in pdf.columns
-            else [False] * len(pdf)
-        )
-        was_empty = (
-            pdf["__was_empty"]
-            if "__was_empty" in pdf.columns
-            else [False] * len(pdf)
-        )
-        for pid, nul, emp, rings in zip(
-            pdf["polygon_id"], was_null, was_empty, pdf["rings"]
-        ):
-            if emp:
-                # include_empty marker: rings was [] (valid — reference
-                # fast path yields an empty FeatureCollection); emit a
-                # sentinel row so downstream sees the id without a
-                # second scan of the input.  ring_index=-1 can never
-                # collide with real output (real indices start at 0).
-                out["polygon_id"].append(pid)
-                out["ring_index"].append(-1)
-                out["parent"].append(-1)
-                out["winding"].append(0)
-                out["net_winding"].append(0)
-                out["is_indexed"].append(False)
-                out["coords"].append([])
-                continue
-            try:
-                # opt-in cost cap: a pathological mega-polygon is ONE
-                # task (per-row kernel), so without a cap it can occupy
-                # an executor for hours; the vertex count is the cheap
-                # static proxy (crossing blow-up is already bounded by
-                # the sweep's pair_cap inside the kernel)
-                # NULL ring elements are skipped in the count (len(None)
-                # would raise a bare TypeError that escapes the
-                # DecomposeError handler and kills a skip-mode job); the
-                # kernel below still rejects them with its typed error
-                if (
-                    max_vertices is not None
-                    and not nul
-                    and (nv := sum(len(r) for r in rings if r is not None))
-                    > max_vertices
-                ):
-                    raise _oversize_error(nv, max_vertices)
-                # rings arrive as numpy object arrays; decompose()'s own
-                # normalization ([[float(x), float(y)] ...]) consumes the
-                # per-ring arrays directly — only the outer container is
-                # (shallow-)listed; a deep listify here would be a
-                # redundant full copy of every coordinate.  A __was_null
-                # flagged row (NULL rings cell, e.g. from_json nulled
-                # mis-shaped coordinates — replaced by a placeholder at
-                # the Arrow boundary) raises the typed DecomposeError
-                feats = decompose(None if nul else list(rings))
-            except DecomposeError:
-                if on_error == "raise":
-                    raise
-                continue
-            for k, f in enumerate(feats):
-                out["polygon_id"].append(pid)
-                out["ring_index"].append(k)
-                out["parent"].append(f["parent"])
-                out["winding"].append(f["winding"])
-                out["net_winding"].append(f["net_winding"])
-                out["is_indexed"].append(f["index"] is not None)
-                out["coords"].append(f["coords"])
-        if not out["polygon_id"]:
-            continue  # an all-skipped batch has no inferable dtypes
-        pdf_out = pd.DataFrame(out)
-        for col in ("ring_index", "parent", "winding", "net_winding"):
-            pdf_out[col] = pdf_out[col].astype("int32")
-        yield pdf_out
+    ids = batch.column("polygon_id").to_pylist()
+    for pid, rings in zip(ids, batch.column("rings").to_pylist()):
+        try:
+            if (
+                max_vertices is not None
+                and rings is not None
+                and (nv := sum(len(r) for r in rings if r is not None)) > max_vertices
+            ):
+                raise DecomposeError(
+                    f"polygon exceeds max_vertices cap ({nv} > {max_vertices}): "
+                    "routed to skip/report instead of occupying an executor"
+                )
+            result = decompose(rings)
+        except Exception as e:
+            result = e
+        yield pid, result
 
 
 def decompose_polygons(
@@ -162,79 +113,52 @@ def decompose_polygons(
 ) -> DataFrame:
     """polygons(polygon_id, rings) → rings_out (one row per simple ring).
 
-    ``on_error='skip'`` drops invalid polygons (duplicate vertices, etc.)
-    instead of failing the job — the scale-friendly default for dirty
-    data is to route rejects through ``validate_polygons`` first.
+    ``on_error='raise'`` fails the job on any error; ``on_error='skip'``
+    drops polygons the kernel rejects with its typed ``DecomposeError``
+    (NULL geometry, duplicate vertices, ...) and still fails on anything
+    else.  The scale-friendly route for dirty data is to split rejects
+    off with ``validate_polygons`` first.
 
     ``include_empty=True`` emits a sentinel row (ring_index=-1,
-    coords=[]) for each ``rings=[]`` input instead of dropping it — so a
-    caller that must account for every input id (decompose_geojson's
-    empty-FeatureCollection contract) gets it from the SAME single scan
-    rather than re-filtering (and re-parsing) the input a second time.
+    coords=[]) for each ``rings=[]`` input (an empty FeatureCollection)
+    instead of dropping it — so a caller that must account for every
+    input id (decompose_geojson's empty-FeatureCollection contract) gets
+    it from the same single scan.  ring_index=-1 never collides with a
+    real ring, whose indices start at 0.
 
-    ``max_vertices`` (opt-in) caps per-polygon cost: the kernel runs one
-    polygon per row in one task, so a pathological mega-polygon (tens of
-    millions of vertices) would otherwise occupy an executor for hours.
-    Over-cap rows raise the typed "exceeds max_vertices cap" error —
-    skipped under ``on_error='skip'``, reported (not raised) by
-    ``validate_polygons(max_vertices=...)`` for quarantine routing.
+    ``max_vertices`` (opt-in): over-cap rows raise the typed "exceeds
+    max_vertices cap" error — skipped under ``on_error='skip'``,
+    reported (not raised) by ``validate_polygons(max_vertices=...)`` for
+    quarantine routing.
     """
-    from pyspark.sql import functions as F
-
     if on_error not in ("skip", "raise"):
-        # unvalidated, a typo like 'ignore' would get HYBRID semantics:
-        # NULL rings raising SQL-side while kernel rejects are skipped
         raise ValueError(f"on_error must be 'skip' or 'raise', got {on_error!r}")
+    schema = to_arrow_schema(RINGS_OUT_SCHEMA)
 
-    # NULL rings must be resolved SQL-SIDE: pyspark's arrow_to_pandas
-    # segfaults the worker converting a NULL (or empty) cell of this
-    # nested type, so neither may reach the Arrow boundary.  rings=[] is
-    # VALID (the reference fast path yields an empty FeatureCollection →
-    # zero output rows here), so empties are filtered on both paths.
-    # NULLs: skip → filter; raise → a __was_null FLAG + placeholder, and
-    # the KERNEL raises the typed error.  (Not SQL raise_error: that
-    # projection is deterministic, so Catalyst may push it below a
-    # caller's join/filter and fire it on rows the caller had excluded —
-    # the mapInPandas kernel is a barrier the optimizer cannot cross.)
-    src = polygons.select("polygon_id", "rings")
-    placeholder = F.array(F.array(F.array(F.lit(0.0), F.lit(0.0))))
-    if on_error == "skip":
-        src = src.filter(F.col("rings").isNotNull()).select(
-            "polygon_id",
-            F.lit(False).alias("__was_null"),
-            (F.size("rings") == 0).alias("__was_empty"),
-            F.when(F.size("rings") == 0, placeholder)
-            .otherwise(F.col("rings"))
-            .alias("rings"),
-        )
-    else:
-        src = src.select(
-            "polygon_id",
-            F.col("rings").isNull().alias("__was_null"),
-            (F.col("rings").isNotNull() & (F.size("rings") == 0)).alias(
-                "__was_empty"
-            ),
-            F.when(
-                F.col("rings").isNull() | (F.size("rings") == 0), placeholder
-            )
-            .otherwise(F.col("rings"))
-            .alias("rings"),
-        )
-    if not include_empty:
-        src = src.filter(~F.col("__was_empty"))
-    return src.mapInPandas(
-        lambda it: _decompose_batches(it, on_error, max_vertices),
-        RINGS_OUT_SCHEMA,
-    )
+    def run(batches):
+        from simplepolygon_spark.decompose import DecomposeError
 
+        for batch in batches:
+            out = {name: [] for name in schema.names}
+            for pid, feats in _decomposed_rows(batch, max_vertices):
+                if isinstance(feats, Exception):
+                    if on_error == "raise" or not isinstance(feats, DecomposeError):
+                        raise feats
+                    continue
+                first = 0
+                if include_empty and not feats:
+                    feats, first = [_EMPTY_SENTINEL], -1
+                for k, f in enumerate(feats, first):
+                    out["polygon_id"].append(pid)
+                    out["ring_index"].append(k)
+                    out["parent"].append(f["parent"])
+                    out["winding"].append(f["winding"])
+                    out["net_winding"].append(f["net_winding"])
+                    out["is_indexed"].append(f["index"] is not None)
+                    out["coords"].append(f["coords"])
+            yield pa.RecordBatch.from_pydict(out, schema=schema)
 
-VALIDATE_SCHEMA = StructType(
-    [
-        StructField("polygon_id", StringType()),
-        StructField("ok", BooleanType()),
-        StructField("error", StringType()),
-    ]
-)
+    return polygons.select("polygon_id", "rings").mapInArrow(run, RINGS_OUT_SCHEMA)
 
 
 def validate_polygons(
@@ -250,69 +174,31 @@ def validate_polygons(
     Validity is defined as "the decompose kernel accepts it", so this
     runs the full kernel and discards the rings — the only definition
     that cannot drift from the real pipeline (walk-time rejections like
-    coincident crossings are undetectable by cheap static checks).
+    coincident crossings are undetectable by cheap static checks).  An
+    error outside the kernel's typed ones is reported as
+    ``"{Class}: message"`` so the quarantine sink can triage it.
 
     ``max_vertices`` (opt-in, matching ``decompose_polygons``): a
     polygon over the cap is REPORTED (ok=False, "exceeds max_vertices
     cap") without running the kernel at all — the whole point is that
     the oversized row must not cost kernel time here either.
     """
-    from pyspark.sql import functions as F
+    schema = to_arrow_schema(VALIDATE_SCHEMA)
 
     def run(batches):
-        from simplepolygon_spark.decompose import DecomposeError, decompose
+        from simplepolygon_spark.decompose import DecomposeError
 
-        for pdf in batches:
-            ids, oks, errs = [], [], []
-            for pid, was_null, was_empty, rings in zip(
-                pdf["polygon_id"], pdf["__was_null"], pdf["__was_empty"], pdf["rings"]
-            ):
-                try:
-                    if was_null:
-                        # must raise the null message, not decompose the
-                        # placeholder
-                        decompose(None)
-                    elif was_empty:
-                        pass  # [] is valid: empty FeatureCollection
-                    elif (
-                        max_vertices is not None
-                        and (nv := sum(len(r) for r in rings if r is not None))
-                        > max_vertices
-                    ):
-                        # NULL rings skipped in the count so the typed
-                        # "non-null array" kernel message (not a raw
-                        # TypeError) stays the report for NULL-ring rows
-                        raise _oversize_error(nv, max_vertices)
-                    else:
-                        decompose(list(rings))
-                    oks.append(True)
-                    errs.append(None)
-                except DecomposeError as e:
-                    oks.append(False)
-                    errs.append(str(e))
-                except Exception as e:  # malformed beyond the typed checks
-                    # a routing operator must NEVER fail the job — report
-                    # the reject with its class so the quarantine sink
-                    # can triage it
-                    oks.append(False)
-                    errs.append(f"{type(e).__name__}: {e}")
+        for batch in batches:
+            ids, errs = [], []
+            for pid, feats in _decomposed_rows(batch, max_vertices):
                 ids.append(pid)
-            yield pd.DataFrame({"polygon_id": ids, "ok": oks, "error": errs})
+                if not isinstance(feats, Exception):
+                    errs.append(None)
+                elif isinstance(feats, DecomposeError):
+                    errs.append(str(feats))
+                else:
+                    errs.append(f"{type(feats).__name__}: {feats}")
+            oks = [e is None for e in errs]
+            yield pa.RecordBatch.from_pydict({"polygon_id": ids, "ok": oks, "error": errs}, schema=schema)
 
-    # ONE scan: NULL and EMPTY rings cells both segfault pyspark's
-    # arrow_to_pandas for this nested type (see decompose_polygons), so
-    # they are flagged SQL-side and replaced by a valid placeholder that
-    # converts safely — a filter-and-union shape would execute the
-    # (possibly expensive) source twice
-    placeholder = F.array(F.array(F.array(F.lit(0.0), F.lit(0.0))))
-    src = polygons.select(
-        "polygon_id",
-        F.col("rings").isNull().alias("__was_null"),
-        (F.size("rings") == 0).alias("__was_empty"),
-        F.when(
-            F.col("rings").isNull() | (F.size("rings") == 0), placeholder
-        )
-        .otherwise(F.col("rings"))
-        .alias("rings"),
-    )
-    return src.mapInPandas(run, VALIDATE_SCHEMA)
+    return polygons.select("polygon_id", "rings").mapInArrow(run, VALIDATE_SCHEMA)

@@ -178,3 +178,107 @@ def test_deep_nesting_decomposes():
     feats = decompose(_squares(1001))
     assert [f["parent"] for f in feats] == list(range(-1, 1000))
     assert [f["net_winding"] for f in feats] == list(range(1, 1002))
+
+
+def _closed(ring):
+    r = np.asarray(ring, np.float64)
+    return r if (r[0] == r[-1]).all() else np.vstack([r, r[:1]])
+
+
+def _winding_numbers(px, py, ring):
+    """Winding number of one closed ring at each point: the signed count
+    of its edges crossing the rightward ray (upward edges with the point
+    on their left +1, downward edges with it on their right -1)."""
+    r = _closed(ring)
+    x0, y0, x1, y1 = r[:-1, 0], r[:-1, 1], r[1:, 0], r[1:, 1]
+    px, py = px[:, None], py[:, None]
+    side = (x1 - x0) * (py - y0) - (px - x0) * (y1 - y0)
+    up = (y0 <= py) & (py < y1) & (side > 0)
+    down = (y1 <= py) & (py < y0) & (side < 0)
+    return up.sum(axis=1) - down.sum(axis=1)
+
+
+def _assert_field_and_area(rings, out, seed=0, n_points=300):
+    """Two identities of any correct decomposition, checked without the
+    kernel.  ``out`` is (coords, winding) per output ring.
+      field: at seeded points, the input's winding number (signed
+        crossings over the input edges) equals the summed ``winding`` of
+        the output rings whose interior holds the point (0 outside all);
+      area: the output's summed shoelace equals the input's, because
+        ∮x dy is additive over split edges."""
+    closed = [_closed(r) for r in rings]
+    allpts = np.concatenate(closed)
+    lo, hi = allpts.min(axis=0), allpts.max(axis=0)
+    pad = 0.1 * (hi - lo)
+    pts = np.random.default_rng(seed).uniform(lo - pad, hi + pad, (n_points, 2))
+    px, py = pts[:, 0], pts[:, 1]
+    field_in = sum(_winding_numbers(px, py, r) for r in closed)
+    field_out = sum(w * (_winding_numbers(px, py, c) != 0) for c, w in out)
+    assert np.array_equal(field_in, field_out), "winding-number field differs"
+    areas_in = [signed_area(r) for r in closed]
+    areas_out = [signed_area(np.asarray(c, np.float64)) for c, _w in out]
+    scale = sum(map(abs, areas_in)) + sum(map(abs, areas_out))
+    assert abs(sum(areas_in) - sum(areas_out)) <= 1e-12 * scale, "shoelace not conserved"
+
+
+def _identity_cases():
+    cases = [(k, v) for k, v in NORTH_STAR_FIXTURES.items() if k != "unclosed"]
+    cases += [(f"shuffled{nv}", _shuffled_polygon(1000 + k, nv)) for k, nv in enumerate((16, 32, 48, 64, 80, 96))]
+    cases += [("squares_outer_first", _squares(6)), ("squares_inner_first", _squares(6)[::-1])]
+    return cases
+
+
+def test_field_and_area_identities_on_fixtures():
+    """The identities on every north-star fixture, the six crossing-heavy
+    tails and both nested-square orders.  Summing over every containing
+    ring (not taking the innermost one's net winding) is what holds
+    under quirk Q2, where inner-first squares all get the outermost
+    square as parent."""
+    for k, (_name, rings) in enumerate(_identity_cases()):
+        out = [(f["coords"], f["winding"]) for f in decompose(rings)]
+        _assert_field_and_area(rings, out, seed=k)
+
+
+@settings(max_examples=60, deadline=None)
+@given(n=st.integers(4, 40), seed=st.integers(0, 10_000), shuffled=st.booleans())
+def test_field_and_area_identities(n, seed, shuffled):
+    """The identities over random (vertices rounded to 3 decimals) and
+    crossing-heavy polygons; an input the kernel rejects is skipped."""
+    from simplepolygon_spark.decompose import DecomposeError
+
+    rings = _shuffled_polygon(seed, n) if shuffled else [_coords(min(n, 9), seed)]
+    if rings[0] is None:
+        return
+    try:
+        feats = decompose(rings)
+    except DecomposeError:
+        return
+    _assert_field_and_area(rings, [(f["coords"], f["winding"]) for f in feats], seed=seed)
+
+
+def test_field_and_area_identities_through_spark(spark):
+    """The Spark operator's rows satisfy the identities on their own
+    (no driver kernel run), with Arrow batches of 3 rows so polygons
+    span several batches of one task."""
+    from simplepolygon_spark.operators.decompose import POLYGONS_SCHEMA, decompose_polygons
+
+    cases = _identity_cases()
+    rows = [(name, [[[float(x), float(y)] for x, y in r] for r in rings]) for name, rings in cases]
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, "3")
+    try:
+        out = decompose_polygons(spark.createDataFrame(rows, POLYGONS_SCHEMA).coalesce(1)).collect()
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+    by_pid: dict[str, list] = {}
+    for r in out:
+        by_pid.setdefault(r.polygon_id, []).append(r)
+    assert set(by_pid) == {name for name, _ in cases}
+    for k, (name, rings) in enumerate(cases):
+        got = sorted(by_pid[name], key=lambda r: r.ring_index)
+        assert [r.ring_index for r in got] == list(range(len(got)))
+        _assert_field_and_area(rings, [([list(c) for c in r.coords], r.winding) for r in got], seed=k)

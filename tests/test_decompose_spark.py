@@ -67,18 +67,26 @@ def test_validate_polygons_routes_dirty_data(spark):
     dup = [[[0.0, 0.0], [2.0, 0.0], [1.0, 1.0], [0.0, 2.0], [1.0, 3.0], [2.0, 2.0], [1.0, 1.0], [0.0, 0.0]]]
     short = [[[0.0, 0.0], [1.0, 1.0]]]
     badpos = [[[0.0, 0.0], [2.0], [2.0, 2.0], [0.0, 2.0]]]  # 1-coord position
+    nullxy = [[[0.0, 0.0], [2.0, None], [2.0, 2.0], [0.0, 2.0]]]  # NULL coordinate
+    nanxy = [[[0.0, 0.0], [2.0, float("nan")], [2.0, 2.0], [0.0, 2.0]]]
     df = spark.createDataFrame(
-        [("g", good), ("d", dup), ("s", short), ("n", None), ("e", []), ("p", badpos)],
+        [("g", good), ("d", dup), ("s", short), ("n", None), ("e", []), ("p", badpos),
+         ("z", nullxy), ("i", nanxy)],
         POLYGONS_SCHEMA,
     )
     v = {r.polygon_id: r for r in validate_polygons(df).collect()}
-    assert len(v) == 6
+    assert len(v) == 8
     assert v["g"].ok and v["g"].error is None
     assert v["e"].ok and v["e"].error is None  # [] = empty FC, valid
     assert not v["d"].ok and "duplicate vertices" in v["d"].error
     assert not v["s"].ok and "at least 3 vertices" in v["s"].error
     assert not v["n"].ok and "non-empty geometry" in v["n"].error
     assert not v["p"].ok and "at least 2 coordinates" in v["p"].error
+    assert not v["z"].ok and "2 finite coordinates" in v["z"].error
+    assert not v["i"].ok and "2 finite coordinates" in v["i"].error
+    # every reject is typed, so skip drops them all
+    skipped = decompose_polygons(df, on_error="skip").collect()
+    assert {r.polygon_id for r in skipped} == {"g"}
     # the documented routing: rejects quarantined, the rest decompose clean
     from pyspark.sql import functions as F
 

@@ -166,3 +166,26 @@ def test_spatial_import_closure_stays_spatial():
                     todo.append(found)
     leaks = sorted(f"{m} (via {reached[m]})" for m in set(reached) - SPATIAL)
     assert not leaks, "spatial code reaches off-paper modules:\n" + "\n".join(leaks)
+
+
+def test_no_pandas_udfs_in_the_engine():
+    """The engine's Python stages run on Arrow batches: no ``mapInPandas``
+    anywhere in the package, and of the SPATIAL modules only
+    ``operators/geojson.py`` (its per-polygon ``applyInPandas``
+    assembly) imports ``pandas``."""
+    problems = []
+    for path in sorted((REPO / PKG).rglob("*.py")):
+        rel = str(path.relative_to(REPO))
+        pandas_ok = _module_name(path) not in SPATIAL or rel == f"{PKG}/operators/geojson.py"
+        for node in ast.walk(ast.parse(path.read_text(), filename=rel)):
+            if isinstance(node, ast.Attribute) and node.attr == "mapInPandas":
+                problems.append(f"{rel}:{node.lineno}: mapInPandas")
+            if isinstance(node, ast.Import):
+                mods = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom):
+                mods = [node.module or ""]
+            else:
+                continue
+            if not pandas_ok and any(m.split(".")[0] == "pandas" for m in mods):
+                problems.append(f"{rel}:{node.lineno}: imports pandas")
+    assert not problems, "\n".join(problems)

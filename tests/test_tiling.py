@@ -226,9 +226,9 @@ def _covers_by_key(idx):
 def test_one_partition_build_equals_list_build(spark):
     """The DataFrame build covers the input's own partitions, with no
     repartition: a one-partition layer builds the list path's index up
-    to ring order, and ``ring_covers`` gives one row set on 1 and 8
+    to ring order, and ``covers_df`` gives one row set on 1 and 8
     partitions."""
-    from simplepolygon_spark.operators.crosswalk import ring_covers
+    from simplepolygon_spark.operators.crosswalk import covers_df
     from simplepolygon_spark.sources.footprints import footprints_df
 
     rings = decompose_polygons(footprints_df(spark, grid=3)).cache()
@@ -240,10 +240,7 @@ def test_one_partition_build_equals_list_build(spark):
     assert _covers_by_key(from_df) == _covers_by_key(from_list)
 
     def rows(df):
-        return {
-            (r.polygon_id, r.ring_index, str(r.coords), tuple(r.lo), tuple(r.hi), tuple(r.full))
-            for r in ring_covers(df, 9).collect()
-        }
+        return sorted(tuple(r) for r in covers_df(df, 9).collect())
 
     eight = rings.repartition(8)
     assert eight.rdd.getNumPartitions() == 8
