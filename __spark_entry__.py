@@ -13,6 +13,7 @@ match bit-for-bit.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -116,8 +117,16 @@ def q_decompose_rings(spark, sf_dir):
     vertex-exact reference-parity suite in tests/test_decompose_parity;
     freezing them pins the distributed operator against regression)."""
     from simplepolygon_spark.operators.decompose import decompose_polygons
+    from simplepolygon_spark.sources.fixtures import REFERENCE_TEST_DIR
     from simplepolygon_spark.sources.footprints import footprints_df
 
+    # the golden's grid includes the reference checkout's fixtures;
+    # without them footprints_df lays out other polygons under other ids
+    if not os.path.isdir(REFERENCE_TEST_DIR):
+        raise FileNotFoundError(
+            f"decompose_rings needs the reference fixtures, and "
+            f"{REFERENCE_TEST_DIR!r} is missing"
+        )
     _ship(spark)
     out = decompose_polygons(footprints_df(spark, grid=2))
     return out.select(
@@ -416,59 +425,6 @@ def _q_quantize_sql():
     """
 
 
-def q_snapshot_diff(spark, sf_dir):
-    """Corpus snapshot reconciliation: documents vs an in-query
-    modified second version (doc_id%7==0 dropped → removed; doc_id%11==0
-    text suffixed → changed — except NULL texts, where `||`
-    NULL-propagates in BOTH engines so the doc stays NULL → unchanged,
-    exercising the NULL-safe equality on both branches; doc_id<50
-    re-keyed +1e6 → added).  Oracle reproduces the full-outer join with
-    IS NOT DISTINCT FROM."""
-    from simplepolygon_spark.operators.corpus import snapshot_diff
-
-    old = _read(spark, sf_dir, "documents")
-    new = (
-        old.where(F.col("doc_id") % 7 != 0)
-        .select(
-            "doc_id",
-            F.when(
-                F.col("doc_id") % 11 == 0,
-                F.expr("text || ' v2'"),
-            )
-            .otherwise(F.col("text"))
-            .alias("text"),
-        )
-        .unionByName(
-            old.where(F.col("doc_id") < 50).select(
-                (F.col("doc_id") + 1000000).alias("doc_id"), "text"
-            )
-        )
-    )
-    return snapshot_diff(old, new).orderBy("doc_id")
-
-
-def _q_snapshot_diff_sql():
-    return """
-        WITH old AS (
-          SELECT doc_id, md5(text) AS h, TRUE AS p FROM documents
-        ), new_v AS (
-          SELECT doc_id,
-                 CASE WHEN doc_id % 11 = 0 THEN text || ' v2' ELSE text END AS text
-          FROM documents WHERE doc_id % 7 != 0
-          UNION ALL
-          SELECT doc_id + 1000000, text FROM documents WHERE doc_id < 50
-        ), new AS (
-          SELECT doc_id, md5(text) AS h, TRUE AS p FROM new_v
-        )
-        SELECT COALESCE(old.doc_id, new.doc_id) AS doc_id,
-               CASE WHEN old.p IS NULL THEN 'added'
-                    WHEN new.p IS NULL THEN 'removed'
-                    WHEN old.h IS NOT DISTINCT FROM new.h THEN 'unchanged'
-                    ELSE 'changed' END AS status
-        FROM old FULL OUTER JOIN new ON old.doc_id = new.doc_id
-    """
-
-
 def q_overlap_join(spark, sf_dir):
     """Polygon↔polygon overlap join over two synthesized square layers
     (grid from doc_id arithmetic; layer B shifted by (0.45, 0.35) with
@@ -640,75 +596,6 @@ def _q_adaptive_filter_sql():
         SELECT tc.doc_id, tc.lang, CAST(tc.n_tokens AS INTEGER) AS n_tokens
         FROM tc JOIN floors ON tc.lang = floors.lang
         WHERE tc.n_tokens >= floors.floor_tok
-    """
-
-
-def q_mix_report(spark, sf_dir):
-    """Corpus-mixture report: doc counts + character totals per
-    (lang, source) with ALL ROLLUP subtotal levels in one single-pass
-    aggregation (collapsed dims are NULL; the `level` grouping bitmask
-    — Spark grouping_id ≡ SQL GROUPING — keeps subtotals unambiguous
-    even when a dim holds real NULLs).  Integer aggregates keep it
-    engine-exact."""
-    from simplepolygon_spark.operators.corpus import mix_report
-
-    # total_chars cast double: DuckDB sum(len(text)) is HUGEINT, which
-    # lands as pandas float64 — the driver's result hash compares the
-    # materialized frames, so the engine side must carry the same
-    # representation (values are identical integers; oracle SQL is
-    # frozen this round, so the cast lives on the Spark side)
-    return (
-        mix_report(_read(spark, sf_dir, "documents"))
-        .withColumn("total_chars", F.col("total_chars").cast("double"))
-        .orderBy("level", "lang", "source")
-    )
-
-
-def _q_mix_report_sql():
-    return """
-        SELECT lang, source,
-               CAST(GROUPING(lang, source) AS INTEGER) AS level,
-               count(*) AS n_docs,
-               sum(len(text)) AS total_chars
-        FROM documents GROUP BY ROLLUP (lang, source)
-    """
-
-
-def q_profile(spark, sf_dir):
-    """One-row corpus health report (single scan + single global
-    aggregate): row/NULL/empty counts, exact duplicate-text count,
-    distinct languages, char-length extremes and total — all integer,
-    so the report is engine-exact."""
-    from simplepolygon_spark.operators.corpus import profile_corpus
-
-    # result-TYPE alignment with the frozen DuckDB oracle (values are
-    # identical): DuckDB CASE-sums land as pandas float64 (HUGEINT) and
-    # min/max(len()) as int64, vs Spark's bigint/int — cast the engine
-    # side so the driver hash compares equal representations
-    return profile_corpus(_read(spark, sf_dir, "documents")).select(
-        "n_docs",
-        F.col("null_text").cast("double").alias("null_text"),
-        F.col("empty_text").cast("double").alias("empty_text"),
-        "dup_docs",
-        "n_langs",
-        F.col("min_chars").cast("long").alias("min_chars"),
-        F.col("max_chars").cast("long").alias("max_chars"),
-        F.col("total_chars").cast("double").alias("total_chars"),
-    )
-
-
-def _q_profile_sql():
-    return """
-        SELECT count(*) AS n_docs,
-               sum(CASE WHEN text IS NULL THEN 1 ELSE 0 END) AS null_text,
-               sum(CASE WHEN text IS NOT NULL AND trim(text) = ''
-                        THEN 1 ELSE 0 END) AS empty_text,
-               count(text) - count(DISTINCT md5(text)) AS dup_docs,
-               count(DISTINCT lang) AS n_langs,
-               min(len(text)) AS min_chars,
-               max(len(text)) AS max_chars,
-               sum(coalesce(len(text), 0)) AS total_chars
-        FROM documents
     """
 
 
@@ -1805,171 +1692,6 @@ def _q_token_budget_sql():
     """
 
 
-def q_pipeline_select(spark, sf_dir):
-    """The END-TO-END training-corpus selection (operators/corpus.py):
-    integer-exact quality gate → exact-fingerprint decontamination
-    (benchmark = every 10th doc) → MinHash near-dup canonicalization
-    (keep the longest text per cluster) → per-lang token-budget
-    mixture sample — one lazy Spark plan, verified against ONE DuckDB
-    CTE chain composed of the stages' own proven oracle fragments."""
-    from simplepolygon_spark.operators.corpus import prepare_training_corpus
-
-    d = _read(spark, sf_dir, "documents")
-    bench = d.where(F.col("doc_id") % 10 == 0).select("text")
-    return prepare_training_corpus(
-        d, bench, {"en": 3000, "de": 2000}, default_budget=1200
-    )
-
-
-def _q_pipeline_select_sql():
-    norm = (
-        "md5(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'),"
-        " ' +', ' ', 'g')))"
-    )
-    return rf"""
-        WITH RECURSIVE
-        m AS (
-          SELECT doc_id, lang, text,
-                 CASE WHEN regexp_replace(text, '^\s+|\s+$', '', 'g') IS NULL
-                        OR regexp_replace(text, '^\s+|\s+$', '', 'g') = '' THEN 0
-                      ELSE CAST(len(regexp_split_to_array(
-                             regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+')) AS INTEGER)
-                 END AS n_tokens,
-                 CAST(length(text) AS INTEGER) AS n_chars,
-                 CAST(len(regexp_extract_all(text, '[^a-zA-Z0-9\s]')) AS INTEGER) AS n_punct
-          FROM documents),
-        q AS (SELECT doc_id, lang, text, n_tokens FROM m
-              WHERE n_tokens >= 20 AND n_punct * 100 <= n_chars * 30),
-        bfp AS (SELECT DISTINCT {norm} AS f FROM documents WHERE doc_id % 10 = 0),
-        fp AS (SELECT q.*, {norm} AS f FROM q),
-        d AS (SELECT doc_id, lang, text, n_tokens FROM fp
-              WHERE NOT EXISTS (SELECT 1 FROM bfp b WHERE b.f = fp.f)),
-        sh AS (
-          SELECT doc_id, list_distinct(list_transform(range(1, greatest(length(text) - 4, 1) + 1),
-                         i -> substr(lower(text), i, 5))) AS s
-          FROM d),
-        tok AS (SELECT doc_id, unnest(s) AS g FROM sh),
-        inter AS (SELECT a.doc_id AS a, b.doc_id AS b, count(*) AS i
-                  FROM tok a JOIN tok b ON a.g = b.g AND a.doc_id < b.doc_id
-                  GROUP BY 1, 2),
-        sizes AS (SELECT doc_id, len(s) AS n FROM sh),
-        prs AS (SELECT a, b FROM inter
-                JOIN sizes sa ON sa.doc_id = a
-                JOIN sizes sb ON sb.doc_id = b
-                WHERE CAST(i AS DOUBLE) / (sa.n + sb.n - i) >= 0.8),
-        edges AS (SELECT a, b FROM prs UNION ALL SELECT b AS a, a AS b FROM prs),
-        nodes AS (SELECT DISTINCT a AS node FROM edges),
-        reach(node, r) AS (
-          SELECT node, node FROM nodes
-          UNION
-          SELECT reach.node, e.b FROM reach JOIN edges e ON e.a = reach.r),
-        clus AS (SELECT node AS doc_id, min(r) AS cluster_id FROM reach GROUP BY node),
-        scored AS (
-          SELECT d.doc_id, d.lang, d.n_tokens,
-                 coalesce(c.cluster_id, d.doc_id) AS cluster_id,
-                 CAST(length(d.text) AS DOUBLE) AS s
-          FROM d LEFT JOIN clus c ON c.doc_id = d.doc_id),
-        keep AS (SELECT doc_id, lang, n_tokens FROM (
-                   SELECT doc_id, lang, n_tokens,
-                          row_number() OVER (PARTITION BY cluster_id
-                                             ORDER BY s DESC, doc_id ASC) AS rn
-                   FROM scored) WHERE rn = 1),
-        c AS (SELECT doc_id, lang, n_tokens,
-                     sum(n_tokens) OVER (PARTITION BY lang
-                         ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id
-                         ROWS UNBOUNDED PRECEDING) AS cum
-              FROM keep)
-        SELECT doc_id, lang, n_tokens, CAST(cum AS BIGINT) AS cum_tokens
-        FROM c
-        WHERE cum <= CASE lang WHEN 'en' THEN 3000 WHEN 'de' THEN 2000 ELSE 1200 END
-    """
-
-
-def q_pipeline_full(spark, sf_dir):
-    """pipeline_select CARRIED TO THE DATA ADDRESS a training run
-    reads: selection (quality → decontam → canonicalize → budget) →
-    leakage-safe split → deterministic shard/pos — every stage the
-    already-gated operator, composed.  The split runs
-    ``leakage_safe_split`` with the near-dup pairs RECOMPUTED over the
-    selected corpus: canonicalization makes that pair set empty, so
-    every selected doc is its own cluster — the oracle proves the same
-    emptiness from its true-Jaccard pair CTE rather than assuming it
-    (a residual pair in either engine would hash-mismatch loudly)."""
-    from simplepolygon_spark.operators.corpus import prepare_training_corpus
-    from simplepolygon_spark.operators.dedup import minhash_dup_pairs
-    from simplepolygon_spark.operators.sampling import (
-        leakage_safe_split,
-        shuffle_shards,
-    )
-
-    d = _read(spark, sf_dir, "documents")
-    bench = d.where(F.col("doc_id") % 10 == 0).select("text")
-    sel = prepare_training_corpus(
-        d, bench, {"en": 3000, "de": 2000}, default_budget=1200
-    )
-    seltext = sel.join(d.select("doc_id", "text"), "doc_id")
-    pairs = minhash_dup_pairs(seltext, threshold=0.8)
-    split = leakage_safe_split(seltext.select("doc_id"), pairs)
-    shards = shuffle_shards(sel.select("doc_id"), n_shards=8)
-    return (
-        sel.join(split.select("doc_id", "split"), "doc_id")
-        .join(shards.select("doc_id", "shard", "pos"), "doc_id")
-        .select(
-            "doc_id", "lang", "n_tokens", "cum_tokens", "split", "shard", "pos"
-        )
-        .orderBy("doc_id")
-    )
-
-
-def _q_pipeline_full_sql():
-    from simplepolygon_spark.operators.sampling import split_hex_threshold
-
-    t_train = split_hex_threshold(0.9)
-    base = _q_pipeline_select_sql()
-    # wrap pipeline_select's proven chain as `sel`, then extend it with
-    # the split + shard fragments (leakage_split / shuffle_export rules)
-    head, tail = base.split("SELECT doc_id, lang, n_tokens, CAST(cum AS BIGINT) AS cum_tokens", 1)
-    assert tail is not None
-    return (
-        head
-        + ", sel AS (SELECT doc_id, lang, n_tokens, CAST(cum AS BIGINT) AS cum_tokens"
-        + tail
-        + f"""
-        ),
-        selpairs AS (
-          SELECT a, b FROM prs
-          WHERE a IN (SELECT doc_id FROM sel) AND b IN (SELECT doc_id FROM sel)
-        ),
-        seledges AS (SELECT a, b FROM selpairs
-                     UNION ALL SELECT b AS a, a AS b FROM selpairs),
-        selnodes AS (SELECT DISTINCT a AS node FROM seledges),
-        selreach(node, r) AS (
-          SELECT node, node FROM selnodes
-          UNION
-          SELECT selreach.node, e.b FROM selreach JOIN seledges e ON e.a = selreach.r
-        ),
-        selclus AS (SELECT node AS doc_id, min(r) AS cluster_id
-                    FROM selreach GROUP BY node),
-        assigned AS (
-          SELECT s.*,
-                 CASE WHEN md5('split:' || CAST(coalesce(c.cluster_id, s.doc_id) AS VARCHAR))
-                           < '{t_train}'
-                      THEN 'train' ELSE 'eval' END AS split
-          FROM sel s LEFT JOIN selclus c ON c.doc_id = s.doc_id
-        ),
-        keyed AS (
-          SELECT *, md5('shuffle:' || CAST(doc_id AS VARCHAR)) AS k,
-                 CAST(('0x' || substr(md5('shuffle:' || CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT % 8 AS INT) AS shard
-          FROM assigned
-        )
-        SELECT doc_id, lang, n_tokens, cum_tokens, split, shard,
-               CAST(row_number() OVER (PARTITION BY shard ORDER BY k, doc_id) - 1
-                    AS BIGINT) AS pos
-        FROM keyed
-    """
-    )
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         "decompose_rings": q_decompose_rings,
@@ -1985,9 +1707,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pii_redact": q_pii_redact,
         "shuffle_export": q_shuffle_export,
         "adaptive_filter": q_adaptive_filter,
-        "mix_report": q_mix_report,
-        "profile": q_profile,
-        "snapshot_diff": q_snapshot_diff,
         "quantize": q_quantize,
         "length_percentiles": q_length_percentiles,
         "quality": q_quality,
@@ -2017,8 +1736,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ivf_topk": q_ivf_topk,
         "fused_validate_assign": q_fused_validate_assign,
         "token_budget": q_token_budget,
-        "pipeline_select": q_pipeline_select,
-        "pipeline_full": q_pipeline_full,
     }
 
 
@@ -2036,9 +1753,6 @@ def oracle_sql() -> dict[str, str]:
         "pii_redact": _q_pii_redact_sql(),
         "shuffle_export": _q_shuffle_export_sql(),
         "adaptive_filter": _q_adaptive_filter_sql(),
-        "mix_report": _q_mix_report_sql(),
-        "profile": _q_profile_sql(),
-        "snapshot_diff": _q_snapshot_diff_sql(),
         "quantize": _q_quantize_sql(),
         "length_percentiles": _q_length_percentiles_sql(),
         "quality": _q_quality_sql(),
@@ -2069,6 +1783,4 @@ def oracle_sql() -> dict[str, str]:
         "ivf_topk": _q_ivf_sql(),
         "fused_validate_assign": _q_fused_sql(),
         "token_budget": _q_token_budget_sql(),
-        "pipeline_select": _q_pipeline_select_sql(),
-        "pipeline_full": _q_pipeline_full_sql(),
     }

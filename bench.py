@@ -169,9 +169,7 @@ def main() -> None:
         "ngram_jaccard_lsh",
         "canonical",
         "covariance",
-        "pipeline_select",
         "quantize",
-        "profile",
     ):
         timed(name, lambda name=name: Q[name](spark, sf_dir).count())
 

@@ -2,7 +2,7 @@
 
 The polygon layer reimplements the ring decomposition of
 mclaeysb/simplepolygon (v2.0.4) from scratch as numpy kernels
-dispatched through Arrow-vectorized pandas UDFs; the join layer adds quadkey cell-cover tiling, point-in-polygon / kNN joins,
+dispatched through Arrow batches (``mapInArrow``); the join layer adds quadkey cell-cover tiling, point-in-polygon / kNN joins,
 raster<->vector crosswalk, dedup / similarity / text operators, lineage
 checkpointing, and a deterministic image payload codec.
 
@@ -10,7 +10,7 @@ Layout:
   geom.py        pure-numpy geometry kernels (no Spark imports)
   decompose.py   per-polygon ring decomposition (reference-parity semantics)
   operators/     Spark DataFrame operators (decompose, cells, joins, dedup,
-                 sampling/corpus pipelines, ...)
+                 sampling pipelines, ...)
   sources/       deterministic synthetic sources (images, footprints, fixtures)
   functions/     column-expression helpers (JVM-side, codegen-friendly)
   plans/         end-to-end pipelines + lineage/resume

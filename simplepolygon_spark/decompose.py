@@ -402,13 +402,14 @@ def _set_net_winding(feats: list[dict[str, Any]]) -> None:
 def simplepolygon(feature: dict) -> dict:
     """Drop-in equivalent of the reference's sole public API
     (``simplepolygon(feature: Feature<Polygon>) -> FeatureCollection``,
-    /root/reference/src/index.ts:39-41): validates the Feature wrapper
+    reference src/index.ts:39-41): validates the Feature wrapper
     with the reference's exact error messages (:42-48), decomposes, and
     assembles the FeatureCollection with the reference's property
     contract — index/parent/winding/netWinding, and NO ``index`` key on
     the zero-intersection fast path (quirk Q3).  Pure Python/numpy (no
-    Spark) — the single-feature form; the columnar form is
-    ``operators.geojson.decompose_geojson``."""
+    Spark), and the package's one FeatureCollection assembly: the
+    columnar form, ``operators.geojson.decompose_geojson``, calls it on
+    each row inside its one Arrow pass."""
     if not isinstance(feature, dict) or feature.get("type") != "Feature":
         raise DecomposeError("The input must a geojson object of type Feature")
     geom = feature.get("geometry")

@@ -70,9 +70,6 @@ VALIDATE_SCHEMA = StructType(
     ]
 )
 
-# the include_empty row of an empty FeatureCollection (ring_index -1)
-_EMPTY_SENTINEL = {"parent": -1, "winding": 0, "net_winding": 0, "index": None, "coords": []}
-
 
 def _decomposed_rows(batch: pa.RecordBatch, max_vertices: int | None):
     """(polygon_id, features or the exception) for each row of a batch.
@@ -108,7 +105,6 @@ def _decomposed_rows(batch: pa.RecordBatch, max_vertices: int | None):
 def decompose_polygons(
     polygons: DataFrame,
     on_error: str = "raise",
-    include_empty: bool = False,
     max_vertices: int | None = None,
 ) -> DataFrame:
     """polygons(polygon_id, rings) → rings_out (one row per simple ring).
@@ -119,12 +115,8 @@ def decompose_polygons(
     else.  The scale-friendly route for dirty data is to split rejects
     off with ``validate_polygons`` first.
 
-    ``include_empty=True`` emits a sentinel row (ring_index=-1,
-    coords=[]) for each ``rings=[]`` input (an empty FeatureCollection)
-    instead of dropping it — so a caller that must account for every
-    input id (decompose_geojson's empty-FeatureCollection contract) gets
-    it from the same single scan.  ring_index=-1 never collides with a
-    real ring, whose indices start at 0.
+    A ``rings=[]`` input (the reference's empty FeatureCollection)
+    yields no rows.
 
     ``max_vertices`` (opt-in): over-cap rows raise the typed "exceeds
     max_vertices cap" error — skipped under ``on_error='skip'``,
@@ -145,10 +137,7 @@ def decompose_polygons(
                     if on_error == "raise" or not isinstance(feats, DecomposeError):
                         raise feats
                     continue
-                first = 0
-                if include_empty and not feats:
-                    feats, first = [_EMPTY_SENTINEL], -1
-                for k, f in enumerate(feats, first):
+                for k, f in enumerate(feats):
                     out["polygon_id"].append(pid)
                     out["ring_index"].append(k)
                     out["parent"].append(f["parent"])

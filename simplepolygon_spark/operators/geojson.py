@@ -2,49 +2,57 @@
 
 A user of the reference calls ``simplepolygon(feature)`` with a GeoJSON
 ``Feature<Polygon>`` and gets a ``FeatureCollection<Polygon>`` back
-(/root/reference/src/index.ts:39-41).  These operators give the same
-contract over DataFrame columns:
+(reference src/index.ts:39-41).  These operators give the same contract
+over DataFrame columns:
 
-  parse_geojson_features  — geojson string column → (polygon_id, rings)
-                            via JVM ``from_json`` (schema-checked; bad
-                            rows surface with NULL rings, error parity
-                            applied downstream)
+  parse_geojson_features  — geojson string column → (id, rings) via JVM
+                            ``from_json`` (schema-checked; non-Feature,
+                            geometry-less and non-Polygon rows raise with
+                            the reference's messages)
   decompose_geojson       — geojson strings in → one FeatureCollection
-                            JSON string per input feature, with the
-                            reference's property contract: index/parent/
-                            winding/netWinding, and NO ``index`` key on
-                            the zero-intersection fast path (quirk Q3).
+                            JSON string per input row
 
-The FeatureCollection assembly runs as groupBy(polygon_id).applyInPandas
-— one shuffle of the (small) ring layer buys the guarantee that a
-polygon's rings can never straddle Arrow batch boundaries (which the
-earlier mapInPandas assembly silently got wrong for >batch-size
-polygons); the decomposition kernel itself is the other Arrow stage.
+``decompose_geojson`` is one ``mapInArrow`` over the parsed rows.  Each
+row holds a whole polygon, so ``decompose.simplepolygon`` — the
+single-feature form, and the package's only FeatureCollection assembly —
+runs on it where it sits: no shuffle, and no polygon can straddle an
+Arrow batch.
 """
 
 from __future__ import annotations
 
 import json
 
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from .decompose import decompose_polygons
+from pyspark.sql.types import (
+    BooleanType,
+    ByteType,
+    IntegerType,
+    LongType,
+    ShortType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 GEOJSON_GEOM_SCHEMA = (
     "STRUCT<type: STRING, geometry: STRUCT<type: STRING, "
     "coordinates: ARRAY<ARRAY<ARRAY<DOUBLE>>>>>"
 )
 
+# ids compare exactly in these types; a float or nested id is refused
+_ID_TYPES = (StringType, ByteType, ShortType, IntegerType, LongType, BooleanType)
+
 
 def parse_geojson_features(
     df: DataFrame, geojson_col: str = "geojson", id_col: str = "polygon_id"
 ) -> DataFrame:
-    """geojson string column → (polygon_id, rings) for decompose_polygons.
+    """geojson string column → (id_col, rings) for decompose_polygons.
 
-    Validation parity with /root/reference/src/index.ts:42-48: non-Feature,
+    Validation parity with the reference's src/index.ts:42-48: non-Feature,
     missing geometry, and non-Polygon rows raise with the reference's
     error messages.
     """
@@ -83,120 +91,44 @@ def decompose_geojson(
 ) -> DataFrame:
     """(id, geojson Feature string) → (id, feature_collection string).
 
-    Output JSON matches the reference's shape: a FeatureCollection of
-    one-ring Polygons with properties {index?, parent, winding,
-    netWinding} — ``index`` omitted on the fast path (Q3).
+    Each row's ``feature_collection`` is ``json.dumps(simplepolygon(f))``
+    of its Feature ``f``: one-ring Polygons with properties {index?,
+    parent, winding, netWinding}, ``index`` omitted on the fast path
+    (Q3), and ``{"type": "FeatureCollection", "features": []}`` for
+    ``coordinates: []``.  JSON numbers are parsed as doubles, so integer
+    coordinates come back as ``2.0``.  A Feature the kernel rejects
+    fails the job with its ``DecomposeError`` message.
 
-    DUPLICATE-ID CONTRACT: ``id_col`` is treated as a key — output has
-    ONE row per distinct id.  The reference API has no notion of row
-    ids at all (one Feature per call, /root/reference/src/index.ts:39),
-    so duplicate ids are a caller-side aliasing decision this operator
-    resolves deterministically: N same-id rows with ``coordinates: []``
-    collapse to one empty-FeatureCollection row, and a same-id mix of
-    empty and real geometry keeps the real rings (the empty sentinel
-    drops).  Callers needing per-input-row outputs must supply unique
-    ids — exactly what a per-row uuid column gives for free.
+    ``id_col`` passes through untouched, in the caller's type, which
+    must be string or integral (boolean included).
+
+    DUPLICATE-ID CONTRACT: one output row per input row, as the
+    reference gives one FeatureCollection per call.  Ids are labels,
+    not keys: two rows under one id give two rows, each its own
+    Feature's FeatureCollection.
     """
-    from pyspark.sql.types import (
-        BooleanType,
-        ByteType,
-        IntegerType,
-        LongType,
-        ShortType,
-        StringType,
+    id_type = df.schema[id_col].dataType
+    if not isinstance(id_type, _ID_TYPES):
+        raise TypeError(
+            f"decompose_geojson: id column {id_col!r} must be string or "
+            f"integral, got {id_type.simpleString()}"
+        )
+    schema = StructType(
+        [StructField(id_col, id_type), StructField("feature_collection", StringType())]
     )
 
-    # the Arrow kernel's schema pins polygon_id to string
-    # (POLYGONS_SCHEMA); a non-string id would otherwise surface as an
-    # opaque worker-side ArrowTypeError.  Integral/boolean ids
-    # round-trip a string cast exactly, so convert around the kernel
-    # and restore the caller's type on output; anything else (float,
-    # struct, ...) is rejected loudly here instead of deep in a task.
-    id_type = df.schema[id_col].dataType
-    restore_type = None
-    if not isinstance(id_type, StringType):
-        if not isinstance(
-            id_type, (ByteType, ShortType, IntegerType, LongType, BooleanType)
-        ):
-            raise TypeError(
-                f"decompose_geojson: id column {id_col!r} must be string or "
-                f"integral (kernel id type is string; a "
-                f"{id_type.simpleString()} id does not round-trip the cast)"
-            )
-        restore_type = id_type
-        df = df.withColumn(id_col, F.col(id_col).cast("string"))
+    def run(batches):
+        # imported lazily so the worker imports the kernel, not the operator
+        from simplepolygon_spark.decompose import simplepolygon
 
-    parsed = parse_geojson_features(df, geojson_col, id_col)
-    # decompose_polygons' kernel schema fixes the id column name to
-    # polygon_id — rename around it so any id_col works
-    if id_col != "polygon_id":
-        parsed = parsed.withColumnRenamed(id_col, "polygon_id")
-    # include_empty: coordinates=[] rows ride the SAME scan as sentinel
-    # rows (ring_index=-1) instead of a second filter over `parsed` —
-    # which would re-execute the from_json parse over the whole corpus
-    # to recover a rare edge case
-    rings_out = decompose_polygons(parsed, include_empty=True)
-    if id_col != "polygon_id":
-        rings_out = rings_out.withColumnRenamed("polygon_id", id_col)
-
-    schema = f"{id_col} string, feature_collection string"
-
-    def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-        # one call per polygon_id group — Spark guarantees the whole
-        # group arrives in this single DataFrame, so a polygon whose
-        # rings straddle Arrow batch boundaries can never be split into
-        # two partial FeatureCollections (it was with mapInPandas, whose
-        # input is re-chunked at arrow.maxRecordsPerBatch)
-        pdf = pdf.sort_values("ring_index")
-        pid = pdf[id_col].iloc[0]
-        # ring_index=-1 rows are include_empty sentinels (coordinates
-        # was []): a group of only sentinels is the reference fast
-        # path's empty FeatureCollection; a mixed group (duplicate id,
-        # one empty + one real) keeps the real rings
-        real = pdf[pdf["ring_index"] >= 0]
-        if len(real) == 0:
-            return pd.DataFrame(
-                {
-                    id_col: [pid],
-                    "feature_collection": [
-                        json.dumps({"type": "FeatureCollection", "features": []})
-                    ],
-                }
+        for batch in batches:
+            fcs = []
+            for rings in batch.column(1).to_pylist():
+                feature = {"type": "Feature", "geometry": {"type": "Polygon", "coordinates": rings}}
+                fcs.append(json.dumps(simplepolygon(feature)))
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(0), pa.array(fcs, pa.string())],
+                names=[id_col, "feature_collection"],
             )
-        pdf = real
-        feats = []
-        for row in pdf.itertuples():
-            props = {}
-            if row.is_indexed:
-                props["index"] = int(row.ring_index)
-            props.update(
-                parent=int(row.parent),
-                winding=int(row.winding),
-                netWinding=int(row.net_winding),
-            )
-            feats.append(
-                {
-                    "type": "Feature",
-                    "properties": props,
-                    "geometry": {
-                        "type": "Polygon",
-                        "coordinates": [[list(c) for c in row.coords]],
-                    },
-                }
-            )
-        return pd.DataFrame(
-            {
-                id_col: [pid],
-                "feature_collection": [
-                    json.dumps({"type": "FeatureCollection", "features": feats})
-                ],
-            }
-        )
 
-    # groupBy shuffles only the (small) ring layer; the alternative —
-    # buffering across mapInPandas batches — would silently break on a
-    # >maxRecordsPerBatch polygon, so correctness wins the shuffle here
-    out = rings_out.groupBy(id_col).applyInPandas(assemble, schema)
-    if restore_type is not None:
-        out = out.withColumn(id_col, F.col(id_col).cast(restore_type))
-    return out
+    return parse_geojson_features(df, geojson_col, id_col).mapInArrow(run, schema)

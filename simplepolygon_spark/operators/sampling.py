@@ -201,10 +201,9 @@ def token_budget_sample(
     ``n_tokens_col``: name of a PRECOMPUTED whitespace-token-count
     column to use instead of deriving ``_n_tokens_col()`` from
     ``text`` — a caller that already evaluated the (regex-heavy) count
-    upstream and landed it (``prepare_training_corpus`` does) skips a
-    full re-tokenization scan here.  The column must hold exactly
-    ``_n_tokens_col()``'s integers or the sample diverges from the
-    documented contract."""
+    upstream and landed it skips a full re-tokenization scan here.  The
+    column must hold exactly ``_n_tokens_col()``'s integers or the
+    sample diverges from the documented contract."""
     if budgets is None:
         budgets = {}
     helpers = ("__tb_h", "__tb_b", "__tb_s", "__tb_off")

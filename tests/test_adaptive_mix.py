@@ -1,10 +1,8 @@
-"""adaptive_length_filter (per-group percentile length gate) and
-mix_report (single-pass ROLLUP mixture report)."""
+"""adaptive_length_filter (per-group percentile length gate)."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from simplepolygon_spark.operators.corpus import mix_report
 from simplepolygon_spark.operators.text import adaptive_length_filter
 
 
@@ -54,55 +52,3 @@ def test_adaptive_filter_corpus_side_broadcast(spark):
     # hash-shuffle for the join (the only exchange feeds the tiny agg)
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoop" not in plan
     assert "SortMergeJoin" not in plan
-
-
-def test_mix_report_levels_and_totals(spark):
-    rows = [
-        (1, "en", "aa"),     # 2 chars
-        (2, "en", "bbbb"),   # 4
-        (3, "de", "cc"),     # 2
-    ]
-    d = _docs(spark, rows).withColumn("source", F.lit("s0"))
-    out = {
-        (r["lang"], r["source"], r["level"]): (r["n_docs"], r["total_chars"])
-        for r in mix_report(d).collect()
-    }
-    assert out[("en", "s0", 0)] == (2, 6)
-    assert out[("de", "s0", 0)] == (1, 2)
-    assert out[("en", None, 1)] == (2, 6)    # per-lang subtotal
-    assert out[("de", None, 1)] == (1, 2)
-    assert out[(None, None, 3)] == (3, 8)    # grand total
-    assert len(out) == 5  # 2 leaves + 2 lang subtotals + 1 grand
-
-
-def test_mix_report_level_disambiguates_real_nulls(spark):
-    # a REAL NULL source leaf must not be confused with the per-lang
-    # subtotal row — only the grouping bitmask separates them
-    rows = [(1, "en", "aa"), (2, "en", "bbbb")]
-    d = _docs(spark, rows).withColumn(
-        "source", F.when(F.col("doc_id") == 1, F.lit("s0"))
-    )
-    out = {
-        (r["lang"], r["source"], r["level"]): r["n_docs"]
-        for r in mix_report(d).collect()
-    }
-    assert out[("en", None, 0)] == 1  # the real-NULL-source leaf
-    assert out[("en", None, 1)] == 2  # the subtotal over both
-
-
-def test_mix_report_row_count_is_grouping_sets_sum(spark):
-    d = _docs(
-        spark, [(i, ["en", "de"][i % 2], "x") for i in range(8)]
-    ).withColumn("source", F.concat(F.lit("s"), (F.col("doc_id") % 2).cast("string")))
-    # leaves: en only pairs with s1? doc_id%2 drives both → 2 leaves
-    rows = mix_report(d).collect()
-    leaves = [r for r in rows if r["lang"] is not None and r["source"] is not None]
-    langs = [r for r in rows if r["lang"] is not None and r["source"] is None]
-    grand = [r for r in rows if r["lang"] is None and r["source"] is None]
-    assert len(rows) == len(leaves) + len(langs) + len(grand)
-    assert len(grand) == 1 and grand[0]["n_docs"] == 8
-
-
-def test_mix_report_missing_dim_guard(spark):
-    with pytest.raises(ValueError, match="no column"):
-        mix_report(_docs(spark, [(1, "en", "x")]), dims=("lang", "nope"))

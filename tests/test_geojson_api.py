@@ -8,11 +8,14 @@ import json
 
 import pytest
 
+from simplepolygon_spark.decompose import simplepolygon
 from simplepolygon_spark.operators.geojson import decompose_geojson
 from simplepolygon_spark.sources.fixtures import (
+    NORTH_STAR_FIXTURES,
     load_reference_fixture,
     reference_fixture_names,
 )
+from simplepolygon_spark.sources.footprints import footprint_rows
 
 
 def _strip_style(feature):
@@ -123,3 +126,59 @@ def test_integral_id_round_trips_and_bad_id_type_rejected(spark):
     )
     with pytest.raises(TypeError, match="must be string or integral"):
         decompose_geojson(bad)
+
+
+def _feature(rings) -> str:
+    """A Feature string with float coordinates, as ``from_json`` reads
+    them, so the driver-side ``simplepolygon`` sees the same numbers."""
+    coords = [[[float(x), float(y)] for x, y in ring] for ring in rings]
+    return json.dumps(
+        {"type": "Feature", "properties": {}, "geometry": {"type": "Polygon", "coordinates": coords}}
+    )
+
+
+def _expected(geojson: str) -> str:
+    return json.dumps(simplepolygon(json.loads(geojson)))
+
+
+def test_each_row_equals_simplepolygon_at_one_row_batches(spark):
+    """Every output string is ``json.dumps(simplepolygon(feature))`` of
+    its own input, with 1-row Arrow batches so no multi-ring polygon
+    could be split across batches."""
+    rows = [(name, _feature(rings)) for name, rings in NORTH_STAR_FIXTURES.items()]
+    rows += [(pid, _feature(rings)) for pid, rings in footprint_rows(3)]
+    rows.append(("empty", _feature([])))
+    df = spark.createDataFrame(rows, "polygon_id string, geojson string")
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    try:
+        got = {r.polygon_id: r.feature_collection for r in decompose_geojson(df).collect()}
+    finally:
+        spark.conf.set(key, old)
+
+    assert got == {pid: _expected(g) for pid, g in rows}
+    assert json.loads(got["empty"]) == {"type": "FeatureCollection", "features": []}
+
+
+def test_duplicate_ids_give_one_row_per_input(spark):
+    """Ids are labels, not keys: each input row gets its own
+    FeatureCollection, whatever id it shares."""
+    rows = [
+        ("x", _feature(NORTH_STAR_FIXTURES["banana"])),
+        ("x", _feature(NORTH_STAR_FIXTURES["8-shape"])),
+        ("y", _feature([])),
+        ("y", _feature([])),
+    ]
+    df = spark.createDataFrame(rows, "polygon_id string, geojson string")
+    got = sorted((r.polygon_id, r.feature_collection) for r in decompose_geojson(df).collect())
+    assert got == sorted((pid, _expected(g)) for pid, g in rows)
+
+
+def test_one_arrow_pass_and_no_shuffle(spark):
+    rows = [(pid, _feature(rings)) for pid, rings in footprint_rows(2)]
+    out = decompose_geojson(spark.createDataFrame(rows, "polygon_id string, geojson string"))
+    assert len(out.collect()) == len(rows)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInArrow") == 1, plan
+    assert "Exchange" not in plan and "FlatMapGroupsInPandas" not in plan, plan

@@ -105,8 +105,8 @@ def test_walker_sees_function_local_imports():
 # The paper's engine and the benchmark that drives it.  Their package
 # import closure (module-level and function-local, with the parent
 # packages each import runs) must stay inside SPATIAL: the off-paper
-# families (dedup, similarity, sampling, text, corpus, stats,
-# plans/bucketing) may import the engine, never the reverse.
+# families (dedup, similarity, sampling, text, stats) may import the
+# engine, never the reverse.
 SPATIAL_ROOTS = [
     *sorted((REPO / "perfbench").glob("*.py")),
     *(
@@ -170,22 +170,24 @@ def test_spatial_import_closure_stays_spatial():
 
 def test_no_pandas_udfs_in_the_engine():
     """The engine's Python stages run on Arrow batches: no ``mapInPandas``
-    anywhere in the package, and of the SPATIAL modules only
-    ``operators/geojson.py`` (its per-polygon ``applyInPandas``
-    assembly) imports ``pandas``."""
+    anywhere in the package, and no SPATIAL module imports ``pandas`` or
+    calls ``applyInPandas``.  The off-paper modules outside SPATIAL are
+    exempt (``dedup`` runs ``applyInPandas`` kernels)."""
     problems = []
     for path in sorted((REPO / PKG).rglob("*.py")):
         rel = str(path.relative_to(REPO))
-        pandas_ok = _module_name(path) not in SPATIAL or rel == f"{PKG}/operators/geojson.py"
+        spatial = _module_name(path) in SPATIAL
         for node in ast.walk(ast.parse(path.read_text(), filename=rel)):
-            if isinstance(node, ast.Attribute) and node.attr == "mapInPandas":
-                problems.append(f"{rel}:{node.lineno}: mapInPandas")
+            if isinstance(node, ast.Attribute):
+                if node.attr == "mapInPandas" or (spatial and node.attr == "applyInPandas"):
+                    problems.append(f"{rel}:{node.lineno}: {node.attr}")
+                continue
             if isinstance(node, ast.Import):
                 mods = [a.name for a in node.names]
             elif isinstance(node, ast.ImportFrom):
                 mods = [node.module or ""]
             else:
                 continue
-            if not pandas_ok and any(m.split(".")[0] == "pandas" for m in mods):
+            if spatial and any(m.split(".")[0] == "pandas" for m in mods):
                 problems.append(f"{rel}:{node.lineno}: imports pandas")
     assert not problems, "\n".join(problems)

@@ -88,7 +88,7 @@ def test_srp_signatures_uniform_dims_still_pass(spark):
 
 # ---------------------------------------------------------------------------
 # ADVICE r3 #4: decompose_geojson parses the corpus ONCE — the empty-FC
-# patch rides the kernel scan as sentinel rows, not a second filter
+# row comes from the same Arrow pass, not a second filter
 # ---------------------------------------------------------------------------
 
 
@@ -114,7 +114,7 @@ def test_decompose_geojson_single_parse_in_plan(spark):
     assert len(json.loads(rows["a"].feature_collection)["features"]) == 1
 
 
-def test_decompose_polygons_include_empty_sentinels(spark):
+def test_decompose_polygons_drops_empty_geometry(spark):
     from simplepolygon_spark.operators.decompose import decompose_polygons
 
     square = [[[0.0, 0.0], [2.0, 0.0], [2.0, 2.0], [0.0, 2.0], [0.0, 0.0]]]
@@ -122,12 +122,7 @@ def test_decompose_polygons_include_empty_sentinels(spark):
         [("a", square), ("b", [])],
         "polygon_id string, rings array<array<array<double>>>",
     )
-    # default: empties dropped (unchanged contract)
     assert {r.polygon_id for r in decompose_polygons(df).collect()} == {"a"}
-    got = {r.polygon_id: r for r in decompose_polygons(df, include_empty=True).collect()}
-    assert set(got) == {"a", "b"}
-    s = got["b"]
-    assert (s.ring_index, s.parent, list(s.coords)) == (-1, -1, [])
 
 
 # ---------------------------------------------------------------------------

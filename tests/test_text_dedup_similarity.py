@@ -463,54 +463,6 @@ def test_token_length_percentiles_numpy_and_nulls(spark):
     assert "partial_percentile" in plan, plan[:2000]
 
 
-def test_prepare_training_corpus_stage_semantics(spark, tmp_path):
-    """The composed pipeline drops exactly what each stage says it
-    drops: the short doc (quality gate), the punct-heavy doc (gate),
-    the benchmark-matching doc (decontamination), the near-dup loser
-    (canonicalization keeps the LONGEST text), and the over-budget
-    tail (token budget); survivors carry the post-dedup per-domain
-    running sum."""
-    from simplepolygon_spark.operators.corpus import prepare_training_corpus
-
-    base = "the quick brown fox jumps over the lazy dog and runs far away " * 2
-    rows = [
-        (1, "en", base + "alpha one two three four five six seven"),  # keeper
-        (2, "en", base + "alpha one two three four five six"),  # near-dup, shorter
-        (3, "en", "too short"),  # quality: < 20 tokens
-        (4, "en", "!!! ??? *** !!! ??? *** " * 10),  # quality: punct-heavy
-        (5, "en", "benchmark sentence that is long enough to pass the "
-                  "quality gate with room to spare in every way today ok"),
-        (6, "de", "ein ganz anderes deutsches dokument mit genau genug "
-                  "woertern um das qualitaets gate sicher zu bestehen ja "
-                  "gut und noch ein paar mehr dazu"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, lang string, text string")
-    bench = spark.createDataFrame([(rows[4][2],)], "text string")
-    out = prepare_training_corpus(
-        docs, bench, {"en": 10_000, "de": 10_000}, threshold=0.8
-    )
-    got = {r.doc_id: r for r in out.collect()}
-    assert set(got) == {1, 6}  # 2 deduped, 3+4 gated, 5 decontaminated
-    n1 = len(rows[0][2].split())
-    assert got[1].n_tokens == n1 and got[1].cum_tokens == n1
-    assert got[6].lang == "de" and got[6].cum_tokens == got[6].n_tokens
-    # budget tail: shrink en's budget below doc 1 -> en empties, de stays
-    out2 = prepare_training_corpus(docs, bench, {"en": 5, "de": 10_000})
-    assert {r.doc_id for r in out2.collect()} == {6}
-    # the three staging modes select identically: landed table (the
-    # 100 TB shape), localCheckpoint (local default), fully lazy
-    for kw in (
-        {"stage_dir": str(tmp_path / "staged")},
-        {"materialize": False},
-    ):
-        alt = prepare_training_corpus(
-            docs, bench, {"en": 10_000, "de": 10_000}, threshold=0.8, **kw
-        )
-        assert {(r.doc_id, r.cum_tokens) for r in alt.collect()} == {
-            (k, v.cum_tokens) for k, v in got.items()
-        }
-
-
 def test_duplicate_losers_complement_canonicalize(spark):
     """duplicate_losers is exactly canonicalize_duplicates' keep=false
     set (same winner rule) on a graph with chains, ties, and NULL
@@ -532,41 +484,6 @@ def test_duplicate_losers_complement_canonicalize(spark):
     expect = {r.doc_id for r in canon.where("NOT keep").collect()}
     got = {r.doc_id for r in duplicate_losers(docs, pairs, score_col="score").collect()}
     assert got == expect and len(got) >= 4
-
-
-def test_prepare_training_corpus_ngram_mode(spark):
-    """ngram_benchmark drops a doc whose contamination is embedded
-    mid-page (whole-text fingerprint differs), which exact mode keeps."""
-    from simplepolygon_spark.operators.corpus import prepare_training_corpus
-
-    bench_span = ("alpha beta gamma delta epsilon zeta eta theta iota kappa "
-                  "lambda mu nu")  # 13 tokens
-    clean = ("completely unrelated body with plenty of ordinary words to "
-             "clear the quality gate and some more filler to be safe here")
-    # 4 + 13 + 4 = 21 tokens: must CLEAR the min_tokens=20 quality gate
-    # so the assertion exercises decontamination, not the gate
-    contaminated = (
-        "ordinary prefix words here " + bench_span + " plain suffix words there"
-    )
-    docs = spark.createDataFrame(
-        [(1, "en", clean), (2, "en", contaminated)],
-        "doc_id long, lang string, text string",
-    )
-    bench = spark.createDataFrame([(bench_span,)], "text string")
-    # exact mode: the mid-page contamination survives
-    got_exact = {
-        r.doc_id
-        for r in prepare_training_corpus(docs, bench, {"en": 10_000}).collect()
-    }
-    assert got_exact == {1, 2}
-    # n-gram mode: it drops
-    got_ngram = {
-        r.doc_id
-        for r in prepare_training_corpus(
-            docs, bench, {"en": 10_000}, ngram_benchmark=bench, ngram_n=13
-        ).collect()
-    }
-    assert got_ngram == {1}
 
 
 def test_token_length_percentiles_approx_mode(spark):
