@@ -52,7 +52,8 @@ def _bbox_cells_batch(b0, b1, b2, b3, level: int, ids=None):
     )
     if bad.any():
         k = int(np.nonzero(bad)[0][0])
-        who = f"tile {ids[k]!r}" if ids is not None else f"batch row {k}"
+        # ids: an Arrow column or a numpy array; both slice to a list
+        who = f"tile {ids[k : k + 1].tolist()[0]!r}" if ids is not None else f"batch row {k}"
         raise ValueError(
             f"inverted bbox or non-finite bounds at {who}: "
             f"lon [{b0[k]}, {b2[k]}], lat [{b1[k]}, {b3[k]}]"
@@ -94,40 +95,27 @@ def crosswalk(
     def run(batches):
         idx = index_bc.value
         for batch in batches:
-            ids = np.asarray(batch.column(id_col).to_pylist(), dtype=object)
+            if batch.num_rows == 0:
+                continue
+            ids = batch.column(id_col)
             b0 = batch.column("lon_min").to_numpy(zero_copy_only=False)
             b1 = batch.column("lat_min").to_numpy(zero_copy_only=False)
             b2 = batch.column("lon_max").to_numpy(zero_copy_only=False)
             b3 = batch.column("lat_max").to_numpy(zero_copy_only=False)
-            if len(ids) == 0:
-                continue
             tile_idx, cells = _bbox_cells_batch(b0, b1, b2, b3, level, ids=ids)
             lo, hi = cell_range_at_max(cells, level, idx.max_level)
             qi, rid = idx.overlap_batch(lo, hi)
-            # hit rows
-            hit_tiles = tile_idx[qi]
-            hit_cells = cells[qi]
-            # miss rows: (tile, cell) pairs with no overlapping ring
+            # hit rows, then one NULL-ring row per (tile, cell) pair
+            # with no overlapping ring
             miss = np.ones(len(cells), dtype=bool)
             miss[qi] = False
             mi = np.nonzero(miss)[0]
-            out_tile = np.concatenate([hit_tiles, tile_idx[mi]])
-            out_cell = np.concatenate([hit_cells, cells[mi]])
-            pids = np.concatenate(
-                [idx.ring_pid[rid], np.full(len(mi), None, dtype=object)]
-            )
-            ridx = pa.concat_arrays(
-                [
-                    pa.array(idx.ring_ridx[rid], pa.int32()),
-                    pa.nulls(len(mi), pa.int32()),
-                ]
-            )
+            out = np.concatenate([qi, mi])
             yield pa.RecordBatch.from_arrays(
                 [
-                    pa.array(ids[out_tile], pa.string()),
-                    pa.array(out_cell, pa.int64()),
-                    pa.array(pids, pa.string()),
-                    ridx,
+                    ids.take(tile_idx[out]).cast(pa.string()),
+                    pa.array(cells[out], pa.int64()),
+                    *idx.ring_columns(rid, n_null=len(mi)),
                 ],
                 names=[id_col, "cell_id", "polygon_id", "ring_index"],
             )

@@ -1335,46 +1335,6 @@ def dup_clusters(
     raise RuntimeError(f"dup_clusters did not converge in {max_iters} rounds")
 
 
-def duplicate_losers(
-    docs: DataFrame,
-    pairs: DataFrame,
-    score_col: str | None = None,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """(doc_id): pair-involved docs that are NOT their cluster's keeper
-    — exactly the complement of ``canonicalize_duplicates``' keep=true
-    set (same winner rule: highest ``score_col``, NULL lowest, ties to
-    the lowest id; pinned equal by test), but as the TINY frame.
-
-    This is the shape a corpus-scale "drop the duplicates" step wants:
-    keepers are nearly the whole corpus (winners + every singleton), so
-    ``semi-join docs × keepers`` shuffles the corpus against itself —
-    while losers are bounded by pair-involved docs (duplicate-count
-    sized, ~1e-6 of the corpus for web dedup), so
-    ``docs LEFT ANTI JOIN broadcast(losers)`` never shuffles the corpus
-    at all.  Every join here is inner against the cluster map, so no
-    corpus-wide frame is ever built."""
-    score = (
-        F.coalesce(F.col(score_col).cast("double"), F.lit(float("-inf")))
-        if score_col is not None
-        else F.lit(0.0)
-    )
-    clusters = dup_clusters(pairs).withColumnRenamed("doc_id", id_col)
-    scored = docs.select(F.col(id_col), score.alias("_s"))
-    j = scored.join(clusters, id_col)  # inner: pair-involved docs only
-    best = j.groupBy("cluster_id").agg(
-        F.min_by(
-            F.col(id_col),
-            F.struct((-F.col("_s")).alias("ns"), F.col(id_col).alias("tid")),
-        ).alias("_best")
-    )
-    return (
-        j.join(best, "cluster_id")
-        .where(F.col(id_col) != F.col("_best"))
-        .select(id_col)
-    )
-
-
 def canonicalize_duplicates(
     docs: DataFrame,
     pairs: DataFrame,

@@ -51,18 +51,10 @@ def validate_and_assign(images: DataFrame, index_bc) -> DataFrame:
             assigned[pt_idx] = True
             un = np.nonzero(~assigned)[0]
             rows_a = np.concatenate([pt_idx, un]).astype(np.intp)
-            pids = np.concatenate([idx.ring_pid[ring_id], np.full(len(un), None, dtype=object)])
-            ridx = pa.concat_arrays(
-                [
-                    pa.array(idx.ring_ridx[ring_id], pa.int32()),
-                    pa.nulls(len(un), pa.int32()),
-                ]
-            )
             yield pa.RecordBatch.from_arrays(
                 [
-                    pa.array([ids[r] for r in rows_a], pa.string()),
-                    pa.array(pids, pa.string()),
-                    ridx,
+                    batch.column("image_id").take(rows_a).cast(pa.string()),
+                    *idx.ring_columns(ring_id, n_null=len(un)),
                     pa.array(ps[rows_a]),
                     pa.array(cap_ok[rows_a]),
                 ],

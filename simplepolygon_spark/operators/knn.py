@@ -228,23 +228,21 @@ def knn_join(
         if len(idx.centroids) == 0:
             return
         for batch in batches:
-            ids = batch.column(id_col).to_numpy(zero_copy_only=False)
+            n = batch.num_rows
+            if n == 0:
+                continue
             lon = batch.column(lon_col).to_numpy(zero_copy_only=False).astype(np.float64)
             lat = batch.column(lat_col).to_numpy(zero_copy_only=False).astype(np.float64)
-            if len(ids) == 0:
-                continue
             ring, dist = nearest_rings(idx, lon, lat, k)
             kk = ring.shape[1]
-            out_ring = ring.ravel()
+            # ids and ring keys are Arrow takes: no column passes
+            # through Python objects
             yield pa.RecordBatch.from_arrays(
                 [
-                    pa.array(np.repeat(ids, kk), pa.string()),
-                    # vectorized id lookup via the index's ring_pid /
-                    # ring_ridx arrays — no per-row Python in the hot path
-                    pa.array(idx.ring_pid[out_ring], pa.string()),
-                    pa.array(idx.ring_ridx[out_ring].astype(np.int32), pa.int32()),
+                    batch.column(id_col).take(np.repeat(np.arange(n), kk)).cast(pa.string()),
+                    *idx.ring_columns(ring.ravel()),
                     pa.array(dist.ravel()),
-                    pa.array(np.tile(np.arange(1, kk + 1, dtype=np.int32), len(ids)), pa.int32()),
+                    pa.array(np.tile(np.arange(1, kk + 1, dtype=np.int32), n), pa.int32()),
                 ],
                 names=[id_col, "polygon_id", "ring_index", "dist", "rank"],
             )

@@ -163,7 +163,6 @@ def token_budget_sample(
     domain_col: str = "lang",
     id_col: str = "doc_id",
     n_buckets: int = 256,
-    n_tokens_col: str | None = None,
 ) -> DataFrame:
     """(id, domain, n_tokens, cum_tokens): the deterministic
     token-budgeted mixture sample — per domain, take docs in
@@ -196,14 +195,7 @@ def token_budget_sample(
     exchange); the subtotal aggregate moves only partials.  Token
     counts are exact integers (``_n_tokens_col``), so cross-engine
     equality is bit-exact.  Bucket-count invariance (n_buckets=1 ≡
-    256) is pinned by test.
-
-    ``n_tokens_col``: name of a PRECOMPUTED whitespace-token-count
-    column to use instead of deriving ``_n_tokens_col()`` from
-    ``text`` — a caller that already evaluated the (regex-heavy) count
-    upstream and landed it skips a full re-tokenization scan here.  The
-    column must hold exactly ``_n_tokens_col()``'s integers or the
-    sample diverges from the documented contract."""
+    256) is pinned by test."""
     if budgets is None:
         budgets = {}
     helpers = ("__tb_h", "__tb_b", "__tb_s", "__tb_off")
@@ -229,13 +221,10 @@ def token_budget_sample(
         ),
     ).otherwise(F.col(domain_col))
     docs = docs.withColumn(domain_col, dom)
-    ntok = (
-        F.col(n_tokens_col) if n_tokens_col is not None else _n_tokens_col()
-    )
     t = docs.select(
         F.col(id_col),
         F.col(domain_col),
-        ntok.alias("n_tokens"),
+        _n_tokens_col().alias("n_tokens"),
         h.alias("__tb_h"),
         b.alias("__tb_b"),
     )

@@ -79,6 +79,18 @@ class IntervalIndex:
         """(polygon_id, ring_index) per ring."""
         return self._view("keys", lambda: list(zip(self.ring_pid.tolist(), self.ring_ridx.tolist())))
 
+    def ring_columns(self, ring_id: np.ndarray, n_null: int = 0):
+        """(polygon_id, ring_index) Arrow columns of rings ``ring_id``,
+        then ``n_null`` NULL rows: two takes from Arrow copies of
+        ``ring_pid`` and ``ring_ridx`` that each worker builds once (a
+        view, never pickled), so no output row is a Python object."""
+        pid = self._view("pid_arrow", lambda: pa.array(self.ring_pid, pa.string()))
+        ridx = self._view("ridx_arrow", lambda: pa.array(self.ring_ridx, pa.int32()))
+        take = pa.array(ring_id, pa.int64())
+        if n_null:
+            take = pa.concat_arrays([take, pa.nulls(n_null, pa.int64())])
+        return pid.take(take), ridx.take(take)
+
     def lookup(self, lon: np.ndarray, lat: np.ndarray):
         """Vectorized stabbing: points → candidate (point_idx, ring_id,
         full) triples. A point may hit several rings."""
@@ -292,22 +304,24 @@ def pip_join(
     def run(batches):
         idx: IntervalIndex = index_bc.value
         for batch in batches:
-            ids = batch.column(id_col).to_numpy(zero_copy_only=False)
             lon = batch.column(lon_col).to_numpy(zero_copy_only=False).astype(np.float64)
             lat = batch.column(lat_col).to_numpy(zero_copy_only=False).astype(np.float64)
             pt_idx, ring_id = idx.assign(lon, lat)
             if len(pt_idx) == 0:
                 continue
+            # ids and ring keys are Arrow takes, the coordinates numpy
+            # fancy indexing: no column passes through Python objects.
+            # The cast keeps the declared string type should the JVM
+            # hand the ids over as large_string.
             yield pa.RecordBatch.from_arrays(
                 [
-                    pa.array(ids[pt_idx], pa.string()),
+                    batch.column(id_col).take(pt_idx).cast(pa.string()),
                     pa.array(lon[pt_idx]),
                     pa.array(lat[pt_idx]),
-                    pa.array(idx.ring_pid[ring_id], pa.string()),
-                    pa.array(idx.ring_ridx[ring_id], pa.int32()),
+                    *idx.ring_columns(ring_id),
                 ],
                 names=[id_col, "lon", "lat", "polygon_id", "ring_index"],
-            )  # all columns assembled by fancy indexing — no per-row Python
+            )
 
     return points.select(id_col, lon_col, lat_col).mapInArrow(run, _pip_schema(id_col))
 

@@ -101,27 +101,87 @@ def test_lineage_checksums_match_between_runs(spark, tmp_path):
     assert l1 == l2  # deterministic pipeline → identical lineage
 
 
-def test_salted_ring_stats_matches_plain_groupby(spark):
-    bc = _setup(spark)
-    imgs = images_df(spark, 1200, partitions=6, with_bytes=False)
+def _hot_assignments(spark):
+    """pip_join assignments over the grid-3 layer plus one square ring
+    around the generator's hot cell, so a single ring holds the hot
+    cell's ~10% of all images."""
     from simplepolygon_spark.operators.tiling import pip_join
 
-    asg = pip_join(imgs, bc).cache()
-    salted = {
-        (r.polygon_id, r.ring_index, r.n_images, r.image_hash_xor)
-        for r in salted_ring_stats(asg, salt_buckets=8).collect()
+    rows = decompose_polygons(footprints_df(spark, grid=3)).collect()
+    hot = [[129.0, -26.0], [131.0, -26.0], [131.0, -24.0], [129.0, -24.0], [129.0, -26.0]]
+    rows.append({"polygon_id": "hot", "ring_index": 0, "coords": hot})
+    bc = broadcast_index(spark, build_interval_index(rows, cover_level=9))
+    return pip_join(images_df(spark, 1200, partitions=6, with_bytes=False), bc)
+
+
+def test_salted_ring_stats_matches_numpy_oracle(spark):
+    """n_images and image_hash_xor equal a numpy count and bit-xor per
+    ring over the collected assignments, on a layer whose hot ring
+    holds at least 10% of them."""
+    asg = _hot_assignments(spark)
+    t = asg.select("polygon_id", "ring_index", F.xxhash64("image_id").alias("h")).toArrow()
+    pid = np.asarray(t.column("polygon_id").to_pylist())
+    ridx = t.column("ring_index").to_numpy()
+    h = t.column("h").to_numpy()
+    _, first, inv = np.unique(
+        np.char.add(np.char.add(pid, "/"), ridx.astype(str)), return_index=True, return_inverse=True
+    )
+    count = np.bincount(inv)
+    xor = np.bitwise_xor.reduceat(h[np.argsort(inv, kind="stable")], np.cumsum(count) - count)
+    want = {(pid[f], int(ridx[f])): (int(c), int(x)) for f, c, x in zip(first, count, xor)}
+    assert want[("hot", 0)][0] >= 0.10 * len(h)
+
+    got = {
+        (r.polygon_id, r.ring_index): (r.n_images, r.image_hash_xor)
+        for r in salted_ring_stats(asg).collect()
     }
-    plain = {
-        (r.polygon_id, r.ring_index, r.n_images, r.image_hash_xor)
-        for r in asg.groupBy("polygon_id", "ring_index")
-        .agg(
-            F.count(F.lit(1)).alias("n_images"),
-            F.bit_xor(F.xxhash64("image_id")).alias("image_hash_xor"),
-        )
-        .collect()
-    }
-    asg.unpersist()
-    assert salted == plain
+    assert got == want
+
+
+def test_salted_ring_stats_is_one_exchange_over_partials(spark):
+    """One shuffle Exchange, and directly below it the map-side partial
+    count and bit-xor: the hot ring crosses the exchange as partials."""
+    plan = salted_ring_stats(_hot_assignments(spark))._jdf.queryExecution().executedPlan().toString()
+    lines = plan.splitlines()
+    ex = [k for k, ln in enumerate(lines) if "Exchange " in ln]
+    assert len(ex) == 1, plan
+    below = lines[ex[0] + 1]
+    assert "HashAggregate" in below and "partial_count" in below and "partial_bit_xor" in below, plan
+
+
+def test_salted_ring_stats_reads_at_most_one_row_per_ring_and_map_task(spark):
+    """The final stage reads at most n_rings x n_map_tasks shuffle
+    records, however many rows the hot ring holds: each map task sends
+    one partial row per ring it saw."""
+    from py4j.protocol import Py4JJavaError
+
+    sc = spark.sparkContext
+    asg = _hot_assignments(spark).cache()
+    try:
+        hot_rows = asg.where(F.col("polygon_id") == "hot").count()
+        sc.setJobGroup("ring-stats-records", "salted_ring_stats")
+        try:
+            n_rings = len(salted_ring_stats(asg).collect())
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+    finally:
+        asg.unpersist()
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty(10_000)
+    store, tracker = jsc.statusStore(), sc.statusTracker()
+    stages = {s for j in tracker.getJobIdsForGroup("ring-stats-records") for s in tracker.getJobInfo(j).stageIds}
+    map_tasks = read = 0
+    for sid in stages:
+        try:
+            sd = store.lastStageAttempt(sid)
+        except Py4JJavaError:  # a skipped stage never gets an attempt
+            continue
+        if sd.shuffleWriteRecords() > 0:
+            map_tasks += sd.numTasks()
+        read += sd.shuffleReadRecords()
+    assert 0 < map_tasks <= 6 and read > 0
+    assert read <= n_rings * map_tasks
+    assert hot_rows > 10 * map_tasks
 
 
 def test_skew_knob_creates_hot_rings(spark):

@@ -463,29 +463,6 @@ def test_token_length_percentiles_numpy_and_nulls(spark):
     assert "partial_percentile" in plan, plan[:2000]
 
 
-def test_duplicate_losers_complement_canonicalize(spark):
-    """duplicate_losers is exactly canonicalize_duplicates' keep=false
-    set (same winner rule) on a graph with chains, ties, and NULL
-    scores; its plan never builds a corpus-wide frame (inner joins
-    against the cluster map only)."""
-    from simplepolygon_spark.operators.dedup import (
-        canonicalize_duplicates,
-        duplicate_losers,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, None if i == 4 else float(i % 3)) for i in range(10)],
-        "doc_id long, score double",
-    )
-    pairs = spark.createDataFrame(
-        [(0, 1), (1, 2), (3, 4), (5, 6), (6, 7)], "doc_a long, doc_b long"
-    )
-    canon = canonicalize_duplicates(docs, pairs, score_col="score")
-    expect = {r.doc_id for r in canon.where("NOT keep").collect()}
-    got = {r.doc_id for r in duplicate_losers(docs, pairs, score_col="score").collect()}
-    assert got == expect and len(got) >= 4
-
-
 def test_token_length_percentiles_approx_mode(spark):
     """approx=True (KLL sketch at accuracy 10000): estimates track the
     exact per-group percentiles within a tight band on the test corpus
