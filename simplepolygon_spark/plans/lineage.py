@@ -5,21 +5,26 @@ The unit of resumability is a *logical* partition: a deterministic
 stable across runs, executors, and cluster sizes (unlike Spark's
 physical partition ids).  A completed part writes:
 
-  results:  <out>/data/part_id=<k>/*.parquet   (partitioned write)
+  results:  <out>/data/part_id=<k>/run_id=<r>/*.parquet
   lineage:  <out>/_lineage/*.parquet           (one row per part)
             (run_id, part_id, n_rows, n_bytes, checksum)
 
 ``checksum`` is an order-insensitive xxhash64 aggregate of the output
-rows, computed JVM-side.  Resume = read the lineage log, anti-join the
-done part_ids, process only the remainder, append — after executor
-loss (or a mid-run kill) the union of data files for done parts is
-exactly what a clean run produces, verified by the kill/resume test.
+rows, computed JVM-side from a read-back of the run's own files, which
+must match three totals the write observed (an always-on O(1) audit).
+Resume = read the lineage log, skip the done part_ids, process only the
+remainder, append — after executor loss (or a mid-run kill) the union of
+data files for done parts is exactly what a clean run produces, verified
+by the kill/resume test.
 """
 
 from __future__ import annotations
 
 import os
+from functools import reduce
+from operator import xor
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -59,8 +64,8 @@ def remaining(df_with_part: DataFrame, spark: SparkSession, out_dir: str) -> Dat
 
 def _metric_exprs(cols: list[str]):
     """The (row_hash, byte_len) metric definitions — ONE source of truth
-    shared by the write-side Observation and the read-back audit; any
-    drift between the two would turn ``audit_readback`` into false
+    shared by the write-side totals and the per-part read-back; any
+    drift between the two would turn the lineage audit into false
     failures (or false passes)."""
     row_hash = F.xxhash64(*[F.col(c) for c in cols])
     byte_len = sum(
@@ -93,7 +98,6 @@ def write_with_lineage(
     out_dir: str,
     run_id: str,
     all_part_ids,
-    audit_readback: bool = False,
 ) -> None:
     """Write result data partitioned by part_id + append lineage rows.
 
@@ -112,16 +116,14 @@ def write_with_lineage(
     resume without producing duplicates — preserving the exact
     "union of resumed runs == clean run" invariant.
 
-    Metrics come FREE with the write (default): an Observation node with
-    3 conditional aggregates per part (count / byte sum / xor checksum,
-    null outside the part) rides the write job — accumulator-backed, no
-    second pass, no re-execution of the plan.  Per-task overhead is 3·P
-    longs of accumulator traffic (P = parts this run), negligible even
-    at thousands of parts.  ``audit_readback=True`` additionally
-    re-reads the files just written (partition-pruned to this run) and
-    verifies the on-disk metrics equal the observed ones — the opt-in
-    audit for storage-layer corruption, at the cost of a second read of
-    this run's output.
+    The per-part metrics are ``lineage_metrics`` over this run's own
+    files, read back partition-pruned to ``run_id``: what is committed
+    is what is on disk.  The write job carries one Observation of three
+    global totals (row count, byte sum, checksum xor) — O(1) per row
+    whatever the number of parts.  The audit is always on: when the
+    read-back totals differ from what the write sent (a torn write, a
+    non-deterministic upstream), it raises before any lineage row is
+    committed.
     """
     data_path = os.path.join(out_dir, DATA_SUBDIR)
     lin_path = os.path.join(out_dir, LINEAGE_SUBDIR)
@@ -164,65 +166,58 @@ def write_with_lineage(
     cols = [c for c in result.columns if c != "part_id"]
     row_hash, byte_len = _metric_exprs(cols)
     obs = Observation(f"lineage-{run_id}")
-    obs_cols = []
-    for k in part_ids:
-        is_k = F.col("part_id") == k
-        obs_cols += [
-            F.sum(F.when(is_k, 1).otherwise(0)).alias(f"r{k}"),
-            F.sum(F.when(is_k, byte_len).otherwise(0)).alias(f"b{k}"),
-            F.bit_xor(F.when(is_k, row_hash)).alias(f"c{k}"),
-        ]
-    tagged = result.observe(obs, *obs_cols).withColumn("run_id", F.lit(run_id))
-    # two-level partitioning: resume filters prune on part_id, and any
-    # audit read-back prunes to THIS run's directories only — lineage
+    tagged = result.observe(
+        obs,
+        F.count(F.lit(1)).alias("n_rows"),
+        F.sum(byte_len).alias("n_bytes"),
+        F.bit_xor(row_hash).alias("checksum"),
+    ).withColumn("run_id", F.lit(run_id))
+    # two-level partitioning: resume filters prune on part_id, and the
+    # read-back below prunes to THIS run's directories only — lineage
     # cost stays proportional to the delta, not the history
     tagged.write.mode("append").partitionBy("part_id", "run_id").parquet(data_path)
+    sent = obs.get  # blocks until the write job above completed
 
-    got = obs.get  # blocks until the write job above completed
-    rows = [
-        (k, run_id, int(got[f"r{k}"] or 0), int(got[f"b{k}"] or 0), int(got[f"c{k}"] or 0))
-        for k in part_ids
-    ]
-    metrics = spark.createDataFrame(
-        rows, "part_id int, run_id string, n_rows long, n_bytes long, checksum long"
-    )
-
-    if audit_readback:
-        # files-on-disk are authoritative under this flag: recompute the
-        # same metrics from the parquet just written and fail loudly on
-        # any divergence (a torn write, a non-deterministic upstream)
+    catalog = spark._jvm.org.apache.spark.sql.catalyst.catalog
+    run_dir = catalog.ExternalCatalogUtils.escapePathName(run_id)  # as the writer named it
+    try:
         written = (
             spark.read.schema(tagged.schema)
-            .parquet(data_path)
-            .where(F.col("run_id") == run_id)
+            .option("basePath", data_path)
+            .parquet(os.path.join(data_path, "part_id=*", f"run_id={run_dir}"))
             .drop("run_id")
         )
-        disk = lineage_metrics(written, run_id)
-        diff = (
-            metrics.alias("m")
-            .join(disk.alias("d"), "part_id", "left")
-            .where(
-                (F.coalesce(F.col("d.n_rows"), F.lit(0)) != F.col("m.n_rows"))
-                | (F.coalesce(F.col("d.n_bytes"), F.lit(0)) != F.col("m.n_bytes"))
-                | (F.coalesce(F.col("d.checksum"), F.lit(0)) != F.col("m.checksum"))
-            )
-            .count()
+        disk = {r.part_id: r for r in lineage_metrics(written, run_id).collect()}
+    except AnalysisException as e:
+        # no file matched: every part of this run wrote zero rows; any
+        # OTHER failure must propagate, not commit an empty run
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
+        disk = {}
+    got = {k: (r.n_rows, r.n_bytes or 0, r.checksum or 0) for k, r in disk.items()}
+    per_metric = list(zip((0, 0, 0), *got.values()))  # a zero, then every part's value
+    on_disk = (sum(per_metric[0]), sum(per_metric[1]), reduce(xor, per_metric[2]))
+    if on_disk != (sent["n_rows"], sent["n_bytes"] or 0, sent["checksum"] or 0):
+        raise RuntimeError(
+            f"lineage audit: the files of run {run_id!r} under {data_path} hold "
+            f"(rows, bytes, checksum) {on_disk}; the write sent {dict(sent)}"
         )
-        if diff:
-            raise RuntimeError(
-                f"lineage audit: {diff} part(s) diverge between observed "
-                f"write metrics and the files on disk under {data_path}"
-            )
 
     # coalesce(1): the lineage rows of one run publish as ONE file, so
     # the commit is all-or-nothing (a multi-file append could crash
     # mid-job-commit with only SOME parts' rows visible — a replay
     # gate that checks "any row of this run exists" would then skip the
     # parts whose rows never landed, orphaning their data forever).
-    # The frame is driver-built and tiny (one row per logical part).
-    metrics.select("part_id", "run_id", "n_rows", "n_bytes", "checksum").coalesce(
-        1
-    ).write.mode("append").parquet(lin_path)
+    # The frame is driver-built and tiny (one row per logical part); an
+    # Arrow table plans a LocalTableScan, so no Python worker runs.
+    n_rows, n_bytes, checksum = zip(*(got.get(k, (0, 0, 0)) for k in part_ids))
+    metrics = pa.table(
+        [part_ids, [run_id] * len(part_ids), n_rows, n_bytes, checksum],
+        names=["part_id", "run_id", "n_rows", "n_bytes", "checksum"],
+    )
+    spark.createDataFrame(
+        metrics, "part_id int, run_id string, n_rows long, n_bytes long, checksum long"
+    ).coalesce(1).write.mode("append").parquet(lin_path)
 
 
 def read_result(spark: SparkSession, out_dir: str) -> DataFrame:

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.tiling import pip_join
-from .lineage import remaining, with_part_id, write_with_lineage
+from .lineage import done_part_ids, with_part_id, write_with_lineage
 
 
 def salted_ring_stats(assignments: DataFrame) -> DataFrame:
@@ -61,23 +61,23 @@ def run_pipeline(
     partition and then commit both.  ``write_with_lineage`` additionally
     rejects a run_id that already appears in the lineage log.
 
+    The todo parts are ``range(num_parts)`` minus the committed ones.
+    A part with no input rows commits a lineage row with ``n_rows`` 0,
+    as does a part whose rows all miss the layer.
+
     ``fail_after_parts`` (tests only) truncates the run to the first K
     remaining logical partitions — simulating executor/job loss so the
     kill/resume test can assert exact-resume equality.
     """
     if run_id is None:
         run_id = uuid.uuid4().hex[:12]
-    imgs = with_part_id(images, "image_id", num_parts)
-    todo = remaining(imgs, spark, out_dir)
-    # one scan collects the todo part-id list; passing the raw
-    # todo.select() into write_with_lineage would re-execute the whole
-    # input pipeline a second time just to enumerate ids
-    todo_ids = sorted(
-        r.part_id for r in todo.select("part_id").distinct().collect()
-    )
+    # every part_id lies in range(num_parts), so the todo list needs the
+    # lineage log only, never a scan of the input
+    done = done_part_ids(spark, out_dir)
+    todo_ids = [k for k in range(num_parts) if k not in done]
     if fail_after_parts is not None:
         todo_ids = todo_ids[:fail_after_parts]
-        todo = todo.filter(F.col("part_id").isin(todo_ids))
+    todo = with_part_id(images, "image_id", num_parts).filter(F.col("part_id").isin(todo_ids))
 
     # part_id is a pure function of image_id — recompute on the output
     # instead of joining it back (saves a full shuffle join)

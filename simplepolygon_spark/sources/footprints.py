@@ -10,6 +10,7 @@ G²×|fixtures| footprints whose decomposition exercises every code path
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -51,6 +52,8 @@ def footprint_rows(grid: int = 4, fixtures: dict | None = None) -> list[tuple]:
 
 
 def footprints_df(spark: SparkSession, grid: int = 4) -> DataFrame:
-    return spark.createDataFrame(footprint_rows(grid), POLYGONS_SCHEMA).repartition(
+    # an Arrow table plans a LocalTableScan: no Python RDD job builds the layer
+    table = pa.table(list(zip(*footprint_rows(grid))), names=["polygon_id", "rings"])
+    return spark.createDataFrame(table, POLYGONS_SCHEMA).repartition(
         max(spark.sparkContext.defaultParallelism, 4)
     )

@@ -217,11 +217,11 @@ def test_zero_row_run_on_fresh_dir_commits_lineage(spark, tmp_path):
 
 
 def test_lineage_observe_metrics_agree_with_disk_audit(spark, tmp_path):
-    """Round-3: metrics now ride the write job via Observation (no
-    read-back pass by default).  audit_readback=True recomputes them
-    from the files just written and raises on ANY divergence — so a
-    clean pass here proves observed == on-disk for rows, bytes, and
-    checksums; and the default path's lineage log must be identical."""
+    """The committed metrics are read back from the files just written,
+    and every write audits them against the totals it observed, raising
+    on ANY divergence — so a clean pass here proves observed == on-disk
+    for rows, bytes, and checksums; and two writes of the same result
+    commit identical lineage logs."""
     from simplepolygon_spark.operators.tiling import pip_join
     from simplepolygon_spark.plans.lineage import with_part_id, write_with_lineage
 
@@ -232,7 +232,7 @@ def test_lineage_observe_metrics_agree_with_disk_audit(spark, tmp_path):
     asg = with_part_id(pip_join(imgs, bc), "image_id", 8)
 
     out_a = str(tmp_path / "audited")
-    write_with_lineage(asg, out_a, "r0", imgs.select("part_id"), audit_readback=True)
+    write_with_lineage(asg, out_a, "r0", imgs.select("part_id"))
     out_b = str(tmp_path / "plain")
     write_with_lineage(asg, out_b, "r0", imgs.select("part_id"))
 
@@ -281,3 +281,69 @@ def test_duplicate_run_id_rejected_and_default_ids_resume_safely(spark, tmp_path
     a = sorted(tuple(r) for r in read_result(spark, crash_dir).collect())
     b = sorted(tuple(r) for r in read_result(spark, clean_dir).collect())
     assert a == b and len(a) > 0
+
+
+def test_parts_without_input_commit_zero_rows(spark, tmp_path):
+    """The todo parts are range(num_parts) minus the done ones: with 20
+    images over 64 parts, every part commits, and a part that holds no
+    image commits n_rows 0."""
+    from simplepolygon_spark.plans.lineage import with_part_id
+
+    bc = _setup(spark)
+    imgs = images_df(spark, 20, partitions=2, with_bytes=False)
+    out = str(tmp_path / "sparse")
+    run_pipeline(spark, imgs, bc, out, run_id="s", num_parts=64)
+    lin = {r.part_id: r.n_rows for r in spark.read.parquet(out + "/_lineage").collect()}
+    assert sorted(lin) == list(range(64))
+    fed = {r.part_id for r in with_part_id(imgs, "image_id", 64).select("part_id").collect()}
+    assert len(fed) < 64
+    assert all(lin[k] == 0 for k in set(range(64)) - fed)
+    assert done_part_ids(spark, out) == set(range(64))
+
+
+def test_lineage_audit_fails_on_a_lost_data_file(spark, tmp_path, monkeypatch):
+    """A data file that vanishes between the write and the read-back
+    fails the audit, and the run commits no lineage row."""
+    import glob
+    import os
+
+    import pytest
+    from pyspark.sql import DataFrameWriter
+
+    from simplepolygon_spark.plans.lineage import DATA_SUBDIR
+
+    parquet = DataFrameWriter.parquet
+
+    def lossy_parquet(self, path, *args, **kwargs):
+        parquet(self, path, *args, **kwargs)
+        if path.endswith(DATA_SUBDIR):
+            os.remove(sorted(glob.glob(f"{path}/part_id=*/run_id=*/*.parquet"))[0])
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", lossy_parquet)
+    bc = _setup(spark)
+    imgs = images_df(spark, 800, partitions=4, with_bytes=False)
+    out = str(tmp_path / "lossy")
+    with pytest.raises(RuntimeError, match="lineage audit"):
+        run_pipeline(spark, imgs, bc, out, run_id="l", num_parts=8)
+    assert not os.path.exists(f"{out}/_lineage")
+    assert done_part_ids(spark, out) == set()
+
+
+def test_lineage_row_counts_equal_the_landed_files(spark, tmp_path):
+    """Each part's committed n_rows equals a pyarrow count of the
+    parquet files the run landed under that part, also under a run_id
+    that the writer escapes in its directory name."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    bc = _setup(spark)
+    imgs = images_df(spark, 1500, partitions=4, with_bytes=False)
+    out = str(tmp_path / "counted")
+    run_pipeline(spark, imgs, bc, out, run_id="c:1", num_parts=16)
+    landed = {
+        k: sum(pq.ParquetFile(f).metadata.num_rows for f in glob.glob(f"{out}/data/part_id={k}/run_id=*/*.parquet"))
+        for k in range(16)
+    }
+    lin = {r.part_id: r.n_rows for r in spark.read.parquet(out + "/_lineage").collect()}
+    assert lin == landed and sum(landed.values()) > 0

@@ -27,6 +27,8 @@ def _points(n=3000, seed=11):
 
 def test_pip_join_matches_bruteforce_oracle(spark):
     fp = footprints_df(spark, grid=3)
+    fp_plan = fp._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in fp_plan and "ExistingRDD" not in fp_plan, fp_plan
     rings_out = decompose_polygons(fp)
     rows = rings_out.collect()
     index = build_interval_index(rows, cover_level=9)
