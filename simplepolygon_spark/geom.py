@@ -25,6 +25,10 @@ primitives the reference engine relies on:
   to the scalar ``point_in_ring`` (kept as the reference): the parent
   pass, the cover's cell centres, both PIP refines and the overlap
   probes all call it.
+* ``arrow_to_numpy`` / ``numpy_to_arrow`` — the Arrow↔numpy boundary
+  of every executor batch function, on buffers (``np.frombuffer``,
+  ``pa.Array.from_buffers``), so that no Python worker imports pandas
+  through pyarrow's own conversions.
 * ``signed_area`` — planar shoelace area (used by the tiling layer; the
   reference's geodesic area call at src/index.ts:676 is dead code, see
   SURVEY.md §7.4 Q2, so no geodesic implementation is needed for parity).
@@ -49,6 +53,8 @@ __all__ = [
     "points_in_rings",
     "ring_mats",
     "ring_table",
+    "arrow_to_numpy",
+    "numpy_to_arrow",
     "js_number_string",
 ]
 
@@ -331,14 +337,87 @@ def ring_mats(col):
 
     if col.null_count or col.flatten().null_count:
         raise ValueError("NULL coords in ring batch")
-    nlens = np.asarray(pc.list_value_length(col), dtype=np.int64)
-    flat = col.flatten().flatten().to_numpy(zero_copy_only=False)
+    nlens = arrow_to_numpy(pc.list_value_length(col), np.int64)
+    flat = arrow_to_numpy(col.flatten().flatten())
     if flat.size != 2 * int(nlens.sum()):
         raise ValueError("non-2D coordinate rows in ring batch")
-    pts = flat.astype(np.float64, copy=False).reshape(-1, 2)
+    pts = flat.reshape(-1, 2)
     off = np.zeros(len(nlens) + 1, dtype=np.int64)
     np.cumsum(nlens, out=off[1:])
     return _closed(pts, off)
+
+
+# The Arrow <-> numpy boundary of every executor batch function.  Both
+# directions go through buffers: pyarrow's own conversions (to_numpy,
+# pa.array on an ndarray or list, take(ndarray), from_pydict, pa.scalar,
+# combine_chunks of no chunks) import pandas into the Python worker on
+# first use, some 20-40 MB of memory per worker.
+
+
+def arrow_to_numpy(col, dtype=np.float64) -> np.ndarray:
+    """A numeric Arrow Array or ChunkedArray as a float64 or int64
+    ndarray read off its data buffer: a read-only view of it unless a
+    NULL is present.  A NULL reads as NaN, as
+    ``to_numpy(zero_copy_only=False).astype(np.float64)`` gives; an
+    integer column rejects NULLs."""
+    import pyarrow as pa
+
+    dtype = np.dtype(dtype)
+    if isinstance(col, pa.ChunkedArray):
+        if col.num_chunks == 0:
+            return np.zeros(0, dtype)
+        col = col.combine_chunks()
+    col = col.cast(pa.from_numpy_dtype(dtype))
+    n = len(col)
+    if n == 0:
+        return np.zeros(0, dtype)
+    vals = np.frombuffer(col.buffers()[1], dtype, n, col.offset * dtype.itemsize)
+    if not col.null_count:
+        return vals
+    if dtype.kind != "f":
+        raise ValueError(f"NULL in a {dtype} column")
+    bits = np.unpackbits(np.frombuffer(col.buffers()[0], np.uint8), bitorder="little")
+    return np.where(bits[col.offset : col.offset + n].view(bool), vals, np.nan)
+
+
+def numpy_to_arrow(values, type=None):
+    """An Arrow array built with ``pa.Array.from_buffers``.
+
+    A numeric or bool ndarray (or a list numpy reads as one) keeps its
+    values (NaN stays a value, as with ``pa.array``); its type comes
+    from the dtype and is cast to ``type`` when one is given.  With a
+    string or binary ``type``, ``values`` is a sequence of str, bytes
+    or None, None giving NULL."""
+    import pyarrow as pa
+
+    if type is not None and (pa.types.is_string(type) or pa.types.is_binary(type)):
+        return _varlen(values, type)
+    v = np.ascontiguousarray(values)
+    if v.dtype == bool:
+        arr = pa.Array.from_buffers(
+            pa.bool_(), len(v), [None, pa.py_buffer(np.packbits(v, bitorder="little"))]
+        )
+    else:
+        arr = pa.Array.from_buffers(pa.from_numpy_dtype(v.dtype), len(v), [None, pa.py_buffer(v)])
+    return arr if type is None or arr.type == type else arr.cast(type)
+
+
+def _varlen(values, type):
+    """A string or binary Arrow array from int32 offsets and one data
+    buffer; None entries are NULL."""
+    import pyarrow as pa
+
+    enc = [s.encode() if isinstance(s, str) else s for s in values]
+    n = len(enc)
+    valid = np.fromiter((b is not None for b in enc), bool, n)
+    off = np.zeros(n + 1, np.int64)
+    np.cumsum(np.fromiter((len(b) if b is not None else 0 for b in enc), np.int64, n), out=off[1:])
+    if off[-1] > np.iinfo(np.int32).max:
+        raise ValueError(f"{off[-1]} bytes exceed one {type} array")
+    nulls = n - int(valid.sum())
+    mask = pa.py_buffer(np.packbits(valid, bitorder="little")) if nulls else None
+    data = pa.py_buffer(b"".join(b for b in enc if b is not None))
+    return pa.Array.from_buffers(type, n, [mask, pa.py_buffer(off.astype(np.int32)), data], nulls)
 
 
 def js_number_string(v: float) -> str:

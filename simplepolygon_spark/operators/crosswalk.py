@@ -19,7 +19,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from ..cells import RingError, cell_range_at_max, cover_rings, spread_bits
-from ..geom import ring_mats
+from ..geom import arrow_to_numpy, numpy_to_arrow, ring_mats
 
 
 def _bbox_cells(lon0, lat0, lon1, lat1, level: int):
@@ -98,10 +98,10 @@ def crosswalk(
             if batch.num_rows == 0:
                 continue
             ids = batch.column(id_col)
-            b0 = batch.column("lon_min").to_numpy(zero_copy_only=False)
-            b1 = batch.column("lat_min").to_numpy(zero_copy_only=False)
-            b2 = batch.column("lon_max").to_numpy(zero_copy_only=False)
-            b3 = batch.column("lat_max").to_numpy(zero_copy_only=False)
+            # a NULL bound reads as NaN and fails as a non-finite bound
+            b0, b1, b2, b3 = (
+                arrow_to_numpy(batch.column(c)) for c in ("lon_min", "lat_min", "lon_max", "lat_max")
+            )
             tile_idx, cells = _bbox_cells_batch(b0, b1, b2, b3, level, ids=ids)
             lo, hi = cell_range_at_max(cells, level, idx.max_level)
             qi, rid = idx.overlap_batch(lo, hi)
@@ -113,8 +113,8 @@ def crosswalk(
             out = np.concatenate([qi, mi])
             yield pa.RecordBatch.from_arrays(
                 [
-                    ids.take(tile_idx[out]).cast(pa.string()),
-                    pa.array(cells[out], pa.int64()),
+                    ids.take(numpy_to_arrow(tile_idx[out])).cast(pa.string()),
+                    numpy_to_arrow(cells[out]),
                     *idx.ring_columns(rid, n_null=len(mi)),
                 ],
                 names=[id_col, "cell_id", "polygon_id", "ring_index"],
@@ -159,11 +159,14 @@ def bucketed_cover_spans(
 def table_covers(pts, off, pids, ridx, cover_level: int, max_level: int):
     """``cells.cover_rings`` of a ring table whose ring r is
     (``pids[r]``, ``ridx[r]``): a degenerate ring's ValueError is
-    prefixed with its (polygon_id, ring_index)."""
+    prefixed with its (polygon_id, ring_index).  ``pids`` and ``ridx``
+    are numpy arrays or Arrow columns; only the failing ring's ids are
+    converted, on the error path."""
     try:
         return cover_rings(pts, off, max_level=cover_level, abs_max=max_level)
     except RingError as e:
-        raise ValueError(f"(polygon_id, ring_index) = ({pids[e.ring]!r}, {ridx[e.ring]}): {e}") from e
+        k = slice(e.ring, e.ring + 1)
+        raise ValueError(f"(polygon_id, ring_index) = ({pids[k].tolist()[0]!r}, {ridx[k].tolist()[0]}): {e}") from e
 
 
 def covers_df(rings_out: DataFrame, cover_level: int = 8, max_level: int = 16) -> DataFrame:
@@ -190,12 +193,16 @@ def covers_df(rings_out: DataFrame, cover_level: int = 8, max_level: int = 16) -
         for batch in batches:
             pts, off = ring_mats(batch.column("coords"))
             pid, ridx = batch.column("polygon_id"), batch.column("ring_index")
-            lo, hi, full, counts = table_covers(
-                pts, off, pid.to_pylist(), ridx.to_pylist(), cover_level, max_level
-            )
-            ring = pa.array(np.repeat(np.arange(len(counts)), counts))
+            lo, hi, full, counts = table_covers(pts, off, pid, ridx, cover_level, max_level)
+            ring = numpy_to_arrow(np.repeat(np.arange(len(counts)), counts))
             yield pa.RecordBatch.from_arrays(
-                [pid.take(ring), ridx.take(ring), pa.array(lo), pa.array(hi), pa.array(full.astype(np.int32))],
+                [
+                    pid.take(ring),
+                    ridx.take(ring),
+                    numpy_to_arrow(lo),
+                    numpy_to_arrow(hi),
+                    numpy_to_arrow(full.astype(np.int32)),
+                ],
                 names=["polygon_id", "ring_index", "lo", "hi", "full"],
             )
 

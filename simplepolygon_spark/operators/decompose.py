@@ -7,13 +7,15 @@ each row already holds a whole polygon, so each Arrow batch is processed
 where it sits.  Parallelism = input partitions; use ``repartition``
 upstream only if the source produced few or skewed splits.
 
-Each batch's ``polygon_id`` and ``rings`` columns are read with
-``to_pylist``: a NULL cell reaches the kernel as ``None`` (its typed
-"non-empty geometry" error), ``rings = []`` as an empty list, and a NULL
-ring, position or coordinate as ``None`` inside it, each rejected by the
-kernel's typed checks.  ``decompose_polygons`` and ``validate_polygons``
-share the per-row loop (``_decomposed_rows``); each input batch gives
-one output batch.
+Each batch's ``rings`` column is read with ``to_pylist``: a NULL cell
+reaches the kernel as ``None`` (its typed "non-empty geometry" error),
+``rings = []`` as an empty list, and a NULL ring, position or coordinate
+as ``None`` inside it, each rejected by the kernel's typed checks.
+``decompose_polygons`` and ``validate_polygons`` share the per-row loop
+(``_decomposed_rows``); each input batch gives one output batch.  The
+output is assembled on buffers (``geom.numpy_to_arrow``): ``polygon_id``
+is a take from the input column, ``coords`` one flat float64 buffer
+under two list offsets, so the worker never imports pandas.
 
 Schemas
 -------
@@ -27,6 +29,9 @@ output: polygon_id string, ring_index int, parent int, winding int,
 
 from __future__ import annotations
 
+from itertools import chain
+
+import numpy as np
 import pyarrow as pa
 
 from pyspark.sql import DataFrame
@@ -40,6 +45,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from ..geom import numpy_to_arrow
 
 RINGS_TYPE = ArrayType(ArrayType(ArrayType(DoubleType())))
 
@@ -72,7 +79,7 @@ VALIDATE_SCHEMA = StructType(
 
 
 def _decomposed_rows(batch: pa.RecordBatch, max_vertices: int | None):
-    """(polygon_id, features or the exception) for each row of a batch.
+    """The features, or the exception, of each row of a batch.
 
     ``max_vertices`` (opt-in) caps per-polygon cost: a pathological
     mega-polygon is one task, so without a cap it can occupy an executor
@@ -84,8 +91,7 @@ def _decomposed_rows(batch: pa.RecordBatch, max_vertices: int | None):
     # imported lazily so the worker imports the kernel, not the operator
     from simplepolygon_spark.decompose import DecomposeError, decompose
 
-    ids = batch.column("polygon_id").to_pylist()
-    for pid, rings in zip(ids, batch.column("rings").to_pylist()):
+    for rings in batch.column("rings").to_pylist():
         try:
             if (
                 max_vertices is not None
@@ -99,7 +105,41 @@ def _decomposed_rows(batch: pa.RecordBatch, max_vertices: int | None):
             result = decompose(rings)
         except Exception as e:
             result = e
-        yield pid, result
+        yield result
+
+
+def _rings_batch(pid: pa.Array, counts: np.ndarray, feats: list, schema: pa.Schema) -> pa.RecordBatch:
+    """The rings_out batch of ``feats``: ``counts[r]`` features, in
+    order, of input row r, whose id is ``pid[r]``."""
+    n = len(feats)
+    row = np.repeat(np.arange(len(counts)), counts)
+    ring_index = np.arange(n) - np.repeat(np.cumsum(counts) - counts, counts)
+    ring_off = np.zeros(n + 1, np.int32)
+    np.cumsum(np.fromiter((len(f["coords"]) for f in feats), np.int64, n), out=ring_off[1:])
+    # every position is an [x, y] pair of Python floats
+    xy = np.fromiter(
+        chain.from_iterable(chain.from_iterable(f["coords"] for f in feats)), np.float64, 2 * int(ring_off[-1])
+    )
+    positions = pa.ListArray.from_arrays(
+        numpy_to_arrow(np.arange(0, len(xy) + 1, 2, dtype=np.int32)), numpy_to_arrow(xy)
+    )
+    coords = pa.ListArray.from_arrays(numpy_to_arrow(ring_off), positions)
+
+    def ints(key):
+        return numpy_to_arrow(np.fromiter((f[key] for f in feats), np.int32, n))
+
+    return pa.RecordBatch.from_arrays(
+        [
+            pid.take(numpy_to_arrow(row)).cast(pa.string()),
+            numpy_to_arrow(ring_index.astype(np.int32)),
+            ints("parent"),
+            ints("winding"),
+            ints("net_winding"),
+            numpy_to_arrow(np.fromiter((f["index"] is not None for f in feats), bool, n)),
+            coords.cast(schema.field("coords").type),
+        ],
+        schema=schema,
+    )
 
 
 def decompose_polygons(
@@ -131,21 +171,16 @@ def decompose_polygons(
         from simplepolygon_spark.decompose import DecomposeError
 
         for batch in batches:
-            out = {name: [] for name in schema.names}
-            for pid, feats in _decomposed_rows(batch, max_vertices):
+            counts = np.zeros(batch.num_rows, np.int64)
+            out = []
+            for r, feats in enumerate(_decomposed_rows(batch, max_vertices)):
                 if isinstance(feats, Exception):
                     if on_error == "raise" or not isinstance(feats, DecomposeError):
                         raise feats
                     continue
-                for k, f in enumerate(feats):
-                    out["polygon_id"].append(pid)
-                    out["ring_index"].append(k)
-                    out["parent"].append(f["parent"])
-                    out["winding"].append(f["winding"])
-                    out["net_winding"].append(f["net_winding"])
-                    out["is_indexed"].append(f["index"] is not None)
-                    out["coords"].append(f["coords"])
-            yield pa.RecordBatch.from_pydict(out, schema=schema)
+                counts[r] = len(feats)
+                out.extend(feats)
+            yield _rings_batch(batch.column("polygon_id"), counts, out, schema)
 
     return polygons.select("polygon_id", "rings").mapInArrow(run, RINGS_OUT_SCHEMA)
 
@@ -178,16 +213,22 @@ def validate_polygons(
         from simplepolygon_spark.decompose import DecomposeError
 
         for batch in batches:
-            ids, errs = [], []
-            for pid, feats in _decomposed_rows(batch, max_vertices):
-                ids.append(pid)
+            errs = []
+            for feats in _decomposed_rows(batch, max_vertices):
                 if not isinstance(feats, Exception):
                     errs.append(None)
                 elif isinstance(feats, DecomposeError):
                     errs.append(str(feats))
                 else:
                     errs.append(f"{type(feats).__name__}: {feats}")
-            oks = [e is None for e in errs]
-            yield pa.RecordBatch.from_pydict({"polygon_id": ids, "ok": oks, "error": errs}, schema=schema)
+            oks = np.fromiter((e is None for e in errs), bool, len(errs))
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column("polygon_id").cast(pa.string()),
+                    numpy_to_arrow(oks),
+                    numpy_to_arrow(errs, pa.string()),
+                ],
+                schema=schema,
+            )
 
     return polygons.select("polygon_id", "rings").mapInArrow(run, VALIDATE_SCHEMA)

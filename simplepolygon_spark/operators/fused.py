@@ -19,6 +19,7 @@ import pyarrow as pa
 
 from pyspark.sql import DataFrame
 
+from ..geom import arrow_to_numpy, numpy_to_arrow
 from .payload import validate_rows
 
 
@@ -35,28 +36,29 @@ def validate_and_assign(images: DataFrame, index_bc) -> DataFrame:
             bts = batch.column("bytes").to_pylist()
             fmts = batch.column("fmt").to_pylist()
             caps = batch.column("caption").to_pylist()
-            lon = batch.column("lon").to_numpy(zero_copy_only=False).astype(np.float64)
-            lat = batch.column("lat").to_numpy(zero_copy_only=False).astype(np.float64)
+            lon = arrow_to_numpy(batch.column("lon"))
+            lat = arrow_to_numpy(batch.column("lat"))
             n = len(ids)
             if n == 0:
                 continue
 
             ps, cap_ok = validate_rows(ids, bts, fmts, caps)
 
-            # invalid points are never assigned (IntervalIndex.assign);
-            # they surface as the NULL-ring validity row
+            # invalid points (NULL reads as NaN) are never assigned
+            # (IntervalIndex.assign); they surface as the NULL-ring
+            # validity row
             pt_idx, ring_id = idx.assign(lon, lat)
 
             assigned = np.zeros(n, dtype=bool)
             assigned[pt_idx] = True
             un = np.nonzero(~assigned)[0]
-            rows_a = np.concatenate([pt_idx, un]).astype(np.intp)
+            rows_a = np.concatenate([pt_idx, un]).astype(np.int64)
             yield pa.RecordBatch.from_arrays(
                 [
-                    batch.column("image_id").take(rows_a).cast(pa.string()),
+                    batch.column("image_id").take(numpy_to_arrow(rows_a)).cast(pa.string()),
                     *idx.ring_columns(ring_id, n_null=len(un)),
-                    pa.array(ps[rows_a]),
-                    pa.array(cap_ok[rows_a]),
+                    numpy_to_arrow(ps[rows_a]),
+                    numpy_to_arrow(cap_ok[rows_a]),
                 ],
                 names=["image_id", "polygon_id", "ring_index", "psnr_db", "caption_ok"],
             )

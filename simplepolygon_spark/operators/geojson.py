@@ -38,6 +38,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..geom import numpy_to_arrow
+
 GEOJSON_GEOM_SCHEMA = (
     "STRUCT<type: STRING, geometry: STRUCT<type: STRING, "
     "coordinates: ARRAY<ARRAY<ARRAY<DOUBLE>>>>>"
@@ -127,7 +129,7 @@ def decompose_geojson(
                 feature = {"type": "Feature", "geometry": {"type": "Polygon", "coordinates": rings}}
                 fcs.append(json.dumps(simplepolygon(feature)))
             yield pa.RecordBatch.from_arrays(
-                [batch.column(0), pa.array(fcs, pa.string())],
+                [batch.column(0), numpy_to_arrow(fcs, pa.string())],
                 names=[id_col, "feature_collection"],
             )
 

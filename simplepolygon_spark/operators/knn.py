@@ -39,6 +39,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..geom import arrow_to_numpy, numpy_to_arrow
 from .tiling import IntervalIndex
 
 _MAX_ENTRIES = 1 << 15  # (row, centroid) entries any one stage may hold
@@ -231,18 +232,20 @@ def knn_join(
             n = batch.num_rows
             if n == 0:
                 continue
-            lon = batch.column(lon_col).to_numpy(zero_copy_only=False).astype(np.float64)
-            lat = batch.column(lat_col).to_numpy(zero_copy_only=False).astype(np.float64)
+            # a NULL coordinate reads as NaN: its row ranks every ring
+            lon = arrow_to_numpy(batch.column(lon_col))
+            lat = arrow_to_numpy(batch.column(lat_col))
             ring, dist = nearest_rings(idx, lon, lat, k)
             kk = ring.shape[1]
             # ids and ring keys are Arrow takes: no column passes
-            # through Python objects
+            # through Python objects, and every conversion runs on
+            # buffers (no pandas import)
             yield pa.RecordBatch.from_arrays(
                 [
-                    batch.column(id_col).take(np.repeat(np.arange(n), kk)).cast(pa.string()),
+                    batch.column(id_col).take(numpy_to_arrow(np.repeat(np.arange(n), kk))).cast(pa.string()),
                     *idx.ring_columns(ring.ravel()),
-                    pa.array(dist.ravel()),
-                    pa.array(np.tile(np.arange(1, kk + 1, dtype=np.int32), n), pa.int32()),
+                    numpy_to_arrow(dist.ravel()),
+                    numpy_to_arrow(np.tile(np.arange(1, kk + 1, dtype=np.int32), n)),
                 ],
                 names=[id_col, "polygon_id", "ring_index", "dist", "rank"],
             )

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..cells import MAX_LEVEL
-from ..geom import ring_mats, rings_overlap
+from ..geom import numpy_to_arrow, ring_mats, rings_overlap
 from .crosswalk import bucketed_cover_spans, covers_df
 
 
@@ -173,22 +173,24 @@ def overlap_join(
         for batch in batches:
             pa_pts, pa_off = ring_mats(batch.column("a_coords"))
             pb_pts, pb_off = ring_mats(batch.column("b_coords"))
-            hits = [
-                bool(
+            hits = np.fromiter(
+                (
                     rings_overlap(
                         pa_pts[pa_off[i] : pa_off[i + 1]],
                         pb_pts[pb_off[i] : pb_off[i + 1]],
                     )
-                )
-                for i in range(batch.num_rows)
-            ]
+                    for i in range(batch.num_rows)
+                ),
+                bool,
+                batch.num_rows,
+            )
             yield pa.RecordBatch.from_arrays(
                 [
                     batch.column("a_polygon_id"),
                     batch.column("a_ring_index"),
                     batch.column("b_polygon_id"),
                     batch.column("b_ring_index"),
-                    pa.array(hits, pa.bool_()),
+                    numpy_to_arrow(hits),
                 ],
                 names=[
                     "a_polygon_id",

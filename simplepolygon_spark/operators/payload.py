@@ -23,6 +23,7 @@ import pyarrow as pa
 
 from pyspark.sql import DataFrame
 
+from ..geom import numpy_to_arrow
 from ..sources.images import decode_image, pixels_of, psnr
 
 
@@ -74,9 +75,9 @@ def validate_payload(images: DataFrame) -> DataFrame:
             ps, cap_ok = validate_rows(ids, bts, fmts, caps)
             yield pa.RecordBatch.from_arrays(
                 [
-                    pa.array(ids, pa.string()),
-                    pa.array(ps, pa.float64()),
-                    pa.array(cap_ok, pa.bool_()),
+                    batch.column("image_id").cast(pa.string()),
+                    numpy_to_arrow(ps),
+                    numpy_to_arrow(cap_ok),
                 ],
                 names=["image_id", "psnr_db", "caption_ok"],
             )

@@ -18,7 +18,11 @@ from PAPERS.md):
    (numpy bit-math, identical to the JVM/SQL cell expression), stabs
    the broadcast index (two searchsorted + CSR gather, fully
    vectorized), accepts FULL-cell hits outright, and refines only
-   PARTIAL-cell candidates with the exact ray-cast PIP kernel.
+   PARTIAL-cell candidates with the exact ray-cast PIP kernel.  Its
+   columns cross the Arrow↔numpy boundary on buffers
+   (``geom.arrow_to_numpy`` / ``geom.numpy_to_arrow``), as in every
+   executor batch function of the engine: pyarrow's own conversions
+   would import pandas into each Python worker.
 
 At 1000 executors this plan reads the image table once, moves no image
 bytes across the network, and does O(log m) work per image — the only
@@ -36,7 +40,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 from ..cells import MAX_LEVEL, cell_of_point
-from ..geom import points_in_rings, ring_mats, ring_table
+from ..geom import arrow_to_numpy, numpy_to_arrow, points_in_rings, ring_mats, ring_table
 
 
 @dataclass
@@ -83,10 +87,12 @@ class IntervalIndex:
         """(polygon_id, ring_index) Arrow columns of rings ``ring_id``,
         then ``n_null`` NULL rows: two takes from Arrow copies of
         ``ring_pid`` and ``ring_ridx`` that each worker builds once (a
-        view, never pickled), so no output row is a Python object."""
-        pid = self._view("pid_arrow", lambda: pa.array(self.ring_pid, pa.string()))
-        ridx = self._view("ridx_arrow", lambda: pa.array(self.ring_ridx, pa.int32()))
-        take = pa.array(ring_id, pa.int64())
+        view, never pickled), so no output row is a Python object.  The
+        copies and the take indices are built on buffers
+        (``geom.numpy_to_arrow``), so the worker never imports pandas."""
+        pid = self._view("pid_arrow", lambda: numpy_to_arrow(self.ring_pid, pa.string()))
+        ridx = self._view("ridx_arrow", lambda: numpy_to_arrow(self.ring_ridx, pa.int32()))
+        take = numpy_to_arrow(np.asarray(ring_id, np.int64))
         if n_null:
             take = pa.concat_arrays([take, pa.nulls(n_null, pa.int64())])
         return pid.take(take), ridx.take(take)
@@ -205,7 +211,7 @@ def build_interval_index(
             "polygon_id", F.col("ring_index").cast("int").alias("ring_index"), "coords"
         ).toArrow()
         ring_pid = np.array(tbl.column("polygon_id").to_pylist(), dtype=object)
-        ring_ridx = tbl.column("ring_index").to_numpy().astype(np.int32)
+        ring_ridx = arrow_to_numpy(tbl.column("ring_index"), np.int64).astype(np.int32)
         pts, off = ring_mats(tbl.column("coords").combine_chunks())
     else:
         rows = list(rings_out)
@@ -304,20 +310,22 @@ def pip_join(
     def run(batches):
         idx: IntervalIndex = index_bc.value
         for batch in batches:
-            lon = batch.column(lon_col).to_numpy(zero_copy_only=False).astype(np.float64)
-            lat = batch.column(lat_col).to_numpy(zero_copy_only=False).astype(np.float64)
+            # NULL coordinates read as NaN, which assign never matches
+            lon = arrow_to_numpy(batch.column(lon_col))
+            lat = arrow_to_numpy(batch.column(lat_col))
             pt_idx, ring_id = idx.assign(lon, lat)
             if len(pt_idx) == 0:
                 continue
             # ids and ring keys are Arrow takes, the coordinates numpy
-            # fancy indexing: no column passes through Python objects.
+            # fancy indexing: no column passes through Python objects,
+            # and every conversion runs on buffers (no pandas import).
             # The cast keeps the declared string type should the JVM
             # hand the ids over as large_string.
             yield pa.RecordBatch.from_arrays(
                 [
-                    batch.column(id_col).take(pt_idx).cast(pa.string()),
-                    pa.array(lon[pt_idx]),
-                    pa.array(lat[pt_idx]),
+                    batch.column(id_col).take(numpy_to_arrow(pt_idx)).cast(pa.string()),
+                    numpy_to_arrow(lon[pt_idx]),
+                    numpy_to_arrow(lat[pt_idx]),
                     *idx.ring_columns(ring_id),
                 ],
                 names=[id_col, "lon", "lat", "polygon_id", "ring_index"],
@@ -417,17 +425,17 @@ def pip_join_relational(
 
     def refine(batches):
         for batch in batches:
-            keep = batch.column("full").to_numpy(zero_copy_only=False) == 1
+            keep = arrow_to_numpy(batch.column("full"), np.int64) == 1
             part = np.flatnonzero(~keep)
             if len(part):
                 # each PARTIAL row carries its own ring: row k tests ring k
-                rows = batch.take(pa.array(part))
+                rows = batch.take(numpy_to_arrow(part))
                 pts, off = ring_mats(rows.column("coords"))
-                lon = rows.column(lon_col).to_numpy(zero_copy_only=False)
-                lat = rows.column(lat_col).to_numpy(zero_copy_only=False)
+                lon = arrow_to_numpy(rows.column(lon_col))
+                lat = arrow_to_numpy(rows.column(lat_col))
                 keep[part] = points_in_rings(lon, lat, np.arange(len(part)), pts, off)
             if keep.any():
-                out = batch.filter(pa.array(keep))
+                out = batch.filter(numpy_to_arrow(keep))
                 lonlat = [out.column(c).cast(pa.float64()) for c in (lon_col, lat_col)]
                 cols = [out.column(id_col), *lonlat, out.column("polygon_id"), out.column("ring_index")]
                 yield pa.RecordBatch.from_arrays(cols, names=[id_col, "lon", "lat", "polygon_id", "ring_index"])

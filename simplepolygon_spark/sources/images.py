@@ -40,6 +40,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..geom import arrow_to_numpy, numpy_to_arrow
+
 MAGIC = b"SPIM"
 _WIDTHS = (16, 32, 64)
 _HEIGHTS = (16, 24, 48)
@@ -208,7 +210,7 @@ def images_df(
 
     def gen(batches):
         for batch in batches:
-            idx = batch.column("id").to_numpy()
+            idx = arrow_to_numpy(batch.column("id"), np.int64)
             cols: dict[str, list] = {k: [] for k in arrow_schema.names}
             for i in idx:
                 i = int(i)
@@ -232,7 +234,7 @@ def images_df(
                 cols["lon_max"].append(m["lon"] + 0.05)
                 cols["lat_max"].append(m["lat"] + 0.05)
             yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[f.name], f.type) for f in arrow_schema],
+                [numpy_to_arrow(cols[f.name], f.type) for f in arrow_schema],
                 schema=arrow_schema,
             )
 

@@ -168,16 +168,42 @@ def test_spatial_import_closure_stays_spatial():
     assert not leaks, "spatial code reaches off-paper modules:\n" + "\n".join(leaks)
 
 
+# pyarrow conversions that import pandas on first use; SPATIAL modules
+# convert through ``geom.arrow_to_numpy`` / ``geom.numpy_to_arrow``
+_PANDAS_SHIM_CALLS = {"to_numpy", "from_pydict"}
+_PANDAS_SHIM_PA_CALLS = {"array", "scalar"}
+
+
+def _pandas_shim_call(node: ast.Call) -> str | None:
+    f = node.func
+    if not isinstance(f, ast.Attribute):
+        return None
+    if f.attr in _PANDAS_SHIM_CALLS:
+        return f".{f.attr}("
+    if f.attr in _PANDAS_SHIM_PA_CALLS and isinstance(f.value, ast.Name) and f.value.id == "pa":
+        return f"pa.{f.attr}("
+    return None
+
+
 def test_no_pandas_udfs_in_the_engine():
     """The engine's Python stages run on Arrow batches: no ``mapInPandas``
     anywhere in the package, and no SPATIAL module imports ``pandas`` or
     calls ``applyInPandas``.  The off-paper modules outside SPATIAL are
-    exempt (``dedup`` runs ``applyInPandas`` kernels)."""
+    exempt (``dedup`` runs ``applyInPandas`` kernels).
+
+    SPATIAL modules also call none of the pyarrow conversions that
+    import pandas lazily (``.to_numpy(``, ``pa.array(``, ``pa.scalar(``,
+    ``.from_pydict(``), so the engine has one Arrow↔numpy idiom.  This
+    walk sees imports and calls only; ``tests/test_no_pandas_worker.py``
+    runs every executor batch function and checks that no Python worker
+    loaded pandas."""
     problems = []
     for path in sorted((REPO / PKG).rglob("*.py")):
         rel = str(path.relative_to(REPO))
         spatial = _module_name(path) in SPATIAL
         for node in ast.walk(ast.parse(path.read_text(), filename=rel)):
+            if spatial and isinstance(node, ast.Call) and (call := _pandas_shim_call(node)):
+                problems.append(f"{rel}:{node.lineno}: {call}")
             if isinstance(node, ast.Attribute):
                 if node.attr == "mapInPandas" or (spatial and node.attr == "applyInPandas"):
                     problems.append(f"{rel}:{node.lineno}: {node.attr}")

@@ -5,8 +5,9 @@ Each output table, column types included, must equal an object-array
 assembly of the same kernel results (ids and ring ids through numpy
 object arrays and ``pa.array(..., pa.string())``), at one row per Arrow
 batch and at the session's default batch size.  The inputs carry
-non-ASCII ids, invalid coordinates, crosswalk cells that hit no ring,
-unassigned images, and batches and frames with no rows."""
+non-ASCII ids, invalid coordinates, SQL NULL coordinates (read as NaN),
+crosswalk cells that hit no ring, unassigned images, and batches and
+frames with no rows."""
 
 from __future__ import annotations
 
@@ -59,6 +60,12 @@ def images(spark):
         iid = _image_id(i)
         cap = f"synthetic image {i} :: {hashlib.blake2b(iid.encode()).digest()[:12].hex()}"
         rows.append((iid, data, fmt, cap, float(lon[i]), float(lat[i])))
+    # SQL NULL coordinates: every served join reads them as NaN
+    for i, (x, y) in zip(range(48, 51), [(None, 10.0), (10.0, None), (None, None)]):
+        data, _w, _h, fmt = encode_image(i)
+        iid = _image_id(i)
+        cap = f"synthetic image {i} :: {hashlib.blake2b(iid.encode()).digest()[:12].hex()}"
+        rows.append((iid, data, fmt, cap, x, y))
     schema = "image_id string, bytes binary, fmt string, caption string, lon double, lat double"
     return spark.createDataFrame(rows, schema).repartition(3)
 
@@ -219,4 +226,15 @@ def test_crosswalk_error_names_a_non_ascii_tile(spark, layer):
         "image_id string, lon_min double, lat_min double, lon_max double, lat_max double",
     )
     with pytest.raises(Exception, match="inverted bbox or non-finite bounds at tile 'kachel-ü'"):
+        crosswalk(bad, bc, level=LEVEL).collect()
+
+
+def test_crosswalk_error_names_a_tile_with_a_null_bound(spark, layer):
+    # a SQL NULL bound reads as NaN, a non-finite bound
+    _, bc = layer
+    bad = spark.createDataFrame(
+        [("kachel-a", 0.0, 0.0, 1.0, 1.0), ("kachel-null", 0.0, 0.0, 1.0, None)],
+        "image_id string, lon_min double, lat_min double, lon_max double, lat_max double",
+    ).coalesce(1)
+    with pytest.raises(Exception, match="inverted bbox or non-finite bounds at tile 'kachel-null'"):
         crosswalk(bad, bc, level=LEVEL).collect()
