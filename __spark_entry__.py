@@ -529,43 +529,6 @@ def _q_pii_redact_sql():
     """
 
 
-def q_shuffle_export(spark, sf_dir):
-    """Deterministic global corpus shuffle + shard export order: seeded
-    md5 shuffle key, uniform hash shard, ordinal position within the
-    shard — the reproducible "shuffle the corpus, write N shards" step
-    a training run consumes.  The oracle recomputes key/shard/pos with
-    the bit-identical rules (hex-prefix → int agrees between Spark's
-    conv() and DuckDB's '0x' cast; 60 bits keeps both signed-safe)."""
-    from simplepolygon_spark.operators.sampling import shuffle_shards
-
-    return (
-        shuffle_shards(_read(spark, sf_dir, "documents"), n_shards=8)
-        .select("doc_id", "shuffle_key", "shard", "pos")
-        .orderBy("doc_id")
-    )
-
-
-def _q_shuffle_export_sql():
-    return """
-        WITH k AS (
-          SELECT doc_id,
-                 md5('shuffle:' || CAST(doc_id AS STRING)) AS shuffle_key
-          FROM documents
-        ),
-        s AS (
-          SELECT doc_id, shuffle_key,
-                 CAST(('0x' || substr(shuffle_key, 1, 15))::BIGINT % 8 AS INT)
-                   AS shard
-          FROM k
-        )
-        SELECT doc_id, shuffle_key, shard,
-               CAST(row_number() OVER (PARTITION BY shard
-                                       ORDER BY shuffle_key, doc_id) - 1
-                    AS BIGINT) AS pos
-        FROM s
-    """
-
-
 def q_adaptive_filter(spark, sf_dir):
     """Adaptive per-language length gate: drop each language's shortest
     10% of docs, threshold = the group's EXACT 0.1 percentile of the
@@ -669,164 +632,6 @@ def _q_lang_id_sql():
         WITH s AS (SELECT doc_id, {', '.join(f'({v}) AS s_{k}' for k, v in score.items())} FROM documents),
         b AS (SELECT doc_id, {best} AS best, * FROM s)
         SELECT doc_id, CASE WHEN best = 0 THEN 'und' {whens} ELSE 'und' END AS lang_guess FROM b
-    """
-
-
-def q_stratified_sample(spark, sf_dir):
-    """Exact deterministic n-per-stratum sample (md5-order ranking);
-    oracle reproduces the identical ranking in SQL."""
-    from simplepolygon_spark.operators.sampling import stratified_sample
-
-    d = _read(spark, sf_dir, "documents")
-    return (
-        stratified_sample(d, "lang", 20)
-        .select("doc_id", "lang")
-        .orderBy("lang", "doc_id")
-    )
-
-
-def _q_stratified_sample_sql():
-    return """
-        SELECT doc_id, lang FROM (
-          SELECT doc_id, lang,
-                 row_number() OVER (PARTITION BY lang
-                                    ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn
-          FROM documents) WHERE rn <= 20
-    """
-
-
-def q_pack_sequences(spark, sf_dir):
-    """Greedy sequence packing into 1000-token bins (window cumsum)."""
-    from simplepolygon_spark.operators.sampling import pack_sequences
-
-    d = _read(spark, sf_dir, "documents")
-    return pack_sequences(d, window_tokens=1000).orderBy("doc_id")
-
-
-def _q_pack_sequences_sql():
-    # mirrors sampling._n_tokens_col exactly: regex trim of ALL
-    # whitespace + explicit NULL/empty -> 0
-    return r"""
-        WITH t AS (SELECT doc_id,
-                          CASE WHEN regexp_replace(text, '^\s+|\s+$', '', 'g') IS NULL
-                                 OR regexp_replace(text, '^\s+|\s+$', '', 'g') = '' THEN 0
-                               ELSE CAST(len(regexp_split_to_array(
-                                      regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+')) AS INTEGER)
-                          END AS n_tokens
-                   FROM documents),
-        p AS (SELECT doc_id, n_tokens,
-                     COALESCE(sum(n_tokens) OVER (ORDER BY doc_id
-                              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS prefix
-              FROM t)
-        SELECT doc_id, n_tokens,
-               CAST(floor(prefix / 1000.0) AS BIGINT) AS bin_id,
-               CAST(prefix % 1000 AS BIGINT) AS bin_offset
-        FROM p
-    """
-
-
-def q_pack_sequences_sharded(spark, sf_dir):
-    """The 100 TB packing form: ONE hash exchange on a deterministic
-    shard key (doc_id mod 64), per-shard window cumsum — no
-    single-partition global sort anywhere in the plan (asserted by
-    tests/test_round3_hardening.py)."""
-    from simplepolygon_spark.operators.sampling import pack_sequences_sharded
-
-    d = _read(spark, sf_dir, "documents")
-    return pack_sequences_sharded(d, window_tokens=1000, shards=64).orderBy("doc_id")
-
-
-def _q_pack_sequences_sharded_sql():
-    return r"""
-        WITH t AS (SELECT doc_id,
-                          CAST(doc_id % 64 AS INTEGER) AS shard,
-                          CASE WHEN regexp_replace(text, '^\s+|\s+$', '', 'g') IS NULL
-                                 OR regexp_replace(text, '^\s+|\s+$', '', 'g') = '' THEN 0
-                               ELSE CAST(len(regexp_split_to_array(
-                                      regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+')) AS INTEGER)
-                          END AS n_tokens
-                   FROM documents),
-        p AS (SELECT doc_id, n_tokens, shard,
-                     COALESCE(sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id
-                              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS prefix
-              FROM t)
-        SELECT doc_id, n_tokens, shard,
-               CAST(shard AS BIGINT) * 4294967296 + CAST(floor(prefix / 1000.0) AS BIGINT) AS bin_id,
-               CAST(prefix % 1000 AS BIGINT) AS bin_offset
-        FROM p
-    """
-
-
-def q_decontaminate(spark, sf_dir):
-    """Train/benchmark overlap removal: docs whose normalized
-    fingerprint matches the benchmark slice (doc_id % 10 = 0) drop out
-    — including cross-id exact duplicates of benchmark docs."""
-    from simplepolygon_spark.operators.sampling import decontaminate
-
-    d = _read(spark, sf_dir, "documents")
-    bench = d.where(F.col("doc_id") % 10 == 0)
-    return decontaminate(d, bench).select("doc_id").orderBy("doc_id")
-
-
-def _q_decontaminate_sql():
-    norm = (
-        "md5(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'),"
-        " ' +', ' ', 'g')))"
-    )
-    # NOT EXISTS, not NOT IN: Spark's left_anti keeps rows whose join
-    # key matches nothing (NULL fingerprints survive), while NOT IN is
-    # NULL-poisoned — one NULL-text benchmark row would empty the whole
-    # result and silently diverge from the operator
-    return f"""
-        WITH fp AS (SELECT doc_id, {norm} AS f FROM documents)
-        SELECT doc_id FROM fp
-        WHERE NOT EXISTS (SELECT 1 FROM fp b
-                          WHERE b.doc_id % 10 = 0 AND b.f = fp.f)
-    """
-
-
-def q_decontaminate_ngram(spark, sf_dir):
-    """N-gram-overlap decontamination (VERDICT r4 #2): the benchmark is
-    a MID-DOCUMENT token span (tokens 10..40) of every 50th doc, so its
-    whole-text fingerprint matches nothing — exact-mode decontaminate
-    keeps everything, while the 13-gram rule drops the span's source
-    doc (and its planted exact duplicates), the embedded-contamination
-    case a real pipeline needs."""
-    from simplepolygon_spark.operators.sampling import decontaminate_ngrams
-
-    d = _read(spark, sf_dir, "documents")
-    toks = F.split(F.trim("text"), r"\s+")
-    bench = d.where((F.col("doc_id") % 50 == 0) & F.col("text").isNotNull()).select(
-        F.concat_ws(" ", F.slice(toks, 10, 31)).alias("text")
-    )
-    return decontaminate_ngrams(d, bench, n=13).select("doc_id").orderBy("doc_id")
-
-
-def _q_decontaminate_ngram_sql():
-    norm = (
-        "trim(regexp_replace(regexp_replace(lower({src}), '[^a-z0-9 ]', '', 'g'),"
-        " ' +', ' ', 'g'))"
-    )
-    grams = (
-        "list_transform(range(1, len(t) - 11), "
-        "i -> array_to_string(t[i:i+12], ' '))"
-    )
-    return f"""
-        WITH braw AS (
-          SELECT array_to_string(regexp_split_to_array(trim(text), '\\s+')[10:40], ' ') AS btext
-          FROM documents WHERE doc_id % 50 = 0 AND text IS NOT NULL
-        ),
-        bt AS (SELECT string_split({norm.format(src='btext')}, ' ') AS t FROM braw
-               WHERE {norm.format(src='btext')} <> ''),
-        bg AS (SELECT DISTINCT unnest({grams}) AS g FROM bt WHERE len(t) >= 13),
-        tt AS (SELECT doc_id, string_split({norm.format(src='text')}, ' ') AS t
-               FROM documents WHERE text IS NOT NULL
-                 AND {norm.format(src='text')} <> ''),
-        tg AS (SELECT doc_id, unnest({grams}) AS g FROM tt WHERE len(t) >= 13)
-        SELECT d.doc_id FROM documents d
-        WHERE NOT EXISTS (SELECT 1 FROM tg JOIN bg USING (g)
-                          WHERE tg.doc_id = d.doc_id)
-        ORDER BY doc_id
     """
 
 
@@ -1276,56 +1081,6 @@ def _q_dup_clusters_sql():
     """
 
 
-def q_leakage_split(spark, sf_dir):
-    """Leakage-safe train/eval split: the split key is the doc's
-    near-dup CLUSTER id (connected component of the verified MinHash
-    pair graph; singletons key on their own id), so near-duplicates can
-    never straddle the train/eval boundary — the failure mode of the
-    naive per-doc hash split.  Assignment is md5(seed:cluster_id)
-    compared against a fixed hex threshold; the oracle recomputes the
-    clusters with a recursive CTE and applies the bit-identical rule."""
-    from simplepolygon_spark.operators.dedup import minhash_dup_pairs
-    from simplepolygon_spark.operators.sampling import leakage_safe_split
-
-    d = _read(spark, sf_dir, "documents")
-    par = spark.sparkContext.defaultParallelism
-    return (
-        leakage_safe_split(
-            d,
-            minhash_dup_pairs(d, threshold=0.8, rebalance=par),
-            weights={"train": 0.9, "eval": 0.1},
-        )
-        .select("doc_id", "cluster_id", "split")
-        .orderBy("doc_id")
-    )
-
-
-def _q_leakage_split_sql():
-    from simplepolygon_spark.operators.sampling import split_hex_threshold
-
-    t_train = split_hex_threshold(0.9)
-    return f"""
-        WITH RECURSIVE pairs AS ({_q_minhash_sql()}),
-        edges AS (SELECT doc_a AS a, doc_b AS b FROM pairs
-                  UNION ALL
-                  SELECT doc_b AS a, doc_a AS b FROM pairs),
-        nodes AS (SELECT DISTINCT a AS node FROM edges),
-        reach(node, r) AS (
-          SELECT node, node FROM nodes
-          UNION
-          SELECT reach.node, e.b FROM reach JOIN edges e ON e.a = reach.r
-        ),
-        clus AS (SELECT node AS doc_id, min(r) AS cluster_id FROM reach GROUP BY node),
-        wc AS (
-          SELECT d.doc_id, coalesce(c.cluster_id, d.doc_id) AS cluster_id
-          FROM documents d LEFT JOIN clus c ON c.doc_id = d.doc_id)
-        SELECT doc_id, cluster_id,
-               CASE WHEN md5('split:' || CAST(cluster_id AS VARCHAR)) < '{t_train}'
-                    THEN 'train' ELSE 'eval' END AS split
-        FROM wc
-    """
-
-
 def q_simhash(spark, sf_dir):
     """SimHash banded near-dup pairs at max_hamming=3: with 4 bands of
     16 bits, hamming ≤ 3 pigeonholes at least one band intact, so the
@@ -1653,45 +1408,6 @@ def _q_fused_sql():
     """
 
 
-def q_token_budget(spark, sf_dir):
-    """Deterministic token-budgeted mixture sample: per lang, take docs
-    in (md5(id), id) order until 2000 tokens — the way training
-    mixtures are drawn against a token target, reproducible on any
-    cluster size (no seeded Bernoulli).  The engine computes the
-    running sum as a DISTRIBUTED PREFIX SUM (order-preserving
-    md5-prefix buckets → per-bucket subtotals → tiny exclusive prefix
-    → per-bucket local window + offset), so a domain holding most of
-    the corpus spreads over 256 reducers instead of serializing one;
-    the oracle is the plain one-window cumsum of the same contract
-    (operators/sampling.py)."""
-    from simplepolygon_spark.operators.sampling import token_budget_sample
-
-    d = _read(spark, sf_dir, "documents")
-    return token_budget_sample(d, default_budget=2000)
-
-
-def _q_token_budget_sql():
-    # token expression mirrors sampling._n_tokens_col (see
-    # _q_pack_sequences_sql); cum cast: DuckDB window sum(int) is
-    # HUGEINT, Spark's is BIGINT
-    return r"""
-        WITH t AS (SELECT doc_id, lang,
-                          CASE WHEN regexp_replace(text, '^\s+|\s+$', '', 'g') IS NULL
-                                 OR regexp_replace(text, '^\s+|\s+$', '', 'g') = '' THEN 0
-                               ELSE CAST(len(regexp_split_to_array(
-                                      regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+')) AS INTEGER)
-                          END AS n_tokens
-                   FROM documents),
-        c AS (SELECT doc_id, lang, n_tokens,
-                     sum(n_tokens) OVER (PARTITION BY lang
-                         ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id
-                         ROWS UNBOUNDED PRECEDING) AS cum
-              FROM t)
-        SELECT doc_id, lang, n_tokens, CAST(cum AS BIGINT) AS cum_tokens
-        FROM c WHERE cum <= 2000
-    """
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         "decompose_rings": q_decompose_rings,
@@ -1705,7 +1421,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "token_counts": q_token_counts,
         "chunks": q_chunks,
         "pii_redact": q_pii_redact,
-        "shuffle_export": q_shuffle_export,
         "adaptive_filter": q_adaptive_filter,
         "quantize": q_quantize,
         "length_percentiles": q_length_percentiles,
@@ -1718,24 +1433,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "top_ngrams": q_top_ngrams,
         "repetition": q_repetition,
         "hamming_dups": q_hamming_dups,
-        "stratified_sample": q_stratified_sample,
-        "pack_sequences": q_pack_sequences,
-        "pack_sequences_sharded": q_pack_sequences_sharded,
-        "decontaminate": q_decontaminate,
-        "decontaminate_ngram": q_decontaminate_ngram,
         "embedding_dups": q_embedding_dups,
         "embedding_dups_lsh": q_embedding_dups_lsh,
         "cosine_topk": q_cosine_topk,
         "minhash_pairs": q_minhash_pairs,
         "dup_clusters": q_dup_clusters,
-        "leakage_split": q_leakage_split,
         "simhash": q_simhash,
         "crosswalk": q_crosswalk,
         "crosswalk_relational": q_crosswalk_relational,
         "knn_arrow": q_knn_arrow,
         "ivf_topk": q_ivf_topk,
         "fused_validate_assign": q_fused_validate_assign,
-        "token_budget": q_token_budget,
     }
 
 
@@ -1751,7 +1459,6 @@ def oracle_sql() -> dict[str, str]:
         "token_counts": _q_token_counts_sql(),
         "chunks": _q_chunks_sql(),
         "pii_redact": _q_pii_redact_sql(),
-        "shuffle_export": _q_shuffle_export_sql(),
         "adaptive_filter": _q_adaptive_filter_sql(),
         "quantize": _q_quantize_sql(),
         "length_percentiles": _q_length_percentiles_sql(),
@@ -1764,23 +1471,16 @@ def oracle_sql() -> dict[str, str]:
         "top_ngrams": _q_top_ngrams_sql(),
         "repetition": _q_repetition_sql(),
         "hamming_dups": _q_hamming_dups_sql(),
-        "stratified_sample": _q_stratified_sample_sql(),
-        "pack_sequences": _q_pack_sequences_sql(),
-        "pack_sequences_sharded": _q_pack_sequences_sharded_sql(),
-        "decontaminate": _q_decontaminate_sql(),
-        "decontaminate_ngram": _q_decontaminate_ngram_sql(),
         "embedding_dups": _q_embedding_dups_sql(),
         "embedding_dups_lsh": _q_embedding_dups_lsh_sql(),
         "cosine_topk": _q_cosine_topk_sql(),
         "decompose_rings": _q_decompose_rings_sql(),
         "minhash_pairs": _q_minhash_sql(),
         "dup_clusters": _q_dup_clusters_sql(),
-        "leakage_split": _q_leakage_split_sql(),
         "simhash": _q_simhash_sql(),
         "crosswalk": _q_crosswalk_sql(),
         "crosswalk_relational": _q_crosswalk_sql(),
         "knn_arrow": _q_knn_sql(),
         "ivf_topk": _q_ivf_sql(),
         "fused_validate_assign": _q_fused_sql(),
-        "token_budget": _q_token_budget_sql(),
     }

@@ -163,7 +163,6 @@ def main() -> None:
         "length_percentiles",
         "quality",
         "pii_redact",
-        "shuffle_export",
         "embedding_dups",
         "embedding_dups_lsh",
         "ngram_jaccard_lsh",

@@ -236,8 +236,7 @@ def minhash_doc_sigs(
 
     # NULL text has no signature: exclude it SQL-side (the vectorized
     # kernel would crash on None) — NULL-text rows simply never join
-    # the dedup candidate graph, consistent with the anti-join NULL
-    # contract in sampling.decontaminate
+    # the dedup candidate graph
     return (
         docs.select(*in_cols)
         .where(F.col("text").isNotNull())
@@ -602,8 +601,7 @@ def simhash_64(docs: DataFrame) -> DataFrame:
 
     # NULL text has no signature: exclude it SQL-side (the vectorized
     # kernel would crash on None) — NULL-text rows simply never join
-    # the dedup candidate graph, consistent with the anti-join NULL
-    # contract in sampling.decontaminate
+    # the dedup candidate graph
     return (
         docs.select("doc_id", "text")
         .where(F.col("text").isNotNull())

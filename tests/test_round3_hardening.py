@@ -1,22 +1,13 @@
-"""Round-3 hardening: inverted-bbox guard, empty-text token counts,
-sharded sequence packing (plan-asserted), skew-hardened stratified
-sampling, pointer-doubling cluster convergence, threshold-derived LSH
-banding."""
+"""Round-3 hardening: inverted-bbox guard, pointer-doubling cluster
+convergence, threshold-derived LSH banding."""
 
 from __future__ import annotations
-
-import hashlib
 
 import pytest
 
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"
-
-
-@pytest.fixture(scope="module")
-def docs(spark):
-    return spark.read.parquet(f"{SF}/documents.parquet").cache()
 
 
 def _plan(df) -> str:
@@ -49,106 +40,6 @@ def test_tile_cells_normal_bbox_still_works(spark):
     rows = tile_cells_df(ok, level=12).collect()
     assert len(rows) >= 1
     assert all(r.image_id == "t0" for r in rows)
-
-
-# ---------------------------------------------------------------------------
-# pack_sequences: empty text = 0 tokens; sharded form
-# ---------------------------------------------------------------------------
-
-
-def test_pack_sequences_empty_text_zero_tokens(spark):
-    from simplepolygon_spark.operators.sampling import (
-        pack_sequences,
-        pack_sequences_sharded,
-    )
-
-    d = spark.createDataFrame(
-        [(0, "one two three"), (1, ""), (2, "   "), (3, "x"),
-         (4, "\t\n \t"), (5, None), (6, "\ta\tb\n")],
-        "doc_id long, text string",
-    )
-    rows = {r.doc_id: r for r in pack_sequences(d, window_tokens=10).collect()}
-    assert rows[0].n_tokens == 3
-    assert rows[1].n_tokens == 0
-    assert rows[2].n_tokens == 0
-    assert rows[3].n_tokens == 1
-    assert rows[4].n_tokens == 0   # tabs/newlines only — not just spaces
-    assert rows[5].n_tokens == 0   # NULL text must not yield -1
-    assert rows[6].n_tokens == 2   # tab-separated tokens, trimmed ends
-    # a zero-token doc consumes no budget: doc 3's offset is 3, not 5
-    assert rows[3].bin_offset == 3
-    srows = {
-        r.doc_id: r
-        for r in pack_sequences_sharded(d, window_tokens=10, shards=1).collect()
-    }
-    assert [srows[i].n_tokens for i in range(7)] == [3, 0, 0, 1, 0, 0, 2]
-
-
-def test_pack_sequences_sharded_matches_per_shard_recompute(spark, docs):
-    from simplepolygon_spark.operators.sampling import pack_sequences_sharded
-
-    W, S = 500, 8
-    got = (
-        pack_sequences_sharded(docs.limit(300), window_tokens=W, shards=S)
-        .orderBy("doc_id")
-        .collect()
-    )
-    # recompute greedily per shard in plain python
-    by_shard: dict[int, int] = {}
-    for r in sorted(got, key=lambda r: r.doc_id):
-        sh = r.doc_id % S
-        assert r.shard == sh
-        prefix = by_shard.get(sh, 0)
-        assert r.bin_id == sh * (1 << 32) + prefix // W
-        assert r.bin_offset == prefix % W
-        by_shard[sh] = prefix + r.n_tokens
-
-
-def test_pack_sequences_sharded_has_no_global_sort(spark, docs):
-    """The scale form must not contain a single-partition global sort;
-    the oracle (global) form does — that asymmetry is the point."""
-    from simplepolygon_spark.operators.sampling import (
-        pack_sequences,
-        pack_sequences_sharded,
-    )
-
-    # no .limit() here — GlobalLimit itself injects a SinglePartition
-    # exchange and would mask what this test asserts about the window
-    sharded_plan = _plan(pack_sequences_sharded(docs, window_tokens=500, shards=8))
-    global_plan = _plan(pack_sequences(docs, window_tokens=500))
-    assert "SinglePartition" not in sharded_plan
-    assert "hashpartitioning" in sharded_plan
-    assert "SinglePartition" in global_plan
-
-
-# ---------------------------------------------------------------------------
-# stratified_sample: skew hardening keeps exactness
-# ---------------------------------------------------------------------------
-
-
-def test_stratified_sample_zipf_stratum_exact(spark):
-    """One giant stratum (Zipf-ish) — the hardened two-phase form must
-    return exactly the deterministic md5-order top-n per stratum."""
-    from simplepolygon_spark.operators.sampling import stratified_sample
-
-    rows = [(i, "hot" if i % 10 else "cold") for i in range(5000)]
-    df = spark.createDataFrame(rows, "doc_id long, lang string").repartition(16)
-    n = 12
-    got = sorted(
-        (r.lang, r.doc_id)
-        for r in stratified_sample(df, "lang", n).collect()
-    )
-    # oracle: python md5 ranking, same key expression (md5 of the id string)
-    expect = []
-    for lang in ("hot", "cold"):
-        members = [i for i, l in rows if l == lang]
-        ranked = sorted(members, key=lambda i: (hashlib.md5(str(i).encode()).hexdigest(), i))
-        expect += [(lang, i) for i in ranked[:n]]
-    assert got == sorted(expect)
-    # and the plan shows the salted local pass (two window exchanges:
-    # one on (stratum, pid), one on stratum alone)
-    plan = _plan(stratified_sample(df, "lang", n))
-    assert plan.count("Window") >= 2
 
 
 # ---------------------------------------------------------------------------
@@ -555,31 +446,6 @@ def test_lsh_banding_guards(spark):
     e = spark.createDataFrame([(1, [0.1, 0.2])], "vec_id long, v array<double>")
     with pytest.raises(ValueError, match=r"num_planes .* must be in \[1, 64\]"):
         srp_signatures(e, num_planes=128)
-
-
-def test_stratified_sample_preserves_user_rn_column(spark):
-    from simplepolygon_spark.operators.sampling import stratified_sample
-
-    df = spark.createDataFrame(
-        [(i, i % 3, f"rn{i}") for i in range(30)],
-        "doc_id long, stratum int, rn string",
-    )
-    out = stratified_sample(df, "stratum", n_per_stratum=2, id_col="doc_id")
-    rows = out.collect()
-    assert len(rows) == 6
-    assert all(r.rn == f"rn{r.doc_id}" for r in rows)  # user column intact
-
-
-def test_decontaminate_preserves_user_fingerprint_column(spark):
-    from simplepolygon_spark.operators.sampling import decontaminate
-
-    train = spark.createDataFrame(
-        [("t1", "alpha beta", "userfp1"), ("t2", "gamma delta", "userfp2")],
-        "doc_id string, text string, fingerprint string",
-    )
-    bench = spark.createDataFrame([("b1", "alpha beta")], "doc_id string, text string")
-    rows = decontaminate(train, bench).collect()
-    assert [(r.doc_id, r.fingerprint) for r in rows] == [("t2", "userfp2")]
 
 
 def test_crosswalk_kernel_rejects_inverted_bbox(spark):

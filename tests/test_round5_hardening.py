@@ -8,7 +8,6 @@ Covers:
   * ngram_jaccard_lsh block attach inside the signature pass +
     dup_clusters observe()-fused changed-check (VERDICT r4 #3)
   * whitened embedding dedup composition (VERDICT r4 #4)
-  * n-gram-overlap decontamination (VERDICT r4 #2)
 """
 
 from __future__ import annotations
@@ -169,62 +168,6 @@ def test_dup_clusters_converges_on_chain(spark):
     )
     out = {r.doc_id: r.cluster_id for r in dup_clusters(pairs).collect()}
     assert out == {i: 0 for i in range(13)}
-
-
-# ---------------------------------------------------------------------------
-# n-gram-overlap decontamination (VERDICT r4 #2)
-# ---------------------------------------------------------------------------
-
-
-def _decon_corpus(spark):
-    """12 clean docs + one with a benchmark 13-gram planted MID-document
-    (the case whole-text fingerprinting misses) + exact-copy + NULL."""
-    bench_text = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu nu"
-    rows = [
-        (i, f"training words number {i} " + " ".join(f"tok{i}x{j}" for j in range(20)))
-        for i in range(10)
-    ]
-    # doc 50: benchmark text embedded mid-page, surrounded by own words
-    rows.append((50, "some page header words here " + bench_text + " and a trailing footer"))
-    # doc 51: EXACT copy of the benchmark row (both modes drop it)
-    rows.append((51, bench_text))
-    # doc 52: shares only 12 of the 13 words contiguously -> must SURVIVE
-    rows.append(
-        (52, "beta gamma delta epsilon zeta eta theta iota kappa lambda mu nu other")
-    )
-    rows.append((60, None))  # NULL text survives
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    bench = spark.createDataFrame([(bench_text,), ("short bench",)], "text string")
-    return docs, bench
-
-
-def test_decontaminate_ngrams_catches_embedded_contamination(spark):
-    from simplepolygon_spark.operators.sampling import (
-        decontaminate,
-        decontaminate_ngrams,
-    )
-
-    docs, bench = _decon_corpus(spark)
-    exact = sorted(r.doc_id for r in decontaminate(docs, bench).collect())
-    ngram = sorted(r.doc_id for r in decontaminate_ngrams(docs, bench, n=13).collect())
-    # exact mode keeps the embedded-contamination doc (50); n-gram drops it
-    assert 50 in exact and 50 not in ngram
-    # both drop the exact copy
-    assert 51 not in exact and 51 not in ngram
-    # 12-of-13 contiguous overlap is NOT a 13-gram hit
-    assert 52 in ngram
-    # NULL text and clean docs survive both
-    assert 60 in ngram and all(i in ngram for i in range(10))
-    # short benchmark rows (< n tokens) block nothing in n-gram mode
-    assert sorted(set(range(10)) | {52, 60}) == ngram
-
-
-def test_decontaminate_ngrams_output_columns_intact(spark):
-    from simplepolygon_spark.operators.sampling import decontaminate_ngrams
-
-    docs, bench = _decon_corpus(spark)
-    out = decontaminate_ngrams(docs, bench)
-    assert out.columns == docs.columns  # no helper columns leak
 
 
 # ---------------------------------------------------------------------------

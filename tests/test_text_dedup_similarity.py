@@ -274,169 +274,6 @@ def test_dup_clusters_matches_union_find(spark):
     assert got == expect
 
 
-def test_pack_sequences_invariants(spark, docs):
-    """Packing invariants: offsets inside the window, bins contiguous
-    and monotone in doc order, prefix telescopes exactly."""
-    from simplepolygon_spark.operators.sampling import pack_sequences
-
-    W = 500
-    rows = pack_sequences(docs.limit(200), window_tokens=W).orderBy("doc_id").collect()
-    prefix = 0
-    last_bin = 0
-    for r in rows:
-        assert 0 <= r.bin_offset < W
-        assert r.bin_id == prefix // W
-        assert r.bin_offset == prefix % W
-        assert r.bin_id >= last_bin  # bins never go backwards
-        last_bin = r.bin_id
-        prefix += r.n_tokens
-
-
-def test_stratified_sample_invariants(spark, docs):
-    """≤ n rows per stratum, subset of input, and deterministic across
-    invocations (md5-order, not RNG)."""
-    from simplepolygon_spark.operators.sampling import stratified_sample
-
-    a = stratified_sample(docs, "lang", 7).select("doc_id", "lang").collect()
-    b = stratified_sample(docs, "lang", 7).select("doc_id", "lang").collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
-    from collections import Counter
-
-    per = Counter(r.lang for r in a)
-    assert all(c <= 7 for c in per.values())
-    all_ids = {r.doc_id for r in docs.select("doc_id").collect()}
-    assert {r.doc_id for r in a} <= all_ids
-
-
-def test_decontaminate_removes_exact_dupes_of_benchmark(spark, docs):
-    """Every doc sharing a fingerprint with the benchmark slice is
-    gone; every other doc survives."""
-    from simplepolygon_spark.operators.sampling import decontaminate
-    from simplepolygon_spark.operators.text import fingerprints
-
-    bench = docs.where(F.col("doc_id") % 7 == 0)
-    kept = {r.doc_id for r in decontaminate(docs, bench).select("doc_id").collect()}
-    fps = {r.doc_id: r.fingerprint for r in fingerprints(docs).collect()}
-    bench_fps = {fps[d] for d in fps if d % 7 == 0}
-    for d, f in fps.items():
-        assert (d in kept) == (f not in bench_fps)
-
-
-# ---------------------------------------------------------------------------
-# token_budget_sample — deterministic token-budgeted mixture sampling
-# ---------------------------------------------------------------------------
-
-
-def _tbs_docs(spark):
-    rows = []
-    for i in range(60):
-        dom = ["en", "de", "code"][i % 3]
-        body = " ".join(f"w{j}" for j in range(5 + (i % 7)))
-        rows.append((i, dom, body))
-    rows += [(100, "en", None), (101, "en", "   \t  "), (102, "nobudget", "x y z")]
-    return spark.createDataFrame(rows, "doc_id long, lang string, text string")
-
-
-def _tbs_naive(spark, docs, budgets, default_budget=0):
-    """Single-window reference implementation of the same contract."""
-    from pyspark.sql import Window as W
-
-    from simplepolygon_spark.operators.sampling import _n_tokens_col
-
-    h = F.md5(F.col("doc_id").cast("string"))
-    w = (
-        W.partitionBy("lang")
-        .orderBy(h, "doc_id")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    t = docs.select("doc_id", "lang", _n_tokens_col().alias("n_tokens")).withColumn(
-        "cum_tokens", F.sum("n_tokens").over(w)
-    )
-    rows = []
-    for r in t.collect():
-        b = budgets.get(r.lang, default_budget)
-        if r.cum_tokens <= b:
-            rows.append((r.doc_id, r.lang, r.n_tokens, r.cum_tokens))
-    return sorted(rows)
-
-
-def test_token_budget_sample_equals_naive_window(spark):
-    from simplepolygon_spark.operators.sampling import token_budget_sample
-
-    docs = _tbs_docs(spark)
-    budgets = {"en": 60, "de": 45, "code": 10**9}
-    got = sorted(
-        tuple(r) for r in token_budget_sample(docs, budgets).collect()
-    )
-    assert got == _tbs_naive(spark, docs, budgets)
-    # the budget actually bit: en and de are strict subsets, code is all
-    doms = {d for (_, d, _, _) in got}
-    assert {"en", "de", "code"} == doms
-    n_by = {d: sum(1 for g in got if g[1] == d) for d in doms}
-    assert n_by["code"] == 20  # unbounded budget takes the whole domain
-    assert 0 < n_by["en"] < 22 and 0 < n_by["de"] < 20
-    # absent-domain fallback is 0 -> dropped
-    assert not [g for g in got if g[1] == "nobudget"]
-
-
-def test_token_budget_sample_prefix_semantics(spark):
-    """The selected set is the maximal PREFIX: the first overflowing doc
-    excludes everything after it, even a small doc that would fit."""
-    from simplepolygon_spark.operators.sampling import token_budget_sample
-
-    # md5 order for ids 0..3 within one domain; craft token counts so
-    # the second doc in md5 order overflows
-    docs = spark.createDataFrame(
-        [(i, "en", " ".join(["w"] * n)) for i, n in [(0, 3), (1, 3), (2, 50), (3, 3)]],
-        "doc_id long, lang string, text string",
-    )
-    out = token_budget_sample(docs, {"en": 10})
-    got = sorted(r.doc_id for r in out.collect())
-    naive = _tbs_naive(spark, docs, {"en": 10})
-    assert got == sorted(r[0] for r in naive)
-    # and the cut is a prefix in md5 order, not a knapsack fit
-    import hashlib
-
-    order = sorted(range(4), key=lambda i: hashlib.md5(str(i).encode()).hexdigest())
-    sel = set(got)
-    seen_out = False
-    for i in order:
-        if i not in sel:
-            seen_out = True
-        else:
-            assert not seen_out, f"doc {i} selected after a gap — not a prefix"
-
-
-def test_token_budget_sample_bucket_invariance_and_guards(spark):
-    import pytest as _pytest
-
-    from simplepolygon_spark.operators.sampling import token_budget_sample
-
-    docs = _tbs_docs(spark)
-    budgets = {"en": 60, "de": 45, "code": 70}
-    a = sorted(tuple(r) for r in token_budget_sample(docs, budgets, n_buckets=256).collect())
-    b = sorted(tuple(r) for r in token_budget_sample(docs, budgets, n_buckets=1).collect())
-    c = sorted(tuple(r) for r in token_budget_sample(docs, budgets, n_buckets=7).collect())
-    assert a == b == c
-    with _pytest.raises(ValueError, match="n_buckets"):
-        token_budget_sample(docs, budgets, n_buckets=0)
-    with _pytest.raises(ValueError, match="column"):
-        token_budget_sample(docs.withColumn("__tb_h", F.lit(1)), budgets)
-
-
-def test_token_budget_sample_null_domain_raises(spark):
-    import pytest as _pytest
-
-    from simplepolygon_spark.operators.sampling import token_budget_sample
-
-    docs = spark.createDataFrame(
-        [(0, "en", "a b c"), (1, None, "d e f")],
-        "doc_id long, lang string, text string",
-    )
-    with _pytest.raises(Exception, match="NULL lang"):
-        token_budget_sample(docs, {"en": 100}).collect()
-
-
 def test_token_length_percentiles_numpy_and_nulls(spark):
     """Exact per-group percentiles equal numpy's linear interpolation;
     NULL-text docs are excluded from the quantile but counted in
