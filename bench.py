@@ -5,7 +5,7 @@ Headline queries: the flagship spatial-join + tiling path (decompose →
 interval index → PIP join → salted agg) over 100k generated images and
 a footprint grid (9216 polygons for decompose, 8×8 for the join dim
 side), plus the operator families (kNN, crosswalk,
-payload validation, interval join, salted agg, dedup, ANN, text) at
+payload validation, interval join, salted agg, dedup, ANN) at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1).
 
 Env:
@@ -159,10 +159,6 @@ def main() -> None:
     for name in (
         "minhash_pairs",
         "cosine_topk",
-        "token_counts",
-        "length_percentiles",
-        "quality",
-        "pii_redact",
         "embedding_dups",
         "embedding_dups_lsh",
         "ngram_jaccard_lsh",

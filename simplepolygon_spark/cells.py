@@ -63,7 +63,12 @@ def parent_cell(cell: np.ndarray, from_level: int, to_level: int) -> np.ndarray:
 
 
 def cell_range_at_max(cell: np.ndarray, level: int, max_level: int = MAX_LEVEL):
-    """[lo, hi] Morton range at ``max_level`` covered by ``cell`` at ``level``."""
+    """[lo, hi] Morton range at ``max_level`` covered by ``cell`` at ``level``.
+
+    Raises ``ValueError`` when ``level > max_level`` (the range would be
+    empty) or ``max_level > 31`` (a max-level code would overflow int64)."""
+    if level > max_level or max_level > 31:
+        raise ValueError(f"cell level {level} must be at most max_level {max_level}, itself at most 31")
     shift = np.int64(2 * (max_level - level))
     c = np.asarray(cell, np.int64)
     return c << shift, ((c + 1) << shift) - 1

@@ -60,6 +60,23 @@ def test_parent_child_prefix_relation():
         assert np.all((lo <= fine) & (fine <= hi))
 
 
+@pytest.mark.parametrize("level, max_level", [(17, 16), (12, 33)])
+def test_cell_range_rejects_out_of_range_levels(level, max_level):
+    """A level finer than max_level gives every cell the empty range
+    (0, -1); a max level over 31 overflows the int64 Morton code."""
+    with pytest.raises(ValueError, match=rf"level {level} .* max_level {max_level}"):
+        cell_range_at_max(np.array([5]), level, max_level)
+
+
+def test_build_interval_index_rejects_cover_level_above_max():
+    from simplepolygon_spark.operators.tiling import build_interval_index
+
+    square = [[0, 0], [10, 0], [10, 10], [0, 10], [0, 0]]
+    rows = [{"polygon_id": "sq", "ring_index": 0, "coords": square}]
+    with pytest.raises(ValueError, match=r"level 17 .* max_level 16"):
+        build_interval_index(rows, cover_level=17)
+
+
 def test_cell_sql_matches_numpy_in_duckdb():
     lon, lat = _grid_points(500)
     con = duckdb.connect()
