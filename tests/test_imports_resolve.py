@@ -105,8 +105,8 @@ def test_walker_sees_function_local_imports():
 # The paper's engine and the benchmark that drives it.  Their package
 # import closure (module-level and function-local, with the parent
 # packages each import runs) must stay inside SPATIAL: the off-paper
-# families (dedup, similarity, stats) may import the engine, never the
-# reverse.
+# families (dedup, similarity, text, stats) may import the
+# engine, never the reverse.
 SPATIAL_ROOTS = [
     *sorted((REPO / "perfbench").glob("*.py")),
     *(

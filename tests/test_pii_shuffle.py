@@ -1,15 +1,12 @@
-"""redact_pii (typed-placeholder PII scrub + audit count) and
-shuffle_shards (deterministic global corpus shuffle + shard export).
+"""redact_pii (typed-placeholder PII scrub + audit count).
 
-Both are per-row deterministic contracts: redaction must be exact on
-planted PII, idempotent, and NULL-safe; shard/pos must be a pure
-function of (seed, id) with contiguous 0-based positions per shard.
+A per-row deterministic contract: redaction must be exact on planted
+PII, idempotent, and NULL-safe.
 """
 
 import pytest
 from pyspark.sql import functions as F
 
-from simplepolygon_spark.operators.sampling import shuffle_shards
 from simplepolygon_spark.operators.text import redact_pii
 
 
@@ -78,77 +75,3 @@ def test_redact_plan_has_no_shuffle(spark):
     d = _docs(spark, [(1, "x")])
     plan = redact_pii(d)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
-
-
-# ------------------------------------------------------------ shuffle_shards
-
-
-def _corpus(spark, n=200):
-    return spark.range(n).select(
-        F.col("id").alias("doc_id"), F.lit("t").alias("text")
-    )
-
-
-def test_shuffle_deterministic_across_runs(spark):
-    a = shuffle_shards(_corpus(spark), n_shards=8).orderBy("doc_id").collect()
-    b = (
-        shuffle_shards(_corpus(spark).repartition(7), n_shards=8)
-        .orderBy("doc_id")
-        .collect()
-    )
-    assert [(r["shard"], r["pos"]) for r in a] == [(r["shard"], r["pos"]) for r in b]
-
-
-def test_positions_contiguous_zero_based_per_shard(spark):
-    out = shuffle_shards(_corpus(spark), n_shards=4)
-    per = (
-        out.groupBy("shard")
-        .agg(F.min("pos").alias("lo"), F.max("pos").alias("hi"), F.count("*").alias("n"))
-        .collect()
-    )
-    assert len(per) == 4  # 200 uniform docs hit all 4 shards
-    for r in per:
-        assert r["lo"] == 0 and r["hi"] == r["n"] - 1
-
-
-def test_pos_follows_shuffle_key_order(spark):
-    rows = shuffle_shards(_corpus(spark, 100), n_shards=2).collect()
-    for s in (0, 1):
-        ordered = sorted(
-            [r for r in rows if r["shard"] == s],
-            key=lambda r: (r["shuffle_key"], r["doc_id"]),
-        )
-        assert [r["pos"] for r in ordered] == list(range(len(ordered)))
-
-
-def test_seed_changes_order(spark):
-    a = shuffle_shards(_corpus(spark), seed="a").orderBy("doc_id").collect()
-    b = shuffle_shards(_corpus(spark), seed="b").orderBy("doc_id").collect()
-    assert [(r["shard"], r["pos"]) for r in a] != [(r["shard"], r["pos"]) for r in b]
-
-
-def test_single_shard_is_total_order(spark):
-    out = shuffle_shards(_corpus(spark, 50), n_shards=1)
-    assert out.where(F.col("shard") != 0).count() == 0
-    assert sorted(r["pos"] for r in out.collect()) == list(range(50))
-
-
-def test_shuffle_guards(spark):
-    with pytest.raises(ValueError, match="n_shards"):
-        shuffle_shards(_corpus(spark), n_shards=0)
-    with pytest.raises(ValueError, match="already has column"):
-        shuffle_shards(_corpus(spark).withColumn("pos", F.lit(1)))
-
-
-def test_shuffle_plan_single_exchange(spark):
-    # one hash exchange on the shard key feeds the per-shard window
-    # sort; no global single-partition sort anywhere
-    plan = (
-        shuffle_shards(_corpus(spark), n_shards=8)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert plan.count("Exchange hashpartitioning") == 1
-    assert "Exchange SinglePartition" not in plan
-    assert "rangepartitioning" not in plan

@@ -22,6 +22,12 @@ from simplepolygon_spark.operators.similarity import (
     ivf_topk,
     kmeans_centroids,
 )
+from simplepolygon_spark.operators.text import (
+    fingerprints,
+    lang_id,
+    quality_scores,
+    token_counts,
+)
 
 SF = "/root/testdata/sf0.001"
 
@@ -34,6 +40,41 @@ def docs(spark):
 @pytest.fixture(scope="module")
 def emb(spark):
     return spark.read.parquet(f"{SF}/embeddings.parquet").cache()
+
+
+def test_token_counts_vs_duckdb(docs):
+    got = {r.doc_id: (r.n_tokens, r.n_pieces) for r in token_counts(docs).collect()}
+    con = duckdb.connect()
+    exp = {
+        r[0]: (r[1], r[2])
+        for r in con.execute(
+            f"""SELECT doc_id,
+                       len(regexp_split_to_array(trim(text), '\\s+')) AS n_tokens,
+                       len(regexp_extract_all(text, '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\\s]')) AS n_pieces
+                FROM '{SF}/documents.parquet'"""
+        ).fetchall()
+    }
+    assert got == exp
+
+
+def test_fingerprints_vs_duckdb(docs):
+    got = {r.doc_id: r.fingerprint for r in fingerprints(docs).collect()}
+    con = duckdb.connect()
+    exp = dict(
+        con.execute(
+            f"""SELECT doc_id, md5(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'), ' +', ' ', 'g')))
+                FROM '{SF}/documents.parquet'"""
+        ).fetchall()
+    )
+    assert got == exp
+
+
+def test_quality_and_lang_deterministic(docs):
+    q1 = sorted(map(tuple, quality_scores(docs).collect()))
+    q2 = sorted(map(tuple, quality_scores(docs).collect()))
+    assert q1 == q2
+    langs = {r.lang_guess for r in lang_id(docs).collect()}
+    assert langs <= {"en", "de", "fr", "es", "zh", "und"}
 
 
 def test_exact_dup_groups(spark, docs):
@@ -231,6 +272,50 @@ def test_dup_clusters_matches_union_find(spark):
         union(a, b)
     expect = {x: find(x) for x in parent}
     assert got == expect
+
+
+def test_token_length_percentiles_numpy_and_nulls(spark):
+    """Exact per-group percentiles equal numpy's linear interpolation;
+    NULL-text docs are excluded from the quantile but counted in
+    n_docs; the aggregate is partial (map-side combined), never a
+    single-partition window."""
+    import numpy as np
+
+    from simplepolygon_spark.operators.text import token_length_percentiles
+
+    rows = [(i, "en", "w " * (i + 1)) for i in range(10)]  # 1..10 tokens
+    rows += [(10, "en", None), (11, "de", "a b c"), (12, "de", "a b c d e f g")]
+    docs = spark.createDataFrame(rows, "doc_id long, lang string, text string")
+    out = {
+        r.lang: r.asDict()
+        for r in token_length_percentiles(docs, probs=(0.5, 0.9)).collect()
+    }
+    en = np.arange(1, 11, dtype=float)
+    assert out["en"]["p50"] == np.percentile(en, 50)
+    assert out["en"]["p90"] == np.percentile(en, 90)
+    assert out["en"]["n_docs"] == 11  # NULL text counted in rows
+    assert out["de"]["p50"] == 5.0 and out["de"]["n_docs"] == 2
+
+    plan = token_length_percentiles(docs)._jdf.queryExecution().executedPlan().toString()
+    assert "partial_percentile" in plan, plan[:2000]
+
+
+def test_token_length_percentiles_approx_mode(spark):
+    """approx=True (KLL sketch at accuracy 10000): estimates track the
+    exact per-group percentiles within a tight band on the test corpus
+    — the unbounded-value-domain escape hatch the exact map-state
+    aggregate can't offer."""
+    from simplepolygon_spark.operators.text import token_length_percentiles
+
+    docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
+    exact = {r.lang: r for r in token_length_percentiles(docs).collect()}
+    appr = {r.lang: r for r in token_length_percentiles(docs, approx=True).collect()}
+    assert exact.keys() == appr.keys()
+    for lang in exact:
+        assert appr[lang].n_docs == exact[lang].n_docs  # counts stay exact
+        for c in ("p10", "p25", "p50", "p75", "p90"):
+            e, a = getattr(exact[lang], c), getattr(appr[lang], c)
+            assert abs(a - e) <= max(2.0, 0.05 * e), (lang, c, e, a)
 
 
 def test_dup_clusters_driver_path_equals_distributed(spark, docs):
