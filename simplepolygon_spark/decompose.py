@@ -23,6 +23,7 @@ parallelism lives in simplepolygon_spark.operators.decompose.
 
 from __future__ import annotations
 
+from collections import deque
 from typing import Any
 
 import numpy as np
@@ -251,7 +252,14 @@ def decompose(rings: list) -> list[dict[str, Any]]:
                     isects[l][6] = nxt
 
     # --- queue seeding (src/index.ts:283-330) ---------------------------
-    queue: list[list] = []  # [isect, parent, winding]
+    # the reference's `before` is the first isect whose successor is
+    # `left`: one map of each isect's first predecessor, not a scan
+    first_pred: dict[int, int] = {}
+    for k, it in enumerate(isects):
+        for succ in (it[5], it[6]):
+            if succ is not None:
+                first_pred.setdefault(succ, k)
+    queue: list[list] = []  # [isect, parent, winding, live]
     i_run = 0
     for j in range(num_rings):
         left = i_run
@@ -262,19 +270,27 @@ def decompose(rings: list) -> list[dict[str, Any]]:
         after = isects[left][6]
         if after is None:
             raise DecomposeError("Next intersection not defined")
-        before = 0
-        for k in range(len(isects)):
-            if isects[k][5] == left or isects[k][6] == left:
-                before = k
-                break
+        before = first_pred.get(left, 0)
         winding = (
             1
             if is_convex(isects[before][0], isects[left][0], isects[after][0], True)
             else -1
         )
-        queue.append([left, -1, winding])
+        queue.append([left, -1, winding, True])
     # Q1: JS sorts with string-coerced array comparison, descending
     queue.sort(key=lambda q: _js_coord_string(isects[q[0]][0]), reverse=True)
+    # lazy deletion: the walk's "remove nxt from the queue" marks the
+    # earliest live entry for nxt dead, and pop skips dead entries. The
+    # live entries of each isect, in queue order: removal takes the
+    # front, and a live pop (the queue's last live entry) the back.
+    pending: dict[int, deque] = {}
+    for q in queue:
+        pending.setdefault(q[0], deque()).append(q)
+
+    def push(isect: int, parent: int, winding: int) -> None:
+        q = [isect, parent, winding, True]
+        queue.append(q)
+        pending.setdefault(isect, deque()).append(q)
 
     # --- the walk (src/index.ts:332-519) --------------------------------
     # hard step bound (defense in depth behind the coincident-point
@@ -286,7 +302,10 @@ def decompose(rings: list) -> list[dict[str, Any]]:
     steps = 0
     out: list[dict[str, Any]] = []
     while queue:
-        start_isect, cur_parent, cur_winding = queue.pop()
+        start_isect, cur_parent, cur_winding, live = queue.pop()
+        if not live:
+            continue
+        pending[start_isect].pop()
         cur_ring_idx = len(out)
         coords = [list(isects[start_isect][0])]
         cur = start_isect
@@ -311,10 +330,8 @@ def decompose(rings: list) -> list[dict[str, Any]]:
                 )
             coords.append(list(isects[nxt][0]))
             # remove nxt from the queue if pending (src/index.ts:393-404)
-            for qi in range(len(queue)):
-                if queue[qi][0] == nxt:
-                    del queue[qi]
-                    break
+            if pending.get(nxt):
+                pending[nxt].popleft()[3] = False
             it = isects[nxt]
             if walking == it[1]:
                 walking = it[2]
@@ -326,9 +343,9 @@ def decompose(rings: list) -> list[dict[str, Any]]:
                     if is_convex(
                         isects[cur][0], it[0], isects[nxt2][0], cur_winding == 1
                     ):
-                        queue.append([nxt, cur_parent, -cur_winding])
+                        push(nxt, cur_parent, -cur_winding)
                     else:
-                        queue.append([nxt, cur_ring_idx, cur_winding])
+                        push(nxt, cur_ring_idx, cur_winding)
                 cur = nxt
                 nxt = it[6]
             else:
@@ -341,9 +358,9 @@ def decompose(rings: list) -> list[dict[str, Any]]:
                     if is_convex(
                         isects[cur][0], it[0], isects[nxt1][0], cur_winding == 1
                     ):
-                        queue.append([nxt, cur_parent, -cur_winding])
+                        push(nxt, cur_parent, -cur_winding)
                     else:
-                        queue.append([nxt, cur_ring_idx, cur_winding])
+                        push(nxt, cur_ring_idx, cur_winding)
                 cur = nxt
                 nxt = it[5]
             if nxt is None:

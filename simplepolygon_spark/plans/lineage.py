@@ -25,11 +25,13 @@ from functools import reduce
 from operator import xor
 
 import pyarrow as pa
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 LINEAGE_SUBDIR = "_lineage"
 DATA_SUBDIR = "data"
+LINEAGE_SCHEMA = "part_id int, run_id string, n_rows long, n_bytes long, checksum long"
 
 
 def with_part_id(df: DataFrame, id_col: str, num_parts: int) -> DataFrame:
@@ -39,19 +41,29 @@ def with_part_id(df: DataFrame, id_col: str, num_parts: int) -> DataFrame:
     )
 
 
-def done_part_ids(spark: SparkSession, out_dir: str) -> set[int]:
-    from pyspark.errors import AnalysisException
+def _lineage_log(spark: SparkSession, out_dir: str) -> DataFrame | None:
+    """The lineage log under ``out_dir``, or None when there is none yet.
 
+    Existence is one Hadoop ``FileSystem.exists`` call on the driver: no
+    Spark job, and no failing analysis on a fresh directory.  The read
+    names the schema, so a log directory with no committed file yet (a
+    first commit that died mid-write leaves only ``_temporary``) reads
+    as empty.  Every other failure (corrupt files, transient storage
+    errors) propagates: silently reporting an empty log would re-run
+    committed parts and duplicate their rows on read.
+    """
     path = os.path.join(out_dir, LINEAGE_SUBDIR)
-    try:
-        rows = spark.read.parquet(path).select("part_id").distinct().collect()
-    except AnalysisException:
-        # no lineage log yet = nothing done; any OTHER failure (corrupt
-        # files, transient storage errors) must propagate — silently
-        # reporting an empty done-set would re-run committed parts and
-        # duplicate their rows on read
-        return set()
-    return {r.part_id for r in rows}
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    if not jpath.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf()).exists(jpath):
+        return None
+    return spark.read.schema(LINEAGE_SCHEMA).parquet(path)
+
+
+def done_part_ids(spark: SparkSession, out_dir: str) -> set[int]:
+    log = _lineage_log(spark, out_dir)
+    if log is None:
+        return set()  # no lineage log yet = nothing done
+    return {r.part_id for r in log.select("part_id").distinct().collect()}
 
 
 def remaining(df_with_part: DataFrame, spark: SparkSession, out_dir: str) -> DataFrame:
@@ -146,18 +158,8 @@ def write_with_lineage(
     # only orphan data files carry is undetectable without listing the
     # data dir; callers resuming a crashed run must use a fresh id, as
     # run_pipeline's uuid default does.)
-    from pyspark.errors import AnalysisException
-
-    try:
-        dup = (
-            spark.read.parquet(lin_path)
-            .where(F.col("run_id") == run_id)
-            .limit(1)
-            .count()
-        )
-    except AnalysisException:
-        dup = 0  # no lineage log yet; other errors propagate
-    if dup:
+    log = _lineage_log(spark, out_dir)
+    if log is not None and log.where(F.col("run_id") == run_id).limit(1).count():
         raise ValueError(
             f"run_id {run_id!r} already committed under {lin_path}; "
             "lineage requires a fresh run_id per invocation"
@@ -215,9 +217,7 @@ def write_with_lineage(
         [part_ids, [run_id] * len(part_ids), n_rows, n_bytes, checksum],
         names=["part_id", "run_id", "n_rows", "n_bytes", "checksum"],
     )
-    spark.createDataFrame(
-        metrics, "part_id int, run_id string, n_rows long, n_bytes long, checksum long"
-    ).coalesce(1).write.mode("append").parquet(lin_path)
+    spark.createDataFrame(metrics, LINEAGE_SCHEMA).coalesce(1).write.mode("append").parquet(lin_path)
 
 
 def read_result(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -225,20 +225,11 @@ def read_result(spark: SparkSession, out_dir: str) -> DataFrame:
     (part_id, run_id), so uncommitted (orphan) data files never
     surface.  The lineage side is tiny (one row per logical part) and
     broadcast by AQE."""
-    from pyspark.errors import AnalysisException
-
     data = spark.read.parquet(os.path.join(out_dir, DATA_SUBDIR))
-    try:
-        committed = (
-            spark.read.parquet(os.path.join(out_dir, LINEAGE_SUBDIR))
-            .select("part_id", "run_id")
-            .distinct()
-        )
-    except AnalysisException:
-        # no lineage log = nothing committed yet → empty result; any
-        # OTHER failure (corrupt files, transient storage errors) must
-        # propagate, not masquerade as "no data"
-        return data.limit(0).drop("run_id")
+    log = _lineage_log(spark, out_dir)
+    if log is None:
+        return data.limit(0).drop("run_id")  # nothing committed yet
+    committed = log.select("part_id", "run_id").distinct()
     return data.join(
         F.broadcast(committed), ["part_id", "run_id"], "left_semi"
     ).drop("run_id")

@@ -5,6 +5,19 @@ shuffle partitions) so every entry point — tests, bench, spark-submit —
 runs the same plan-shaping knobs.  ``parallelism`` is the local[] core
 count in the sandbox; on a real cluster pass ``master=None`` so
 spark-submit controls deployment (scripts/submit_job.py does).
+
+It also keeps the session to one pool of Python workers.  pyspark keys
+its worker pools (one ``pyspark.daemon`` each, with its own idle
+workers) by the environment a job's runner passes.  The SQL Arrow
+runners behind ``mapInArrow`` add ``SPARK_SIMPLIFIED_TRACEBACK=1``; a
+Python RDD job (``createDataFrame`` of Python rows, ``rdd.map``) has it
+only as an executor env.  So every session sets it as one: both kinds
+of job share one daemon instead of keeping two for the session's life,
+and a Python RDD job's errors now show simplified tracebacks too.  A
+stage that chains a Python RDD map into ``mapInArrow`` still holds two
+workers per task, so on a local master the idle pool is also capped at
+``parallelism`` (the slot count), evicting the least recently used.
+On a cluster the executors' own conf decides that cap.
 """
 
 from __future__ import annotations
@@ -36,6 +49,8 @@ def get_spark(
         if shuffle_partitions is None:
             # at local scale: ~2x cores
             shuffle_partitions = max(2 * parallelism, 8)
+        # idle Python workers <= slots (module docstring)
+        b = b.config("spark.python.factory.idleWorkerMaxPoolSize", str(parallelism))
     elif master is not None:
         b = b.master(master)
     if shuffle_partitions is not None:
@@ -51,6 +66,8 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        # one Python worker pool for RDD and SQL Arrow jobs (module docstring)
+        .config("spark.executorEnv.SPARK_SIMPLIFIED_TRACEBACK", "1")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

@@ -11,7 +11,8 @@ subprocess (this file run as a script), then reads
 ``/proc/<pid>/maps`` of every live Python worker of that session: none
 may map pandas, and at least one must map pyarrow, which shows the scan
 found the workers that ran the batch functions.  One slot and worker
-reuse keep those workers alive until the scan.  ``test_imports_resolve``
+reuse keep the worker that ran them alive until the scan (the session
+keeps at most one idle worker).  ``test_imports_resolve``
 checks the same property statically, on imports and calls.
 """
 
@@ -25,41 +26,9 @@ from pathlib import Path
 
 import pytest
 
+from pyworkers import python_workers
+
 REPO = Path(__file__).resolve().parent.parent
-
-
-def _descendants(root: int) -> list[int]:
-    children: dict[int, list[int]] = {}
-    for d in Path("/proc").iterdir():
-        if not d.name.isdigit():
-            continue
-        try:
-            stat = (d / "stat").read_text()
-        except OSError:
-            continue
-        ppid = int(stat.rpartition(")")[2].split()[1])
-        children.setdefault(ppid, []).append(int(d.name))
-    out, todo = [], [root]
-    while todo:
-        kids = children.get(todo.pop(), [])
-        out.extend(kids)
-        todo.extend(kids)
-    return out
-
-
-def _python_workers() -> list[dict]:
-    """The pyspark daemons under this process and the workers they forked
-    (a fork keeps the daemon's command line), with what each maps."""
-    found = []
-    for pid in _descendants(os.getpid()):
-        try:
-            if b"pyspark.daemon" not in Path(f"/proc/{pid}/cmdline").read_bytes():
-                continue
-            maps = Path(f"/proc/{pid}/maps").read_text()
-        except OSError:
-            continue
-        found.append({"pid": pid, "pandas": "/pandas/" in maps, "pyarrow": "/pyarrow/" in maps})
-    return found
 
 
 def _drive() -> dict:
@@ -121,7 +90,7 @@ def _drive() -> dict:
     }
     for name, op in ops.items():
         rows[name] = op().count()
-    workers = _python_workers()
+    workers = python_workers()
     spark.stop()
     return {"rows": rows, "workers": workers}
 

@@ -347,3 +347,29 @@ def test_lineage_row_counts_equal_the_landed_files(spark, tmp_path):
     }
     lin = {r.part_id: r.n_rows for r in spark.read.parquet(out + "/_lineage").collect()}
     assert lin == landed and sum(landed.values()) > 0
+
+
+def test_lineage_log_is_read_only_where_it_exists(spark, tmp_path, monkeypatch):
+    """A missing lineage log is an empty done-set found without a read
+    (no failing analysis); a log directory holding only an uncommitted
+    ``_temporary`` reads as empty; an unreadable file under the log
+    still raises."""
+    import pytest
+    from py4j.protocol import Py4JJavaError
+    from pyspark.sql import DataFrameReader
+
+    def no_read(self, *args, **kwargs):
+        pytest.fail("read a lineage log that does not exist")
+
+    with monkeypatch.context() as m:
+        m.setattr(DataFrameReader, "parquet", no_read)
+        assert done_part_ids(spark, str(tmp_path / "fresh")) == set()
+
+    (tmp_path / "torn" / "_lineage" / "_temporary" / "0").mkdir(parents=True)
+    assert done_part_ids(spark, str(tmp_path / "torn")) == set()
+
+    bad = tmp_path / "bad" / "_lineage"
+    bad.mkdir(parents=True)
+    (bad / "part-00000.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Py4JJavaError, match="FAILED_READ_FILE"):
+        done_part_ids(spark, str(tmp_path / "bad"))
