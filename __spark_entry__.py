@@ -55,15 +55,6 @@ def _pip_sql(ring, x: str, y: str) -> str:
     return "((" + " + ".join(terms) + ") % 2 = 1)"
 
 
-# derived from the operator module's lists — ONE source of truth, so an
-# edit to a stopword/marker can never leave the oracle testing a stale
-# copy (the SQL fragments below regenerate from these at import time)
-from simplepolygon_spark.operators.text import LANG_MARKERS as LANGS
-from simplepolygon_spark.operators.text import STOPWORDS as _STOPWORDS
-
-STOPWORDS_SQL = ",".join(f"'{s}'" for s in _STOPWORDS)
-
-
 def _events_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     _ship(spark)
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
@@ -313,82 +304,6 @@ def _q_exact_dedup_sql():
     """
 
 
-def q_fingerprints(spark, sf_dir):
-    from simplepolygon_spark.operators.text import fingerprints
-
-    return fingerprints(_read(spark, sf_dir, "documents")).orderBy("doc_id")
-
-
-def _q_fingerprints_sql():
-    return """
-        SELECT doc_id,
-               md5(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'), ' +', ' ', 'g'))) AS fingerprint
-        FROM documents
-    """
-
-
-def q_token_counts(spark, sf_dir):
-    from simplepolygon_spark.operators.text import token_counts
-
-    return token_counts(_read(spark, sf_dir, "documents")).orderBy("doc_id")
-
-
-def _q_token_counts_sql():
-    return r"""
-        SELECT doc_id,
-               CAST(len(regexp_split_to_array(trim(text), '\s+')) AS INTEGER) AS n_tokens,
-               CAST(len(regexp_extract_all(text, '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]')) AS INTEGER) AS n_pieces
-        FROM documents
-    """
-
-
-def q_chunks(spark, sf_dir):
-    """Sliding context-window chunking (max_tokens=32, overlap=8): every
-    doc splits into windows of ≤32 whitespace tokens with stride 24 —
-    the step before embedding or fixed-window training.  One scan, no
-    shuffle (explode of a per-row index sequence); the oracle
-    reproduces the windows with the same integer-exact chunk-count rule
-    and inclusive 1-based list slicing."""
-    from simplepolygon_spark.operators.text import chunk_documents
-
-    return chunk_documents(
-        _read(spark, sf_dir, "documents"), max_tokens=32, overlap=8
-    ).orderBy("doc_id", "chunk_index")
-
-
-def _q_chunks_sql(max_tokens: int = 32, overlap: int = 8):
-    stride = max_tokens - overlap
-    return rf"""
-        WITH base AS (
-          SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
-          FROM documents
-          WHERE text IS NOT NULL AND trim(text) != ''
-        ),
-        counted AS (
-          SELECT doc_id, toks,
-                 CASE WHEN len(toks) <= {max_tokens} THEN 1
-                      ELSE CAST(floor((len(toks) - {max_tokens}
-                                       + {stride - 1}) / {stride}.0)
-                               AS BIGINT) + 1 END AS nc
-          FROM base
-        ),
-        expanded AS (
-          SELECT doc_id, toks, unnest(range(0, nc)) AS chunk_index
-          FROM counted
-        )
-        SELECT doc_id, chunk_index,
-               array_to_string(
-                 toks[CAST(chunk_index * {stride} + 1 AS INT)
-                      :CAST(chunk_index * {stride} + {max_tokens} AS INT)],
-                 ' ') AS chunk_text,
-               CAST(len(
-                 toks[CAST(chunk_index * {stride} + 1 AS INT)
-                      :CAST(chunk_index * {stride} + {max_tokens} AS INT)])
-                 AS INTEGER) AS n_tokens
-        FROM expanded
-    """
-
-
 def q_quantize(spark, sf_dir):
     """Symmetric int8 embedding quantization, flattened to (vec_id, i,
     q, qscale) rows for the gate.  Every step — float→double cast,
@@ -484,157 +399,6 @@ def _q_overlap_join_sql():
 # identical planted-PII expression for both engines: `||` is
 # NULL-propagating in Spark AND DuckDB (concat() is not — DuckDB's
 # skips NULL args), CAST AS STRING and lpad agree in both
-_PII_PLANT_EXPR = """text || CASE doc_id % 4
-    WHEN 0 THEN ' contact u' || CAST(doc_id AS STRING) || '@ex-ample.com for info'
-    WHEN 1 THEN ' call +1-555-' || lpad(CAST(doc_id % 10000 AS STRING), 4, '0') || ' now'
-    WHEN 2 THEN ' node 10.0.' || CAST(doc_id % 256 AS STRING) || '.7 up'
-    ELSE '' END"""
-
-
-def q_pii_redact(spark, sf_dir):
-    """PII redaction (emails / phones / bare IPv4 → typed placeholders,
-    plus the per-doc match count a compliance audit wants).  The corpus
-    is synthetic, so PII is PLANTED deterministically inside the query
-    by the shared ``_PII_PLANT_EXPR`` — one address/phone/IP shape per
-    doc_id%4 class — and the oracle replants with the byte-identical
-    expression, making the hash check a real Java-vs-RE2 regex-parity
-    gate on ``redact_pii``'s shipped rules."""
-    from simplepolygon_spark.operators.text import redact_pii
-
-    d = _read(spark, sf_dir, "documents").select(
-        "doc_id", F.expr(_PII_PLANT_EXPR).alias("text")
-    )
-    return redact_pii(d).select("doc_id", "text_redacted", "n_pii").orderBy("doc_id")
-
-
-def _q_pii_redact_sql():
-    from simplepolygon_spark.operators.text import PII_RULES
-
-    red = "planted"
-    counts = []
-    for _, pat, rep in PII_RULES:
-        lit = pat.replace("'", "''")
-        red = f"regexp_replace({red}, '{lit}', '{rep}', 'g')"
-        counts.append(f"len(regexp_extract_all(planted, '{lit}'))")
-    n = " + ".join(counts)
-    return f"""
-        WITH p AS (
-          SELECT doc_id, {_PII_PLANT_EXPR} AS planted FROM documents
-        )
-        SELECT doc_id,
-               {red} AS text_redacted,
-               CASE WHEN planted IS NULL THEN 0
-                    ELSE CAST({n} AS INTEGER) END AS n_pii
-        FROM p
-    """
-
-
-def q_adaptive_filter(spark, sf_dir):
-    """Adaptive per-language length gate: drop each language's shortest
-    10% of docs, threshold = the group's EXACT 0.1 percentile of the
-    whitespace token count (bit-identical interpolation in Spark
-    `percentile` and DuckDB `quantile_cont`).  The corpus never
-    shuffles — the tiny per-group floor frame broadcast-joins back."""
-    from simplepolygon_spark.operators.text import adaptive_length_filter
-
-    return (
-        adaptive_length_filter(_read(spark, sf_dir, "documents"), frac=0.1)
-        .select("doc_id", "lang", F.col("n_tokens").cast("int").alias("n_tokens"))
-        .orderBy("doc_id")
-    )
-
-
-def _q_adaptive_filter_sql():
-    return r"""
-        WITH tc AS (
-          SELECT doc_id, lang,
-                 CAST(len(regexp_split_to_array(trim(text), '\s+')) AS DOUBLE)
-                   AS n_tokens
-          FROM documents
-        ),
-        floors AS (
-          SELECT lang, quantile_cont(n_tokens, 0.1) AS floor_tok
-          FROM tc GROUP BY lang
-        )
-        SELECT tc.doc_id, tc.lang, CAST(tc.n_tokens AS INTEGER) AS n_tokens
-        FROM tc JOIN floors ON tc.lang = floors.lang
-        WHERE tc.n_tokens >= floors.floor_tok
-    """
-
-
-def q_length_percentiles(spark, sf_dir):
-    """Per-language exact token-count percentiles (corpus length report)."""
-    from simplepolygon_spark.operators.text import token_length_percentiles
-
-    return token_length_percentiles(_read(spark, sf_dir, "documents")).orderBy(
-        "lang"
-    )
-
-
-def _q_length_percentiles_sql():
-    qc = "quantile_cont(CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS DOUBLE), {p})"
-    cols = ",\n               ".join(
-        f"{qc.format(p=p)} AS p{int(p * 100)}"
-        for p in (0.1, 0.25, 0.5, 0.75, 0.9)
-    )
-    return rf"""
-        SELECT lang,
-               {cols},
-               COUNT(*) AS n_docs
-        FROM documents GROUP BY lang
-    """
-
-
-def q_quality(spark, sf_dir):
-    """Quality counters (exact integers for engine-portable hashing)."""
-    d = _read(spark, sf_dir, "documents")
-    toks = F.split(F.lower(F.trim("text")), "\\s+")
-    stop_arr = F.array(*[F.lit(s) for s in _STOPWORDS])
-    return d.select(
-        "doc_id",
-        F.length("text").alias("n_chars_m"),
-        F.regexp_count("text", F.lit("[^a-zA-Z0-9\\s]")).alias("n_punct"),
-        F.size(F.filter(toks, lambda x: F.array_contains(stop_arr, x))).alias("n_stop"),
-        F.size(toks).alias("n_tokens"),
-    ).orderBy("doc_id")
-
-
-def _q_quality_sql():
-    return rf"""
-        SELECT doc_id,
-               CAST(length(text) AS INTEGER) AS n_chars_m,
-               CAST(len(regexp_extract_all(text, '[^a-zA-Z0-9\s]')) AS INTEGER) AS n_punct,
-               CAST(len(list_filter(regexp_split_to_array(lower(trim(text)), '\s+'),
-                        x -> list_contains([{STOPWORDS_SQL}], x))) AS INTEGER) AS n_stop,
-               CAST(len(regexp_split_to_array(lower(trim(text)), '\s+')) AS INTEGER) AS n_tokens
-        FROM documents
-    """
-
-
-def q_lang_id(spark, sf_dir):
-    from simplepolygon_spark.operators.text import lang_id
-
-    return lang_id(_read(spark, sf_dir, "documents")).orderBy("doc_id")
-
-
-def _q_lang_id_sql():
-    score = {
-        lang: " + ".join(
-            f"len(regexp_extract_all(lower(text), '\\b{m}\\b'))" for m in marks
-        )
-        for lang, marks in sorted(LANGS.items())
-    }
-    best = "greatest(" + ", ".join(f"s_{lang}" for lang in sorted(LANGS)) + ")"
-    whens = " ".join(
-        f"WHEN s_{lang} = best THEN '{lang}'" for lang in sorted(LANGS)
-    )
-    return f"""
-        WITH s AS (SELECT doc_id, {', '.join(f'({v}) AS s_{k}' for k, v in score.items())} FROM documents),
-        b AS (SELECT doc_id, {best} AS best, * FROM s)
-        SELECT doc_id, CASE WHEN best = 0 THEN 'und' {whens} ELSE 'und' END AS lang_guess FROM b
-    """
-
-
 def q_ngram_jaccard(spark, sf_dir):
     from simplepolygon_spark.operators.dedup import ngram_jaccard_pairs
 
@@ -698,72 +462,6 @@ def _q_ngram_jaccard_lsh_sql():
         JOIN sizes sa ON sa.doc_id = doc_a
         JOIN sizes sb ON sb.doc_id = doc_b
         WHERE CAST(i AS DOUBLE) / (sa.n + sb.n - i) >= 0.8
-    """
-
-
-def q_top_ngrams(spark, sf_dir):
-    """Corpus bigram top-20 (vocabulary stats): JVM-only n-gram
-    generation, map-side-combined counts, TakeOrderedAndProject top-k."""
-    from simplepolygon_spark.operators.text import top_ngrams
-
-    d = _read(spark, sf_dir, "documents")
-    return top_ngrams(d, n=2, k=20).orderBy("rank")
-
-
-def _q_top_ngrams_sql():
-    return r"""
-        WITH toks AS (
-          SELECT list_filter(regexp_split_to_array(lower(text), '\s+'), x -> x != '') AS t
-          FROM documents
-        ),
-        grams AS (
-          SELECT unnest(list_transform(range(1, greatest(len(t) - 1, 0) + 1),
-                                       i -> array_to_string(t[i:i+1], ' '))) AS ngram
-          FROM toks WHERE len(t) >= 2
-        ),
-        counted AS (
-          SELECT ngram, count(*) AS cnt FROM grams GROUP BY ngram
-        )
-        SELECT ngram, cnt,
-               CAST(row_number() OVER (ORDER BY cnt DESC, ngram) AS INTEGER) AS rank
-        FROM counted
-        ORDER BY cnt DESC, ngram
-        LIMIT 20
-    """
-
-
-def q_repetition(spark, sf_dir):
-    """Gopher-style repeated-bigram quality signal: per-doc n-gram
-    count, distinct count, repeat fraction — pure per-row codegen
-    expressions, no explode/shuffle (the gram array never leaves its
-    row)."""
-    from simplepolygon_spark.operators.text import repetition_scores
-
-    return repetition_scores(_read(spark, sf_dir, "documents"), n=2).orderBy("doc_id")
-
-
-def _q_repetition_sql():
-    return r"""
-        WITH toks AS (
-          SELECT doc_id,
-                 list_filter(regexp_split_to_array(lower(text), '\s+'), x -> x != '') AS t
-          FROM documents
-        ),
-        g AS (
-          SELECT doc_id,
-                 CASE WHEN len(t) >= 2
-                      THEN list_transform(range(1, len(t)),
-                                          i -> array_to_string(t[i:i+1], ' '))
-                      ELSE [] END AS grams
-          FROM toks
-        )
-        SELECT doc_id,
-               CAST(len(grams) AS INTEGER) AS n_grams,
-               CAST(len(list_distinct(grams)) AS INTEGER) AS n_distinct,
-               round(CASE WHEN len(grams) > 0
-                          THEN (len(grams) - len(list_distinct(grams))) / CAST(len(grams) AS DOUBLE)
-                          ELSE 0.0 END, 6) AS rep_ratio
-        FROM g
     """
 
 
@@ -1417,21 +1115,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "overlap_join": q_overlap_join,
         "knn": q_knn,
         "exact_dedup": q_exact_dedup,
-        "fingerprints": q_fingerprints,
-        "token_counts": q_token_counts,
-        "chunks": q_chunks,
-        "pii_redact": q_pii_redact,
-        "adaptive_filter": q_adaptive_filter,
         "quantize": q_quantize,
-        "length_percentiles": q_length_percentiles,
-        "quality": q_quality,
-        "lang_id": q_lang_id,
         "ngram_jaccard": q_ngram_jaccard,
         "ngram_jaccard_lsh": q_ngram_jaccard_lsh,
         "canonical": q_canonical,
         "covariance": q_covariance,
-        "top_ngrams": q_top_ngrams,
-        "repetition": q_repetition,
         "hamming_dups": q_hamming_dups,
         "embedding_dups": q_embedding_dups,
         "embedding_dups_lsh": q_embedding_dups_lsh,
@@ -1455,21 +1143,11 @@ def oracle_sql() -> dict[str, str]:
         "overlap_join": _q_overlap_join_sql(),
         "knn": _q_knn_sql(),
         "exact_dedup": _q_exact_dedup_sql(),
-        "fingerprints": _q_fingerprints_sql(),
-        "token_counts": _q_token_counts_sql(),
-        "chunks": _q_chunks_sql(),
-        "pii_redact": _q_pii_redact_sql(),
-        "adaptive_filter": _q_adaptive_filter_sql(),
         "quantize": _q_quantize_sql(),
-        "length_percentiles": _q_length_percentiles_sql(),
-        "quality": _q_quality_sql(),
-        "lang_id": _q_lang_id_sql(),
         "ngram_jaccard": _q_ngram_jaccard_sql(),
         "ngram_jaccard_lsh": _q_ngram_jaccard_lsh_sql(),
         "canonical": _q_canonical_sql(),
         "covariance": _q_covariance_sql(),
-        "top_ngrams": _q_top_ngrams_sql(),
-        "repetition": _q_repetition_sql(),
         "hamming_dups": _q_hamming_dups_sql(),
         "embedding_dups": _q_embedding_dups_sql(),
         "embedding_dups_lsh": _q_embedding_dups_lsh_sql(),

@@ -3,14 +3,13 @@
 The polygon layer reimplements the ring decomposition of
 mclaeysb/simplepolygon (v2.0.4) from scratch as numpy kernels
 dispatched through Arrow batches (``mapInArrow``); the join layer adds quadkey cell-cover tiling, point-in-polygon / kNN joins,
-raster<->vector crosswalk, dedup / similarity / text operators, lineage
+raster<->vector crosswalk, dedup / similarity operators, lineage
 checkpointing, and a deterministic image payload codec.
 
 Layout:
   geom.py        pure-numpy geometry kernels (no Spark imports)
   decompose.py   per-polygon ring decomposition (reference-parity semantics)
-  operators/     Spark DataFrame operators (decompose, cells, joins, dedup,
-                 ...)
+  operators/     Spark DataFrame operators (decompose, cells, joins, dedup, ...)
   sources/       deterministic synthetic sources (images, footprints, fixtures)
   functions/     column-expression helpers (JVM-side, codegen-friendly)
   plans/         end-to-end pipelines + lineage/resume

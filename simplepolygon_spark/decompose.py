@@ -33,6 +33,7 @@ from .geom import (
     js_number_string,
     pmod,
     points_in_rings,
+    ragged,
     ring_table,
     segment_intersections,
     winding_of_ring,
@@ -384,22 +385,27 @@ def decompose(rings: list) -> list[dict[str, Any]]:
 def _determine_parents(feats: list[dict[str, Any]]) -> None:
     """Root-parent fixup (src/index.ts:645-694) — Q2: last containing ring
     in index order wins; the area comparison is dead code and skipped.
-    One ``points_in_rings`` call tests every (root first vertex, other
-    ring) pair."""
+    One ``points_in_rings`` call tests the (root first vertex, other
+    ring) pairs with ``ymin <= y < ymax`` of the ring.  That filter is
+    exact: a ray crossing needs an edge with one end above ``y`` and one
+    at or below it, and no ring outside that band has one."""
     roots = np.array([i for i, f in enumerate(feats) if f["parent"] == -1], np.int64)
     if len(roots) <= 1:
         return
     pts, off = ring_table([f["coords"] for f in feats])
-    n = len(feats)
     first = pts[off[roots]]
-    root = np.repeat(np.arange(len(roots)), n)
-    ring = np.tile(np.arange(n), len(roots))
+    by_y = np.argsort(first[:, 1])
+    ys = first[by_y, 1]
+    lo = ys.searchsorted(np.minimum.reduceat(pts[:, 1], off[:-1]), "left")
+    hi = ys.searchsorted(np.maximum.reduceat(pts[:, 1], off[:-1]), "left")
+    ring, slot = ragged(lo, hi - lo)
+    root = by_y[slot]
     inside = points_in_rings(first[root, 0], first[root, 1], ring, pts, off)
     inside &= ring != roots[root]
-    contained = inside.reshape(len(roots), n)
-    last = n - 1 - np.argmax(contained[:, ::-1], axis=1)
-    for i, parent in zip(roots.tolist(), np.where(contained.any(axis=1), last, -1).tolist()):
-        feats[i]["parent"] = parent
+    parent = np.full(len(roots), -1, np.int64)
+    np.maximum.at(parent, root[inside], ring[inside])
+    for i, p in zip(roots.tolist(), parent.tolist()):
+        feats[i]["parent"] = p
 
 
 def _set_net_winding(feats: list[dict[str, Any]]) -> None:

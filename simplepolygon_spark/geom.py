@@ -51,6 +51,7 @@ __all__ = [
     "segment_intersections",
     "point_in_ring",
     "points_in_rings",
+    "ragged",
     "ring_mats",
     "ring_table",
     "arrow_to_numpy",
@@ -252,6 +253,13 @@ def point_in_ring_batch(px: np.ndarray, py: np.ndarray, ring: np.ndarray) -> np.
     entry to ``points_in_rings``."""
     r = np.asarray(ring, dtype=np.float64)
     return points_in_rings(px, py, np.zeros(len(px), np.int64), *_closed(r, np.array([0, len(r)])))
+
+
+def ragged(start: np.ndarray, cnt: np.ndarray):
+    """(k, start[k] + j) for every j < cnt[k], in k order: the slots of
+    many ranges at once, with no Python loop over the ranges."""
+    owner = np.repeat(np.arange(len(cnt), dtype=np.int64), cnt)
+    return owner, np.arange(len(owner), dtype=np.int64) + np.repeat(start - (np.cumsum(cnt) - cnt), cnt)
 
 
 _ROW_BUDGET = 1 << 17  # (pair, edge) rows per numpy pass: its temporaries are 1 MB arrays

@@ -40,7 +40,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 from ..cells import MAX_LEVEL, cell_of_point
-from ..geom import arrow_to_numpy, numpy_to_arrow, points_in_rings, ring_mats, ring_table
+from ..geom import arrow_to_numpy, numpy_to_arrow, points_in_rings, ragged, ring_mats, ring_table
 
 
 @dataclass
@@ -110,7 +110,7 @@ class IntervalIndex:
         start = self.seg_ptr[pos]
         stop = self.seg_ptr[pos + 1]
         cnt = np.where(valid, stop - start, 0)
-        pt_idx, slot = _ragged(start, cnt)  # gather the CSR slices
+        pt_idx, slot = ragged(start, cnt)  # gather the CSR slices
         iv = self.seg_ids[slot]
         return pt_idx, self.iv_ring[iv], self.iv_full[iv]
 
@@ -130,7 +130,7 @@ class IntervalIndex:
         a = self.seg_ptr[np.where(valid, k0, 0)]
         b = self.seg_ptr[np.where(valid, k1, -1) + 1]
         cnt = np.where(valid, np.maximum(b - a, 0), 0)
-        q_rep, slot = _ragged(a, cnt)
+        q_rep, slot = ragged(a, cnt)
         rid = self.iv_ring[self.seg_ids[slot]]
         # dedup (query, ring) — intervals spanning several segments and
         # several intervals of one ring both collapse here
@@ -181,9 +181,10 @@ def build_interval_index(
     already-collected list of Rows/dicts with polygon_id, ring_index,
     coords).
 
-    Only rings with positive *net* winding participate by default
-    semantics of "the cleaned polygon interior": callers filter upstream
-    if they want a different layer (we index whatever is passed in).
+    Every ring passed in is indexed, whatever its net winding; a caller
+    that wants another layer (say, positive net winding only) filters
+    upstream.  perfbench's ``ingest`` indexes all of
+    ``decompose_polygons``' output.
 
     A DataFrame is collected once with a JVM-only ``toArrow`` of its
     (polygon_id, ring_index, coords) — no Python worker, rows in
@@ -231,7 +232,7 @@ def build_interval_index(
     seg_of_lo = np.searchsorted(bp, lo, side="right") - 1
     seg_of_hi = np.searchsorted(bp, hi, side="right") - 1
     span = seg_of_hi - seg_of_lo + 1
-    iv_rep, seg_rep = _ragged(seg_of_lo, span)
+    iv_rep, seg_rep = ragged(seg_of_lo, span)
     order = np.argsort(seg_rep, kind="stable")
     seg_sorted = seg_rep[order]
     ids_sorted = iv_rep[order]
@@ -260,13 +261,6 @@ def build_interval_index(
         centroids=centroids,
     )
     return idx
-
-
-def _ragged(start: np.ndarray, cnt: np.ndarray):
-    """(k, start[k] + j) for every j < cnt[k], in k order: the slots of
-    many ranges at once, with no Python loop over the ranges."""
-    owner = np.repeat(np.arange(len(cnt), dtype=np.int64), cnt)
-    return owner, np.arange(len(owner), dtype=np.int64) + np.repeat(start - (np.cumsum(cnt) - cnt), cnt)
 
 
 def _centroids(pts: np.ndarray, off: np.ndarray) -> np.ndarray:

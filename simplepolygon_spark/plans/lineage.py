@@ -25,7 +25,6 @@ from functools import reduce
 from operator import xor
 
 import pyarrow as pa
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -41,6 +40,13 @@ def with_part_id(df: DataFrame, id_col: str, num_parts: int) -> DataFrame:
     )
 
 
+def _hadoop_path(spark: SparkSession, path: str):
+    """(FileSystem, Path) of ``path`` on the driver's JVM: listing and
+    existence checks through it start no Spark job."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf()), jpath
+
+
 def _lineage_log(spark: SparkSession, out_dir: str) -> DataFrame | None:
     """The lineage log under ``out_dir``, or None when there is none yet.
 
@@ -53,8 +59,8 @@ def _lineage_log(spark: SparkSession, out_dir: str) -> DataFrame | None:
     committed parts and duplicate their rows on read.
     """
     path = os.path.join(out_dir, LINEAGE_SUBDIR)
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    if not jpath.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf()).exists(jpath):
+    fs, jpath = _hadoop_path(spark, path)
+    if not fs.exists(jpath):
         return None
     return spark.read.schema(LINEAGE_SCHEMA).parquet(path)
 
@@ -180,22 +186,23 @@ def write_with_lineage(
     tagged.write.mode("append").partitionBy("part_id", "run_id").parquet(data_path)
     sent = obs.get  # blocks until the write job above completed
 
+    # the run's directories are listed on the driver, one glob: handing
+    # Spark the glob itself makes it stat the literal pattern, and log a
+    # FileNotFoundException stack, on every landing.  No directory means
+    # every part of this run wrote zero rows.
     catalog = spark._jvm.org.apache.spark.sql.catalyst.catalog
     run_dir = catalog.ExternalCatalogUtils.escapePathName(run_id)  # as the writer named it
-    try:
+    fs, pattern = _hadoop_path(spark, os.path.join(data_path, "part_id=*", f"run_id={run_dir}"))
+    run_dirs = [st.getPath().toString() for st in fs.globStatus(pattern) or []]
+    disk = {}
+    if run_dirs:
         written = (
             spark.read.schema(tagged.schema)
             .option("basePath", data_path)
-            .parquet(os.path.join(data_path, "part_id=*", f"run_id={run_dir}"))
+            .parquet(*run_dirs)
             .drop("run_id")
         )
         disk = {r.part_id: r for r in lineage_metrics(written, run_id).collect()}
-    except AnalysisException as e:
-        # no file matched: every part of this run wrote zero rows; any
-        # OTHER failure must propagate, not commit an empty run
-        if e.getCondition() != "PATH_NOT_FOUND":
-            raise
-        disk = {}
     got = {k: (r.n_rows, r.n_bytes or 0, r.checksum or 0) for k, r in disk.items()}
     per_metric = list(zip((0, 0, 0), *got.values()))  # a zero, then every part's value
     on_disk = (sum(per_metric[0]), sum(per_metric[1]), reduce(xor, per_metric[2]))

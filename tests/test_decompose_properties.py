@@ -180,6 +180,59 @@ def test_deep_nesting_decomposes():
     assert [f["net_winding"] for f in feats] == list(range(1, 1002))
 
 
+def test_many_holes_all_parented_to_the_shell():
+    """One CCW shell with 2,500 CW square holes on a grid: every hole's
+    parent is the shell, and its net winding is 0.  The parent pass
+    tests only the (root, ring) pairs whose ring spans the root's y: for
+    a hole, the shell and the 50 holes of its row, not all 2,501 rings."""
+    side = 50
+    shell = [[0, 0], [3 * side, 0], [3 * side, 3 * side], [0, 3 * side], [0, 0]]
+    holes = [
+        [[x, y], [x, y + 1], [x + 1, y + 1], [x + 1, y], [x, y]]
+        for x in range(1, 3 * side, 3)
+        for y in range(1, 3 * side, 3)
+    ]
+    feats = decompose([shell] + holes)
+    assert [f["parent"] for f in feats] == [-1] + [0] * len(holes)
+    assert [f["net_winding"] for f in feats] == [1] + [0] * len(holes)
+
+
+def _all_pairs_parents(feats):
+    """Quirk Q2 by its definition: each root's parent is the last other
+    ring, in index order, whose strict ray-cast holds the root's first
+    vertex; every (root, ring) pair is tested."""
+    from simplepolygon_spark.geom import point_in_ring
+
+    parents = [f["parent"] for f in feats]
+    roots = [i for i, p in enumerate(parents) if p == -1]
+    if len(roots) <= 1:
+        return parents
+    for i in roots:
+        pt = feats[i]["coords"][0]
+        inside = [j for j, f in enumerate(feats) if j != i and point_in_ring(pt, f["coords"], True)]
+        parents[i] = inside[-1] if inside else -1
+    return parents
+
+
+def test_parent_pass_equals_all_pairs():
+    """The banded parent pass against the all-pairs one on random ring
+    sets.  Vertices on a 0..8 grid of step 0.5 give many shared y values,
+    roots on other rings' boundaries, flat (zero-height) rings and
+    duplicate rings; some rings arrive already parented and must keep
+    their parent."""
+    from simplepolygon_spark.decompose import _determine_parents
+
+    rng = np.random.default_rng(7)
+    for _ in range(400):
+        feats = []
+        for _ in range(int(rng.integers(2, 14))):
+            ring = (rng.integers(0, 17, (int(rng.integers(3, 7)), 2)) / 2).tolist()
+            feats.append({"coords": ring + [ring[0]], "parent": -1 if rng.random() < 0.8 else 0})
+        want = _all_pairs_parents(feats)
+        _determine_parents(feats)
+        assert [f["parent"] for f in feats] == want
+
+
 def _closed(ring):
     r = np.asarray(ring, np.float64)
     return r if (r[0] == r[-1]).all() else np.vstack([r, r[:1]])

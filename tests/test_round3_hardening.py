@@ -10,10 +10,6 @@ from pyspark.sql import functions as F
 SF = "/root/testdata/sf0.001"
 
 
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
 # ---------------------------------------------------------------------------
 # tile_cells_df inverted-bbox guard (ADVICE r2)
 # ---------------------------------------------------------------------------
@@ -281,24 +277,6 @@ def test_kmeans_distributed_feeds_ivf(spark, emb):
     assert len(r6 & ex_pairs) >= len(r3 & ex_pairs)  # recall grows with probes
 
 
-def test_top_ngrams_plan_and_edge_cases(spark):
-    from simplepolygon_spark.operators.text import top_ngrams
-
-    d = spark.createDataFrame(
-        [(0, "a b a b c"), (1, "a b"), (2, "x"), (3, ""), (4, None), (5, "  a   b  ")],
-        "doc_id long, text string",
-    )
-    got = {(r.ngram, r.cnt, r.rank) for r in top_ngrams(d, n=2, k=3).collect()}
-    # "a b" appears in docs 0 (x2), 1, 5 -> 4; "b a"/"b c" once each
-    assert got == {("a b", 4, 1), ("b a", 1, 2), ("b c", 1, 3)}
-    # global top-k must compile to TakeOrderedAndProject (partial per
-    # partition), not a single-partition full sort
-    plan = (
-        top_ngrams(d, n=2, k=3)._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "TakeOrderedAndProject" in plan
-
-
 def test_tile_cells_antimeridian_split(spark):
     """antimeridian='split' treats lon_min > lon_max as a dateline
     crossing: cells appear on BOTH sides of the dateline and equal the
@@ -332,8 +310,8 @@ def test_tile_cells_antimeridian_split(spark):
 
 
 # ---------------------------------------------------------------------------
-# third review pass: fused coordinate guard, id_col rename, NULL-text,
-# NULL-rings skip
+# third review pass: fused coordinate guard, id_col rename, NULL-rings
+# skip
 # ---------------------------------------------------------------------------
 
 
@@ -413,20 +391,6 @@ def test_null_rings_cell_is_typed_and_skippable(spark):
     assert {r.polygon_id for r in rows} == {"ok"}
     with pytest.raises(Exception, match="non-empty geometry"):
         decompose_polygons(df, on_error="raise").collect()
-
-
-def test_text_ops_null_text_yields_null_not_minus_one(spark):
-    from simplepolygon_spark.operators.text import quality_scores, token_counts
-
-    df = spark.createDataFrame(
-        [("d0", "two words"), ("d1", None)], "doc_id string, text string"
-    )
-    tc = {r.doc_id: r for r in token_counts(df).collect()}
-    assert tc["d0"].n_tokens == 2
-    assert tc["d1"].n_tokens is None  # size(NULL) must not leak -1
-    q = {r.doc_id: r for r in quality_scores(df).collect()}
-    assert q["d1"].n_tokens is None and q["d1"].stop_ratio is None
-    assert q["d1"].quality is None
 
 
 # ---------------------------------------------------------------------------
@@ -535,31 +499,6 @@ def test_decompose_polygons_rejects_bad_on_error(spark):
     df = spark.createDataFrame([], POLYGONS_SCHEMA)
     with pytest.raises(ValueError, match="on_error"):
         decompose_polygons(df, on_error="ignore")
-
-
-def test_repetition_scores_edges(spark):
-    from simplepolygon_spark.operators.text import repetition_scores
-
-    df = spark.createDataFrame(
-        [
-            ("a", "spam spam spam spam"),        # 3 bigrams, 1 distinct
-            ("b", "all words differ here"),       # 3 bigrams, 3 distinct
-            ("c", "one"),                         # < n tokens
-            ("d", ""),
-            ("e", None),
-        ],
-        "doc_id string, text string",
-    )
-    r = {x.doc_id: x for x in repetition_scores(df, n=2).collect()}
-    assert (r["a"].n_grams, r["a"].n_distinct) == (3, 1)
-    assert r["a"].rep_ratio == pytest.approx(2 / 3, abs=1e-6)
-    assert r["b"].rep_ratio == 0.0
-    assert (r["c"].n_grams, r["c"].rep_ratio) == (0, 0.0)
-    assert (r["d"].n_grams, r["d"].rep_ratio) == (0, 0.0)
-    assert (r["e"].n_grams, r["e"].rep_ratio) == (0, 0.0)
-    # no explode, no shuffle in the plan
-    plan = _plan(repetition_scores(df, n=2))
-    assert "Exchange" not in plan and "Generate" not in plan
 
 
 def test_banded_hamming_pairs_equals_brute_force(spark):
