@@ -9,7 +9,8 @@ checkpointing, and a deterministic image payload codec.
 Layout:
   geom.py        pure-numpy geometry kernels (no Spark imports)
   decompose.py   per-polygon ring decomposition (reference-parity semantics)
-  operators/     Spark DataFrame operators (decompose, cells, joins, dedup, ...)
+  operators/     Spark DataFrame operators (decompose, cells, joins, dedup,
+                 ...)
   sources/       deterministic synthetic sources (images, footprints, fixtures)
   functions/     column-expression helpers (JVM-side, codegen-friendly)
   plans/         end-to-end pipelines + lineage/resume
